@@ -1610,9 +1610,12 @@ object Llm extends QueryModule {
       (s, dir) => {
         val emb = Catalog.table(s, dir, "embeddings")
         // limit(10) is a row-wise no-op under the vec_id < 10 filter;
-        // it carries the query-set bound in-plan for PlanAudit
+        // it carries the query-set bound in-plan for PlanAudit. Sorted
+        // first, it plans as TakeOrderedAndProject, which Spark does not
+        // code-generate: a code-generated limit names its counter from a
+        // JVM-wide id, so its source, and a compile, changed every run.
         Similarity.cosineTopK(
-          emb, emb.filter(col("vec_id") < 10).limit(10),
+          emb, emb.filter(col("vec_id") < 10).orderBy("vec_id").limit(10),
           "vec_id", "embedding", 3)
           .orderBy("qid", "rk")
       },

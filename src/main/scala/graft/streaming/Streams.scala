@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.graftshim.{ArtifactShim, StateStoreShim}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** SURVEY.md §2.9 — Structured Streaming over the events table.
@@ -206,26 +207,15 @@ object Streams {
       noDataBatch: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     val ckpt = graft.Scratch.dir("ckpt", s"$name-${System.nanoTime()}")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    spark.conf.set(noDataKey, noDataBatch.toString)
-    try {
-      val q = df.writeStream
+    replay(spark, ckpt,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
+      df.writeStream
         .outputMode(mode)
         .format("memory")
         .queryName(name)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .start()
-      q.awaitTermination()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set(noDataKey, prevNoData)
-      drainStreamingResidue(spark)
-      deleteRecursively(ckpt)
     }
     val sink = spark.table(name)
     val schema = sink.schema
@@ -234,6 +224,41 @@ object Streams {
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.toSeq.asJava, schema)
   }
+
+  /** Run the AvailableNow query `start` begins to termination under the
+    * replay settings (stream shuffle partitions, the shared executor
+    * class loader, then `settings`), restore the session's own values,
+    * shed the query's residue and delete its checkpoint `ckpt`. */
+  private def replay(spark: SparkSession, ckpt: String,
+      settings: (String, String)*)(start: => StreamingQuery): Unit = {
+    val replaySettings =
+      ("spark.sql.shuffle.partitions" -> StreamShufflePartitions) +:
+        (sharedLoader(spark) ++ settings)
+    val prev = replaySettings.map { case (k, _) => k -> spark.conf.get(k) }
+    replaySettings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = start
+      q.awaitTermination()
+      q.stop()
+    } finally {
+      prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      drainStreamingResidue(spark)
+      deleteRecursively(ckpt)
+    }
+  }
+
+  /** A streaming query runs its batches in a clone of the session, and
+    * with session artifact isolation on, every clone gets a new executor
+    * class loader. Spark's generated-class cache is keyed by that loader,
+    * so each run of a stream recompiled byte-identical source (17 classes
+    * for stream_tumbling) and left the dead loader's classes in the cache
+    * until LRU evicted them; Spark has no call that drops them. A session
+    * that added no jars of its own has no classes to isolate, so its
+    * stream clones run under the application's default loader and a
+    * stream's classes compile once per JVM. */
+  private def sharedLoader(spark: SparkSession): Seq[(String, String)] =
+    if (ArtifactShim.hasSessionJars(spark)) Nil
+    else Seq("spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Shed everything a finished streaming query leaves in the shared
     * session. Driver-bench runs showed monotonic cross-query slowdown
@@ -245,7 +270,7 @@ object Streams {
   private def drainStreamingResidue(spark: SparkSession): Unit = {
     try spark.streams.resetTerminated()
     catch { case _: Exception => () }
-    try org.apache.spark.sql.graftshim.StateStoreShim.unloadAll()
+    try StateStoreShim.unloadAll()
     catch { case _: Throwable => () }
   }
 
@@ -423,7 +448,7 @@ object Streams {
     // the 4-range staged source is a pure function of the fixture —
     // stage it once per generation (the eventsTypeStream discipline)
     // so the timed body is the MERGE loop, not a re-split of the same
-    // input every run
+    // input every run; the runDir reaper deletes it at process exit
     val srcFile = java.nio.file.Paths.get(s"$sfDir/events.parquet")
     val attrs = java.nio.file.Files.readAttributes(
       srcFile, classOf[java.nio.file.attribute.BasicFileAttributes])
@@ -436,8 +461,6 @@ object Streams {
         .write.mode("overwrite").parquet(stage)
     }
     val ckpt = graft.Scratch.dir("ckpt", s"upsert-${System.nanoTime()}")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
     def keepLatest(df: DataFrame): DataFrame = df.groupBy("user_id")
       .agg(max(struct(col("ts"), col("event_id"),
         col("event_type"), col("value"))).as("r"))
@@ -451,10 +474,10 @@ object Streams {
       Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
         .toSeq.filter(f => f.isDirectory && f.getName.startsWith("v"))
         .map(_.getName.drop(1).toLong).sorted
-    try {
-      val stream = spark.readStream.schema(src.schema)
+    replay(spark, ckpt) {
+      spark.readStream.schema(src.schema)
         .option("maxFilesPerTrigger", "1").parquet(stage)
-      val q = stream.writeStream
+        .writeStream
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
@@ -473,16 +496,8 @@ object Streams {
           ()
         }
         .start()
-      q.awaitTermination()
-      q.stop()
-      s"$outDir/v${versions().last}"
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      drainStreamingResidue(spark)
-      deleteRecursively(ckpt)
-      // the staged source is reused within this run; the runDir reaper
-      // deletes it at process exit
     }
+    s"$outDir/v${versions().last}"
   }
 
   /** Idempotent partitioned sink: every micro-batch overwrites exactly
@@ -492,10 +507,8 @@ object Streams {
   def idempotentSink(events: DataFrame, outDir: String): Unit = {
     val spark = events.sparkSession
     val ckpt = graft.Scratch.dir("ckpt", s"sink-${System.nanoTime()}")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    try {
-      val q = events.writeStream
+    replay(spark, ckpt) {
+      events.writeStream
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
@@ -508,12 +521,6 @@ object Streams {
             .parquet(outDir)
         }
         .start()
-      q.awaitTermination()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      drainStreamingResidue(spark)
-      deleteRecursively(ckpt)
     }
   }
 }

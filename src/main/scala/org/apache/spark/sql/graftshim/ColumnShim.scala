@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.{SparkConf, SparkContext}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Bridge to the private[sql] Column↔Expression converters — the one
   * sanctioned way to lift a custom Catalyst Expression into the public
@@ -23,4 +26,29 @@ object ColumnShim {
 object StateStoreShim {
   def unloadAll(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+}
+
+/** Bridge to the private[spark] live SparkConf of the active context.
+  * Spark sizes its JVM-wide generated-class cache once, from the static
+  * conf `spark.sql.codegen.cache.maxEntries`, when CodeGenerator is first
+  * used. A session extension runs inside `getOrCreate` after the
+  * SparkContext exists but before the new session's SharedState copies
+  * its conf, so a default set here reaches that first use. A value the
+  * user set explicitly is left alone.
+  */
+object CodegenCacheShim {
+  def sizeIfUnset(entries: Int): Unit =
+    SparkContext.getActive.foreach(sc => sizeIfUnset(sc.conf, entries))
+
+  def sizeIfUnset(conf: SparkConf, entries: Int): Unit =
+    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, entries.toString)
+}
+
+/** Bridge to the private[sql] artifact manager: whether the session
+  * added jars of its own, the classes session artifact isolation keeps
+  * behind a per-session executor class loader.
+  */
+object ArtifactShim {
+  def hasSessionJars(spark: SparkSession): Boolean =
+    spark.asInstanceOf[classic.SparkSession].artifactManager.getAddedJars.nonEmpty
 }
