@@ -13,7 +13,7 @@ import graft.plans.{DotExpr, NormExpr, SrpSignExpr}
   * kernels — `vec_dot(a, b)`, `vec_norm(a)`, `srp_sign(v, bits)` —
   * without touching the Scala DSL. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (already
-  * set by graft.Verify / graft.Bench / the test harness). It also sizes
+  * set by graft.Harness.session). It also sizes
   * Spark's generated-class cache for graft's working set
   * (`CodegenCacheEntries`).
   */

@@ -7,19 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional: restrict to named queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.dir("spark-local"))
-      .config("spark.sql.streaming.minBatchesToRetain", "1")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
     new java.io.File(outDir).mkdirs()
     val audit = scala.collection.mutable.ArrayBuffer
       .empty[(String, graft.plans.PlanAudit.Finding)]

@@ -22,8 +22,8 @@ object Catalog {
     * (same (path, mtime, size) fingerprint key, so a mid-run fixture
     * regeneration keys a fresh entry). `spark.read.parquet` re-infers
     * the schema at every DataFrame CONSTRUCTION (~88 ms measured:
-    * file listing + footer decode + a driver-side inference pass —
-    * tools/FooterBench) vs ~10 ms with an explicit schema; a bench
+    * file listing + footer decode + a driver-side inference pass)
+    * vs ~10 ms with an explicit schema; a bench
     * run constructs each table hundreds of times. This is exactly the
     * metastore shape the scaladoc above promises at 100 TB: schema
     * from the catalog, bytes from the scan. The inferred schema is

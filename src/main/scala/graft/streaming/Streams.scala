@@ -182,8 +182,7 @@ object Streams {
     * shuffle partitions; if the harness ever parallelizes, scope this
     * with a dedicated SparkSession.newSession() per stream instead.
     */
-  private def StreamShufflePartitions: String =
-    sys.props.getOrElse("graft.stream.shuffle", "4")
+  private val StreamShufflePartitions = "4"
 
   /** Drain a stream into an in-memory table and return its rows as a
     * plain local DataFrame (test/driver harness helper — AvailableNow

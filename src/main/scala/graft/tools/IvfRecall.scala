@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -22,13 +21,7 @@ object IvfRecall {
     val nprobes = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(9, 27, 81))
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratch.dir("spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cores)
 
     // The ×100 embeddings parquet is ~one 128 MB scan partition — left
     // alone, the 200M-pair brute force runs on ONE core. Spread it.

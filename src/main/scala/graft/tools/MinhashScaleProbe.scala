@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.plans.MinHashLsh
@@ -14,26 +13,16 @@ import graft.plans.MinHashLsh
   * jaccard verify → survivor anti-join — the round-9 verdict's last
   * "sized, not timed" member. The verify shuffle carries one shingle
   * array per candidate pair (~0.1 TB at ×1000), so the run wants every
-  * spill device the box has: SPARK_GRAFT_LOCAL_DIRS (comma-separated)
-  * overrides spark.local.dir to spread spill across /tmp AND a bounded
-  * tmpfs share — the same multiple-disk configuration a real cluster
-  * node runs with, where local.dir lists every NVMe.
+  * spill device the box has: SPARK_GRAFT_LOCAL_DIRS (comma-separated,
+  * read by graft.Harness.session) spreads spill across /tmp AND a
+  * bounded tmpfs share — the same multiple-disk configuration a real
+  * cluster node runs with, where local.dir lists every NVMe.
   */
 object MinhashScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.filterNot(_ == "e2e").headOption
       .getOrElse("/tmp/graft-scale-x1000")
-    val spill = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIRS",
-      graft.Scratch.dir("spark-local"))
-    spill.split(',').foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", spill)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cores)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[mhprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import java.util.concurrent.atomic.LongAdder
@@ -28,17 +28,7 @@ object StreamScaleProbe {
     val mult = sys.env.getOrElse("SCALE_MULT", "10").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = args.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.dir("spark-local"))
-      .config("spark.sql.streaming.minBatchesToRetain", "1")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cores)
 
     // Staged-replica cache keyed on (mult, sfDir, fixture mtime+size):
     // re-running at a different SF, or after a driver fixture

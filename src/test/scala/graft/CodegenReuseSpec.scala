@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.SparkConf
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 import org.apache.spark.sql.graftshim.CodegenCacheShim
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -28,9 +27,7 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   private def cycle(): Unit = tail.foreach { n =>
-    SparkEntry.queries(n)(spark, sf0001)
-      .select(xxhash64(struct(col("*"))).as("h"))
-      .agg(expr("bit_xor(h)")).collect()
+    Harness.force(SparkEntry.queries(n)(spark, sf0001))
     spark.catalog.clearCache()
   }
 

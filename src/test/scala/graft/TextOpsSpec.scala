@@ -340,34 +340,48 @@ class TextOpsSpec extends SparkSpec {
     assert(out(2L).isEmpty)
   }
 
+  /** Texts with no 3-shingle — null, empty, two words — and two
+    * identical one-shingle texts, as ids 4-8. */
+  private val edgeDocs = Seq(
+    (4L, null: String), (5L, ""), (6L, "one two"),
+    (7L, "a a a a a a"), (8L, "a a a a a a"))
+
   test("minhash similarity approximates jaccard") {
     // two near-identical docs (high jaccard) vs an unrelated one
     val base = (1 to 60).map(i => s"w$i").mkString(" ")
     val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"w$i").mkString(" ")
     val far = (100 to 160).map(i => s"x$i").mkString(" ")
-    val df = Seq((1L, base), (2L, near), (3L, far)).toDF("doc_id", "text")
+    val df = (Seq((1L, base), (2L, near), (3L, far)) ++ edgeDocs)
+      .toDF("doc_id", "text")
     val pairs = TextOps.minhashNearDupPairs(df, "doc_id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)), "near-dup pair must surface via LSH")
     assert(!pairs.exists(p => p._2 == 3L || p._1 == 3L),
       "unrelated doc must not pair")
+    // null, empty and sub-shingle texts have no shingles and never
+    // pair; two identical one-shingle texts pair at jaccard 1
+    assert(pairs.filter(_._1 >= 4L) == Set((7L, 8L)))
   }
 
   test("minhashDedup drops the higher-id near-duplicate") {
     val base = (1 to 60).map(i => s"w$i").mkString(" ")
     val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"w$i").mkString(" ")
-    val df = Seq((1L, base), (2L, near)).toDF("doc_id", "text")
+    val df = (Seq((1L, base), (2L, near)) ++ edgeDocs).toDF("doc_id", "text")
     val kept = TextOps.minhashDedup(df, "doc_id", "text")
-      .select("doc_id").as[Long].collect().toSeq
-    assert(kept == Seq(1L))
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == Seq(1L, 4L, 5L, 6L, 7L))
   }
 
   test("simhash dedup: identical text collapses, distinct text survives") {
-    val df = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "totally different words here"))
+    val df = (Seq((1L, "a b c d e"), (2L, "a b c d e"),
+      (3L, "totally different words here")) ++ edgeDocs.take(3))
       .toDF("doc_id", "text")
-    val kept = TextOps.simhashDedup(df, "doc_id", "text")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(1L, 3L))
+    val rows = TextOps.simhashDedup(df, "doc_id", "text")
+      .select("doc_id", "sh64").as[(Long, Option[Long])].collect().toSeq
+    assert(rows.map(_._1).sorted == Seq(1L, 3L, 4L, 5L, 6L))
+    // a null text keeps its row with a null fingerprint
+    val sh = rows.toMap
+    assert(sh(4L).isEmpty && sh(5L).isDefined)
   }
 
   test("simhash dedup catches near-dups within hamming<=3 of 64 bits") {
