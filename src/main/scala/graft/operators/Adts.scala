@@ -58,8 +58,9 @@ object Adts {
       val b5 = bytes(pos + 5) & 0xff
       val b6 = bytes(pos + 6) & 0xff
       val frameLen = ((b3 & 0x3) << 11) | (b4 << 3) | ((b5 >> 5) & 0x7)
-      require(frameLen >= 7 && pos + frameLen <= bytes.length,
+      require(frameLen >= 7,
         s"ADTS frame length $frameLen overruns the stream at $pos")
+      Bin.checkRange(pos, frameLen, bytes.length, "ADTS frame length")
       val fullness = ((b5 & 0x1f) << 6) | ((b6 >> 2) & 0x3f)
       if (fullness > maxFull) maxFull = fullness
       nBlocks += (b6 & 0x3) + 1

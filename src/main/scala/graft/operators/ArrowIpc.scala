@@ -70,13 +70,8 @@ object ArrowIpc {
       while (len % align != 0) { ensure(1); a(len) = 0; len += 1 }
     }
     def u8(v: Int): Unit = { ensure(1); a(len) = v.toByte; len += 1 }
-    def i16(v: Int): Unit = { u8(v & 0xff); u8((v >> 8) & 0xff) }
-    def i32(v: Int): Unit = { i16(v & 0xffff); i16((v >> 16) & 0xffff) }
-    def i64(v: Long): Unit = { i32((v & 0xffffffffL).toInt); i32((v >>> 32).toInt) }
-    def i32At(pos: Int, v: Int): Unit = {
-      a(pos) = (v & 0xff).toByte; a(pos + 1) = ((v >> 8) & 0xff).toByte
-      a(pos + 2) = ((v >> 16) & 0xff).toByte; a(pos + 3) = ((v >> 24) & 0xff).toByte
-    }
+    def i16(v: Int): Unit = bytes(Bin.le16(v))
+    def i32(v: Int): Unit = bytes(Bin.le32(v))
     def bytes(b: Array[Byte]): Unit = { ensure(b.length)
       System.arraycopy(b, 0, a, len, b.length); len += b.length }
     def result: Array[Byte] = java.util.Arrays.copyOf(a, len)
@@ -87,11 +82,6 @@ object ArrowIpc {
   private sealed trait FVal
   private final case class Inline(b: Array[Byte], align: Int) extends FVal
   private final case class Ref(id: Int) extends FVal
-
-  private def leI16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def leI32(v: Int) = Array[Byte]((v & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-  private def leI64(v: Long) = leI32((v & 0xffffffffL).toInt) ++ leI32((v >>> 32).toInt)
 
   /** Buffer assembler: objects registered as thunks, written in
     * registration order, uoffset slots patched at the end. */
@@ -175,9 +165,9 @@ object ArrowIpc {
       pendingWrites.foreach(_._2())
       fixups.foreach { case (slot, ref) =>
         val target = objPos.getOrElse(ref,
-          sys.error(s"fb: unresolved object $ref"))
+          throw new IllegalArgumentException(s"fb: unresolved object $ref"))
         require(target > slot, "fb: uoffset would be non-positive")
-        fb.i32At(slot, target - slot)
+        Bin.put32le(fb.a, slot, target - slot)
       }
       fb.pad(8)
       fb.result
@@ -220,15 +210,15 @@ object ArrowIpc {
   private def schemaObj(doc: FbDoc, d: Long, schemaId: Int): Unit = {
     val fieldsVec = doc.alloc()
     doc.table(schemaId, Seq(
-      0 -> Inline(leI16(0), 2), // endianness: Little
+      0 -> Inline(Bin.le16(0), 2), // endianness: Little
       1 -> Ref(fieldsVec)))
     val nf = if (hasTag(d)) 5 else 4
     val ids = (0 until nf).map(_ => doc.alloc())
     doc.vectorOfRefs(fieldsVec, ids)
     fieldObj(doc, ids(0), "id", nullable = false, TInt,
-      Seq(0 -> Inline(leI32(64), 4), 1 -> Inline(Array[Byte](1), 1)))
+      Seq(0 -> Inline(Bin.le32(64), 4), 1 -> Inline(Array[Byte](1), 1)))
     fieldObj(doc, ids(1), "score", nullable = true, TFloat,
-      Seq(0 -> Inline(leI16(2), 2))) // DOUBLE
+      Seq(0 -> Inline(Bin.le16(2), 2))) // DOUBLE
     fieldObj(doc, ids(2), "name", nullable = false, TUtf8, Seq.empty)
     fieldObj(doc, ids(3), "flag", nullable = false, TBool, Seq.empty)
     if (hasTag(d))
@@ -241,7 +231,7 @@ object ArrowIpc {
     val padded = (fbBytes.length + 7) / 8 * 8
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array[Byte](-1, -1, -1, -1))
-    out.write(leI32(padded))
+    out.write(Bin.le32(padded))
     out.write(fbBytes)
     (fbBytes.length until padded).foreach(_ => out.write(0))
     out.toByteArray
@@ -253,10 +243,10 @@ object ArrowIpc {
     val schemaId = doc.alloc()
     doc.writeRoot(msgId)
     doc.table(msgId, Seq(
-      0 -> Inline(leI16(4), 2),          // MetadataVersion V5
+      0 -> Inline(Bin.le16(4), 2),          // MetadataVersion V5
       1 -> Inline(Array[Byte](1), 1),    // header: Schema
       2 -> Ref(schemaId),
-      3 -> Inline(leI64(0L), 8)))
+      3 -> Inline(Bin.le64(0L), 8)))
     schemaObj(doc, d, schemaId)
     frame(doc.finish())
   }
@@ -283,13 +273,13 @@ object ArrowIpc {
     // id: int64, no nulls
     nodes += ((r.toLong, 0L))
     buffer(bitmap(_ => true))
-    buffer((0 until r).flatMap(i => leI64(idVal(d, j, i))).toArray)
+    buffer((0 until r).flatMap(i => Bin.le64(idVal(d, j, i))).toArray)
     // score: float64, nulls at (d+j+i)%7==0
     val nNull = (0 until r).count(isNull(d, j, _))
     nodes += ((r.toLong, nNull.toLong))
     buffer(bitmap(i => !isNull(d, j, i)))
     buffer((0 until r).flatMap { i =>
-      leI64(java.lang.Double.doubleToLongBits(
+      Bin.le64(java.lang.Double.doubleToLongBits(
         if (isNull(d, j, i)) 0.0 else scoreVal(d, j, i)))
     }.toArray)
     // name: utf8, no nulls
@@ -297,7 +287,7 @@ object ArrowIpc {
     buffer(bitmap(_ => true))
     val nameB = (0 until r).map(i => nameVal(d, j, i).getBytes("UTF-8"))
     val nameOffs = nameB.scanLeft(0)(_ + _.length)
-    buffer(nameOffs.flatMap(leI32).toArray)
+    buffer(nameOffs.flatMap(v => Bin.le32(v)).toArray)
     buffer(nameB.flatten.toArray)
     // flag: bool (bit-packed), no nulls
     nodes += ((r.toLong, 0L))
@@ -308,7 +298,7 @@ object ArrowIpc {
       nodes += ((r.toLong, 0L))
       buffer(bitmap(_ => true))
       val tagB = (0 until r).map(i => tagVal(i).getBytes("UTF-8"))
-      buffer(tagB.scanLeft(0)(_ + _.length).flatMap(leI32).toArray)
+      buffer(tagB.scanLeft(0)(_ + _.length).flatMap(v => Bin.le32(v)).toArray)
       buffer(tagB.flatten.toArray)
     }
     val bodyB = body.toByteArray
@@ -320,18 +310,18 @@ object ArrowIpc {
     val bufsVec = doc.alloc()
     doc.writeRoot(msgId)
     doc.table(msgId, Seq(
-      0 -> Inline(leI16(4), 2),
+      0 -> Inline(Bin.le16(4), 2),
       1 -> Inline(Array[Byte](3), 1),    // header: RecordBatch
       2 -> Ref(rbId),
-      3 -> Inline(leI64(bodyB.length.toLong), 8)))
+      3 -> Inline(Bin.le64(bodyB.length.toLong), 8)))
     doc.table(rbId, Seq(
-      0 -> Inline(leI64(r.toLong), 8),
+      0 -> Inline(Bin.le64(r.toLong), 8),
       1 -> Ref(nodesVec),
       2 -> Ref(bufsVec)))
     doc.vectorOfStructs(nodesVec,
-      nodes.toSeq.map { case (l, n) => leI64(l) ++ leI64(n) }, 8)
+      nodes.toSeq.map { case (l, n) => Bin.le64(l) ++ Bin.le64(n) }, 8)
     doc.vectorOfStructs(bufsVec,
-      buffers.toSeq.map { case (o, l) => leI64(o) ++ leI64(l) }, 8)
+      buffers.toSeq.map { case (o, l) => Bin.le64(o) ++ Bin.le64(l) }, 8)
     val framed = frame(doc.finish())
     val out = new java.io.ByteArrayOutputStream()
     out.write(framed); out.write(bodyB, 0, bodyB.length)
@@ -358,17 +348,17 @@ object ArrowIpc {
     val batchesVec = doc.alloc()
     doc.writeRoot(footerId)
     doc.table(footerId, Seq(
-      0 -> Inline(leI16(4), 2), // MetadataVersion V5
+      0 -> Inline(Bin.le16(4), 2), // MetadataVersion V5
       1 -> Ref(schemaId),
       2 -> Ref(dictsVec),
       3 -> Ref(batchesVec)))
     schemaObj(doc, d, schemaId)
     doc.vectorOfStructs(dictsVec, Seq.empty, 8)
     doc.vectorOfStructs(batchesVec, blocks.map { case (o, m, b) =>
-      leI64(o) ++ leI32(m) ++ leI32(0) ++ leI64(b) }, 8)
+      Bin.le64(o) ++ Bin.le32(m) ++ Bin.le32(0) ++ Bin.le64(b) }, 8)
     val fbBytes = doc.finish()
     out.write(fbBytes)
-    out.write(leI32(fbBytes.length))
+    out.write(Bin.le32(fbBytes.length))
     out.write("ARROW1".getBytes("US-ASCII"))
     out.toByteArray
   }
@@ -376,19 +366,14 @@ object ArrowIpc {
   // ------------------------------------------- flatbuffers walker
 
   private final class FbReader(b: Array[Byte], from: Int, until: Int) {
-    def i16(o: Int): Int = {
-      require(o >= from && o + 2 <= until, "arrow: flatbuffer read oob")
-      ((b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)).toShort.toInt
+    private def at(o: Int): Int = {
+      require(o >= from, "arrow: flatbuffer read before its buffer"); o
     }
-    def i32(o: Int): Int = {
-      require(o >= from && o + 4 <= until, "arrow: flatbuffer read oob")
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-        ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-    }
-    def i64(o: Int): Long = (i32(o) & 0xffffffffL) | (i32(o + 4).toLong << 32)
-    def u8(o: Int): Int = {
-      require(o >= from && o < until, "arrow: flatbuffer read oob"); b(o) & 0xff
-    }
+    def i16(o: Int): Int =
+      Bin.u16le(b, at(o), until, "arrow: flatbuffer").toShort.toInt
+    def i32(o: Int): Int = Bin.u32le(b, at(o), until, "arrow: flatbuffer").toInt
+    def i64(o: Int): Long = Bin.u64le(b, at(o), until, "arrow: flatbuffer")
+    def u8(o: Int): Int = Bin.u8(b, at(o), until, "arrow: flatbuffer")
     def root(): Int = {
       val t = from + i32(from)
       require(t > from && t < until, "arrow: root table out of bounds")
@@ -398,7 +383,8 @@ object ArrowIpc {
     def field(tablePos: Int, fid: Int): Int = {
       val so = i32(tablePos)
       val vt = tablePos - so
-      require(vt >= from && vt + 4 <= until, "arrow: vtable out of bounds")
+      require(vt >= from, "arrow: vtable out of bounds")
+      Bin.checkRange(vt, 4, until, "arrow: vtable out of bounds")
       val vtSize = i16(vt)
       require(vtSize >= 4 && vtSize <= 2048 && vtSize % 2 == 0,
         s"arrow: implausible vtable size $vtSize")
@@ -417,7 +403,7 @@ object ArrowIpc {
     def str(pos: Int): String = {
       val p = indirect(pos)
       val n = i32(p)
-      require(n >= 0 && p + 4 + n <= until, "arrow: string out of bounds")
+      Bin.checkRange(p + 4, n, until, "arrow: string out of bounds")
       new String(b, p + 4, n, "UTF-8")
     }
     /** (element count, first element pos). */
@@ -440,8 +426,7 @@ object ArrowIpc {
       bytes(6) == 0 && bytes(7) == 0, "arrow: missing leading magic")
     require(new String(bytes, n - 6, 6, "US-ASCII") == "ARROW1",
       "arrow: missing trailing magic")
-    val footerLen = (bytes(n - 10) & 0xff) | ((bytes(n - 9) & 0xff) << 8) |
-      ((bytes(n - 8) & 0xff) << 16) | ((bytes(n - 7) & 0xff) << 24)
+    val footerLen = Bin.u32le(bytes, n - 10, bytes.length).toInt
     require(footerLen > 0 && footerLen <= n - 10 - 8,
       s"arrow: implausible footer length $footerLen")
     val fStart = n - 10 - footerLen
@@ -517,8 +502,7 @@ object ArrowIpc {
       require((bytes(o) & 0xff) == 0xff && (bytes(o + 1) & 0xff) == 0xff &&
         (bytes(o + 2) & 0xff) == 0xff && (bytes(o + 3) & 0xff) == 0xff,
         "arrow: block lacks the continuation marker")
-      val mLen = (bytes(o + 4) & 0xff) | ((bytes(o + 5) & 0xff) << 8) |
-        ((bytes(o + 6) & 0xff) << 16) | ((bytes(o + 7) & 0xff) << 24)
+      val mLen = Bin.u32le(bytes, o + 4, bytes.length).toInt
       require(mLen > 0 && 8 + mLen <= metaLen,
         s"arrow: message metadata $mLen overruns the block's $metaLen")
       val mr = new FbReader(bytes, o + 8, o + 8 + mLen)

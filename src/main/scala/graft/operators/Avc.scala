@@ -38,56 +38,9 @@ import org.apache.spark.sql.types._
   */
 object Avc {
 
-  // ----------------------------------------------------- bit reader
-
-  private final class BitReader(val b: Array[Byte]) {
-    var pos = 0
-    def more: Boolean = pos < b.length * 8
-    def u(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val bi = pos >> 3
-        require(bi < b.length, "slice RBSP truncated mid-read")
-        v = (v << 1) | ((b(bi) >> (7 - (pos & 7))) & 1)
-        pos += 1; k += 1
-      }
-      v
-    }
-    def ue(): Int = {
-      var zeros = 0
-      while (u(1) == 0) {
-        zeros += 1
-        require(zeros <= 31, "Exp-Golomb run exceeds 32-bit bound")
-      }
-      (1 << zeros) - 1 + u(zeros)
-    }
-    def se(): Int = {
-      val k = ue()
-      if (k % 2 == 0) -(k / 2) else (k + 1) / 2
-    }
-    def byteAlign(): Unit =
-      while (pos % 8 != 0) require(u(1) == 0, "nonzero alignment bit")
-  }
-
-  private final class BitWriter {
-    private val buf = collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0; private var nbits = 0
-    def u(v: Int, n: Int): Unit = (n - 1 to 0 by -1).foreach { i =>
-      cur = (cur << 1) | ((v >> i) & 1); nbits += 1
-      if (nbits == 8) { buf += cur.toByte; cur = 0; nbits = 0 }
-    }
-    def ue(v: Int): Unit = {
-      val zeros = 31 - Integer.numberOfLeadingZeros(v + 1)
-      u(0, zeros); u(v + 1, zeros + 1)
-    }
-    def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
-    def byteAlign(): Unit = while (nbits != 0) u(0, 1)
-    def rbspTrailing(): Array[Byte] = { u(1, 1); byteAlign(); buf.toArray }
-    def bytesNoTrailing(): Array[Byte] = {
-      require(nbits == 0, "unaligned"); buf.toArray
-    }
-  }
+  /** RBSP byte alignment on the read side: the skipped bits must be 0. */
+  private def alignZero(r: Bin.MsbReader): Unit =
+    while (r.bitPos % 8 != 0) require(r.u(1) == 0, "nonzero alignment bit")
 
   // ------------------------------------------------------ constants
 
@@ -123,7 +76,7 @@ object Avc {
     * returning TotalCoeff. Supported code points are the fixture's:
     * nC < 2 table rows (0,0)/(1,0)/(1,1) and the 6-bit FLC context;
     * anything else is named and refused. */
-  private def residualBlock(r: BitReader, nC: Int,
+  private def residualBlock(r: Bin.MsbReader, nC: Int,
       out: Array[Int]): Int = {
     java.util.Arrays.fill(out, 0)
     val (total, t1s) =
@@ -143,7 +96,7 @@ object Avc {
               "subset (fixture emits (0,0)/(1,1)/(1,0) in the nC<2 row)")
           (1, 0)
         }
-      } else sys.error(
+      } else throw new IllegalArgumentException(
         s"coeff_token context nC=$nC outside the decode subset")
     if (total == 0) return 0
     require(total <= 16, s"absurd TotalCoeff $total")
@@ -201,7 +154,7 @@ object Avc {
       if (i < total - 1) {
         var runBefore = 0
         if (zerosLeft > 0)
-          sys.error("run_before outside the decode subset " +
+          throw new IllegalArgumentException("run_before outside the decode subset " +
             "(fixture blocks carry a single coefficient)")
         zerosLeft -= runBefore
         scanPos -= (1 + runBefore)
@@ -286,7 +239,7 @@ object Avc {
       log2MaxFrameNum: Int)
 
   private def parseSpsLocal(rbsp: Array[Byte]): Sps = {
-    val r = new BitReader(rbsp)
+    val r = new Bin.MsbReader(rbsp, "slice RBSP")
     val profile = r.u(8)
     require(profile == 66,
       s"decode subset is baseline (profile 66), got $profile")
@@ -305,7 +258,7 @@ object Avc {
   }
 
   private def parsePpsLocal(rbsp: Array[Byte]): Int = {
-    val r = new BitReader(rbsp)
+    val r = new Bin.MsbReader(rbsp, "slice RBSP")
     r.ue(); r.ue() // pps id, sps id
     require(r.u(1) == 0,
       "entropy_coding_mode CABAC outside the decode subset (CAVLC only)")
@@ -344,14 +297,19 @@ object Avc {
         case 5 => require(slice.isEmpty,
             "decode subset takes a single IDR slice")
           slice = Some(rbsp)
-        case 1 => sys.error("non-IDR slices (P/B inter prediction) are " +
+        case 1 =>
+          throw new IllegalArgumentException(
+            "non-IDR slices (P/B inter prediction) are " +
             "the documented video boundary — I-frames only")
-        case t => sys.error(s"unexpected NAL type $t in I-frame stream")
+        case t =>
+          throw new IllegalArgumentException(
+            s"unexpected NAL type $t in I-frame stream")
       }
     }
-    val s = sps.getOrElse(sys.error("stream carries no SPS"))
+    val s = sps.getOrElse(throw new IllegalArgumentException("stream carries no SPS"))
     require(qpInit > 0, "stream carries no PPS")
-    val r = new BitReader(slice.getOrElse(sys.error("no IDR slice")))
+    val r = new Bin.MsbReader(slice.getOrElse(throw new IllegalArgumentException(
+      "no IDR slice")), "slice RBSP")
 
     // slice header
     require(r.ue() == 0, "first_mb_in_slice != 0 (single-slice subset)")
@@ -458,7 +416,7 @@ object Avc {
       val mbType = r.ue()
       mbType match {
         case 25 => // I_PCM
-          r.byteAlign()
+          alignZero(r)
           var i = 0
           while (i < 256) {
             y((oy + i / 16) * w + ox + i % 16) = r.u(8); i += 1
@@ -486,7 +444,8 @@ object Avc {
           // coded_block_pattern me(v), intra mapping (table 9-4)
           val codeNum = r.ue()
           val cbp = CbpIntra.lift(codeNum).getOrElse(
-            sys.error(s"coded_block_pattern codeNum $codeNum invalid"))
+            throw new IllegalArgumentException(
+              s"coded_block_pattern codeNum $codeNum invalid"))
           val cbpLuma = cbp & 15
           require((cbp >> 4) == 0,
             "chroma residuals outside the decode subset")
@@ -605,7 +564,8 @@ object Avc {
           decodeChromaDc(addr)
 
         case t =>
-          sys.error(s"mb_type $t outside the decode subset " +
+          throw new IllegalArgumentException(
+            s"mb_type $t outside the decode subset " +
             "(I_4x4 / Intra16x16-DC / I_PCM)")
       }
       addr += 1
@@ -650,7 +610,7 @@ object Avc {
     * keeps the MB flat through the DC-prediction chain), I_PCM]. */
   def synthIFrame(d: Long): Array[Byte] = {
     val sps = {
-      val w = new BitWriter
+      val w = new Bin.MsbWriter
       w.u(66, 8); w.u(0, 8); w.u(20, 8) // baseline, level 2.0
       w.ue(0) // sps id
       w.ue(0) // log2_max_frame_num_minus4
@@ -662,10 +622,10 @@ object Avc {
       w.u(1, 1) // direct_8x8
       w.u(0, 1) // cropping
       w.u(0, 1) // vui
-      0x67.toByte +: Codecs.rbspEscape(w.rbspTrailing())
+      0x67.toByte +: Codecs.rbspEscape(Codecs.rbspTrailing(w))
     }
     val pps = {
-      val w = new BitWriter
+      val w = new Bin.MsbWriter
       w.ue(0); w.ue(0) // pps id, sps id
       w.u(0, 1) // CAVLC
       w.u(0, 1) // bottom_field_pic_order
@@ -676,10 +636,10 @@ object Avc {
       w.u(0, 1) // deblocking control present
       w.u(0, 1) // constrained intra
       w.u(0, 1) // redundant pic cnt present
-      0x68.toByte +: Codecs.rbspEscape(w.rbspTrailing())
+      0x68.toByte +: Codecs.rbspEscape(Codecs.rbspTrailing(w))
     }
     val slice = {
-      val w = new BitWriter
+      val w = new Bin.MsbWriter
       w.ue(0) // first_mb_in_slice
       w.ue(7) // slice_type I (all slices in pic)
       w.ue(0) // pps id
@@ -690,7 +650,7 @@ object Avc {
 
       def writePcm(k: Int): Unit = {
         w.ue(25)
-        w.byteAlign()
+        w.align()
         val v = lumaOfMb(d, k)
         (0 until 256).foreach(_ => w.u(v, 8))
         val (cbv, crv) = chromaOfMb(d, k)
@@ -735,7 +695,7 @@ object Avc {
       w.u(1, 1) // blk 11
 
       writePcm(3)
-      0x65.toByte +: Codecs.rbspEscape(w.rbspTrailing())
+      0x65.toByte +: Codecs.rbspEscape(Codecs.rbspTrailing(w))
     }
     val out = new java.io.ByteArrayOutputStream(2048)
     Seq(sps, pps, slice).foreach { n =>
@@ -816,16 +776,15 @@ object Avc {
     nal(spsNal); nal(ppsNal)
     var pos = 0
     while (pos < sample.length) {
-      require(pos + lenSize <= sample.length,
-        s"truncated NAL length prefix at $pos")
+      Bin.checkRange(pos, lenSize, sample.length, "truncated NAL length prefix")
       var len = 0
       var k = 0
       while (k < lenSize) {
         len = (len << 8) | (sample(pos + k) & 0xff); k += 1
       }
       pos += lenSize
-      require(len > 0 && pos + len <= sample.length,
-        s"NAL length $len overruns the sample at $pos")
+      require(len > 0, s"NAL length $len overruns the sample at $pos")
+      Bin.checkRange(pos, len, sample.length, "NAL length")
       nal(java.util.Arrays.copyOfRange(sample, pos, pos + len))
       pos += len
     }

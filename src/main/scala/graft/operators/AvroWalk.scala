@@ -29,69 +29,35 @@ object AvroWalk {
       """{"name":"name","type":"string"},""" +
       """{"name":"score","type":"double"}]}"""
 
-  private final class In(val b: Array[Byte]) {
-    var pos = 0
-    def u8(): Int = {
-      require(pos < b.length, "avro: truncated stream")
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    /** base-128 varint, little-endian groups, then zigzag undo. */
-    def varLong(): Long = {
-      var shift = 0
-      var acc = 0L
-      var more = true
-      while (more) {
-        require(shift < 64, "avro: varint longer than 10 bytes")
-        val v = u8()
-        acc |= (v & 0x7fL) << shift
-        more = (v & 0x80) != 0
-        shift += 7
-      }
-      (acc >>> 1) ^ -(acc & 1L)
-    }
-    def bytes(n: Int): Array[Byte] = {
-      require(n >= 0 && pos + n <= b.length,
-        s"avro: $n-byte field overruns the stream")
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n)
-      pos += n
-      out
-    }
-    def str(): String = {
-      val n = varLong()
-      require(n >= 0 && n <= Int.MaxValue, s"avro: negative string length $n")
-      new String(bytes(n.toInt), "UTF-8")
-    }
-    def doubleLe(): Double = {
-      val v = bytes(8)
-      java.lang.Double.longBitsToDouble(
-        java.nio.ByteBuffer.wrap(v)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong)
-    }
+  private def str(in: Bin.Cursor): String = {
+    val n = in.zigzag()
+    require(n >= 0 && n <= Int.MaxValue, s"avro: negative string length $n")
+    new String(in.bytes(n), "UTF-8")
   }
 
   def parse(bytesIn: Array[Byte]): Array[AvroRec] = {
-    val in = new In(bytesIn)
+    val in = new Bin.Cursor(bytesIn, 0, bytesIn.length, "avro")
     require(in.u8() == 'O' && in.u8() == 'b' && in.u8() == 'j' &&
       in.u8() == 1, "avro: bad container magic")
     // file metadata map: blocks of (count, pairs...), 0 terminates; a
     // negative count is followed by a byte size (spec allows skipping)
     var schema: String = null
     var codec = "null"
-    var n = in.varLong()
+    var n = in.zigzag()
     while (n != 0) {
-      if (n < 0) { in.varLong(); n = -n } // block byte size, unused
+      if (n < 0) { in.zigzag(); n = -n } // block byte size, unused
       (0L until n).foreach { _ =>
-        val k = in.str()
-        val vLen = in.varLong()
+        val k = str(in)
+        val vLen = in.zigzag()
         require(vLen >= 0, s"avro: negative metadata value length")
-        val v = in.bytes(vLen.toInt)
+        val v = in.bytes(vLen)
         k match {
           case "avro.schema" => schema = new String(v, "UTF-8")
           case "avro.codec" => codec = new String(v, "US-ASCII")
           case _ => () // application metadata is skippable
         }
       }
-      n = in.varLong()
+      n = in.zigzag()
     }
     require(schema != null, "avro: metadata lacks avro.schema")
     // schema-scoped subset: the walk decodes exactly the fixture
@@ -105,12 +71,12 @@ object AvroWalk {
     val out = collection.mutable.ArrayBuffer.empty[AvroRec]
     var blockIdx = 0
     while (in.pos < bytesIn.length) {
-      val count = in.varLong()
+      val count = in.zigzag()
       require(count > 0, s"avro: non-positive block count $count")
       require(count < (1L << 24), s"avro: absurd block count $count")
-      val size = in.varLong()
+      val size = in.zigzag()
       require(size >= 0 && size < (1L << 26), s"avro: absurd block size")
-      val payload = in.bytes(size.toInt)
+      val payload = in.bytes(size)
       val plain =
         if (codec == "null") payload
         else {
@@ -122,7 +88,8 @@ object AvroWalk {
             while (!inf.finished()) {
               val got = try inf.inflate(tmp) catch {
                 case e: java.util.zip.DataFormatException =>
-                  sys.error(s"avro: block $blockIdx deflate corrupt: " +
+                  throw new IllegalArgumentException(
+                    s"avro: block $blockIdx deflate corrupt: " +
                     e.getMessage)
               }
               if (got > 0) {
@@ -135,11 +102,11 @@ object AvroWalk {
             buf.toByteArray
           } finally inf.end()
         }
-      val rin = new In(plain)
+      val rin = new Bin.Cursor(plain, 0, plain.length, "avro")
       (0L until count).foreach { r =>
-        val recId = rin.varLong()
-        val name = rin.str()
-        val score = rin.doubleLe()
+        val recId = rin.zigzag()
+        val name = str(rin)
+        val score = java.lang.Double.longBitsToDouble(rin.u64le())
         out += AvroRec(blockIdx, r.toInt, recId, name, score)
       }
       require(rin.pos == plain.length,

@@ -30,19 +30,6 @@ object Codecs {
       /** pixels(y)(x) = (r,g,b), y=0 is the TOP row */
       pixels: Array[Array[(Int, Int, Int)]])
 
-  private def u16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def put16(b: Array[Byte], o: Int, v: Int): Unit = {
-    b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-  }
-  private def put32(b: Array[Byte], o: Int, v: Int): Unit = {
-    b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-    b(o + 2) = ((v >> 16) & 0xff).toByte; b(o + 3) = ((v >> 24) & 0xff).toByte
-  }
-
   def rowStride(width: Int): Int = ((width * 3 + 3) / 4) * 4
 
   def encodeBmp(img: Bmp): Array[Byte] = {
@@ -50,11 +37,11 @@ object Codecs {
     val dataSize = stride * img.height
     val out = new Array[Byte](54 + dataSize)
     out(0) = 'B'; out(1) = 'M'
-    put32(out, 2, out.length); put32(out, 10, 54)
-    put32(out, 14, 40)
-    put32(out, 18, img.width); put32(out, 22, img.height)
-    put16(out, 26, 1); put16(out, 28, 24)
-    put32(out, 34, dataSize)
+    Bin.put32le(out, 2, out.length); Bin.put32le(out, 10, 54)
+    Bin.put32le(out, 14, 40)
+    Bin.put32le(out, 18, img.width); Bin.put32le(out, 22, img.height)
+    Bin.put16le(out, 26, 1); Bin.put16le(out, 28, 24)
+    Bin.put32le(out, 34, dataSize)
     var y = 0
     while (y < img.height) {
       // BMP stores rows bottom-up
@@ -74,10 +61,12 @@ object Codecs {
   def decodeBmp(bytes: Array[Byte]): Bmp = {
     require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M',
       "not a BMP payload")
-    require(u16(bytes, 28) == 24 && u32(bytes, 30) == 0,
+    require(Bin.u16le(bytes, 28, bytes.length, "bmp") == 24 &&
+      Bin.u32le(bytes, 30, bytes.length, "bmp").toInt == 0,
       "only 24bpp uncompressed BMP supported")
-    val off = u32(bytes, 10)
-    val width = u32(bytes, 18); val height = u32(bytes, 22)
+    val off = Bin.u32le(bytes, 10, bytes.length, "bmp").toInt
+    val width = Bin.u32le(bytes, 18, bytes.length, "bmp").toInt
+    val height = Bin.u32le(bytes, 22, bytes.length, "bmp").toInt
     // biHeight < 0 means a top-down DIB — reject explicitly rather than
     // let the row math throw NegativeArraySize on non-synthetic input.
     require(width > 0 && height > 0, "only bottom-up (height>0) BMP supported")
@@ -85,7 +74,8 @@ object Codecs {
     // and would make the truncation check below trivially pass, turning
     // a hostile header into an OOM instead of this error.
     val strideL = (width.toLong * 3 + 3) / 4 * 4
-    require(off >= 54 && off.toLong + height.toLong * strideL <= bytes.length,
+    require(off >= 54, "truncated BMP payload")
+    Bin.checkRange(off.toLong, height.toLong * strideL, bytes.length,
       "truncated BMP payload")
     val stride = strideL.toInt
     val px = Array.ofDim[(Int, Int, Int)](height, width)
@@ -124,23 +114,27 @@ object Codecs {
     val dataSize = w.samples.length * 2
     val out = new Array[Byte](44 + dataSize)
     out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    put32(out, 4, 36 + dataSize)
+    Bin.put32le(out, 4, 36 + dataSize)
     out(8) = 'W'; out(9) = 'A'; out(10) = 'V'; out(11) = 'E'
     out(12) = 'f'; out(13) = 'm'; out(14) = 't'; out(15) = ' '
-    put32(out, 16, 16); put16(out, 20, 1); put16(out, 22, 1)
-    put32(out, 24, w.sampleRate); put32(out, 28, w.sampleRate * 2)
-    put16(out, 32, 2); put16(out, 34, 16)
+    Bin.put32le(out, 16, 16); Bin.put16le(out, 20, 1); Bin.put16le(out, 22, 1)
+    Bin.put32le(out, 24, w.sampleRate); Bin.put32le(out, 28, w.sampleRate * 2)
+    Bin.put16le(out, 32, 2); Bin.put16le(out, 34, 16)
     out(36) = 'd'; out(37) = 'a'; out(38) = 't'; out(39) = 'a'
-    put32(out, 40, dataSize)
+    Bin.put32le(out, 40, dataSize)
     var i = 0
-    while (i < w.samples.length) { put16(out, 44 + i * 2, w.samples(i) & 0xffff); i += 1 }
+    while (i < w.samples.length) {
+      Bin.put16le(out, 44 + i * 2, w.samples(i)); i += 1
+    }
     out
   }
 
   def decodeWav(bytes: Array[Byte]): Wav = {
     require(bytes.length >= 44 && bytes(0) == 'R' && bytes(8) == 'W',
       "not a WAV payload")
-    require(u16(bytes, 20) == 1 && u16(bytes, 22) == 1 && u16(bytes, 34) == 16,
+    require(Bin.u16le(bytes, 20, bytes.length, "wav") == 1 &&
+      Bin.u16le(bytes, 22, bytes.length, "wav") == 1 &&
+      Bin.u16le(bytes, 34, bytes.length, "wav") == 16,
       "only PCM16 mono supported")
     // Canonical 44-byte layout only: the 'data' chunk tag must sit at
     // offset 36 and its declared size must fit the payload — otherwise
@@ -148,15 +142,15 @@ object Codecs {
     // or throw a raw index error instead of this message.
     require(bytes(36) == 'd' && bytes(37) == 'a' &&
       bytes(38) == 't' && bytes(39) == 'a', "not a canonical 44-byte WAV")
-    val sampleRate = u32(bytes, 24)
-    val dataSize = u32(bytes, 40)
-    require(dataSize >= 0 && 44L + dataSize <= bytes.length,
-      "truncated WAV payload")
+    val sampleRate = Bin.u32le(bytes, 24, bytes.length, "wav").toInt
+    val dataSize = Bin.u32le(bytes, 40, bytes.length, "wav").toInt
+    require(dataSize >= 0, "truncated WAV payload")
+    Bin.checkRange(44L, dataSize, bytes.length, "truncated WAV payload")
     val n = dataSize / 2
     val s = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val v = u16(bytes, 44 + i * 2)
+      val v = Bin.u16le(bytes, 44 + i * 2, bytes.length, "wav")
       s(i) = if (v >= 0x8000) v - 0x10000 else v // sign-extend i16le
       i += 1
     }
@@ -179,27 +173,17 @@ object Codecs {
   // below); MP4 sample decode remains behind the documented stub
   // boundary.
 
-  private def u32be(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-  private def put32be(b: Array[Byte], o: Int, v: Int): Unit = {
-    b(o) = ((v >> 24) & 0xff).toByte; b(o + 1) = ((v >> 16) & 0xff).toByte
-    b(o + 2) = ((v >> 8) & 0xff).toByte; b(o + 3) = (v & 0xff).toByte
-  }
-
   private val pngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', '\r', '\n', 0x1a, '\n').map(_.toByte)
 
   private def pngChunk(out: java.io.ByteArrayOutputStream,
       typ: String, data: Array[Byte]): Unit = {
-    val len = new Array[Byte](4); put32be(len, 0, data.length)
-    out.write(len)
+    out.write(Bin.be32(data.length))
     val tb = typ.getBytes("US-ASCII")
     out.write(tb); out.write(data)
     val crc = new java.util.zip.CRC32()
     crc.update(tb); crc.update(data)
-    val c = new Array[Byte](4); put32be(c, 0, crc.getValue.toInt)
-    out.write(c)
+    out.write(Bin.be32(crc.getValue))
   }
 
   /** a = left, b = up, c = upper-left (PNG spec §9, exact tie-break
@@ -310,7 +294,7 @@ object Codecs {
     val out = new java.io.ByteArrayOutputStream()
     out.write(pngSig)
     val ihdr = new Array[Byte](13)
-    put32be(ihdr, 0, w); put32be(ihdr, 4, h)
+    Bin.put32be(ihdr, 0, w); Bin.put32be(ihdr, 4, h)
     ihdr(8) = 8; ihdr(9) = colorType.toByte; ihdr(10) = 0; ihdr(11) = 0
     ihdr(12) = if (interlaced) 1 else 0
     pngChunk(out, "IHDR", ihdr)
@@ -344,17 +328,20 @@ object Codecs {
     var done = false
     while (!done) {
       require(off + 8 <= bytes.length, "truncated PNG chunk header")
-      val len = u32be(bytes, off)
-      require(len >= 0 && off + 12L + len <= bytes.length, "truncated PNG chunk")
+      val len = Bin.u32be(bytes, off, bytes.length, "png").toInt
+      require(len >= 0, "truncated PNG chunk")
+      Bin.checkRange(off + 12L, len, bytes.length, "truncated PNG chunk")
       val typ = new String(bytes, off + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(bytes, off + 4, 4 + len)
-      require(crc.getValue.toInt == u32be(bytes, off + 8 + len),
+      require(crc.getValue.toInt == Bin.u32be(bytes, off + 8 + len, bytes.length,
+        "png").toInt,
         s"PNG chunk CRC mismatch in $typ")
       typ match {
         case "IHDR" =>
           require(len == 13, "bad IHDR length")
-          w = u32be(bytes, off + 8); h = u32be(bytes, off + 12)
+          w = Bin.u32be(bytes, off + 8, bytes.length, "png").toInt
+          h = Bin.u32be(bytes, off + 12, bytes.length, "png").toInt
           require(w > 0 && h > 0, "bad PNG dimensions")
           colorType = bytes(off + 17) & 0xff
           require(bytes(off + 16) == 8 &&
@@ -881,7 +868,7 @@ object Codecs {
     def seg(m: Int, payload: Array[Byte]): Unit = {
       marker(m)
       val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
+      out.write(Bin.be16(len))
       out.write(payload)
     }
     marker(0xd8)
@@ -999,7 +986,7 @@ object Codecs {
     def seg(m: Int, payload: Array[Byte]): Unit = {
       marker(m)
       val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
+      out.write(Bin.be16(len))
       out.write(payload)
     }
     writeJpegHeaders(out, 0xc0, w, h, nComp, hs, vs,
@@ -1190,7 +1177,7 @@ object Codecs {
     def seg(m: Int, payload: Array[Byte]): Unit = {
       marker(m)
       val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
+      out.write(Bin.be16(len))
       out.write(payload)
     }
     writeJpegHeaders(out, 0xc2, w, h, nComp, hs, vs,
@@ -1271,9 +1258,9 @@ object Codecs {
       }
       require(pos + 4 <= bytes.length,
         if (sawScan) "truncated JPEG (no EOI)" else "truncated JPEG (no SOS)")
-      val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-      require(len >= 2 && pos + 2 + len <= bytes.length,
-        "truncated JPEG segment")
+      val len = Bin.u16be(bytes, pos + 2, bytes.length)
+      require(len >= 2, "truncated JPEG segment")
+      Bin.checkRange(pos + 2, len, bytes.length, "truncated JPEG segment")
       val body = pos + 4
       var next = pos + 2 + len
       m match {
@@ -1316,8 +1303,8 @@ object Codecs {
           // segment's bytes (or throw a raw index error at EOF).
           require(len >= 8, "truncated JPEG SOF segment")
           require(bytes(body) == 8, "only 8-bit JPEG supported")
-          h = ((bytes(body + 1) & 0xff) << 8) | (bytes(body + 2) & 0xff)
-          w = ((bytes(body + 3) & 0xff) << 8) | (bytes(body + 4) & 0xff)
+          h = Bin.u16be(bytes, body + 1, bytes.length)
+          w = Bin.u16be(bytes, body + 3, bytes.length)
           require(w > 0 && h > 0 && w.toLong * h <= (1L << 26),
             s"bad JPEG dimensions ${w}x$h")
           val n = bytes(body + 5) & 0xff
@@ -1358,7 +1345,7 @@ object Codecs {
             f"unsupported JPEG SOF marker 0xff$m%02x")
         case 0xdd =>
           require(len >= 4, "truncated JPEG DRI segment")
-          dri = ((bytes(body) & 0xff) << 8) | (bytes(body + 1) & 0xff)
+          dri = Bin.u16be(bytes, body, bytes.length)
         case 0xda =>
           require(comps != null, "JPEG SOS before SOF")
           require(len >= 3, "truncated JPEG SOS segment")
@@ -1389,7 +1376,7 @@ object Codecs {
       }
       pos = next
     }
-    sys.error("unreachable")
+    throw new IllegalArgumentException("unreachable")
   }
 
   /** One progressive scan (T.81 Annex G): DC first / DC refinement /
@@ -1417,7 +1404,8 @@ object Codecs {
     var eobrun = 0
     var rst = 0
     def dcTable(s: Int): HuffDec = huff.getOrElse((0, sel(s)._2),
-      sys.error(s"JPEG missing DC Huffman table ${sel(s)._2}"))
+      throw new IllegalArgumentException(
+        s"JPEG missing DC Huffman table ${sel(s)._2}"))
     def decodeDc(s: Int, coef: Array[Int]): Unit =
       if (ah == 0) {
         val t = dcTable(s).decode(br)
@@ -1459,7 +1447,7 @@ object Codecs {
       val ci = sel(0)._1
       val acT = sel(0)._3
       lazy val ac = huff.getOrElse((1, acT),
-        sys.error(s"JPEG missing AC Huffman table $acT"))
+        throw new IllegalArgumentException(s"JPEG missing AC Huffman table $acT"))
       val cw = (w * comps(ci).h + hmax - 1) / hmax
       val chh = (h * comps(ci).v + vmax - 1) / vmax
       val wB = (cw + 7) / 8; val hB = (chh + 7) / 8
@@ -1618,9 +1606,9 @@ object Codecs {
         val q = quant(comps(ci).tq)
         require(q != null, "JPEG scan before its quant table")
         val dc = huff.getOrElse((0, dcT),
-          sys.error(s"JPEG missing DC Huffman table $dcT"))
+          throw new IllegalArgumentException(s"JPEG missing DC Huffman table $dcT"))
         val ac = huff.getOrElse((1, acT),
-          sys.error(s"JPEG missing AC Huffman table $acT"))
+          throw new IllegalArgumentException(s"JPEG missing AC Huffman table $acT"))
         // comps(ci).h × comps(ci).v blocks per MCU, raster order (JPEG
         // interleave, spec A.2.3) — 1 block at 1x1, 4 luma blocks at
         // 4:2:0; DC prediction accumulates per component across blocks
@@ -1857,7 +1845,7 @@ object Codecs {
     def seg(m: Int, payload: Array[Byte]): Unit = {
       marker(m)
       val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
+      out.write(Bin.be16(len))
       out.write(payload)
     }
     marker(0xd8) // SOI
@@ -1903,32 +1891,28 @@ object Codecs {
       require((bytes(pos) & 0xff) == 0xff, s"bad JPEG marker at $pos")
       val m = bytes(pos + 1) & 0xff
       require(m != 0xd9 && m != 0xda, "JPEG scan/EOI reached before SOF")
-      val len = ((bytes(pos + 2) & 0xff) << 8) | (bytes(pos + 3) & 0xff)
-      require(len >= 2 && pos + 2 + len <= bytes.length,
-        "truncated JPEG segment")
+      val len = Bin.u16be(bytes, pos + 2, bytes.length)
+      require(len >= 2, "truncated JPEG segment")
+      Bin.checkRange(pos + 2, len, bytes.length, "truncated JPEG segment")
       if (m == 0xc0 || m == 0xc1 || m == 0xc2) {
         require(len >= 8, "truncated SOF segment")
-        val h = ((bytes(pos + 5) & 0xff) << 8) | (bytes(pos + 6) & 0xff)
-        val w = ((bytes(pos + 7) & 0xff) << 8) | (bytes(pos + 8) & 0xff)
+        val h = Bin.u16be(bytes, pos + 5, bytes.length)
+        val w = Bin.u16be(bytes, pos + 7, bytes.length)
         val n = bytes(pos + 9) & 0xff
         require(len == 8 + 3 * n, "SOF length/component mismatch")
         return JpegMeta(w, h, n, progressive = m == 0xc2)
       }
       pos += 2 + len
     }
-    sys.error("unreachable")
+    throw new IllegalArgumentException("unreachable")
   }
 
   final case class Mp4Meta(timescale: Int, durationS: Long, width: Int,
       height: Int, trackId: Int, mvhdVersion: Int)
 
-  private def put64be(b: Array[Byte], o: Int, v: Long): Unit = {
-    put32be(b, o, (v >>> 32).toInt); put32be(b, o + 4, (v & 0xffffffffL).toInt)
-  }
-
   private[operators] def mp4Box(typ: String, payload: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](8 + payload.length)
-    put32be(out, 0, out.length)
+    Bin.put32be(out, 0, out.length)
     val t = typ.getBytes("US-ASCII"); System.arraycopy(t, 0, out, 4, 4)
     System.arraycopy(payload, 0, out, 8, payload.length)
     out
@@ -1942,7 +1926,7 @@ object Codecs {
     val ftyp = mp4Box("ftyp", {
       val p = new Array[Byte](16)
       System.arraycopy("isom".getBytes("US-ASCII"), 0, p, 0, 4)
-      put32be(p, 4, 0x200)
+      Bin.put32be(p, 4, 0x200)
       System.arraycopy("isom".getBytes("US-ASCII"), 0, p, 8, 4)
       System.arraycopy("mp41".getBytes("US-ASCII"), 0, p, 12, 4)
       p
@@ -1956,34 +1940,34 @@ object Codecs {
     val mvhd = if (m.mvhdVersion == 0) {
       val p = new Array[Byte](100) // v0 payload: box totals 108
       // verflags at 0..3 (version 0); ctime/mtime 0 at 4..11
-      put32be(p, 12, m.timescale); put32be(p, 16, duration.toInt)
-      put32be(p, 20, 0x00010000) // rate 1.0
+      Bin.put32be(p, 12, m.timescale); Bin.put32be(p, 16, duration.toInt)
+      Bin.put32be(p, 20, 0x00010000) // rate 1.0
       p(24) = 1; p(25) = 0       // volume 1.0
       // unity matrix at 36..71
-      put32be(p, 36, 0x00010000); put32be(p, 52, 0x00010000)
-      put32be(p, 68, 0x40000000)
-      put32be(p, 96, 2) // next track id
+      Bin.put32be(p, 36, 0x00010000); Bin.put32be(p, 52, 0x00010000)
+      Bin.put32be(p, 68, 0x40000000)
+      Bin.put32be(p, 96, 2) // next track id
       mp4Box("mvhd", p)
     } else {
       val p = new Array[Byte](112) // v1 payload: box totals 120
       p(0) = 1 // version
       // 64-bit ctime/mtime at 4..19; timescale at 20, 64-bit duration at 24
-      put32be(p, 20, m.timescale); put64be(p, 24, duration)
-      put32be(p, 32, 0x00010000)
+      Bin.put32be(p, 20, m.timescale); Bin.put64be(p, 24, duration)
+      Bin.put32be(p, 32, 0x00010000)
       p(36) = 1; p(37) = 0
-      put32be(p, 48, 0x00010000); put32be(p, 64, 0x00010000)
-      put32be(p, 80, 0x40000000)
-      put32be(p, 108, 2)
+      Bin.put32be(p, 48, 0x00010000); Bin.put32be(p, 64, 0x00010000)
+      Bin.put32be(p, 80, 0x40000000)
+      Bin.put32be(p, 108, 2)
       mp4Box("mvhd", p)
     }
     val tkhd = mp4Box("tkhd", {
       val p = new Array[Byte](84) // v0 payload: box totals 92
       p(3) = 7 // flags: enabled | in-movie | in-preview
-      put32be(p, 12, m.trackId)
-      put32be(p, 20, duration.toInt)
-      put32be(p, 40, 0x00010000); put32be(p, 56, 0x00010000)
-      put32be(p, 72, 0x40000000)
-      put32be(p, 76, m.width << 16); put32be(p, 80, m.height << 16)
+      Bin.put32be(p, 12, m.trackId)
+      Bin.put32be(p, 20, duration.toInt)
+      Bin.put32be(p, 40, 0x00010000); Bin.put32be(p, 56, 0x00010000)
+      Bin.put32be(p, 72, 0x40000000)
+      Bin.put32be(p, 76, m.width << 16); Bin.put32be(p, 80, m.height << 16)
       p
     })
     val trak = mp4Box("trak", tkhd)
@@ -2003,13 +1987,13 @@ object Codecs {
     val out = List.newBuilder[Mp4Box]
     while (pos < to) {
       require(pos + 8 <= to, "truncated MP4 box header")
-      val size32 = u32be(bytes, pos)
+      val size32 = Bin.u32be(bytes, pos, bytes.length, "mp4").toInt
       val typ = new String(bytes, pos + 4, 4, "US-ASCII")
       val (size, hdr) =
         if (size32 == 1) {
           require(pos + 16 <= to, "truncated MP4 largesize header")
-          val hi = u32be(bytes, pos + 8).toLong << 32
-          ((hi | (u32be(bytes, pos + 12) & 0xffffffffL)), 16)
+          val hi = Bin.u32be(bytes, pos + 8, bytes.length, "mp4") << 32
+          ((hi | (Bin.u32be(bytes, pos + 12, bytes.length, "mp4"))), 16)
         } else (size32.toLong, 8)
       require(size >= hdr && pos + size <= to, s"bad MP4 box size in $typ")
       out += Mp4Box(typ, pos + hdr, pos + size.toInt)
@@ -2028,28 +2012,30 @@ object Codecs {
       new String(bytes, 4, 4, "US-ASCII") == "ftyp", "not an MP4 payload")
     val top = walk(0, bytes.length)
     val moov = top.find(_.typ == "moov")
-      .getOrElse(sys.error("MP4 missing moov box"))
+      .getOrElse(throw new IllegalArgumentException("MP4 missing moov box"))
     val kids = walk(moov.start, moov.end)
     val mvhd = kids.find(_.typ == "mvhd")
-      .getOrElse(sys.error("MP4 missing mvhd box"))
+      .getOrElse(throw new IllegalArgumentException("MP4 missing mvhd box"))
     val ver = bytes(mvhd.start) & 0xff
     val (timescale, duration) =
-      if (ver == 0) (u32be(bytes, mvhd.start + 12),
-        (u32be(bytes, mvhd.start + 16) & 0xffffffffL))
-      else if (ver == 1) (u32be(bytes, mvhd.start + 20), {
-        val hi = u32be(bytes, mvhd.start + 24).toLong << 32
-        hi | (u32be(bytes, mvhd.start + 28) & 0xffffffffL)
+      if (ver == 0) (Bin.u32be(bytes, mvhd.start + 12, bytes.length, "mp4").toInt,
+        (Bin.u32be(bytes, mvhd.start + 16, bytes.length, "mp4")))
+      else if (ver == 1) (Bin.u32be(bytes, mvhd.start + 20, bytes.length,
+        "mp4").toInt, {
+        val hi = Bin.u32be(bytes, mvhd.start + 24, bytes.length, "mp4") << 32
+        hi | (Bin.u32be(bytes, mvhd.start + 28, bytes.length, "mp4"))
       })
-      else sys.error(s"unsupported mvhd version $ver")
+      else throw new IllegalArgumentException(s"unsupported mvhd version $ver")
     require(timescale > 0, "bad mvhd timescale")
     val trak = kids.find(_.typ == "trak")
-      .getOrElse(sys.error("MP4 missing trak box"))
+      .getOrElse(throw new IllegalArgumentException("MP4 missing trak box"))
     val tkhd = walk(trak.start, trak.end).find(_.typ == "tkhd")
-      .getOrElse(sys.error("MP4 missing tkhd box"))
+      .getOrElse(throw new IllegalArgumentException("MP4 missing tkhd box"))
     require((bytes(tkhd.start) & 0xff) == 0, "only tkhd version 0 supported")
     Mp4Meta(timescale, duration / timescale,
-      u32be(bytes, tkhd.start + 76) >>> 16, u32be(bytes, tkhd.start + 80) >>> 16,
-      u32be(bytes, tkhd.start + 12), ver)
+      (Bin.u32be(bytes, tkhd.start + 76, bytes.length, "mp4") >>> 16).toInt,
+      (Bin.u32be(bytes, tkhd.start + 80, bytes.length, "mp4") >>> 16).toInt,
+      Bin.u32be(bytes, tkhd.start + 12, bytes.length, "mp4").toInt, ver)
   }
 
   // --------------------------------------- ISO-BMFF sample tables (stbl)
@@ -2087,7 +2073,7 @@ object Codecs {
     val ftyp = mp4Box("ftyp", {
       val p = new Array[Byte](16)
       System.arraycopy("isom".getBytes("US-ASCII"), 0, p, 0, 4)
-      put32be(p, 4, 0x200)
+      Bin.put32be(p, 4, 0x200)
       System.arraycopy("isom".getBytes("US-ASCII"), 0, p, 8, 4)
       System.arraycopy("mp41".getBytes("US-ASCII"), 0, p, 12, 4)
       p
@@ -2096,31 +2082,31 @@ object Codecs {
     require(durationTicks <= 0xffffffffL, "v0 mdhd duration overflow")
     val mvhd = mp4Box("mvhd", {
       val p = new Array[Byte](100)
-      put32be(p, 12, timescale); put32be(p, 16, durationTicks.toInt)
-      put32be(p, 20, 0x00010000); p(24) = 1
-      put32be(p, 36, 0x00010000); put32be(p, 52, 0x00010000)
-      put32be(p, 68, 0x40000000); put32be(p, 96, 2)
+      Bin.put32be(p, 12, timescale); Bin.put32be(p, 16, durationTicks.toInt)
+      Bin.put32be(p, 20, 0x00010000); p(24) = 1
+      Bin.put32be(p, 36, 0x00010000); Bin.put32be(p, 52, 0x00010000)
+      Bin.put32be(p, 68, 0x40000000); Bin.put32be(p, 96, 2)
       p
     })
     val tkhd = mp4Box("tkhd", {
       val p = new Array[Byte](84)
-      p(3) = 7; put32be(p, 12, 1); put32be(p, 20, durationTicks.toInt)
-      put32be(p, 40, 0x00010000); put32be(p, 56, 0x00010000)
-      put32be(p, 72, 0x40000000)
-      put32be(p, 76, 320 << 16); put32be(p, 80, 240 << 16)
+      p(3) = 7; Bin.put32be(p, 12, 1); Bin.put32be(p, 20, durationTicks.toInt)
+      Bin.put32be(p, 40, 0x00010000); Bin.put32be(p, 56, 0x00010000)
+      Bin.put32be(p, 72, 0x40000000)
+      Bin.put32be(p, 76, 320 << 16); Bin.put32be(p, 80, 240 << 16)
       p
     })
     val mdhd = mp4Box("mdhd", {
       val p = new Array[Byte](24)
-      put32be(p, 12, timescale); put32be(p, 16, durationTicks.toInt)
+      Bin.put32be(p, 12, timescale); Bin.put32be(p, 16, durationTicks.toInt)
       p(20) = 0x55; p(21) = 0xc4.toByte // language 'und'
       p
     })
     val stts = mp4Box("stts", {
       val p = new Array[Byte](8 + 8 * sttsRuns.size)
-      put32be(p, 4, sttsRuns.size)
+      Bin.put32be(p, 4, sttsRuns.size)
       sttsRuns.zipWithIndex.foreach { case ((n, d), i) =>
-        put32be(p, 8 + 8 * i, n); put32be(p, 12 + 8 * i, d)
+        Bin.put32be(p, 8 + 8 * i, n); Bin.put32be(p, 12 + 8 * i, d)
       }
       p
     })
@@ -2128,22 +2114,22 @@ object Codecs {
     val stsz = mp4Box("stsz", {
       if (uniform) {
         val p = new Array[Byte](12)
-        put32be(p, 4, sampleSizes.head); put32be(p, 8, sampleSizes.size)
+        Bin.put32be(p, 4, sampleSizes.head); Bin.put32be(p, 8, sampleSizes.size)
         p
       } else {
         val p = new Array[Byte](12 + 4 * sampleSizes.size)
-        put32be(p, 4, 0); put32be(p, 8, sampleSizes.size)
+        Bin.put32be(p, 4, 0); Bin.put32be(p, 8, sampleSizes.size)
         sampleSizes.zipWithIndex.foreach { case (sz, i) =>
-          put32be(p, 12 + 4 * i, sz)
+          Bin.put32be(p, 12 + 4 * i, sz)
         }
         p
       }
     })
     val stco = mp4Box("stco", {
       val p = new Array[Byte](8 + 4 * chunkOffsets.size)
-      put32be(p, 4, chunkOffsets.size)
+      Bin.put32be(p, 4, chunkOffsets.size)
       chunkOffsets.zipWithIndex.foreach { case (o, i) =>
-        put32be(p, 8 + 4 * i, o)
+        Bin.put32be(p, 8 + 4 * i, o)
       }
       p
     })
@@ -2156,11 +2142,11 @@ object Codecs {
       if (samplesPerChunk.isEmpty) Array.emptyByteArray
       else mp4Box("stsc", {
         val p = new Array[Byte](8 + 12 * stscEntries.size)
-        put32be(p, 4, stscEntries.size)
+        Bin.put32be(p, 4, stscEntries.size)
         stscEntries.zipWithIndex.foreach { case ((fc, spc), i) =>
-          put32be(p, 8 + 12 * i, fc)
-          put32be(p, 12 + 12 * i, spc)
-          put32be(p, 16 + 12 * i, 1)
+          Bin.put32be(p, 8 + 12 * i, fc)
+          Bin.put32be(p, 12 + 12 * i, spc)
+          Bin.put32be(p, 16 + 12 * i, 1)
         }
         p
       })
@@ -2177,7 +2163,8 @@ object Codecs {
     * stts runs; cross-checks the stts total against the stsz count
     * (a malformed pairing fails loudly, as a frame sampler must). */
   private[operators] def oneBox(boxes: List[Mp4Box], typ: String): Mp4Box =
-    boxes.find(_.typ == typ).getOrElse(sys.error(s"MP4 missing $typ box"))
+    boxes.find(_.typ == typ).getOrElse(throw new IllegalArgumentException(
+      s"MP4 missing $typ box"))
 
   /** moov → trak → mdia → minf → stbl descent, returning the sample
     * tables (shared by mp4Samples and mp4SampleLocations). */
@@ -2201,23 +2188,23 @@ object Codecs {
     // the next sibling box's bytes as its own (silently wrong values)
     // instead of failing loudly.
     require(stts.end - stts.start >= 8, "truncated stts header")
-    val nRuns = u32be(bytes, stts.start + 4)
-    require(nRuns >= 0 && stts.start + 8 + 8L * nRuns <= stts.end,
-      "truncated stts")
+    val nRuns = Bin.u32be(bytes, stts.start + 4, bytes.length, "mp4").toInt
+    require(nRuns >= 0, "truncated stts")
+    Bin.checkRange(stts.start + 8, 8L * nRuns, stts.end, "truncated stts")
     var sttsCount = 0L; var durTicks = 0L
     (0 until nRuns).foreach { i =>
-      val n = u32be(bytes, stts.start + 8 + 8 * i)
-      val d = u32be(bytes, stts.start + 12 + 8 * i)
+      val n = Bin.u32be(bytes, stts.start + 8 + 8 * i, bytes.length, "mp4").toInt
+      val d = Bin.u32be(bytes, stts.start + 12 + 8 * i, bytes.length, "mp4").toInt
       require(n >= 0 && d >= 0, "bad stts run")
       sttsCount += n; durTicks += n.toLong * d
     }
     val stsz = one(kids, "stsz")
     require(stsz.end - stsz.start >= 12, "truncated stsz header")
-    val uniformSize = u32be(bytes, stsz.start + 4)
+    val uniformSize = Bin.u32be(bytes, stsz.start + 4, bytes.length, "mp4").toInt
     // u32 read as signed Int: a >2^31 sample_size would go negative and
     // poison totalBytes — out of any sane scope, reject it.
     require(uniformSize >= 0, "bad stsz uniform sample size")
-    val nSamples = u32be(bytes, stsz.start + 8)
+    val nSamples = Bin.u32be(bytes, stsz.start + 8, bytes.length, "mp4").toInt
     require(nSamples >= 0, "bad stsz count")
     require(sttsCount == nSamples,
       s"stts total $sttsCount != stsz count $nSamples")
@@ -2225,10 +2212,10 @@ object Codecs {
     if (uniformSize != 0) {
       total = uniformSize.toLong * nSamples; maxSz = uniformSize
     } else {
-      require(stsz.start + 12 + 4L * nSamples <= stsz.end, "truncated stsz")
+      Bin.checkRange(stsz.start + 12, 4L * nSamples, stsz.end, "truncated stsz")
       var i = 0
       while (i < nSamples) {
-        val sz = u32be(bytes, stsz.start + 12 + 4 * i)
+        val sz = Bin.u32be(bytes, stsz.start + 12 + 4 * i, bytes.length, "mp4").toInt
         require(sz >= 0, "bad stsz entry")
         total += sz; if (sz > maxSz) maxSz = sz
         i += 1
@@ -2236,9 +2223,9 @@ object Codecs {
     }
     val stco = one(kids, "stco")
     require(stco.end - stco.start >= 8, "truncated stco header")
-    val nChunks = u32be(bytes, stco.start + 4)
-    require(nChunks >= 0 && stco.start + 8 + 4L * nChunks <= stco.end,
-      "truncated stco")
+    val nChunks = Bin.u32be(bytes, stco.start + 4, bytes.length, "mp4").toInt
+    require(nChunks >= 0, "truncated stco")
+    Bin.checkRange(stco.start + 8, 4L * nChunks, stco.end, "truncated stco")
     Mp4Samples(nSamples, total, maxSz, durTicks, nChunks)
   }
 
@@ -2281,9 +2268,10 @@ object Codecs {
     val locs = mp4SampleLocations(bytes)
     val mdat = oneBox(mp4Walk(bytes, 0, bytes.length), "mdat")
     locs.map { l =>
-      require(l.offset >= mdat.start && l.offset + l.size <= mdat.end,
+      require(l.offset >= mdat.start,
         s"sample ${l.sampleIdx} [${l.offset}, ${l.offset + l.size}) " +
           s"outside the mdat payload [${mdat.start}, ${mdat.end})")
+      Bin.checkRange(l.offset, l.size, mdat.end, "mp4 sample")
       var sum = 0L
       var j = 0
       while (j < l.size) { sum += bytes(l.offset.toInt + j) & 0xff; j += 1 }
@@ -2299,9 +2287,10 @@ object Codecs {
     val locs = mp4SampleLocations(bytes)
     val mdat = oneBox(mp4Walk(bytes, 0, bytes.length), "mdat")
     locs.map { l =>
-      require(l.offset >= mdat.start && l.offset + l.size <= mdat.end,
+      require(l.offset >= mdat.start,
         s"sample ${l.sampleIdx} [${l.offset}, ${l.offset + l.size}) " +
           s"outside the mdat payload [${mdat.start}, ${mdat.end})")
+      Bin.checkRange(l.offset, l.size, mdat.end, "mp4 sample")
       (l.sampleIdx, java.util.Arrays.copyOfRange(
         bytes, l.offset.toInt, l.offset.toInt + l.size))
     }
@@ -2406,33 +2395,34 @@ object Codecs {
     val kids = stblKids(bytes)
     val stsz = oneBox(kids, "stsz")
     require(stsz.end - stsz.start >= 12, "truncated stsz header")
-    val uniformSize = u32be(bytes, stsz.start + 4)
+    val uniformSize = Bin.u32be(bytes, stsz.start + 4, bytes.length, "mp4").toInt
     require(uniformSize >= 0, "bad stsz uniform sample size")
-    val nSamples = u32be(bytes, stsz.start + 8)
+    val nSamples = Bin.u32be(bytes, stsz.start + 8, bytes.length, "mp4").toInt
     require(nSamples >= 0, "bad stsz count")
     if (uniformSize == 0)
-      require(stsz.start + 12 + 4L * nSamples <= stsz.end, "truncated stsz")
+      Bin.checkRange(stsz.start + 12, 4L * nSamples, stsz.end, "truncated stsz")
     def sizeOf(i: Int): Int =
       if (uniformSize != 0) uniformSize
       else {
-        val sz = u32be(bytes, stsz.start + 12 + 4 * i)
+        val sz = Bin.u32be(bytes, stsz.start + 12 + 4 * i, bytes.length, "mp4").toInt
         require(sz >= 0, "bad stsz entry"); sz
       }
     val stco = oneBox(kids, "stco")
     require(stco.end - stco.start >= 8, "truncated stco header")
-    val nChunks = u32be(bytes, stco.start + 4)
-    require(nChunks >= 0 && stco.start + 8 + 4L * nChunks <= stco.end,
-      "truncated stco")
+    val nChunks = Bin.u32be(bytes, stco.start + 4, bytes.length, "mp4").toInt
+    require(nChunks >= 0, "truncated stco")
+    Bin.checkRange(stco.start + 8, 4L * nChunks, stco.end, "truncated stco")
     def chunkOffset(c: Int): Long = // c is 1-based
-      u32be(bytes, stco.start + 8 + 4 * (c - 1)) & 0xffffffffL
+      Bin.u32be(bytes, stco.start + 8 + 4 * (c - 1), bytes.length,
+        "mp4")
     val stsc = oneBox(kids, "stsc")
     require(stsc.end - stsc.start >= 8, "truncated stsc header")
-    val nEntries = u32be(bytes, stsc.start + 4)
-    require(nEntries >= 1 && stsc.start + 8 + 12L * nEntries <= stsc.end,
-      "truncated stsc")
+    val nEntries = Bin.u32be(bytes, stsc.start + 4, bytes.length, "mp4").toInt
+    require(nEntries >= 1, "truncated stsc")
+    Bin.checkRange(stsc.start + 8, 12L * nEntries, stsc.end, "truncated stsc")
     val entries = Array.tabulate(nEntries) { i =>
-      (u32be(bytes, stsc.start + 8 + 12 * i),
-        u32be(bytes, stsc.start + 12 + 12 * i))
+      (Bin.u32be(bytes, stsc.start + 8 + 12 * i, bytes.length, "mp4").toInt,
+        Bin.u32be(bytes, stsc.start + 12 + 12 * i, bytes.length, "mp4").toInt)
     }
     require(entries(0)._1 == 1, "stsc first entry must cover chunk 1")
     (1 until nEntries).foreach { i =>
@@ -2860,7 +2850,7 @@ object Codecs {
           "nor chunked Transfer-Encoding")
         val n = cl.get.toInt
         require(n >= 0, "negative Content-Length")
-        require(pos + n <= bytes.length, s"truncated HTTP body (need $n)")
+        Bin.checkRange(pos, n, bytes.length, "truncated HTTP body")
         val b = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
         pos += n
         b
@@ -2973,7 +2963,7 @@ object Codecs {
       s"GIF palette size $nc not a power of two in [2,256]")
     val bits = gifBits(nc)
     val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
+    def u16(v: Int): Unit = out.write(Bin.le16(v))
     out.write("GIF89a".getBytes("US-ASCII"))
     u16(img.width); u16(img.height)
     out.write(0x80 | ((bits - 1) << 4) | (bits - 1)) // GCT present
@@ -3017,7 +3007,7 @@ object Codecs {
     val nc = f0.palette.length
     val bits = gifBits(nc)
     val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
+    def u16(v: Int): Unit = out.write(Bin.le16(v))
     out.write("GIF89a".getBytes("US-ASCII"))
     u16(f0.width); u16(f0.height)
     out.write(0x80 | ((bits - 1) << 4) | (bits - 1))
@@ -3072,50 +3062,45 @@ object Codecs {
     * full-canvas (this decoder declares no sub-rectangle composition
     * or disposal blending). */
   def decodeGifFrames(bytes: Array[Byte]): Array[(Int, Bmp)] = {
-    var pos = 0
-    def u8(): Int = {
-      require(pos < bytes.length, s"GIF truncated at $pos")
-      val v = bytes(pos) & 0xff; pos += 1; v
-    }
-    def u16(): Int = { val lo = u8(); lo | (u8() << 8) }
+    val in = new Bin.Cursor(bytes, 0, bytes.length, "GIF truncated")
     require(bytes.length >= 6 && {
       val m = new String(bytes, 0, 6, "US-ASCII")
       m == "GIF87a" || m == "GIF89a"
     }, "not a GIF: bad magic")
-    pos = 6
-    val width = u16(); val height = u16()
+    in.pos = 6
+    val width = in.u16le(); val height = in.u16le()
     require(width > 0 && height > 0 && width <= (1 << 14) &&
       height <= (1 << 14), s"GIF dims ${width}x$height out of range")
     // bound total allocation BEFORE buffers exist: a crafted header
     // claiming 16384x16384 would otherwise allocate ~1 GB up front
     require(width.toLong * height <= (1L << 24),
       s"GIF pixel count ${width.toLong * height} exceeds decoder cap")
-    val flags = u8(); u8(); u8() // bg, aspect
+    val flags = in.u8(); in.u8(); in.u8() // bg, aspect
     val gct: Array[(Int, Int, Int)] =
       if ((flags & 0x80) != 0) {
         val n = 2 << (flags & 7)
-        Array.fill(n)((u8(), u8(), u8()))
+        Array.fill(n)((in.u8(), in.u8(), in.u8()))
       } else Array.empty
     def decodeImage(): Bmp = {
-      val ix = u16(); val iy = u16(); val iw = u16(); val ih = u16()
+      val ix = in.u16le(); val iy = in.u16le(); val iw = in.u16le()
+      val ih = in.u16le()
       require(ix == 0 && iy == 0 && iw == width && ih == height,
         "GIF: sub-rectangle frames not supported by this decoder")
-      val iflags = u8()
+      val iflags = in.u8()
       val interlaced = (iflags & 0x40) != 0
       val table: Array[(Int, Int, Int)] =
         if ((iflags & 0x80) != 0) {
           val n = 2 << (iflags & 7)
-          Array.fill(n)((u8(), u8(), u8()))
+          Array.fill(n)((in.u8(), in.u8(), in.u8()))
         } else gct
       require(table.nonEmpty, "GIF: no color table")
-      val codeSize = u8()
+      val codeSize = in.u8()
       require(codeSize >= 2 && codeSize <= 11, s"GIF: bad LZW size $codeSize")
       // concatenate sub-blocks
       val data = new java.io.ByteArrayOutputStream()
-      var len = u8()
+      var len = in.u8()
       while (len != 0) {
-        require(pos + len <= bytes.length, "GIF image data truncated")
-        data.write(bytes, pos, len); pos += len; len = u8()
+        in.skip(len); data.write(bytes, in.pos - len, len); len = in.u8()
       }
       val lzw = data.toByteArray
       // LZW decode
@@ -3208,26 +3193,26 @@ object Codecs {
     }
     val frames = collection.mutable.ArrayBuffer.empty[(Int, Bmp)]
     var delayCs = 0
-    var b = u8()
+    var b = in.u8()
     while (b != 0x3b) {
       if (b == 0x21) {
-        val label = u8()
-        var len = u8()
+        val label = in.u8()
+        var len = in.u8()
         var firstBlock = true
         while (len != 0) { // sub-blocks
-          require(pos + len <= bytes.length, "GIF extension truncated")
+          in.skip(len)
           // Graphic Control Extension: capture the frame delay
           if (label == 0xf9 && firstBlock && len >= 3)
-            delayCs = (bytes(pos + 1) & 0xff) | ((bytes(pos + 2) & 0xff) << 8)
+            delayCs = Bin.u16le(bytes, in.pos - len + 1, bytes.length)
           firstBlock = false
-          pos += len; len = u8()
+          len = in.u8()
         }
       } else {
         require(b == 0x2c, f"GIF: expected image descriptor, got 0x$b%02x")
         frames += ((delayCs, decodeImage()))
         delayCs = 0
       }
-      b = u8()
+      b = in.u8()
     }
     require(frames.nonEmpty, "GIF: no image data before trailer")
     frames.toArray
@@ -3306,8 +3291,8 @@ object Codecs {
     var i = 0
     val n = bytes.length
     def unit(o: Int): Int =
-      if (littleEndian) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
+      if (littleEndian) Bin.u16le(bytes, o, bytes.length)
+      else Bin.u16be(bytes, o, bytes.length)
     while (i + 1 < n) {
       val u = unit(i)
       if (u >= 0xd800 && u <= 0xdbff) { // high surrogate: needs a low
@@ -3418,8 +3403,7 @@ object Codecs {
         if (le) { out.write(0xff); out.write(0xfe) }
         else { out.write(0xfe); out.write(0xff) }
         def unit(u: Int): Unit =
-          if (le) { out.write(u & 0xff); out.write((u >> 8) & 0xff) }
-          else { out.write((u >> 8) & 0xff); out.write(u & 0xff) }
+          out.write(if (le) Bin.le16(u) else Bin.be16(u))
         // a JVM string IS UTF-16 code units — surrogate pairs included
         text.toCharArray.foreach(c => unit(c))
         if (d % 5 == 0) unit(0xd800 + (d % 0x400).toInt) // lone high
@@ -3554,32 +3538,6 @@ object Codecs {
       profileIdc: Int, levelIdc: Int, width: Int, height: Int,
       ppsRbspLen: Int)
 
-  /** MSB-first bit reader over an RBSP with H.264's bounded integer
-    * reads: u(n) and ue(v) (Exp-Golomb). Every read is loud on
-    * truncation; ue leading-zero runs are capped at 31 (the spec's
-    * 32-bit codeNum bound) so a zero-filled buffer cannot spin. */
-  private[operators] final class ExpGolombReader(bytes: Array[Byte]) {
-    private var pos = 0
-    def u(n: Int): Int = {
-      var v = 0
-      (0 until n).foreach { _ =>
-        val byteIdx = pos >> 3
-        require(byteIdx < bytes.length, "SPS truncated mid-read")
-        v = (v << 1) | ((bytes(byteIdx) >> (7 - (pos & 7))) & 1)
-        pos += 1
-      }
-      v
-    }
-    def ue(): Int = {
-      var zeros = 0
-      while (u(1) == 0) {
-        zeros += 1
-        require(zeros <= 31, "Exp-Golomb run exceeds 32-bit bound")
-      }
-      (1 << zeros) - 1 + u(zeros)
-    }
-  }
-
   /** Strip emulation-prevention bytes: 00 00 03 → 00 00 (the 03 is
     * the escape, legal only before 00/01/02/03). */
   def rbspUnescape(nal: Array[Byte]): Array[Byte] = {
@@ -3643,10 +3601,9 @@ object Codecs {
       var i = 0
       while (i < bytes.length) {
         require(i + 4 <= bytes.length, "truncated AVCC length prefix")
-        val len = ((bytes(i) & 0xff) << 24) | ((bytes(i + 1) & 0xff) << 16) |
-          ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-        require(len >= 1 && i + 4 + len <= bytes.length,
-          s"AVCC NAL length $len out of bounds at offset $i")
+        val len = Bin.u32be(bytes, i, bytes.length).toInt
+        require(len >= 1, s"AVCC NAL length $len out of bounds at offset $i")
+        Bin.checkRange(i + 4, len, bytes.length, "AVCC NAL length")
         nals += bytes.slice(i + 4, i + 4 + len)
         i += 4 + len
       }
@@ -3658,7 +3615,7 @@ object Codecs {
     * profile/level/dims via bounded u(n)/ue(v) reads only. `rbsp`
     * EXCLUDES the NAL header byte. */
   def parseSps(rbsp: Array[Byte]): (Int, Int, Int, Int) = {
-    val r = new ExpGolombReader(rbsp)
+    val r = new Bin.MsbReader(rbsp, "SPS")
     val profile = r.u(8)
     r.u(8) // constraint_set flags + reserved
     val level = r.u(8)
@@ -3713,31 +3670,20 @@ object Codecs {
           sps = Some(parseSps(rbsp))
         case 8 => ppsLen = rbsp.length
         case 1 | 5 => slices += 1
-        case t => sys.error(s"unexpected NAL type $t in metadata shell")
+        case t =>
+          throw new IllegalArgumentException(
+            s"unexpected NAL type $t in metadata shell")
       }
     }
-    val (p, l, w, h) = sps.getOrElse(sys.error("stream carries no SPS"))
+    val (p, l, w,
+      h) = sps.getOrElse(throw new IllegalArgumentException("stream carries no SPS"))
     require(ppsLen >= 0, "stream carries no PPS")
     AvcMeta(framing, nals.length, slices, p, l, w, h, ppsLen)
   }
 
-  /** MSB-first bit writer for the SPS synth. */
-  private[operators] final class ExpGolombWriter {
-    private val buf = collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0; private var nbits = 0
-    def u(v: Int, n: Int): Unit = (n - 1 to 0 by -1).foreach { i =>
-      cur = (cur << 1) | ((v >> i) & 1); nbits += 1
-      if (nbits == 8) { buf += cur.toByte; cur = 0; nbits = 0 }
-    }
-    def ue(v: Int): Unit = {
-      val zeros = 31 - Integer.numberOfLeadingZeros(v + 1)
-      u(0, zeros); u(v + 1, zeros + 1)
-    }
-    def rbspTrailing(): Array[Byte] = {
-      u(1, 1)
-      if (nbits > 0) u(0, 8 - nbits)
-      buf.toArray
-    }
+  /** RBSP trailing bits: a stop bit, then zeros to a byte boundary. */
+  private[operators] def rbspTrailing(w: Bin.MsbWriter): Array[Byte] = {
+    w.u(1, 1); w.toBytes
   }
 
   /** Closed-form AVC metadata shell for doc d: SPS + PPS + 1+d%3
@@ -3757,7 +3703,7 @@ object Codecs {
   def synthSpsNal(d: Long): Array[Byte] = {
     val profile = Array(66, 77, 100)((d % 3).toInt)
     val level = Array(30, 31, 40, 41, 50)((d % 5).toInt)
-    val w = new ExpGolombWriter
+    val w = new Bin.MsbWriter
     w.u(profile, 8); w.u(0, 8); w.u(level, 8)
     w.ue(0) // seq_parameter_set_id
     if (profile == 100) {
@@ -3779,7 +3725,7 @@ object Codecs {
       w.ue(0); w.ue(((d / 4) % 2).toInt) // top, bottom
     } else w.u(0, 1)
     w.u(0, 1) // vui_parameters_present
-    (0x67.toByte) +: rbspEscape(w.rbspTrailing())
+    (0x67.toByte) +: rbspEscape(rbspTrailing(w))
   }
 
   /** The fixture PPS NAL: 8 + d%4 RBSP bytes with an embedded
@@ -3807,7 +3753,7 @@ object Codecs {
     val nals = Seq(spsNal, ppsNal) ++ slices
     val out = new java.io.ByteArrayOutputStream()
     if (d % 2 == 0) nals.foreach { n =>
-      val len = new Array[Byte](4); put32be(len, 0, n.length)
+      val len = new Array[Byte](4); Bin.put32be(len, 0, n.length)
       out.write(len); out.write(n)
     } else nals.zipWithIndex.foreach { case (n, i) =>
       // first start code 4-byte; later ones alternate 4/3 per doc
@@ -3819,9 +3765,6 @@ object Codecs {
 
   final case class AvccMeta(nSps: Int, nPps: Int, nalLenSize: Int,
       profileIdc: Int, levelIdc: Int, width: Int, height: Int)
-
-  private def u16be(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
 
   /** How real MP4s carry H.264 configuration: the
     * AVCDecoderConfigurationRecord inside stsd/avc1/avcC — the walk a
@@ -3837,7 +3780,7 @@ object Codecs {
     val kids = stblKids(bytes)
     val stsd = oneBox(kids, "stsd")
     require(stsd.end - stsd.start >= 8, "truncated stsd header")
-    val nEntries = u32be(bytes, stsd.start + 4)
+    val nEntries = Bin.u32be(bytes, stsd.start + 4, bytes.length, "mp4").toInt
     require(nEntries == 1, s"stsd carries $nEntries entries, expected 1")
     val entries = mp4Walk(bytes, stsd.start + 8, stsd.end)
     val avc1 = oneBox(entries, "avc1")
@@ -3845,8 +3788,8 @@ object Codecs {
     // pre_defined/reserved + u16 width + u16 height + ... = 78 bytes
     // before the child boxes
     require(avc1.end - avc1.start >= 78, "truncated avc1 sample entry")
-    val entryW = u16be(bytes, avc1.start + 24)
-    val entryH = u16be(bytes, avc1.start + 26)
+    val entryW = Bin.u16be(bytes, avc1.start + 24, bytes.length, "mp4")
+    val entryH = Bin.u16be(bytes, avc1.start + 26, bytes.length, "mp4")
     val avcc = oneBox(mp4Walk(bytes, avc1.start + 78, avc1.end), "avcC")
     val a = java.util.Arrays.copyOfRange(bytes, avcc.start, avcc.end)
     require(a.length >= 7, "truncated AVCDecoderConfigurationRecord")
@@ -3861,9 +3804,9 @@ object Codecs {
     var sps: Option[(Int, Int, Int, Int)] = None
     (0 until nSps).foreach { i =>
       require(pos + 2 <= a.length, "truncated SPS length")
-      val len = u16be(a, pos); pos += 2
-      require(len >= 1 && pos + len <= a.length,
-        s"SPS length $len out of bounds")
+      val len = Bin.u16be(a, pos, a.length, "mp4"); pos += 2
+      require(len >= 1, s"SPS length $len out of bounds")
+      Bin.checkRange(pos, len, a.length, "SPS length")
       if (i == 0) {
         require((a(pos) & 0x1f) == 7, "first parameter set is not an SPS")
         sps = Some(parseSps(rbspUnescape(
@@ -3876,9 +3819,9 @@ object Codecs {
     require(nPps >= 1, "avcC carries no PPS")
     (0 until nPps).foreach { _ =>
       require(pos + 2 <= a.length, "truncated PPS length")
-      val len = u16be(a, pos); pos += 2
-      require(len >= 1 && pos + len <= a.length,
-        s"PPS length $len out of bounds")
+      val len = Bin.u16be(a, pos, a.length, "mp4"); pos += 2
+      require(len >= 1, s"PPS length $len out of bounds")
+      Bin.checkRange(pos, len, a.length, "PPS length")
       require((a(pos) & 0x1f) == 8, "parameter set is not a PPS")
       pos += len
     }
@@ -3910,9 +3853,9 @@ object Codecs {
     val avcc = mp4Box("avcC", rec.toByteArray)
     val entry = new Array[Byte](78)
     entry(7) = 1 // data_reference_index
-    entry(24) = (w >> 8).toByte; entry(25) = (w & 0xff).toByte
-    entry(26) = (h >> 8).toByte; entry(27) = (h & 0xff).toByte
-    put32be(entry, 28, 0x00480000); put32be(entry, 32, 0x00480000) // 72 dpi
+    Bin.put16be(entry, 24, w)
+    Bin.put16be(entry, 26, h)
+    Bin.put32be(entry, 28, 0x00480000); Bin.put32be(entry, 32, 0x00480000) // 72 dpi
     entry(40) = 1 // frame_count
     entry(74) = 0x18 // depth 24
     entry(76) = 0xff.toByte; entry(77) = 0xff.toByte // pre_defined -1
@@ -3940,9 +3883,9 @@ object Codecs {
     var sps: Array[Byte] = null
     (0 until nSps).foreach { i =>
       require(pos + 2 <= a.length, "truncated SPS length")
-      val len = u16be(a, pos); pos += 2
-      require(len >= 1 && pos + len <= a.length,
-        s"SPS length $len out of bounds")
+      val len = Bin.u16be(a, pos, a.length, "mp4"); pos += 2
+      require(len >= 1, s"SPS length $len out of bounds")
+      Bin.checkRange(pos, len, a.length, "SPS length")
       if (i == 0) {
         require((a(pos) & 0x1f) == 7, "first parameter set is not an SPS")
         sps = java.util.Arrays.copyOfRange(a, pos, pos + len)
@@ -3953,9 +3896,9 @@ object Codecs {
     val nPps = a(pos) & 0xff; pos += 1
     require(nPps >= 1, "avcC carries no PPS")
     require(pos + 2 <= a.length, "truncated PPS length")
-    val ppsLen = u16be(a, pos); pos += 2
-    require(ppsLen >= 1 && pos + ppsLen <= a.length,
-      s"PPS length $ppsLen out of bounds")
+    val ppsLen = Bin.u16be(a, pos, a.length, "mp4"); pos += 2
+    require(ppsLen >= 1, s"PPS length $ppsLen out of bounds")
+    Bin.checkRange(pos, ppsLen, a.length, "PPS length")
     require((a(pos) & 0x1f) == 8, "parameter set is not a PPS")
     (sps, java.util.Arrays.copyOfRange(a, pos, pos + ppsLen), nalLenSize)
   }
@@ -4060,8 +4003,7 @@ object Codecs {
             s"at offset $pos — frame walk desynced")
         }
         val frameLen = 144000 * kbps / sr + pad
-        require(pos + frameLen <= bytes.length,
-          s"MP3 frame ($frameLen B) at offset $pos overruns the stream")
+        Bin.checkRange(pos, frameLen, bytes.length, "MP3 frame")
         nFrames += 1; kbpsSum += kbps; frameBytes += frameLen
         pos += frameLen
       }
@@ -4105,7 +4047,7 @@ object Codecs {
     require(srIdx != 3, s"reserved sample-rate index at $pos")
     val frameLen = 144000 * mp3BitrateKbps(bitIdx) /
       mp3SampleRates(srIdx) + ((b3 >> 1) & 1)
-    require(pos + frameLen <= bytes.length, s"frame overruns at $pos")
+    Bin.checkRange(pos, frameLen, bytes.length, "frame overruns")
     (frameLen, if (((b4 >> 6) & 3) == 3) 1 else 2)
   }
 
@@ -4191,15 +4133,16 @@ object Codecs {
   def mp4aMeta(bytes: Array[Byte]): Mp4aMeta = {
     val stsd = oneBox(stblKids(bytes), "stsd")
     require(stsd.end - stsd.start >= 8, "truncated stsd header")
-    val nEntries = u32be(bytes, stsd.start + 4)
+    val nEntries = Bin.u32be(bytes, stsd.start + 4, bytes.length, "mp4").toInt
     require(nEntries == 1, s"stsd carries $nEntries entries, expected 1")
     val mp4a = oneBox(mp4Walk(bytes, stsd.start + 8, stsd.end), "mp4a")
     // AudioSampleEntry: 6 reserved + u16 data_ref_index + 8 reserved +
     // u16 channelcount + u16 samplesize + 4 pre_defined/reserved +
     // u32 samplerate (16.16) = 28 bytes before the child boxes
     require(mp4a.end - mp4a.start >= 28, "truncated mp4a sample entry")
-    val entryChannels = u16be(bytes, mp4a.start + 16)
-    val entryRate = u16be(bytes, mp4a.start + 24) // 16.16 integer part
+    val entryChannels = Bin.u16be(bytes, mp4a.start + 16, bytes.length, "mp4")
+    val entryRate = Bin.u16be(bytes, mp4a.start + 24, bytes.length,
+      "mp4") // 16.16 integer part
     val esds = oneBox(mp4Walk(bytes, mp4a.start + 28, mp4a.end), "esds")
     val a = java.util.Arrays.copyOfRange(bytes, esds.start, esds.end)
     require(a.length >= 4, "truncated esds version/flags")
@@ -4212,8 +4155,7 @@ object Codecs {
       pos += 1
       val (len, n) = readDescLen(a, pos)
       pos += n
-      require(pos + len <= a.length, s"$name descriptor length $len " +
-        "overruns esds")
+      Bin.checkRange(pos, len, a.length, "esds descriptor")
       len
     }
     tag(0x03, "ES") // ES_Descriptor
@@ -4227,8 +4169,8 @@ object Codecs {
     val oti = a(pos) & 0xff
     require(oti == 0x40, s"objectTypeIndication 0x${oti.toHexString}, " +
       "expected 0x40 (MPEG-4 Audio)")
-    val maxBitrate = u32be(a, pos + 5)
-    val avgBitrate = u32be(a, pos + 9)
+    val maxBitrate = Bin.u32be(a, pos + 5, a.length, "mp4").toInt
+    val avgBitrate = Bin.u32be(a, pos + 9, a.length, "mp4").toInt
     pos += 13
     val ascLen = tag(0x05, "DecoderSpecificInfo")
     require(ascLen >= 2, s"AudioSpecificConfig of $ascLen bytes")
@@ -4271,7 +4213,7 @@ object Codecs {
       p(0) = 0x40 // objectTypeIndication: MPEG-4 Audio
       p(1) = ((0x05 << 2) | 1).toByte // streamType AudioStream, reserved
       p(2) = 0; p(3) = 0x20; p(4) = 0 // bufferSizeDB
-      put32be(p, 5, mx); put32be(p, 9, avg)
+      Bin.put32be(p, 5, mx); Bin.put32be(p, 9, avg)
       Array[Byte](0x04, (13 + dsi.length).toByte) ++ p ++ dsi
     }
     val slc = Array[Byte](0x06, 1, 0x02)
@@ -4290,7 +4232,7 @@ object Codecs {
     entry(16) = 0; entry(17) = chan.toByte
     entry(18) = 0; entry(19) = 16 // samplesize
     val sr = aacSampleRates(srIdx)
-    entry(24) = (sr >> 8).toByte; entry(25) = (sr & 0xff).toByte
+    Bin.put16be(entry, 24, sr)
     val mp4a = mp4Box("mp4a", entry ++ esds)
     val stsd = mp4Box("stsd", Array[Byte](0, 0, 0, 0, 0, 0, 0, 1) ++ mp4a)
     val stbl = mp4Box("stbl", stsd)
@@ -4388,7 +4330,7 @@ object Codecs {
         val kind = tf match {
           case '0' | 0 => "file"
           case '5' => "dir"
-          case other => sys.error(
+          case other => throw new IllegalArgumentException(
             s"tar typeflag '${other.toChar}' unsupported in the walk")
         }
         if (kind == "dir") require(size == 0, s"tar dir $name with size $size")
@@ -4510,12 +4452,8 @@ object Codecs {
   final case class ZipMember(idx: Int, name: String, method: String,
       usize: Long)
 
-  private def u16le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], o: Int): Long =
-    (u16le(b, o) & 0xffffL) | ((u16le(b, o + 2) & 0xffffL) << 16)
   private def u64le(b: Array[Byte], o: Int): Long = {
-    val v = u32le(b, o) | (u32le(b, o + 4) << 32)
+    val v = Bin.u64le(b, o, b.length, "zip")
     require(v >= 0, s"zip64 u64 field at $o exceeds 2^63")
     v
   }
@@ -4546,30 +4484,32 @@ object Codecs {
     while (eocd < 0 && p >= floor) {
       if (bytes(p) == 0x50 && bytes(p + 1) == 0x4b && bytes(p + 2) == 5 &&
           bytes(p + 3) == 6 &&
-          p + 22 + u16le(bytes, p + 20) == bytes.length) eocd = p
+          p + 22 + Bin.u16le(bytes, p + 20, bytes.length,
+            "zip") == bytes.length) eocd = p
       else p -= 1
     }
     require(eocd >= 0, "no end-of-central-directory record")
-    var nEntries: Long = u16le(bytes, eocd + 10)
-    require(nEntries == u16le(bytes, eocd + 8),
+    var nEntries: Long = Bin.u16le(bytes, eocd + 10, bytes.length, "zip")
+    require(nEntries == Bin.u16le(bytes, eocd + 8, bytes.length, "zip"),
       "multi-disk ZIP unsupported in the walk")
-    var cdSize = u32le(bytes, eocd + 12)
-    var cdOff = u32le(bytes, eocd + 16)
+    var cdSize = Bin.u32le(bytes, eocd + 12, bytes.length, "zip")
+    var cdOff = Bin.u32le(bytes, eocd + 16, bytes.length, "zip")
     // ZIP64 (APPNOTE 4.4.1.4): any classic field at its ceiling means
     // the true values live in the Zip64 EOCD record, located by the
     // 20-byte locator that must sit immediately before the classic EOCD
     var cdEnd = eocd
     if (nEntries == 0xffff || cdSize == 0xffffffffL || cdOff == 0xffffffffL) {
       val loc = eocd - 20
-      require(loc >= 0 && u32le(bytes, loc) == 0x07064b50L,
+      require(loc >= 0 && Bin.u32le(bytes, loc, bytes.length, "zip") == 0x07064b50L,
         "classic EOCD at its ceiling but no zip64 locator before it")
-      require(u32le(bytes, loc + 4) == 0 && u32le(bytes, loc + 16) == 1,
+      require(Bin.u32le(bytes, loc + 4, bytes.length, "zip") == 0 &&
+        Bin.u32le(bytes, loc + 16, bytes.length, "zip") == 1,
         "multi-disk zip64 unsupported in the walk")
       val e64 = u64le(bytes, loc + 8)
       require(e64 + 56 <= loc,
         s"zip64 EOCD record at $e64 overruns its locator at $loc")
       val e = e64.toInt
-      require(u32le(bytes, e) == 0x06064b50L,
+      require(Bin.u32le(bytes, e, bytes.length, "zip") == 0x06064b50L,
         s"bad zip64 EOCD signature at $e")
       nEntries = u64le(bytes, e + 32)
       require(nEntries == u64le(bytes, e + 24),
@@ -4590,20 +4530,21 @@ object Codecs {
     var pos = cdOff.toInt
     (0L until nEntries).foreach { _ =>
       require(pos + 46 <= cdEnd, s"truncated central-dir entry at $pos")
-      require(u32le(bytes, pos) == 0x02014b50L,
+      require(Bin.u32le(bytes, pos, bytes.length, "zip") == 0x02014b50L,
         s"bad central-dir signature at $pos")
-      val method = u16le(bytes, pos + 10) match {
+      val method = Bin.u16le(bytes, pos + 10, bytes.length, "zip") match {
         case 0 => "stored"
         case 8 => "deflated"
-        case m => sys.error(s"ZIP compression method $m unsupported")
+        case m =>
+          throw new IllegalArgumentException(s"ZIP compression method $m unsupported")
       }
-      val crc = u32le(bytes, pos + 16)
-      var csize = u32le(bytes, pos + 20)
-      var usize = u32le(bytes, pos + 24)
-      val nameLen = u16le(bytes, pos + 28)
-      val extraLen = u16le(bytes, pos + 30)
-      val cmtLen = u16le(bytes, pos + 32)
-      var localOff = u32le(bytes, pos + 42)
+      val crc = Bin.u32le(bytes, pos + 16, bytes.length, "zip")
+      var csize = Bin.u32le(bytes, pos + 20, bytes.length, "zip")
+      var usize = Bin.u32le(bytes, pos + 24, bytes.length, "zip")
+      val nameLen = Bin.u16le(bytes, pos + 28, bytes.length, "zip")
+      val extraLen = Bin.u16le(bytes, pos + 30, bytes.length, "zip")
+      val cmtLen = Bin.u16le(bytes, pos + 32, bytes.length, "zip")
+      var localOff = Bin.u32le(bytes, pos + 42, bytes.length, "zip")
       require(pos + 46 + nameLen + extraLen <= cdEnd,
         s"central-dir name/extra overruns at $pos")
       val name = new String(bytes, pos + 46, nameLen, "US-ASCII")
@@ -4616,8 +4557,8 @@ object Codecs {
         val extraEnd = off + extraLen
         var found = false
         while (!found && off + 4 <= extraEnd) {
-          val id = u16le(bytes, off)
-          val sz = u16le(bytes, off + 2)
+          val id = Bin.u16le(bytes, off, bytes.length, "zip")
+          val sz = Bin.u16le(bytes, off + 2, bytes.length, "zip")
           require(off + 4 + sz <= extraEnd,
             s"extra field $id overruns its block for $name")
           if (id == 1) {
@@ -4641,17 +4582,15 @@ object Codecs {
       require(localOff + 30 <= bytes.length,
         s"local header offset $localOff for $name overruns the archive")
       val lo = localOff.toInt
-      require(u32le(bytes, lo) == 0x04034b50L,
+      require(Bin.u32le(bytes, lo, bytes.length, "zip") == 0x04034b50L,
         s"bad local header for $name at $lo")
-      require(lo + 30 + nameLen <= bytes.length,
-        s"local header name for $name overruns the archive")
-      require(u16le(bytes, lo + 26) == nameLen &&
+      Bin.checkRange(lo + 30, nameLen, bytes.length, "local header name")
+      require(Bin.u16le(bytes, lo + 26, bytes.length, "zip") == nameLen &&
         new String(bytes, lo + 30, nameLen, "US-ASCII") == name,
         s"local header name disagrees with central dir for $name")
-      val lExtra = u16le(bytes, lo + 28)
+      val lExtra = Bin.u16le(bytes, lo + 28, bytes.length, "zip")
       val dataOff = lo + 30 + nameLen + lExtra
-      require(dataOff + csize <= bytes.length,
-        s"member $name payload overruns the archive")
+      Bin.checkRange(dataOff, csize, bytes.length, "zip member payload")
       val payload = java.util.Arrays.copyOfRange(
         bytes, dataOff, dataOff + csize.toInt)
       val plain =
@@ -4670,7 +4609,8 @@ object Codecs {
             val buf = new Array[Byte](usize.toInt + 1)
             val got = try inf.inflate(buf) catch {
               case e: java.util.zip.DataFormatException =>
-                sys.error(s"member $name deflate stream corrupt: " +
+                throw new IllegalArgumentException(
+                  s"member $name deflate stream corrupt: " +
                   e.getMessage)
             }
             require(got == usize && inf.finished(),
@@ -4720,21 +4660,15 @@ object Codecs {
       val nb = name.getBytes("US-ASCII")
       val localOff = out.size()
       val lh = new Array[Byte](30)
-      def p16(b: Array[Byte], o: Int, v: Int): Unit = {
-        b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-      }
-      def p32(b: Array[Byte], o: Int, v: Long): Unit = {
-        p16(b, o, (v & 0xffff).toInt); p16(b, o + 2, ((v >> 16) & 0xffff).toInt)
-      }
-      p32(lh, 0, 0x04034b50L); p16(lh, 4, 20); p16(lh, 8, method)
-      p32(lh, 14, crc); p32(lh, 18, payload.length); p32(lh, 22, plain.length)
-      p16(lh, 26, nb.length)
+      Bin.put32le(lh, 0, 0x04034b50L); Bin.put16le(lh, 4, 20); Bin.put16le(lh, 8, method)
+      Bin.put32le(lh, 14, crc); Bin.put32le(lh, 18, payload.length); Bin.put32le(lh, 22, plain.length)
+      Bin.put16le(lh, 26, nb.length)
       out.write(lh); out.write(nb); out.write(payload)
       val ce = new Array[Byte](46)
-      p32(ce, 0, 0x02014b50L); p16(ce, 4, 20); p16(ce, 6, 20)
-      p16(ce, 10, method)
-      p32(ce, 16, crc); p32(ce, 20, payload.length); p32(ce, 24, plain.length)
-      p16(ce, 28, nb.length); p32(ce, 42, localOff)
+      Bin.put32le(ce, 0, 0x02014b50L); Bin.put16le(ce, 4, 20); Bin.put16le(ce, 6, 20)
+      Bin.put16le(ce, 10, method)
+      Bin.put32le(ce, 16, crc); Bin.put32le(ce, 20, payload.length); Bin.put32le(ce, 24, plain.length)
+      Bin.put16le(ce, 28, nb.length); Bin.put32le(ce, 42, localOff)
       central.write(ce); central.write(nb)
     }
     val cdOff = out.size()
@@ -4778,15 +4712,6 @@ object Codecs {
   def synthZip64(d: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val central = new java.io.ByteArrayOutputStream()
-    def p16(b: Array[Byte], o: Int, v: Int): Unit = {
-      b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def p32(b: Array[Byte], o: Int, v: Long): Unit = {
-      p16(b, o, (v & 0xffff).toInt); p16(b, o + 2, ((v >> 16) & 0xffff).toInt)
-    }
-    def p64(b: Array[Byte], o: Int, v: Long): Unit = {
-      p32(b, o, v & 0xffffffffL); p32(b, o + 4, (v >>> 32) & 0xffffffffL)
-    }
     val n = (2 + d % 3).toInt
     (0 until n).foreach { j =>
       val name = s"big${d}_$j.dat"
@@ -4811,24 +4736,24 @@ object Codecs {
       val nb = name.getBytes("US-ASCII")
       val localOff = out.size()
       val lh = new Array[Byte](30)
-      p32(lh, 0, 0x04034b50L); p16(lh, 4, 45); p16(lh, 8, method)
-      p32(lh, 14, crc)
-      p32(lh, 18, 0xffffffffL); p32(lh, 22, 0xffffffffL)
-      p16(lh, 26, nb.length); p16(lh, 28, 20)
+      Bin.put32le(lh, 0, 0x04034b50L); Bin.put16le(lh, 4, 45); Bin.put16le(lh, 8, method)
+      Bin.put32le(lh, 14, crc)
+      Bin.put32le(lh, 18, 0xffffffffL); Bin.put32le(lh, 22, 0xffffffffL)
+      Bin.put16le(lh, 26, nb.length); Bin.put16le(lh, 28, 20)
       val lx = new Array[Byte](20)
-      p16(lx, 0, 1); p16(lx, 2, 16)
-      p64(lx, 4, usize); p64(lx, 12, payload.length)
+      Bin.put16le(lx, 0, 1); Bin.put16le(lx, 2, 16)
+      Bin.put64le(lx, 4, usize); Bin.put64le(lx, 12, payload.length)
       out.write(lh); out.write(nb); out.write(lx); out.write(payload)
       val ce = new Array[Byte](46)
-      p32(ce, 0, 0x02014b50L); p16(ce, 4, 45); p16(ce, 6, 45)
-      p16(ce, 10, method)
-      p32(ce, 16, crc)
-      p32(ce, 20, 0xffffffffL); p32(ce, 24, 0xffffffffL)
-      p16(ce, 28, nb.length); p16(ce, 30, 28)
-      p32(ce, 42, 0xffffffffL)
+      Bin.put32le(ce, 0, 0x02014b50L); Bin.put16le(ce, 4, 45); Bin.put16le(ce, 6, 45)
+      Bin.put16le(ce, 10, method)
+      Bin.put32le(ce, 16, crc)
+      Bin.put32le(ce, 20, 0xffffffffL); Bin.put32le(ce, 24, 0xffffffffL)
+      Bin.put16le(ce, 28, nb.length); Bin.put16le(ce, 30, 28)
+      Bin.put32le(ce, 42, 0xffffffffL)
       val cx = new Array[Byte](28)
-      p16(cx, 0, 1); p16(cx, 2, 24)
-      p64(cx, 4, usize); p64(cx, 12, payload.length); p64(cx, 20, localOff)
+      Bin.put16le(cx, 0, 1); Bin.put16le(cx, 2, 24)
+      Bin.put64le(cx, 4, usize); Bin.put64le(cx, 12, payload.length); Bin.put64le(cx, 20, localOff)
       central.write(ce); central.write(nb); central.write(cx)
     }
     val cdOff = out.size()
@@ -4836,22 +4761,22 @@ object Codecs {
     out.write(cd)
     val e64Off = out.size()
     val e64 = new Array[Byte](56)
-    p32(e64, 0, 0x06064b50L); p64(e64, 4, 44)
-    p16(e64, 12, 45); p16(e64, 14, 45)
-    p32(e64, 16, 0); p32(e64, 20, 0)
-    p64(e64, 24, n); p64(e64, 32, n)
-    p64(e64, 40, cd.length); p64(e64, 48, cdOff)
+    Bin.put32le(e64, 0, 0x06064b50L); Bin.put64le(e64, 4, 44)
+    Bin.put16le(e64, 12, 45); Bin.put16le(e64, 14, 45)
+    Bin.put32le(e64, 16, 0); Bin.put32le(e64, 20, 0)
+    Bin.put64le(e64, 24, n); Bin.put64le(e64, 32, n)
+    Bin.put64le(e64, 40, cd.length); Bin.put64le(e64, 48, cdOff)
     out.write(e64)
     val loc = new Array[Byte](20)
-    p32(loc, 0, 0x07064b50L); p32(loc, 4, 0)
-    p64(loc, 8, e64Off); p32(loc, 16, 1)
+    Bin.put32le(loc, 0, 0x07064b50L); Bin.put32le(loc, 4, 0)
+    Bin.put64le(loc, 8, e64Off); Bin.put32le(loc, 16, 1)
     out.write(loc)
     val comment = s"graft64-$d".getBytes("US-ASCII")
     val eocd = new Array[Byte](22)
-    p32(eocd, 0, 0x06054b50L)
-    p16(eocd, 8, 0xffff); p16(eocd, 10, 0xffff)
-    p32(eocd, 12, 0xffffffffL); p32(eocd, 16, 0xffffffffL)
-    p16(eocd, 20, comment.length)
+    Bin.put32le(eocd, 0, 0x06054b50L)
+    Bin.put16le(eocd, 8, 0xffff); Bin.put16le(eocd, 10, 0xffff)
+    Bin.put32le(eocd, 12, 0xffffffffL); Bin.put32le(eocd, 16, 0xffffffffL)
+    Bin.put16le(eocd, 20, comment.length)
     out.write(eocd); out.write(comment)
     out.toByteArray
   }

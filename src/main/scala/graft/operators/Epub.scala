@@ -57,12 +57,13 @@ object Epub {
       "application/epub+zip",
       "epub: mimetype member carries the wrong media type")
     val container = byName.getOrElse("META-INF/container.xml",
-      sys.error("epub: missing META-INF/container.xml"))
+      throw new IllegalArgumentException("epub: missing META-INF/container.xml"))
     val rootfiles = elements(new String(container, "UTF-8"), "rootfile")
     require(rootfiles.nonEmpty, "epub: container.xml lists no rootfile")
     val opfPath = attr(rootfiles.head, "full-path")
     val opf = new String(byName.getOrElse(opfPath,
-      sys.error(s"epub: rootfile '$opfPath' not in the archive")), "UTF-8")
+      throw new IllegalArgumentException(
+        s"epub: rootfile '$opfPath' not in the archive")), "UTF-8")
     // dc:title from the metadata block
     val tOpen = opf.indexOf("<dc:title>")
     val tClose = opf.indexOf("</dc:title>")
@@ -80,10 +81,12 @@ object Epub {
     }
     val chapters = spine.zipWithIndex.map { case (idref, sIdx) =>
       val href = manifest.getOrElse(idref,
-        sys.error(s"epub: spine idref '$idref' not in the manifest"))
+        throw new IllegalArgumentException(
+          s"epub: spine idref '$idref' not in the manifest"))
       val path = opfDir + href
       val xhtml = new String(byName.getOrElse(path,
-        sys.error(s"epub: manifest href '$path' not in the archive")),
+        throw new IllegalArgumentException(
+          s"epub: manifest href '$path' not in the archive")),
         "UTF-8")
       val doc = Html.extract(xhtml)
       Chapter(sIdx, path, doc.title,

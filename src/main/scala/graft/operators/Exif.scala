@@ -43,9 +43,10 @@ object Exif {
       require((bytes(off) & 0xff) == 0xff, s"bad JPEG marker at $off")
       val marker = bytes(off + 1) & 0xff
       require(marker != 0xd9, "no Exif APP1 before EOI")
-      val len = ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
-      require(len >= 2 && off + 2 + len <= bytes.length,
-        s"JPEG segment overruns the payload at $off")
+      val len = Bin.u16be(bytes, off + 2, bytes.length)
+      require(len >= 2, s"JPEG segment overruns the payload at $off")
+      Bin.checkRange(off + 2, len, bytes.length,
+        "JPEG segment overruns the payload")
       if (marker == 0xe1 && len >= 8 &&
           bytes(off + 4) == 'E' && bytes(off + 5) == 'x' &&
           bytes(off + 6) == 'i' && bytes(off + 7) == 'f' &&
@@ -64,19 +65,17 @@ object Exif {
     val le = (bytes(tiff), bytes(tiff + 1)) match {
       case ('I', 'I') => true
       case ('M', 'M') => false
-      case _ => sys.error("bad TIFF byte-order mark in Exif")
+      case _ => throw new IllegalArgumentException("bad TIFF byte-order mark in Exif")
     }
     def u16(o: Int): Int = {
-      require(o >= tiff && o + 2 <= tiffEnd, "TIFF read out of bounds")
-      if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
+      require(o >= tiff, "TIFF read out of bounds")
+      if (le) Bin.u16le(bytes, o, tiffEnd, "Exif TIFF")
+      else Bin.u16be(bytes, o, tiffEnd, "Exif TIFF")
     }
     def u32(o: Int): Int = {
-      require(o >= tiff && o + 4 <= tiffEnd, "TIFF read out of bounds")
-      if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-        ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-      else ((bytes(o) & 0xff) << 24) | ((bytes(o + 1) & 0xff) << 16) |
-        ((bytes(o + 2) & 0xff) << 8) | (bytes(o + 3) & 0xff)
+      require(o >= tiff, "TIFF read out of bounds")
+      (if (le) Bin.u32le(bytes, o, tiffEnd, "Exif TIFF")
+       else Bin.u32be(bytes, o, tiffEnd, "Exif TIFF")).toInt
     }
     require(u16(tiff + 2) == 42, "bad TIFF magic in Exif")
     val ifd = tiff + u32(tiff + 4)
@@ -93,7 +92,8 @@ object Exif {
         case 1 | 2 => 1 // BYTE / ASCII
         case 3 => 2 // SHORT
         case 4 => 4 // LONG
-        case t => sys.error(s"EXIF value type $t out of subset")
+        case t =>
+          throw new IllegalArgumentException(s"EXIF value type $t out of subset")
       }
       require(cnt >= 0 && cnt <= tiffEnd - tiff,
         s"absurd EXIF value count $cnt")
@@ -141,16 +141,9 @@ object Exif {
     val tiffLen = valBase + makeB.length + dtB.length
     val t = new Array[Byte](tiffLen)
     def p16(o: Int, v: Int): Unit =
-      if (le) { t(o) = v.toByte; t(o + 1) = (v >> 8).toByte }
-      else { t(o) = (v >> 8).toByte; t(o + 1) = v.toByte }
+      if (le) Bin.put16le(t, o, v) else Bin.put16be(t, o, v)
     def p32(o: Int, v: Int): Unit =
-      if (le) {
-        t(o) = v.toByte; t(o + 1) = (v >> 8).toByte
-        t(o + 2) = (v >> 16).toByte; t(o + 3) = (v >> 24).toByte
-      } else {
-        t(o) = (v >> 24).toByte; t(o + 1) = (v >> 16).toByte
-        t(o + 2) = (v >> 8).toByte; t(o + 3) = v.toByte
-      }
+      if (le) Bin.put32le(t, o, v) else Bin.put32be(t, o, v)
     t(0) = (if (le) 'I' else 'M').toByte; t(1) = t(0)
     p16(2, 42); p32(4, 8)
     p16(8, nE)
@@ -182,7 +175,7 @@ object Exif {
     out.write(com, 0, com.length)
     val app1Len = 2 + 6 + tiffLen
     out.write(0xff); out.write(0xe1)
-    out.write(app1Len >> 8); out.write(app1Len & 0xff)
+    out.write(Bin.be16(app1Len))
     out.write("Exif".getBytes("US-ASCII"), 0, 4); out.write(0); out.write(0)
     out.write(t, 0, tiffLen)
     out.write(0xff); out.write(0xd9) // EOI

@@ -33,14 +33,6 @@ object Flac {
       bitsPerSample: Int, totalSamples: Long, durationMs: Long,
       nBlocks: Int, title: String)
 
-  private def u16be(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  private def u24be(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 16) | ((b(o + 1) & 0xff) << 8) | (b(o + 2) & 0xff)
-  private def u32le(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL)) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
   def meta(bytes: Array[Byte]): FlacMeta = {
     require(bytes.length >= 4 + 4 + 34 &&
       bytes(0) == 'f' && bytes(1) == 'L' && bytes(2) == 'a' &&
@@ -55,10 +47,9 @@ object Flac {
       val hdr = bytes(off) & 0xff
       last = (hdr & 0x80) != 0
       val typ = hdr & 0x7f
-      val len = u24be(bytes, off + 1)
+      val len = Bin.u24be(bytes, off + 1, bytes.length)
       val body = off + 4
-      require(body + len <= bytes.length,
-        s"FLAC block length $len overruns the file")
+      Bin.checkRange(body, len, bytes.length, "FLAC block")
       if (nBlocks == 0) require(typ == 0,
         s"first FLAC block must be STREAMINFO, got type $typ")
       typ match {
@@ -67,30 +58,26 @@ object Flac {
           require(sr < 0, "duplicate STREAMINFO block")
           // 10 bytes of blocksize/framesize bounds, then the packed 64
           val p = body + 10
-          sr = ((bytes(p) & 0xff) << 12) | ((bytes(p + 1) & 0xff) << 4) |
-            ((bytes(p + 2) & 0xff) >> 4)
+          sr = Bin.u24be(bytes, p, bytes.length) >> 4
           ch = ((bytes(p + 2) >> 1) & 0x7) + 1
           bps = (((bytes(p + 2) & 0x1) << 4) |
             ((bytes(p + 3) & 0xff) >> 4)) + 1
           total = ((bytes(p + 3) & 0xfL) << 32) |
-            ((bytes(p + 4) & 0xffL) << 24) | ((bytes(p + 5) & 0xffL) << 16) |
-            ((bytes(p + 6) & 0xffL) << 8) | (bytes(p + 7) & 0xffL)
+            Bin.u32be(bytes, p + 4, bytes.length)
           require(sr > 0, "STREAMINFO sample rate is zero")
         case 4 =>
           // Vorbis comment: LE-length vendor, LE count, KEY=value runs
           var p = body
           def readLen(): Int = {
-            require(p + 4 <= body + len, "truncated vorbis length")
-            val v = u32le(bytes, p); p += 4
-            require(v >= 0 && p + v <= body + len,
-              s"vorbis field length $v overruns the block")
+            val v = Bin.u32le(bytes, p, body + len, "vorbis length"); p += 4
+            Bin.checkRange(p, v, body + len, "vorbis field")
             v.toInt
           }
           // NB: not `p += readLen()` — that reads the old p before
           // readLen() advances it past the length field.
           val vendLen = readLen(); p += vendLen // vendor string skipped
-          require(p + 4 <= body + len, "truncated vorbis comment count")
-          val n = u32le(bytes, p).toInt; p += 4
+          val n = Bin.u32le(bytes, p, body + len, "vorbis comment count")
+            .toInt; p += 4
           require(n >= 0 && n <= len, s"absurd vorbis comment count $n")
           (0 until n).foreach { _ =>
             val l = readLen()
@@ -129,15 +116,9 @@ object Flac {
     // STREAMINFO
     out.write(0x00); out.write(0); out.write(0); out.write(34)
     val si = new Array[Byte](34)
-    def put16(o: Int, v: Int): Unit = {
-      si(o) = (v >> 8).toByte; si(o + 1) = v.toByte
-    }
-    def put24(o: Int, v: Int): Unit = {
-      si(o) = (v >> 16).toByte; si(o + 1) = (v >> 8).toByte
-      si(o + 2) = v.toByte
-    }
-    put16(0, 4096); put16(2, 4096)
-    put24(4, (14 + d % 100).toInt); put24(7, (2000 + d % 500).toInt)
+    Bin.put16be(si, 0, 4096); Bin.put16be(si, 2, 4096)
+    Bin.put24be(si, 4, (14 + d % 100).toInt)
+    Bin.put24be(si, 7, (2000 + d % 500).toInt)
     si(10) = (sr >> 12).toByte
     si(11) = ((sr >> 4) & 0xff).toByte
     si(12) = (((sr & 0xf) << 4) | ((ch - 1) << 1) |
@@ -158,15 +139,10 @@ object Flac {
     val vendor = "graft0".getBytes("UTF-8")
     val comment = s"TITLE=t${d % 20}".getBytes("UTF-8")
     val vcLen = 4 + vendor.length + 4 + 4 + comment.length
-    out.write(0x80 | 0x04); out.write(0); out.write(vcLen >> 8)
-    out.write(vcLen & 0xff)
-    def putLe(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    putLe(vendor.length); out.write(vendor, 0, vendor.length)
-    putLe(1)
-    putLe(comment.length); out.write(comment, 0, comment.length)
+    out.write(0x80 | 0x04); out.write(0); out.write(Bin.be16(vcLen))
+    out.write(Bin.le32(vendor.length)); out.write(vendor, 0, vendor.length)
+    out.write(Bin.le32(1))
+    out.write(Bin.le32(comment.length)); out.write(comment, 0, comment.length)
     out.toByteArray
   }
 
@@ -230,98 +206,66 @@ object Flac {
     c
   }
 
-  /** MSB-first bit reader over a byte array. */
-  private final class BitReader(val b: Array[Byte], var bit: Long) {
-    def byteAt: Int = (bit / 8).toInt
-    def readBits(n: Int): Int = {
-      require(bit + n <= b.length * 8L, "FLAC frame overruns the file")
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val by = (bit / 8).toInt
-        val sh = 7 - (bit % 8).toInt
-        v = (v << 1) | ((b(by) >> sh) & 1)
-        bit += 1
-        k += 1
-      }
-      v
+  // FLAC's own codes over the shared MSB-first bit reader and writer.
+
+  private def signed(v: Int, n: Int): Int = (v << (32 - n)) >> (32 - n)
+
+  private def readUnary(r: Bin.MsbReader): Int = {
+    var q = 0
+    while (r.u(1) == 0) {
+      q += 1
+      require(q <= (1 << 20), "absurd unary quotient — desynced stream")
     }
-    def readUnary(): Int = {
-      var q = 0
-      while ({ require(bit < b.length * 8L, "unary run overruns the file")
-               ((b((bit / 8).toInt) >> (7 - (bit % 8).toInt)) & 1) == 0 }) {
-        q += 1; bit += 1
-        require(q <= (1 << 20), "absurd unary quotient — desynced stream")
-      }
-      bit += 1
-      q
-    }
-    /** FLAC's UTF-8-style coded number (RFC 9639 §9.1.5): the frame /
-      * sample number, 1-7 bytes, extended past Unicode's 4-byte cap to
-      * 36 bits. Continuation bytes must carry the 0b10 prefix. */
-    def readUtf8Coded(): Long = {
-      val b0 = readBits(8)
-      var n = 0
-      while (n < 8 && ((b0 << n) & 0x80) != 0) n += 1
-      if (n == 0) return b0.toLong
-      require(n >= 2 && n <= 7,
-        s"invalid UTF-8-coded number lead byte 0x${b0.toHexString}")
-      var v = (b0 & (0x7f >> n)).toLong
-      var k = 1
-      while (k < n) {
-        val c = readBits(8)
-        require((c & 0xc0) == 0x80,
-          s"invalid UTF-8-coded number continuation 0x${c.toHexString}")
-        v = (v << 6) | (c & 0x3f)
-        k += 1
-      }
-      v
-    }
-    def alignByte(): Unit = {
-      while (bit % 8 != 0) {
-        require(readBits(1) == 0, "nonzero frame padding bits")
-      }
-    }
-    def signed(v: Int, n: Int): Int = (v << (32 - n)) >> (32 - n)
+    q
   }
 
-  /** MSB-first bit writer. */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream(1024)
-    private var cur = 0
-    private var nCur = 0
-    def writeBits(v: Int, n: Int): Unit = {
-      var k = n - 1
+  /** FLAC's UTF-8-style coded number (RFC 9639 §9.1.5): the frame /
+    * sample number, 1-7 bytes, extended past Unicode's 4-byte cap to
+    * 36 bits. Continuation bytes must carry the 0b10 prefix. */
+  private def readUtf8Coded(r: Bin.MsbReader): Long = {
+    val b0 = r.u(8)
+    var n = 0
+    while (n < 8 && ((b0 << n) & 0x80) != 0) n += 1
+    if (n == 0) return b0.toLong
+    require(n >= 2 && n <= 7,
+      s"invalid UTF-8-coded number lead byte 0x${b0.toHexString}")
+    var v = (b0 & (0x7f >> n)).toLong
+    var k = 1
+    while (k < n) {
+      val c = r.u(8)
+      require((c & 0xc0) == 0x80,
+        s"invalid UTF-8-coded number continuation 0x${c.toHexString}")
+      v = (v << 6) | (c & 0x3f)
+      k += 1
+    }
+    v
+  }
+
+  private def alignZero(r: Bin.MsbReader): Unit =
+    while (r.bitPos % 8 != 0)
+      require(r.u(1) == 0, "nonzero frame padding bits")
+
+  private def writeUnary(w: Bin.MsbWriter, q: Int): Unit = {
+    var i = 0
+    while (i < q) { w.u(0, 1); i += 1 }
+    w.u(1, 1)
+  }
+
+  /** The write side of readUtf8Coded — minimal-length encoding. */
+  private def writeUtf8Coded(w: Bin.MsbWriter, v: Long): Unit = {
+    require(v >= 0 && v < (1L << 36), s"coded number $v out of 36-bit range")
+    if (v < 0x80) w.u(v.toInt, 8)
+    else {
+      // payload capacity of the n-byte form: (7-n) + 6(n-1) = 5n+1 bits
+      var n = 2
+      while (n < 7 && v >= (1L << (5 * n + 1))) n += 1
+      w.u((0xff << (8 - n)) & 0xff | (v >> (6 * (n - 1))).toInt, 8)
+      var k = n - 2
       while (k >= 0) {
-        cur = (cur << 1) | ((v >> k) & 1)
-        nCur += 1
-        if (nCur == 8) { out.write(cur); cur = 0; nCur = 0 }
+        w.u(0x80 | ((v >> (6 * k)) & 0x3f).toInt, 8)
         k -= 1
       }
     }
-    def writeUnary(q: Int): Unit = {
-      var i = 0
-      while (i < q) { writeBits(0, 1); i += 1 }
-      writeBits(1, 1)
-    }
-    def alignByte(): Unit = while (nCur != 0) writeBits(0, 1)
-    /** The write side of readUtf8Coded — minimal-length encoding. */
-    def writeUtf8Coded(v: Long): Unit = {
-      require(v >= 0 && v < (1L << 36), s"coded number $v out of 36-bit range")
-      if (v < 0x80) writeBits(v.toInt, 8)
-      else {
-        // payload capacity of the n-byte form: (7-n) + 6(n-1) = 5n+1 bits
-        var n = 2
-        while (n < 7 && v >= (1L << (5 * n + 1))) n += 1
-        writeBits((0xff << (8 - n)) & 0xff | (v >> (6 * (n - 1))).toInt, 8)
-        var k = n - 2
-        while (k >= 0) {
-          writeBits(0x80 | ((v >> (6 * k)) & 0x3f).toInt, 8)
-          k -= 1
-        }
-      }
-    }
-    def toBytes: Array[Byte] = { require(nCur == 0); out.toByteArray }
   }
 
   private val AudioBlock = 256
@@ -477,14 +421,14 @@ object Flac {
     * partition either escape-coded verbatim (escapePartition) or Rice
     * with the smallest per-partition 4-bit parameter keeping every
     * quotient under 64. */
-  private def writeRice(body: BitWriter, resid: Seq[Int], order: Int,
+  private def writeRice(body: Bin.MsbWriter, resid: Seq[Int], order: Int,
       d: Long, f: Int, bs: Int): Unit = {
     var po = partitionOrderOf(d, f)
     while (po > 0 && ((bs >> po) << po != bs || (bs >> po) <= order))
       po -= 1
     require((bs >> po) > order, s"blocksize $bs too small for order $order")
-    body.writeBits(0, 2) // residual method 0: 4-bit Rice
-    body.writeBits(po, 4)
+    body.u(0, 2) // residual method 0: 4-bit Rice
+    body.u(po, 4)
     val all = resid.toArray
     var pi = 0
     var idx = 0
@@ -497,17 +441,17 @@ object Flac {
           val bits = 33 - Integer.numberOfLeadingZeros(if (r < 0) ~r else r)
           if (bits > w) w = bits
         }
-        body.writeBits(15, 4)
-        body.writeBits(w, 5)
-        part.foreach(r => body.writeBits(r & ((1 << w) - 1), w))
+        body.u(15, 4)
+        body.u(w, 5)
+        part.foreach(r => body.u(r & ((1 << w) - 1), w))
       } else {
         val zz = part.map(r => (r << 1) ^ (r >> 31))
         var p = 0
         while (p < 14 && zz.exists(z => (z >>> p) >= 64)) p += 1
-        body.writeBits(p, 4)
+        body.u(p, 4)
         zz.foreach { z =>
-          body.writeUnary(z >>> p)
-          if (p > 0) body.writeBits(z & ((1 << p) - 1), p)
+          writeUnary(body, z >>> p)
+          if (p > 0) body.u(z & ((1 << p) - 1), p)
         }
       }
       idx += cnt
@@ -542,29 +486,29 @@ object Flac {
     * samples share k > 0 trailing zero bits, the subframe is coded
     * with the wasted-bits header (flag 1 + unary k−1) at width
     * bits−k over the shifted-down values — the decoder shifts back. */
-  private def writeSubframe(body: BitWriter, samples: Array[Int],
+  private def writeSubframe(body: Bin.MsbWriter, samples: Array[Int],
       bits: Int, kind: Int, fixedOrder: Int, d: Long, f: Int): Unit = {
     val bs = samples.length
     val k = wastedBitsOf(samples, bits)
     val eb = bits - k
     val s = if (k == 0) samples else samples.map(_ >> k)
     def header(typ: Int): Unit = {
-      body.writeBits(0, 1); body.writeBits(typ, 6)
-      if (k == 0) body.writeBits(0, 1)
-      else { body.writeBits(1, 1); body.writeUnary(k - 1) }
+      body.u(0, 1); body.u(typ, 6)
+      if (k == 0) body.u(0, 1)
+      else { body.u(1, 1); writeUnary(body, k - 1) }
     }
     kind match {
       case 0 =>
         header(0)
-        body.writeBits(s(0) & ((1 << eb) - 1), eb)
+        body.u(s(0) & ((1 << eb) - 1), eb)
       case 1 =>
         header(1)
-        s.foreach(v => body.writeBits(v & ((1 << eb) - 1), eb))
+        s.foreach(v => body.u(v & ((1 << eb) - 1), eb))
       case 2 =>
         val order = fixedOrder
         header(8 + order)
         (0 until order).foreach(j =>
-          body.writeBits(s(j) & ((1 << eb) - 1), eb))
+          body.u(s(j) & ((1 << eb) - 1), eb))
         writeRice(body, (order until bs).map(j =>
           s(j) - fixedPredict(s, j, order)), order, d, f, bs)
       case _ =>
@@ -572,11 +516,11 @@ object Flac {
         val (c1, c2) = lpcCoefs(d)
         header(32 + (order - 1))
         (0 until order).foreach(j =>
-          body.writeBits(s(j) & ((1 << eb) - 1), eb))
-        body.writeBits(LpcPrecision - 1, 4)
-        body.writeBits(LpcShift, 5)
-        body.writeBits(c1 & ((1 << LpcPrecision) - 1), LpcPrecision)
-        body.writeBits(c2 & ((1 << LpcPrecision) - 1), LpcPrecision)
+          body.u(s(j) & ((1 << eb) - 1), eb))
+        body.u(LpcPrecision - 1, 4)
+        body.u(LpcShift, 5)
+        body.u(c1 & ((1 << LpcPrecision) - 1), LpcPrecision)
+        body.u(c2 & ((1 << LpcPrecision) - 1), LpcPrecision)
         writeRice(body, (order until bs).map { j =>
           val pred = (c1.toLong * s(j - 1) +
             c2.toLong * s(j - 2)) >> LpcShift
@@ -639,8 +583,8 @@ object Flac {
     }
     val si = new Array[Byte](34)
     System.arraycopy(md5.digest(), 0, si, 18, 16)
-    si(0) = (blockLen >> 8).toByte; si(1) = blockLen.toByte
-    si(2) = (blockLen >> 8).toByte; si(3) = blockLen.toByte
+    Bin.put16be(si, 0, blockLen)
+    Bin.put16be(si, 2, blockLen)
     si(10) = (sr >> 12).toByte
     si(11) = ((sr >> 4) & 0xff).toByte
     si(12) = (((sr & 0xf) << 4) | ((ch - 1) << 1) |
@@ -672,29 +616,29 @@ object Flac {
         else if (bs == 4096) 0xc
         else if (d % 4 == 1) 0x6 else 0x7
       val (srCode, srBits, srVal) = srCodeOf(d, f, sr)
-      val w = new BitWriter
+      val w = new Bin.MsbWriter
       // header: sync(14) 11111111111110, reserved 0, blocksize
       // strategy bit, blocksize code, sr code (cycling STREAMINFO /
       // fixed-table / end-of-header forms per srCodeOf), channel
       // code, sample size 100 (16), reserved 0
-      w.writeBits(0x3ffe, 14); w.writeBits(0, 1)
-      w.writeBits(if (variable) 1 else 0, 1)
-      w.writeBits(bsCode, 4); w.writeBits(srCode, 4)
-      w.writeBits(chanCode, 4)
-      w.writeBits(if (bits == 24) 0x6 else 0x4, 3); w.writeBits(0, 1)
+      w.u(0x3ffe, 14); w.u(0, 1)
+      w.u(if (variable) 1 else 0, 1)
+      w.u(bsCode, 4); w.u(srCode, 4)
+      w.u(chanCode, 4)
+      w.u(if (bits == 24) 0x6 else 0x4, 3); w.u(0, 1)
       // UTF-8-coded number: frame index under the fixed strategy, the
       // first SAMPLE number under the variable strategy (multibyte
       // from frame 1 on — 256 needs the 2-byte form)
-      w.writeUtf8Coded(if (variable) f.toLong * blockLen else f.toLong)
+      writeUtf8Coded(w, if (variable) f.toLong * blockLen else f.toLong)
       // inline blocksize then sample-rate fields follow the coded
       // number, in that order (RFC 9639 §9.1.1: "get from end of
       // header")
-      if (bsCode == 0x6) w.writeBits(bs - 1, 8)
-      else if (bsCode == 0x7) w.writeBits(bs - 1, 16)
-      if (srBits > 0) w.writeBits(srVal, srBits)
-      w.alignByte()
+      if (bsCode == 0x6) w.u(bs - 1, 8)
+      else if (bsCode == 0x7) w.u(bs - 1, 16)
+      if (srBits > 0) w.u(srVal, srBits)
+      w.align()
       val hdr = w.toBytes
-      val body = new BitWriter
+      val body = new Bin.MsbWriter
       val kind = f % 4
       val fixedOrder = (1 + d % 4).toInt
       if (ch == 1) {
@@ -733,7 +677,7 @@ object Flac {
             writeSubframe(body, side, bits + 1, 2, 1, d, f)
         }
       }
-      body.alignByte()
+      body.align()
       val frame = new java.io.ByteArrayOutputStream(hdr.length + 1024)
       frame.write(hdr, 0, hdr.length)
       frame.write(crc8(hdr, 0, hdr.length))
@@ -742,7 +686,7 @@ object Flac {
       val fb = frame.toByteArray
       val c16 = crc16(fb, 0, fb.length)
       out.write(fb, 0, fb.length)
-      out.write(c16 >> 8); out.write(c16 & 0xff)
+      out.write(Bin.be16(c16))
       f += 1
     }
     out.toByteArray
@@ -755,31 +699,31 @@ object Flac {
     * values: general partition orders, and escape partitions
     * (parameter 0b1111 → 5-bit width w, then verbatim w-bit
     * two's-complement residuals; w == 0 means all-zero). */
-  private def readResiduals(r: BitReader, order: Int,
+  private def readResiduals(r: Bin.MsbReader, order: Int,
       bs: Int): Array[Int] = {
     val res = new Array[Int](bs - order)
-    val method = r.readBits(2)
+    val method = r.u(2)
     require(method == 0,
       s"residual method $method unsupported (4-bit Rice only)")
-    val po = r.readBits(4)
+    val po = r.u(4)
     require((bs >> po) << po == bs && (bs >> po) > order,
       s"invalid partition order $po for blocksize $bs")
     var part = 0
     var idx = 0
     while (part < (1 << po)) {
       val cnt = (bs >> po) - (if (part == 0) order else 0)
-      val p = r.readBits(4)
+      val p = r.u(4)
       if (p == 15) { // escape: unencoded two's complement at w bits
-        val w = r.readBits(5)
+        val w = r.u(5)
         var s2 = 0
         while (s2 < cnt) {
-          res(idx) = if (w == 0) 0 else r.signed(r.readBits(w), w)
+          res(idx) = if (w == 0) 0 else signed(r.u(w), w)
           idx += 1; s2 += 1
         }
       } else {
         var s2 = 0
         while (s2 < cnt) {
-          val zz = (r.readUnary() << p) | (if (p > 0) r.readBits(p) else 0)
+          val zz = (readUnary(r) << p) | (if (p > 0) r.u(p) else 0)
           res(idx) = (zz >>> 1) ^ -(zz & 1)
           idx += 1; s2 += 1
         }
@@ -792,29 +736,29 @@ object Flac {
   /** One subframe at sample width `bits`: CONSTANT / VERBATIM /
     * FIXED(0-4) / LPC with quantized integer coefficients + shift.
     * Unsupported constructs fail loudly by name. */
-  private def decodeSubframe(r: BitReader, bits: Int,
+  private def decodeSubframe(r: Bin.MsbReader, bits: Int,
       bs: Int): Array[Int] = {
-    require(r.readBits(1) == 0, "subframe padding bit set")
-    val typ = r.readBits(6)
+    require(r.u(1) == 0, "subframe padding bit set")
+    val typ = r.u(6)
     // wasted bits (RFC 9639 §9.2.2): flag 1 + unary k−1; the subframe
     // decodes at width bits−k and every sample shifts left k at output
-    val k = if (r.readBits(1) == 1) r.readUnary() + 1 else 0
+    val k = if (r.u(1) == 1) readUnary(r) + 1 else 0
     require(k < bits, s"wasted bits $k exceed the $bits-bit sample width")
     val eb = bits - k
     val block = new Array[Int](bs)
     typ match {
       case 0 =>
-        java.util.Arrays.fill(block, r.signed(r.readBits(eb), eb))
+        java.util.Arrays.fill(block, signed(r.u(eb), eb))
       case 1 =>
         var j = 0
         while (j < bs) {
-          block(j) = r.signed(r.readBits(eb), eb); j += 1
+          block(j) = signed(r.u(eb), eb); j += 1
         }
       case t if t >= 8 && t <= 12 =>
         val order = t - 8
         var j = 0
         while (j < order) {
-          block(j) = r.signed(r.readBits(eb), eb); j += 1
+          block(j) = signed(r.u(eb), eb); j += 1
         }
         val res = readResiduals(r, order, bs)
         var i = order
@@ -829,15 +773,15 @@ object Flac {
         val order = (t & 31) + 1
         var j = 0
         while (j < order) {
-          block(j) = r.signed(r.readBits(eb), eb); j += 1
+          block(j) = signed(r.u(eb), eb); j += 1
         }
-        val precM1 = r.readBits(4)
+        val precM1 = r.u(4)
         require(precM1 != 15, "invalid LPC coefficient precision 15")
         val prec = precM1 + 1
-        val shiftRaw = r.readBits(5)
+        val shiftRaw = r.u(5)
         require(shiftRaw < 16,
           s"negative LPC shift ${shiftRaw - 32} is invalid per spec")
-        val coefs = Array.fill(order)(r.signed(r.readBits(prec), prec))
+        val coefs = Array.fill(order)(signed(r.u(prec), prec))
         val res = readResiduals(r, order, bs)
         var i = order
         while (i < bs) {
@@ -849,7 +793,7 @@ object Flac {
           block(i) = res(i - order) + (acc >> shiftRaw).toInt
           i += 1
         }
-      case t => sys.error(s"reserved subframe type $t")
+      case t => throw new IllegalArgumentException(s"reserved subframe type $t")
     }
     if (k > 0) {
       var i = 0
@@ -880,7 +824,7 @@ object Flac {
     var last = false
     while (!last) {
       last = (bytes(off) & 0x80) != 0
-      off += 4 + u24be(bytes, off + 1)
+      off += 4 + Bin.u24be(bytes, off + 1, bytes.length)
     }
     // allocation guard: an all-CONSTANT 4096-sample frame is ~20
     // bytes, so ~512 samples per file byte bounds every legal stream
@@ -895,27 +839,27 @@ object Flac {
     val outSamples = new Array[Int](m.totalSamples.toInt * m.channels)
     // the stream blocksize governs every frame but a short last one;
     // STREAMINFO is the first block, so min blocksize sits at byte 8
-    val streamBs = u16be(bytes, 8)
+    val streamBs = Bin.u16be(bytes, 8, bytes.length)
     require(streamBs == 256 || streamBs == 4096,
       s"unsupported stream blocksize $streamBs (decode subset is " +
         "256/4096)")
     var got = 0
     var frameIdx = 0L
     while (off < bytes.length) {
-      val r = new BitReader(bytes, off * 8L)
-      require(r.readBits(14) == 0x3ffe, "lost FLAC frame sync")
-      require(r.readBits(1) == 0, "reserved frame-header bit set")
+      val r = new Bin.MsbReader(bytes, off, bytes.length, "FLAC frame")
+      require(r.u(14) == 0x3ffe, "lost FLAC frame sync")
+      require(r.u(1) == 0, "reserved frame-header bit set")
       // blocksize strategy: 0 = fixed (header carries the frame
       // number), 1 = variable (header carries the first SAMPLE number)
-      val variable = r.readBits(1) == 1
-      val bsCode = r.readBits(4)
+      val variable = r.u(1) == 1
+      val bsCode = r.u(4)
       require(bsCode == 0x8 || bsCode == 0xc || bsCode == 0x6 ||
         bsCode == 0x7,
         s"unsupported blocksize code $bsCode (decode subset is 256, " +
           "4096, and inline-declared short last blocks)")
-      val srCode = r.readBits(4)
+      val srCode = r.u(4)
       require(srCode != 15, "invalid sample-rate code 1111")
-      val chan = r.readBits(4)
+      val chan = r.u(4)
       require(chan <= 10,
         s"reserved channel assignment $chan")
       // 0-7 = chan+1 independent channels; 8-10 = decorrelated stereo
@@ -923,18 +867,19 @@ object Flac {
       require(nch == m.channels,
         s"frame channel assignment $chan contradicts STREAMINFO " +
           s"channels ${m.channels}")
-      val ssz = r.readBits(3)
+      val ssz = r.u(3)
       val frameBits = ssz match {
         case 4 => 16
         case 6 => 24
-        case c => sys.error(s"unsupported sample-size code $c " +
+        case c =>
+          throw new IllegalArgumentException(s"unsupported sample-size code $c " +
           "(decode subset is 16/24)")
       }
       require(frameBits == m.bitsPerSample,
         s"frame sample size $frameBits contradicts STREAMINFO " +
           s"${m.bitsPerSample}")
-      require(r.readBits(1) == 0, "reserved frame-header bit set")
-      val fno = r.readUtf8Coded()
+      require(r.u(1) == 0, "reserved frame-header bit set")
+      val fno = readUtf8Coded(r)
       if (variable)
         require(fno == got / m.channels,
           s"frame sample number $fno != expected ${got / m.channels}")
@@ -945,17 +890,17 @@ object Flac {
       val bs = bsCode match {
         case 0x8 => 256
         case 0xc => 4096
-        case 0x6 => r.readBits(8) + 1
-        case _   => r.readBits(16) + 1
+        case 0x6 => r.u(8) + 1
+        case _   => r.u(16) + 1
       }
       // inline sample-rate field follows the blocksize field; every
       // form must agree with STREAMINFO (RFC 9639: the frame header
       // repeats the rate for framing resilience, it cannot change it)
       val frameRate = srCode match {
         case 0  => m.sampleRate
-        case 12 => r.readBits(8) * 1000
-        case 13 => r.readBits(16)
-        case 14 => r.readBits(16) * 10
+        case 12 => r.u(8) * 1000
+        case 13 => r.u(16)
+        case 14 => r.u(16) * 10
         case c => // fixed table (RFC 9639 §9.1.2)
           Array(0, 88200, 176400, 192000, 8000, 16000, 22050, 24000,
             32000, 44100, 48000, 96000)(c)
@@ -970,14 +915,14 @@ object Flac {
         s"frame declares blocksize $bs, expected " +
           s"${math.min(streamBs.toLong, remaining)} " +
           s"($remaining samples remaining)")
-      val hdrEnd = r.byteAt
-      require(crc8(bytes, off, hdrEnd) == r.readBits(8),
+      val hdrEnd = (r.bitPos / 8).toInt
+      require(crc8(bytes, off, hdrEnd) == r.u(8),
         s"FLAC frame $fno header CRC-8 mismatch")
       if (chan <= 7) {
         // nch independent subframes at the stream bit depth,
         // interleaved on output (mono is the nch == 1 case)
         val chans = Array.fill(nch)(decodeSubframe(r, frameBits, bs))
-        require(got + nch * bs <= outSamples.length,
+        Bin.checkRange(got, nch * bs, outSamples.length,
           "more frames than STREAMINFO total samples")
         var j = 0
         while (j < bs) {
@@ -995,7 +940,7 @@ object Flac {
         val bits1 = if (chan == 9) frameBits else frameBits + 1
         val c0 = decodeSubframe(r, bits0, bs)
         val c1 = decodeSubframe(r, bits1, bs)
-        require(got + 2 * bs <= outSamples.length,
+        Bin.checkRange(got, 2 * bs, outSamples.length,
           "more frames than STREAMINFO total samples")
         var j = 0
         while (j < bs) {
@@ -1012,10 +957,10 @@ object Flac {
         }
         got += 2 * bs
       }
-      r.alignByte()
-      val frameEnd = r.byteAt
+      alignZero(r)
+      val frameEnd = (r.bitPos / 8).toInt
       require(crc16(bytes, off, frameEnd) ==
-        ((bytes(frameEnd) & 0xff) << 8 | (bytes(frameEnd + 1) & 0xff)),
+        Bin.u16be(bytes, frameEnd, bytes.length, "FLAC frame CRC-16"),
         s"FLAC frame $fno CRC-16 mismatch")
       off = frameEnd + 2
       frameIdx += 1

@@ -35,17 +35,6 @@ import org.apache.spark.sql.types._
   * decoder the way llm_video_keyframes composes the moov path. */
 object Fmp4 {
 
-  private def u32be(b: Array[Byte], o: Int): Long = {
-    require(o >= 0 && o + 4 <= b.length, "fMP4: truncated u32 field")
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  }
-
-  private def u64be(b: Array[Byte], o: Int): Long = {
-    require(o >= 0 && o + 8 <= b.length, "fMP4: truncated u64 field")
-    (u32be(b, o) << 32) | u32be(b, o + 4)
-  }
-
   // ------------------------------------------------------------- walk
 
   final case class FragSample(fragIdx: Int, seq: Long, tfdt: Long,
@@ -61,8 +50,8 @@ object Fmp4 {
     val mvex = Codecs.oneBox(Codecs.mp4Walk(bytes, moov.start, moov.end), "mvex")
     val trex = Codecs.oneBox(Codecs.mp4Walk(bytes, mvex.start, mvex.end), "trex")
     require(trex.end - trex.start >= 24, "truncated trex box")
-    val trexDefDur = u32be(bytes, trex.start + 12)
-    val trexDefSize = u32be(bytes, trex.start + 16)
+    val trexDefDur = Bin.u32be(bytes, trex.start + 12, bytes.length, "fMP4")
+    val trexDefSize = Bin.u32be(bytes, trex.start + 16, bytes.length, "fMP4")
 
     val out = collection.mutable.ArrayBuffer.empty[FragSample]
     var fragIdx = 0
@@ -78,22 +67,28 @@ object Fmp4 {
         val kids = Codecs.mp4Walk(bytes, box.start, box.end)
         val mfhd = Codecs.oneBox(kids, "mfhd")
         require(mfhd.end - mfhd.start >= 8, "truncated mfhd box")
-        val seq = u32be(bytes, mfhd.start + 4)
+        val seq = Bin.u32be(bytes, mfhd.start + 4, bytes.length, "fMP4")
         val traf = Codecs.oneBox(kids, "traf")
         val tkids = Codecs.mp4Walk(bytes, traf.start, traf.end)
         // tfhd: track id + flag-gated optionals IN FLAG ORDER
         val tfhd = Codecs.oneBox(tkids, "tfhd")
-        val tfFlags = (u32be(bytes, tfhd.start) & 0xffffff).toInt
+        val tfFlags =
+          (Bin.u32be(bytes, tfhd.start, bytes.length, "fMP4") & 0xffffff).toInt
         var p = tfhd.start + 8 // verflags + track_ID
         var baseDataOffset = -1L
-        if ((tfFlags & 0x000001) != 0) { baseDataOffset = u64be(bytes, p); p += 8 }
+        if ((tfFlags & 0x000001) != 0) {
+          baseDataOffset = Bin.u64be(bytes, p, bytes.length, "fMP4"); p += 8
+        }
         if ((tfFlags & 0x000002) != 0) p += 4 // sample_description_index
         var defDur = trexDefDur
-        if ((tfFlags & 0x000008) != 0) { defDur = u32be(bytes, p); p += 4 }
+        if ((tfFlags & 0x000008) != 0) {
+          defDur = Bin.u32be(bytes, p, bytes.length, "fMP4"); p += 4
+        }
         var defSize = trexDefSize
         var tfhdHasSize = false
         if ((tfFlags & 0x000010) != 0) {
-          defSize = u32be(bytes, p); p += 4; tfhdHasSize = true
+          defSize = Bin.u32be(bytes, p, bytes.length, "fMP4")
+          p += 4; tfhdHasSize = true
         }
         require(p <= tfhd.end, "tfhd optionals overrun the box")
         val base =
@@ -107,8 +102,8 @@ object Fmp4 {
         tkids.find(_.typ == "tfdt").foreach { tfdt =>
           val ver = bytes(tfdt.start) & 0xff
           val t =
-            if (ver == 1) u64be(bytes, tfdt.start + 4)
-            else u32be(bytes, tfdt.start + 4)
+            if (ver == 1) Bin.u64be(bytes, tfdt.start + 4, bytes.length, "fMP4")
+            else Bin.u32be(bytes, tfdt.start + 4, bytes.length, "fMP4")
           require(t == expectedTfdt,
             s"tfdt $t drifts from the summed durations $expectedTfdt")
         }
@@ -119,24 +114,30 @@ object Fmp4 {
         val mdat = boxes(bi + 1)
         var durSum = 0L
         tkids.filter(_.typ == "trun").foreach { trun =>
-          val trFlags = (u32be(bytes, trun.start) & 0xffffff).toInt
-          val n = u32be(bytes, trun.start + 4).toInt
+          val trFlags =
+            (Bin.u32be(bytes, trun.start, bytes.length, "fMP4") & 0xffffff).toInt
+          val n = Bin.u32be(bytes, trun.start + 4, bytes.length, "fMP4").toInt
           require(n >= 0 && n <= (trun.end - trun.start),
             s"implausible trun sample count $n")
           var q = trun.start + 8
           require((trFlags & 0x000001) != 0,
             "trun without a data offset is outside the walk subset")
-          val dataOffset = u32be(bytes, q).toInt; q += 4 // i32, ours >= 0
+          // i32, ours >= 0
+          val dataOffset = Bin.u32be(bytes, q, bytes.length, "fMP4").toInt
+          q += 4
           if ((trFlags & 0x000004) != 0) q += 4 // first-sample-flags
           var rel = 0L
           var s = 0
           while (s < n) {
             var dur = defDur
-            if ((trFlags & 0x000100) != 0) { dur = u32be(bytes, q); q += 4 }
+            if ((trFlags & 0x000100) != 0) {
+              dur = Bin.u32be(bytes, q, bytes.length, "fMP4"); q += 4
+            }
             var size = defSize
             var fromDefault = true
             if ((trFlags & 0x000200) != 0) {
-              size = u32be(bytes, q); q += 4; fromDefault = false
+              size = Bin.u32be(bytes, q, bytes.length, "fMP4")
+              q += 4; fromDefault = false
             }
             if ((trFlags & 0x000400) != 0) q += 4 // sample flags
             if ((trFlags & 0x000800) != 0) q += 4 // composition offset
@@ -145,9 +146,10 @@ object Fmp4 {
               "sample has no size at trun, tfhd, or trex level")
             require(size > 0 && size <= Int.MaxValue, s"bad sample size $size")
             val abs = base + dataOffset + rel
-            require(abs >= mdat.start && abs + size <= mdat.end,
+            require(abs >= mdat.start,
               s"sample $globalIdx [${abs}, ${abs + size}) outside the " +
                 s"mdat payload [${mdat.start}, ${mdat.end})")
+            Bin.checkRange(abs, size, mdat.end, "fMP4 sample")
             var sum = 0L
             var j = 0
             while (j < size.toInt) {
@@ -173,47 +175,41 @@ object Fmp4 {
 
   // --------------------------------------------------------- builders
 
-  private def be32(v: Long): Array[Byte] = Array(
-    ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-    ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
-  private def be64(v: Long): Array[Byte] = be32(v >>> 32) ++ be32(v & 0xffffffffL)
-
   private def fullBox(typ: String, ver: Int, flags: Int,
       payload: Array[Byte]): Array[Byte] =
-    Codecs.mp4Box(typ, be32(((ver & 0xff).toLong << 24) | flags) ++ payload)
+    Codecs.mp4Box(typ, Bin.be32(((ver & 0xff).toLong << 24) | flags) ++ payload)
 
   /** Init segment: ftyp + moov{mvhd, trak{tkhd, mdia{mdhd, hdlr,
     * minf{stbl{[stsd,] empty stts/stsc/stsz/stco}}}}, mvex{trex}} —
     * the empty sample tables plus mvex are the fMP4 signature. */
   private def initSegment(d: Long, stsd: Array[Byte]): Array[Byte] = {
     val ftyp = Codecs.mp4Box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(0x200) ++
+      "isom".getBytes("US-ASCII") ++ Bin.be32(0x200) ++
         "iso6".getBytes("US-ASCII") ++ "dash".getBytes("US-ASCII"))
     val timescale = 90000L
     val mvhd = fullBox("mvhd", 0, 0,
-      be32(0) ++ be32(0) ++ be32(timescale) ++ be32(0) ++
-        be32(0x00010000L) ++ Array[Byte](0x01, 0) ++ new Array[Byte](10) ++
-        (be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x40000000L)) ++ new Array[Byte](24) ++ be32(2))
+      Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(timescale) ++ Bin.be32(0) ++
+        Bin.be32(0x00010000L) ++ Array[Byte](0x01, 0) ++ new Array[Byte](10) ++
+        (Bin.be32(0x00010000L) ++ Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(0) ++
+          Bin.be32(0x00010000L) ++ Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(0) ++
+          Bin.be32(0x40000000L)) ++ new Array[Byte](24) ++ Bin.be32(2))
     val tkhd = fullBox("tkhd", 0, 7,
-      be32(0) ++ be32(0) ++ be32(1) ++ be32(0) ++ be32(0) ++
+      Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(1) ++ Bin.be32(0) ++ Bin.be32(0) ++
         new Array[Byte](8) ++ new Array[Byte](4) ++ new Array[Byte](4) ++
-        (be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x00010000L) ++ be32(0) ++ be32(0) ++ be32(0) ++
-          be32(0x40000000L)) ++ be32(64L << 16) ++ be32(16L << 16))
+        (Bin.be32(0x00010000L) ++ Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(0) ++
+          Bin.be32(0x00010000L) ++ Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(0) ++
+          Bin.be32(0x40000000L)) ++ Bin.be32(64L << 16) ++ Bin.be32(16L << 16))
     val mdhd = fullBox("mdhd", 0, 0,
-      be32(0) ++ be32(0) ++ be32(timescale) ++ be32(0) ++
+      Bin.be32(0) ++ Bin.be32(0) ++ Bin.be32(timescale) ++ Bin.be32(0) ++
         Array[Byte](0x55, (0xc4 & 0xff).toByte) ++ new Array[Byte](2))
     val hdlr = fullBox("hdlr", 0, 0,
-      be32(0) ++ "vide".getBytes("US-ASCII") ++ new Array[Byte](12) ++
+      Bin.be32(0) ++ "vide".getBytes("US-ASCII") ++ new Array[Byte](12) ++
         "g ".getBytes("US-ASCII"))
     val emptyTables = Array(
-      fullBox("stts", 0, 0, be32(0)),
-      fullBox("stsc", 0, 0, be32(0)),
-      fullBox("stsz", 0, 0, be32(0) ++ be32(0)),
-      fullBox("stco", 0, 0, be32(0)))
+      fullBox("stts", 0, 0, Bin.be32(0)),
+      fullBox("stsc", 0, 0, Bin.be32(0)),
+      fullBox("stsz", 0, 0, Bin.be32(0) ++ Bin.be32(0)),
+      fullBox("stco", 0, 0, Bin.be32(0)))
     val stbl = Codecs.mp4Box("stbl",
       (if (stsd.nonEmpty) Array(stsd) else Array.empty[Array[Byte]])
         .++(emptyTables).flatten)
@@ -221,7 +217,8 @@ object Fmp4 {
     val mdia = Codecs.mp4Box("mdia", mdhd ++ hdlr ++ minf)
     val trak = Codecs.mp4Box("trak", tkhd ++ mdia)
     val trex = fullBox("trex", 0, 0,
-      be32(1) ++ be32(1) ++ be32(512 + d % 100) ++ be32(0) ++ be32(0))
+      Bin.be32(1) ++ Bin.be32(1) ++ Bin.be32(512 + d % 100) ++ Bin.be32(0) ++
+        Bin.be32(0))
     val mvex = Codecs.mp4Box("mvex", trex)
     val moov = Codecs.mp4Box("moov", mvhd ++ trak ++ mvex)
     ftyp ++ moov
@@ -246,31 +243,32 @@ object Fmp4 {
     fragGeometry(d).foreach { case (j, ns) =>
       val samples = (0 until ns).map(i => sampleBytes(globalIdx + i))
       val dur = base + (if (j % 2 == 0) j + 1 else 0)
-      val mfhd = fullBox("mfhd", 0, 0, be32(j + 1L))
+      val mfhd = fullBox("mfhd", 0, 0, Bin.be32(j + 1L))
       def tfhdOf(): Array[Byte] = {
         var flags = 0x020000 // default-base-is-moof
-        var payload = be32(1) // track_ID
+        var payload = Bin.be32(1) // track_ID
         if ((d % 5 == 0) && j == 0) {
           // explicit 64-bit base data offset (same value, other path);
           // patched after the moof size is known
           flags = 0x000001
-          payload = payload ++ be64(0)
+          payload = payload ++ Bin.be64(0)
         }
-        if (j % 2 == 0) { flags |= 0x000008; payload = payload ++ be32(dur) }
-        else { flags |= 0x000010; payload = payload ++ be32(samples.head.length.toLong) }
+        if (j % 2 == 0) { flags |= 0x000008; payload = payload ++ Bin.be32(dur) }
+        else { flags |= 0x000010; payload = payload ++
+          Bin.be32(samples.head.length.toLong) }
         fullBox("tfhd", 0, flags, payload)
       }
       val tfdtVer = (d % 2).toInt
       val tfdt = fullBox("tfdt", tfdtVer, 0,
-        if (tfdtVer == 1) be64(tfdtTime) else be32(tfdtTime))
+        if (tfdtVer == 1) Bin.be64(tfdtTime) else Bin.be32(tfdtTime))
       def trunOf(dataOffset: Int): Array[Byte] = {
         var flags = 0x000001
         if (j % 2 == 0) flags |= 0x000200 // per-sample sizes
         if (d % 2 == 0) flags |= 0x000004 // first-sample-flags
-        var payload = be32(ns.toLong) ++ be32(dataOffset.toLong)
-        if ((flags & 0x000004) != 0) payload = payload ++ be32(0x02000000L)
+        var payload = Bin.be32(ns.toLong) ++ Bin.be32(dataOffset.toLong)
+        if ((flags & 0x000004) != 0) payload = payload ++ Bin.be32(0x02000000L)
         if ((flags & 0x000200) != 0)
-          samples.foreach(s => payload = payload ++ be32(s.length.toLong))
+          samples.foreach(s => payload = payload ++ Bin.be32(s.length.toLong))
         fullBox("trun", 0, flags, payload)
       }
       // two-pass: sizes are layout-independent, offsets are not
@@ -285,7 +283,7 @@ object Fmp4 {
         // tfhd payload sits at moof(8+mfhd) + 8(traf hdr) + 8(box hdr)
         // + 4(verflags) + 4(track) = the u64 slot
         val off = 8 + mfhd.length + 8 + 8 + 4 + 4
-        val abs = be64(initLen.toLong + out.size())
+        val abs = Bin.be64(initLen.toLong + out.size())
         System.arraycopy(abs, 0, moof, off, 8)
       }
       out.write(moof, 0, moof.length)
@@ -318,7 +316,7 @@ object Fmp4 {
     init ++ buildFragments(d, init.length, { k =>
         val (_, nals) = Codecs.nalUnits(Avc.synthIFrame(d + 1000L * k))
         val idr = nals.find(nl => (nl(0) & 0x1f) == 5).get
-        be32(idr.length.toLong) ++ idr
+        Bin.be32(idr.length.toLong) ++ idr
       })
   }
 

@@ -30,14 +30,13 @@ object Gzip {
       require((bytes(pos + 2) & 0xff) == 8, "unknown gzip CM (not deflate)")
       val flg = bytes(pos + 3) & 0xff
       require((flg & 0xe0) == 0, s"reserved gzip FLG bits set ($flg)")
-      val mtime = (bytes(pos + 4) & 0xffL) | ((bytes(pos + 5) & 0xffL) << 8) |
-        ((bytes(pos + 6) & 0xffL) << 16) | ((bytes(pos + 7) & 0xffL) << 24)
+      val mtime = Bin.u32le(bytes, pos + 4, bytes.length, "gzip header")
       val os = bytes(pos + 9) & 0xff
       var p = pos + 10
       val hasExtra = (flg & 0x04) != 0
       if (hasExtra) {
         require(p + 2 <= bytes.length, "truncated FEXTRA length")
-        val xlen = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
+        val xlen = Bin.u16le(bytes, p, bytes.length)
         p += 2 + xlen
         require(p <= bytes.length, "FEXTRA overruns the stream")
       }
@@ -60,7 +59,7 @@ object Gzip {
         require(p + 2 <= bytes.length, "truncated FHCRC")
         val crc = new java.util.zip.CRC32()
         crc.update(bytes, pos, p - pos)
-        val stored = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
+        val stored = Bin.u16le(bytes, p, bytes.length)
         require(stored == (crc.getValue & 0xffff).toInt,
           "gzip header CRC16 mismatch")
         p += 2
@@ -101,12 +100,11 @@ object Gzip {
         val trailerAt = p + used
         require(trailerAt + 8 <= bytes.length,
           s"truncated gzip trailer at member ${out.size}")
-        def u32(o: Int): Long =
-          (bytes(o) & 0xffL) | ((bytes(o + 1) & 0xffL) << 8) |
-            ((bytes(o + 2) & 0xffL) << 16) | ((bytes(o + 3) & 0xffL) << 24)
-        require(u32(trailerAt) == crc.getValue,
+        require(Bin.u32le(bytes, trailerAt, bytes.length,
+          "gzip trailer") == crc.getValue,
           s"gzip CRC32 mismatch at member ${out.size}")
-        require(u32(trailerAt + 4) == (contentLen & 0xffffffffL),
+        require(Bin.u32le(bytes, trailerAt + 4, bytes.length,
+          "gzip trailer") == (contentLen & 0xffffffffL),
           s"gzip ISIZE mismatch at member ${out.size}")
         out += GzipMember(name, mtime, os, hasExtra, hasComment, hasHcrc,
           used, contentLen, contentSum)

@@ -36,7 +36,7 @@ object Hevc {
     * NAL header. Returns (tier, profile, level, width, height,
     * chromaFormat, bitDepthLuma, bitDepthChroma). */
   def parseSps(rbsp: Array[Byte]): (Int, Int, Int, Int, Int, Int, Int, Int) = {
-    val r = new Codecs.ExpGolombReader(rbsp)
+    val r = new Bin.MsbReader(rbsp, "HEVC SPS")
     r.u(4) // sps_video_parameter_set_id
     val maxSubLayers = r.u(3)
     require(maxSubLayers == 0,
@@ -99,11 +99,13 @@ object Hevc {
           sps = Some(parseSps(rbsp))
         case 34 => ppsLen = rbsp.length
         case 0 | 1 | 19 | 20 | 21 => slices += 1
-        case t => sys.error(s"unexpected HEVC NAL type $t in metadata shell")
+        case t =>
+          throw new IllegalArgumentException(
+            s"unexpected HEVC NAL type $t in metadata shell")
       }
     }
     val (tier, p, l, w, h, cf, bdl, bdc) =
-      sps.getOrElse(sys.error("stream carries no SPS"))
+      sps.getOrElse(throw new IllegalArgumentException("stream carries no SPS"))
     require(ppsLen >= 0, "stream carries no PPS")
     HevcMeta(if (framing == "avcc") "hvcc" else framing, nals.length,
       slices, hasVps, tier, p, l, w, h, cf, bdl, bdc, ppsLen)
@@ -123,7 +125,7 @@ object Hevc {
     val tier = if (d % 7 == 0) 1 else 0
     val level = Array(93, 120, 123, 150, 153)((d % 5).toInt)
     val bd = if (profile == 2) 2 else 0
-    val w = new Codecs.ExpGolombWriter
+    val w = new Bin.MsbWriter
     w.u(0, 4) // vps id
     w.u(0, 3) // max_sub_layers_minus1
     w.u(1, 1) // temporal_id_nesting
@@ -146,7 +148,7 @@ object Hevc {
     } else w.u(0, 1)
     w.ue(bd); w.ue(bd)
     w.ue((d % 5).toInt) // log2_max_pic_order_cnt_lsb_minus4
-    nalHeader(33) ++ Codecs.rbspEscape(w.rbspTrailing())
+    nalHeader(33) ++ Codecs.rbspEscape(Codecs.rbspTrailing(w))
   }
 
   /** Fixture PPS: 9 + d%5 RBSP bytes embedding a 00 00 01 triple so
@@ -215,10 +217,8 @@ object Hevc {
     val hvc1 = Codecs.oneBox(
       Codecs.mp4Walk(bytes, stsd.start + 8, stsd.end), "hvc1")
     require(hvc1.end - hvc1.start >= 78, "truncated hvc1 sample entry")
-    val entryW = ((bytes(hvc1.start + 24) & 0xff) << 8) |
-      (bytes(hvc1.start + 25) & 0xff)
-    val entryH = ((bytes(hvc1.start + 26) & 0xff) << 8) |
-      (bytes(hvc1.start + 27) & 0xff)
+    val entryW = Bin.u16be(bytes, hvc1.start + 24, bytes.length)
+    val entryH = Bin.u16be(bytes, hvc1.start + 26, bytes.length)
     val hvcc = Codecs.oneBox(
       Codecs.mp4Walk(bytes, hvc1.start + 78, hvc1.end), "hvcC")
     val a = java.util.Arrays.copyOfRange(bytes, hvcc.start, hvcc.end)
@@ -241,14 +241,14 @@ object Hevc {
     (0 until nArrays).foreach { _ =>
       require(pos + 3 <= a.length, "truncated hvcC NAL array header")
       val nalType = a(pos) & 0x3f
-      val nNalus = ((a(pos + 1) & 0xff) << 8) | (a(pos + 2) & 0xff)
+      val nNalus = Bin.u16be(a, pos + 1, a.length)
       pos += 3
       (0 until nNalus).foreach { _ =>
         require(pos + 2 <= a.length, "truncated hvcC NAL length")
-        val len = ((a(pos) & 0xff) << 8) | (a(pos + 1) & 0xff)
+        val len = Bin.u16be(a, pos, a.length)
         pos += 2
-        require(len >= 2 && pos + len <= a.length,
-          s"hvcC NAL length $len out of bounds")
+        require(len >= 2, s"hvcC NAL length $len out of bounds")
+        Bin.checkRange(pos, len, a.length, "hvcC NAL length")
         nalType match {
           case 32 => nVps += 1
           case 33 =>
@@ -256,7 +256,8 @@ object Hevc {
             if (spsNal == null)
               spsNal = java.util.Arrays.copyOfRange(a, pos, pos + len)
           case 34 => nPps += 1
-          case t => sys.error(s"unexpected hvcC array NAL type $t")
+          case t =>
+            throw new IllegalArgumentException(s"unexpected hvcC array NAL type $t")
         }
         pos += len
       }
@@ -311,8 +312,8 @@ object Hevc {
     val hvcc = Codecs.mp4Box("hvcC", rec.toByteArray)
     val entry = new Array[Byte](78)
     entry(7) = 1 // data_reference_index
-    entry(24) = (w >> 8).toByte; entry(25) = (w & 0xff).toByte
-    entry(26) = (h >> 8).toByte; entry(27) = (h & 0xff).toByte
+    Bin.put16be(entry, 24, w)
+    Bin.put16be(entry, 26, h)
     entry(28) = 0; entry(29) = 0x48; entry(32) = 0; entry(33) = 0x48
     entry(40) = 1 // frame_count
     entry(74) = 0x18 // depth 24

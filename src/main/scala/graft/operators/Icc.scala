@@ -25,19 +25,8 @@ object Icc {
       deviceClass: String, colorSpace: String, pcs: String,
       intent: Int, year: Int, month: Int, nTags: Int)
 
-  private def u32(b: Array[Byte], o: Int): Long = {
-    require(o >= 0 && o + 4 <= b.length, "ICC profile truncated")
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  }
-
-  private def u16(b: Array[Byte], o: Int): Int = {
-    require(o >= 0 && o + 2 <= b.length, "ICC profile truncated")
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  }
-
   private def fourcc(b: Array[Byte], o: Int): String = {
-    require(o + 4 <= b.length, "ICC profile truncated")
+    Bin.checkRange(o, 4, b.length, "ICC profile truncated")
     new String(b, o, 4, "US-ASCII")
   }
 
@@ -48,7 +37,7 @@ object Icc {
 
   def parse(bytes: Array[Byte]): IccMeta = {
     require(bytes.length >= 132, "ICC profile shorter than header+count")
-    val size = u32(bytes, 0)
+    val size = Bin.u32be(bytes, 0, bytes.length, "ICC profile")
     require(size == bytes.length,
       s"ICC declared size $size != payload ${bytes.length}")
     require(fourcc(bytes, 36) == "acsp", "missing ICC 'acsp' signature")
@@ -62,19 +51,20 @@ object Icc {
     require(ColorSpaces.contains(cs), s"unknown ICC color space '$cs'")
     val pcs = fourcc(bytes, 20)
     require(pcs == "XYZ " || pcs == "Lab ", s"bad ICC PCS '$pcs'")
-    val year = u16(bytes, 24)
-    val month = u16(bytes, 26)
+    val year = Bin.u16be(bytes, 24, bytes.length, "ICC profile")
+    val month = Bin.u16be(bytes, 26, bytes.length, "ICC profile")
     require(month >= 1 && month <= 12, s"bad ICC creation month $month")
-    val intent = u32(bytes, 64)
+    val intent = Bin.u32be(bytes, 64, bytes.length, "ICC profile")
     require(intent <= 3, s"bad ICC rendering intent $intent")
-    val nTags = u32(bytes, 128)
+    val nTags = Bin.u32be(bytes, 128, bytes.length, "ICC profile")
     require(nTags <= (bytes.length - 132) / 12,
       s"ICC tag count $nTags overruns the table")
     (0 until nTags.toInt).foreach { i =>
-      val off = u32(bytes, 132 + 12 * i + 4)
-      val sz = u32(bytes, 132 + 12 * i + 8)
-      require(off >= 132 + 12 * nTags && off + sz <= size,
-        s"ICC tag $i [${off}, ${off + sz}) escapes the $size-byte profile")
+      val off = Bin.u32be(bytes, 132 + 12 * i + 4, bytes.length, "ICC profile")
+      val sz = Bin.u32be(bytes, 132 + 12 * i + 8, bytes.length, "ICC profile")
+      require(off >= 132 + 12 * nTags,
+        s"ICC tag $i at $off escapes into the tag table")
+      Bin.checkRange(off, sz, size, "ICC tag escapes the profile")
     }
     IccMeta(size.toInt, verMajor, verMinor, devClass, cs, pcs.trim,
       intent.toInt, year, month, nTags.toInt)
@@ -88,32 +78,25 @@ object Icc {
     val paySizes = (0 until nTags).map(i => 12 + 4 * ((d + i) % 4).toInt)
     val size = 128 + 4 + 12 * nTags + paySizes.sum
     val b = new Array[Byte](size)
-    def p32(o: Int, v: Long): Unit = {
-      b(o) = (v >> 24).toByte; b(o + 1) = (v >> 16).toByte
-      b(o + 2) = (v >> 8).toByte; b(o + 3) = v.toByte
-    }
-    def p16(o: Int, v: Int): Unit = {
-      b(o) = (v >> 8).toByte; b(o + 1) = v.toByte
-    }
     def pcc(o: Int, s: String): Unit =
       s.getBytes("US-ASCII").copyToArray(b, o)
-    p32(0, size)
+    Bin.put32be(b, 0, size)
     pcc(4, "gfts") // preferred CMM
     b(8) = (if (d % 2 == 0) 4 else 2).toByte
     b(9) = (if (d % 2 == 0) 0x30 else 0x40).toByte // 4.3 / 2.4
     pcc(12, Seq("mntr", "scnr", "prtr")((d % 3).toInt))
     pcc(16, if ((d / 3) % 2 == 0) "RGB " else "GRAY")
     pcc(20, if (d % 5 == 0) "Lab " else "XYZ ")
-    p16(24, (2020 + d % 6).toInt); p16(26, (1 + d % 12).toInt)
-    p16(28, (1 + d % 28).toInt)
+    Bin.put16be(b, 24, (2020 + d % 6).toInt); Bin.put16be(b, 26, (1 + d % 12).toInt)
+    Bin.put16be(b, 28, (1 + d % 28).toInt)
     pcc(36, "acsp")
-    p32(64, d % 4)
-    p32(128, nTags)
+    Bin.put32be(b, 64, d % 4)
+    Bin.put32be(b, 128, nTags)
     var payOff = 132 + 12 * nTags
     (0 until nTags).foreach { i =>
       pcc(132 + 12 * i, Seq("desc", "wtpt", "cprt")(i % 3))
-      p32(132 + 12 * i + 4, payOff)
-      p32(132 + 12 * i + 8, paySizes(i))
+      Bin.put32be(b, 132 + 12 * i + 4, payOff)
+      Bin.put32be(b, 132 + 12 * i + 8, paySizes(i))
       (0 until paySizes(i)).foreach(j =>
         b(payOff + j) = ((d + 31 * i + j) % 251).toByte)
       payOff += paySizes(i)

@@ -19,33 +19,25 @@ object Ico {
       size: Int, offset: Int, isPng: Boolean,
       sumR: Long, sumG: Long, sumB: Long)
 
-  private def u16le(b: Array[Byte], o: Int): Int = {
-    require(o + 2 <= b.length, "ICO truncated")
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-  }
-
-  private def u32le(b: Array[Byte], o: Int): Long = {
-    require(o + 4 <= b.length, "ICO truncated")
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-  }
-
   def entries(bytes: Array[Byte]): Seq[IcoEntry] = {
     require(bytes.length >= 6, "ICO shorter than its header")
-    require(u16le(bytes, 0) == 0, "ICONDIR reserved field not zero")
-    require(u16le(bytes, 2) == 1, "not an ICO (type != 1)")
-    val n = u16le(bytes, 4)
-    require(n >= 1 && 6 + 16 * n <= bytes.length,
-      s"ICONDIR claims $n entries beyond the file")
+    require(Bin.u16le(bytes, 0, bytes.length, "ICO truncated") == 0,
+      "ICONDIR reserved field not zero")
+    require(Bin.u16le(bytes, 2, bytes.length, "ICO truncated") == 1,
+      "not an ICO (type != 1)")
+    val n = Bin.u16le(bytes, 4, bytes.length, "ICO truncated")
+    require(n >= 1, s"ICONDIR claims $n entries beyond the file")
+    Bin.checkRange(6, 16 * n, bytes.length, "ICONDIR")
     val dir = (0 until n).map { i =>
       val e = 6 + 16 * i
       val w0 = bytes(e) & 0xff
       val h0 = bytes(e + 1) & 0xff
-      val bpp = u16le(bytes, e + 6)
-      val size = u32le(bytes, e + 8)
-      val off = u32le(bytes, e + 12)
-      require(size > 0 && off >= 6 + 16 * n && off + size <= bytes.length,
+      val bpp = Bin.u16le(bytes, e + 6, bytes.length, "ICO truncated")
+      val size = Bin.u32le(bytes, e + 8, bytes.length, "ICO truncated")
+      val off = Bin.u32le(bytes, e + 12, bytes.length, "ICO truncated")
+      require(size > 0 && off >= 6 + 16 * n,
         s"ICO entry $i [${off}, ${off + size}) escapes the file")
+      Bin.checkRange(off, size, bytes.length, "ICO entry")
       (if (w0 == 0) 256 else w0, if (h0 == 0) 256 else h0, bpp,
         size.toInt, off.toInt)
     }
@@ -85,19 +77,14 @@ object Ico {
       Codecs.encodePng(Codecs.synthBmp(d + 100L * i, dim, dim))
     }
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    w16(0); w16(1); w16(n)
+    out.write(Bin.le16(0)); out.write(Bin.le16(1)); out.write(Bin.le16(n))
     var off = 6 + 16 * n
     payloads.zipWithIndex.foreach { case (p, i) =>
       val dim = 8 + 4 * i
       out.write(dim); out.write(dim)
       out.write(0); out.write(0) // colors, reserved
-      w16(1); w16(32) // planes, bpp
-      w32(p.length.toLong); w32(off.toLong)
+      out.write(Bin.le16(1)); out.write(Bin.le16(32)) // planes, bpp
+      out.write(Bin.le32(p.length.toLong)); out.write(Bin.le32(off.toLong))
       off += p.length
     }
     payloads.foreach(p => out.write(p, 0, p.length))

@@ -39,8 +39,7 @@ object Id3 {
       "ID3v2 size byte has its high (sync) bit set"))
     val tagSize = ((bytes(6) & 0x7f) << 21) | ((bytes(7) & 0x7f) << 14) |
       ((bytes(8) & 0x7f) << 7) | (bytes(9) & 0x7f)
-    require(10 + tagSize <= bytes.length,
-      s"ID3v2 tag size $tagSize overruns the payload")
+    Bin.checkRange(10, tagSize, bytes.length, "ID3v2 tag size")
     var off = 10
     val end = 10 + tagSize
     var n = 0
@@ -54,11 +53,9 @@ object Id3 {
         val fid = new String(bytes, off, 4, "US-ASCII")
         require(fid.forall(c => c.isUpper || c.isDigit),
           s"bad ID3v2 frame id '$fid'")
-        val fsz = ((bytes(off + 4) & 0xff) << 24) |
-          ((bytes(off + 5) & 0xff) << 16) |
-          ((bytes(off + 6) & 0xff) << 8) | (bytes(off + 7) & 0xff)
-        require(fsz > 0 && off + 10 + fsz <= end,
-          s"ID3v2 frame $fid size $fsz overruns the tag")
+        val fsz = Bin.u32be(bytes, off + 4, bytes.length).toInt
+        require(fsz > 0, s"ID3v2 frame $fid size $fsz overruns the tag")
+        Bin.checkRange(off + 10, fsz, end, "ID3v2 frame")
         if (fid.charAt(0) == 'T') {
           val enc = bytes(off + 10) & 0xff
           require(enc == 0 || enc == 3,
@@ -92,8 +89,7 @@ object Id3 {
       val t = text.getBytes("ISO-8859-1")
       out.write(id.getBytes("US-ASCII"), 0, 4)
       val sz = t.length + 1
-      out.write(sz >> 24); out.write((sz >> 16) & 0xff)
-      out.write((sz >> 8) & 0xff); out.write(sz & 0xff)
+      out.write(Bin.be32(sz))
       out.write(0); out.write(0) // flags
       out.write(0) // encoding: ISO-8859-1
       out.write(t, 0, t.length)

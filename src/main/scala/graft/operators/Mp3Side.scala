@@ -25,42 +25,6 @@ import org.apache.spark.sql.types._
   * stereo exactly 32, enforced loudly after every parse. */
 object Mp3Side {
 
-  private final class MsbWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def u(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    def toBytes: Array[Byte] = {
-      require(nBits == 0, s"side info must be byte-aligned, $nBits over")
-      out.toByteArray
-    }
-  }
-
-  private final class MsbReader(bytes: Array[Byte], startByte: Int) {
-    private var bit = startByte * 8
-    def u(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val idx = bit >> 3
-        require(idx < bytes.length, "MP3 side info truncated")
-        v = (v << 1) | ((bytes(idx) >> (7 - (bit & 7))) & 1)
-        bit += 1
-        i += 1
-      }
-      v
-    }
-    def bitPos: Int = bit
-  }
-
   /** One granule-channel's header fields (the gate-relevant subset
     * surfaced; table selects and region counts are parsed and
     * validated but not emitted). */
@@ -73,7 +37,7 @@ object Mp3Side {
     * for `nch` channels; enforces the exact byte width. */
   def parse(bytes: Array[Byte], pos: Int, nch: Int): SideInfo = {
     require(nch == 1 || nch == 2, s"bad channel count $nch")
-    val r = new MsbReader(bytes, pos)
+    val r = new Bin.MsbReader(bytes, pos, bytes.length, "MP3 side info")
     val mainDataBegin = r.u(9)
     r.u(if (nch == 1) 5 else 3) // private bits
     (0 until nch).foreach(_ => r.u(4)) // scfsi
@@ -111,7 +75,7 @@ object Mp3Side {
     * integer-recomputable; window switching fires on a 1-in-3
     * rotation with block types cycling 1..3 (2 = short blocks). */
   def encode(d: Long, f: Int, nch: Int): Array[Byte] = {
-    val w = new MsbWriter
+    val w = new Bin.MsbWriter
     w.u(((d + 7 * f) % 512).toInt, 9)
     w.u(0, if (nch == 1) 5 else 3)
     (0 until nch).foreach(c => w.u(((d + f + c) % 16).toInt, 4))
@@ -137,6 +101,8 @@ object Mp3Side {
       w.u(((d + g) % 2).toInt, 1)
       w.u(((d + c) % 2).toInt, 1)
     }
+    require(w.bitPos % 8 == 0,
+      s"side info must be byte-aligned, ${w.bitPos % 8} over")
     val out = w.toBytes
     require(out.length == (if (nch == 1) 17 else 32),
       s"encoded side info ${out.length} bytes")

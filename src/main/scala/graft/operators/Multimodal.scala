@@ -1289,7 +1289,8 @@ object Multimodal {
             ("markdown", Markdown.extract(new String(bytes, "UTF-8")).text)
           case "application/pdf" =>
             ("pdf", Pdf.extract(bytes).text)
-          case other => sys.error(s"no extractor for mime '$other'")
+          case other =>
+            throw new IllegalArgumentException(s"no extractor for mime '$other'")
         }
         val nWords = if (text.isEmpty) 0 else text.split(" ").length
         Row(r.getLong(idIdx), fmt, text, nWords)

@@ -45,12 +45,6 @@ object Ogg {
     c
   }
 
-  private def u32le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) |
-      ((b(o + 2) & 0xff) << 16) | ((b(o + 3) & 0xff) << 24)
-  private def u64le(b: Array[Byte], o: Int): Long =
-    (u32le(b, o) & 0xffffffffL) | ((u32le(b, o + 4) & 0xffffffffL) << 32)
-
   final case class OggInfo(serial: Int, nPages: Int, nPackets: Int,
       lastGranule: Long, channels: Int, preSkip: Int, inputRate: Int,
       durationMs: Long, nSilk: Int, nHybrid: Int, nCelt: Int,
@@ -126,22 +120,22 @@ object Ogg {
       require(continued == midPacket,
         if (continued) "continued flag with no packet open"
         else "open packet but the next page lacks the continued flag")
-      val granule = u64le(bytes, off + 6)
-      val ser = u32le(bytes, off + 14)
+      val granule = Bin.u64le(bytes, off + 6, bytes.length, "ogg")
+      val ser = Bin.u32le(bytes, off + 14, bytes.length, "ogg").toInt
       if (pageIdx == 0) serial = ser
       else require(ser == serial,
         s"page serial $ser != stream serial $serial (chained streams " +
           "are outside the walk's scope)")
-      val seq = u32le(bytes, off + 18)
+      val seq = Bin.u32le(bytes, off + 18, bytes.length, "ogg").toInt
       require(seq == pageIdx, s"page sequence $seq != expected $pageIdx")
       val nSegs = bytes(off + 26) & 0xff
-      require(off + 27 + nSegs <= bytes.length, "truncated segment table")
+      Bin.checkRange(off + 27, nSegs, bytes.length, "truncated segment table")
       var payload = 0
       var s = 0
       while (s < nSegs) { payload += bytes(off + 27 + s) & 0xff; s += 1 }
       val pageEnd = off + 27 + nSegs + payload
       require(pageEnd <= bytes.length, "Ogg page overruns the file")
-      val crcStored = u32le(bytes, off + 22)
+      val crcStored = Bin.u32le(bytes, off + 22, bytes.length, "ogg").toInt
       require(crcOgg(bytes, off, pageEnd, off + 22, off + 26) == crcStored,
         s"Ogg page $pageIdx CRC mismatch")
       // packet assembly off the lacing values
@@ -209,8 +203,8 @@ object Ogg {
     require((oh(8) & 0xf0) == 0, s"unsupported OpusHead version ${oh(8)}")
     val channels = oh(9) & 0xff
     require(channels >= 1, "OpusHead declares zero channels")
-    val preSkip = (oh(10) & 0xff) | ((oh(11) & 0xff) << 8)
-    val inputRate = u32le(oh, 12)
+    val preSkip = Bin.u16le(oh, 10, oh.length)
+    val inputRate = Bin.u32le(oh, 12, oh.length, "ogg").toInt
     require(oh(18) == 0,
       "channel mapping families beyond 0 are outside the walk's scope")
     require(lastGranule >= 0, "no granule position completed")

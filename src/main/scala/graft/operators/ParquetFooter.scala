@@ -65,40 +65,17 @@ object ParquetFooter {
   private val TMap = 11
   private val TStruct = 12
 
+  /** Thrift compact protocol over the shared byte cursor. */
   private final class TCompact(bytes: Array[Byte]) {
-    var pos = 0
-    def u8(): Int = {
-      require(pos < bytes.length, "parquet footer: truncated Thrift data")
-      val v = bytes(pos) & 0xff
-      pos += 1
-      v
-    }
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var b = 0
-      do {
-        require(shift <= 63, "parquet footer: varint overruns 64 bits")
-        b = u8()
-        v |= (b & 0x7fL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      v
-    }
-    def zigzag(): Long = { val v = varint(); (v >>> 1) ^ -(v & 1) }
-    def binary(): Array[Byte] = {
-      val n = varint()
-      require(n >= 0 && n <= bytes.length - pos,
-        s"parquet footer: binary of $n bytes overruns the footer")
-      val out = java.util.Arrays.copyOfRange(bytes, pos, pos + n.toInt)
-      pos += n.toInt
-      out
-    }
+    private val in = new Bin.Cursor(bytes, 0, bytes.length, "parquet footer")
+    def pos: Int = in.pos
+    def zigzag(): Long = in.zigzag()
+    def binary(): Array[Byte] = in.bytes(in.varint())
     def str(): String = new String(binary(), "UTF-8")
     /** (compactType, fieldId) or (TStop, _). Field ids are deltas from
       * the previous field WITHIN the current struct. */
     def fieldHeader(lastId: Int): (Int, Int) = {
-      val b = u8()
+      val b = in.u8()
       if (b == TStop) (TStop, lastId)
       else {
         val tpe = b & 0x0f
@@ -109,10 +86,10 @@ object ParquetFooter {
     }
     /** (size, elemType) for lists and sets. */
     def listHeader(): (Int, Int) = {
-      val b = u8()
+      val b = in.u8()
       val tpe = b & 0x0f
       val sz = (b >> 4) & 0x0f
-      val size = if (sz == 15) varint().toInt else sz
+      val size = if (sz == 15) in.varint().toInt else sz
       require(size >= 0 && size <= bytes.length,
         s"parquet footer: implausible list size $size")
       (size, tpe)
@@ -128,28 +105,27 @@ object ParquetFooter {
       tpe match {
         case TBoolTrue | TBoolFalse =>
           if (elem) {
-            val b = u8()
+            val b = in.u8()
             require(b == 1 || b == 2,
               s"parquet footer: bool list element byte $b is not 1/2")
           }
-        case TByte                  => u8()
+        case TByte                  => in.u8()
         case TI16 | TI32 | TI64     => zigzag()
-        case TDouble                => pos += 8; require(pos <= bytes.length,
-          "parquet footer: truncated double")
+        case TDouble                => in.skip(8)
         case TBinary                => binary()
         case TList | TSet =>
           val (n, et) = listHeader()
           var i = 0
           while (i < n) { skip(et, depth + 1, elem = true); i += 1 }
         case TMap =>
-          val b = u8()
+          val b = in.u8()
           if (b != 0) {
             // non-empty map: byte was the varint size's first byte? No:
             // compact maps start with a varint size then a type byte.
             // Re-read accordingly: back up one byte.
-            pos -= 1
-            val n = varint().toInt
-            val kv = u8()
+            in.pos -= 1
+            val n = in.varint().toInt
+            val kv = in.u8()
             val kt = (kv >> 4) & 0x0f
             val vt = kv & 0x0f
             var i = 0
@@ -293,17 +269,6 @@ object ParquetFooter {
   private val CodecName = Array("UNCOMPRESSED", "SNAPPY", "GZIP", "LZO",
     "BROTLI", "LZ4", "ZSTD", "LZ4_RAW")
 
-  private def i32le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
-      ((b(o + 3) & 0xff) << 24)
-
-  private def i64le(b: Array[Byte]): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(i) & 0xffL); i -= 1 }
-    v
-  }
-
   /** Decode a stats binary per physical type; null where rendering is
     * not cross-engine canonical (FLOAT/DOUBLE/INT96/fixed). Timestamps
     * surface as their raw epoch-micros integer. */
@@ -311,9 +276,9 @@ object ParquetFooter {
     if (v == null) null
     else ptype match {
       case 1 => require(v.length == 4, "bad INT32 stat width")
-        i32le(v, 0).toString
+        Bin.u32le(v, 0, 4).toInt.toString
       case 2 => require(v.length == 8, "bad INT64 stat width")
-        i64le(v).toString
+        Bin.u64le(v, 0, 8).toString
       case 6 => new String(v, "UTF-8")
       case _ => null
     }
@@ -450,7 +415,7 @@ object ParquetFooter {
       f.readFully(tail)
       require(new String(tail, 4, 4, "US-ASCII") == "PAR1",
         "missing PAR1 tail magic")
-      val footerLen = i32le(tail, 0)
+      val footerLen = Bin.u32le(tail, 0, tail.length).toInt
       require(footerLen > 0 && footerLen <= len - 12,
         s"footer length $footerLen overruns the file")
       f.seek(len - 8 - footerLen)

@@ -136,7 +136,8 @@ object Pdf {
           case "true" => PBool(true)
           case "false" => PBool(false)
           case "null" => PNull
-          case t => sys.error(s"unexpected PDF token '$t' at ${c.i}")
+          case t =>
+            throw new IllegalArgumentException(s"unexpected PDF token '$t' at ${c.i}")
         }
     }
   }
@@ -248,7 +249,8 @@ object Pdf {
     xc.skipWs(); xc.expect("trailer")
     val trailer = parseVal(xc) match {
       case d: PDict => d
-      case other => sys.error(s"trailer is not a dict: $other")
+      case other =>
+        throw new IllegalArgumentException(s"trailer is not a dict: $other")
     }
 
     val objs = offsets.map { case (num, off) =>
@@ -272,12 +274,14 @@ object Pdf {
         val len = value match {
           case PDict(m) => m.get("Length") match {
             case Some(PNum(v)) => v.toInt
-            case other => sys.error(s"stream /Length missing or odd: $other")
+            case other =>
+              throw new IllegalArgumentException(
+                s"stream /Length missing or odd: $other")
           }
-          case _ => sys.error("stream without a dict")
+          case _ => throw new IllegalArgumentException("stream without a dict")
         }
-        require(len >= 0 && oc.i + len <= bytes.length,
-          s"stream /Length $len overruns the file")
+        require(len >= 0, s"stream /Length $len overruns the file")
+        Bin.checkRange(oc.i, len, bytes.length, "stream /Length")
         sStart = oc.i; sLen = len
         oc.i += len
         oc.skipWs(); oc.expect("endstream")
@@ -291,15 +295,17 @@ object Pdf {
   private def deref(objs: Map[Int, PObj], v: PVal): PVal = v match {
     case PRef(n, _) =>
       objs.get(n).map(_.value)
-        .getOrElse(sys.error(s"dangling reference to object $n"))
+        .getOrElse(throw new IllegalArgumentException(
+          s"dangling reference to object $n"))
     case other => other
   }
 
   private def dictGet(objs: Map[Int, PObj], d: PVal, key: String): PVal =
     d match {
       case PDict(m) =>
-        deref(objs, m.getOrElse(key, sys.error(s"dict missing /$key")))
-      case other => sys.error(s"expected dict, got $other")
+        deref(objs,
+          m.getOrElse(key, throw new IllegalArgumentException(s"dict missing /$key")))
+      case other => throw new IllegalArgumentException(s"expected dict, got $other")
     }
 
   /** Page objects in /Kids order, via trailer → catalog → page tree. */
@@ -310,21 +316,25 @@ object Pdf {
     val pages = dictGet(objs, catalog, "Pages")
     val kids = dictGet(objs, pages, "Kids") match {
       case PArr(v) => v
-      case other => sys.error(s"/Kids is not an array: $other")
+      case other =>
+        throw new IllegalArgumentException(s"/Kids is not an array: $other")
     }
     val declared = dictGet(objs, pages, "Count") match {
       case PNum(v) => v.toInt
-      case other => sys.error(s"/Count is not a number: $other")
+      case other =>
+        throw new IllegalArgumentException(s"/Count is not a number: $other")
     }
     require(declared == kids.length,
       s"/Count $declared != ${kids.length} kids")
     kids.map {
       case PRef(n, _) =>
-        val o = objs.getOrElse(n, sys.error(s"dangling kid $n"))
+        val o = objs.getOrElse(n,
+          throw new IllegalArgumentException(s"dangling kid $n"))
         require(dictGet(objs, o.value, "Type") == PName("Page"),
           s"kid $n is not a /Page")
         o
-      case other => sys.error(s"kid is not a reference: $other")
+      case other =>
+        throw new IllegalArgumentException(s"kid is not a reference: $other")
     }
   }
 
@@ -339,17 +349,19 @@ object Pdf {
       case PArr(Vector(PNum(a), PNum(b), PNum(c), PNum(d))) =>
         require(a == 0 && b == 0, "MediaBox not origin-anchored")
         (c.toInt, d.toInt)
-      case other => sys.error(s"bad /MediaBox: $other")
+      case other => throw new IllegalArgumentException(s"bad /MediaBox: $other")
     }
     val nFlate = pages.count { p =>
       val cObj = dictGet(objs, p.value, "Contents") match {
         case d: PDict => d
-        case other => sys.error(s"/Contents not a stream dict: $other")
+        case other =>
+          throw new IllegalArgumentException(s"/Contents not a stream dict: $other")
       }
       cObj.v.get("Filter") match {
         case None => false
         case Some(PName("FlateDecode")) => true
-        case Some(other) => sys.error(s"unsupported filter $other")
+        case Some(other) =>
+          throw new IllegalArgumentException(s"unsupported filter $other")
       }
     }
     PdfMeta(version, objs.size, pages.length, mb._1, mb._2, nFlate)
@@ -411,7 +423,8 @@ object Pdf {
       } else if (ch == '/') {
         c.take(); c.token(); ()
       } else if (isDelim(ch)) {
-        sys.error(s"unexpected delimiter '${ch.toChar}' in content stream")
+        throw new IllegalArgumentException(
+          s"unexpected delimiter '${ch.toChar}' in content stream")
       } else {
         c.token() match {
           case "Tj" =>
@@ -423,7 +436,8 @@ object Pdf {
             pendingArr.foreach {
               case PStr(s) => sb.append(s)
               case PNum(adj) => if (math.abs(adj) >= 100) sb.append(' ')
-              case other => sys.error(s"bad TJ element $other")
+              case other =>
+                throw new IllegalArgumentException(s"bad TJ element $other")
             }
             runs += sb.toString
           case _ => () // BT/ET/Tf/Td/... — no text payload
@@ -442,20 +456,22 @@ object Pdf {
       case PArr(Vector(PNum(a), PNum(b), PNum(c), PNum(d))) =>
         require(a == 0 && b == 0, "MediaBox not origin-anchored")
         (c.toInt, d.toInt)
-      case other => sys.error(s"bad /MediaBox: $other")
+      case other => throw new IllegalArgumentException(s"bad /MediaBox: $other")
     }
     val runs = collection.mutable.ArrayBuffer.empty[String]
     var nFlate = 0
     pages.foreach { p =>
       val cRef = p.value match {
         case PDict(m) => m.getOrElse("Contents",
-          sys.error("page missing /Contents"))
-        case _ => sys.error("page is not a dict")
+          throw new IllegalArgumentException("page missing /Contents"))
+        case _ => throw new IllegalArgumentException("page is not a dict")
       }
       val cObj = cRef match {
         case PRef(n, _) => objs.getOrElse(n,
-          sys.error(s"dangling /Contents $n"))
-        case _ => sys.error("/Contents must be an indirect reference")
+          throw new IllegalArgumentException(s"dangling /Contents $n"))
+        case _ =>
+          throw new IllegalArgumentException(
+            "/Contents must be an indirect reference")
       }
       require(cObj.hasStream, "/Contents object carries no stream")
       val filt = cObj.value match {
@@ -469,7 +485,8 @@ object Pdf {
         case Some(PName("FlateDecode")) =>
           nFlate += 1
           inflate(bytes, cObj.streamStart, cObj.streamLen)
-        case Some(other) => sys.error(s"unsupported filter $other")
+        case Some(other) =>
+          throw new IllegalArgumentException(s"unsupported filter $other")
       }
       contentText(content, runs)
     }

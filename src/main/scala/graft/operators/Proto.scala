@@ -23,54 +23,16 @@ object Proto {
   final case class ProtoRec(recId: Long, name: String, score: Double,
       tags: Array[Int], delta: Long)
 
-  private final class In(val b: Array[Byte], val limit: Int) {
-    var pos = 0
-    def hasMore: Boolean = pos < limit
-    def u8(): Int = {
-      require(pos < limit, "proto: truncated message")
-      val v = b(pos) & 0xff; pos += 1; v
-    }
-    /** plain base-128 varint (no zigzag). */
-    def varint(): Long = {
-      var shift = 0
-      var acc = 0L
-      var more = true
-      while (more) {
-        require(shift < 64, "proto: varint longer than 10 bytes")
-        val v = u8()
-        acc |= (v & 0x7fL) << shift
-        more = (v & 0x80) != 0
-        shift += 7
-      }
-      acc
-    }
-    def fixed64(): Long = {
-      require(pos + 8 <= limit, "proto: truncated fixed64")
-      var v = 0L
-      var i = 7
-      while (i >= 0) { v = (v << 8) | (b(pos + i) & 0xffL); i -= 1 }
-      pos += 8
-      v
-    }
-    def fixed32(): Int = {
-      require(pos + 4 <= limit, "proto: truncated fixed32")
-      val v = (b(pos) & 0xff) | ((b(pos + 1) & 0xff) << 8) |
-        ((b(pos + 2) & 0xff) << 16) | ((b(pos + 3) & 0xff) << 24)
-      pos += 4
-      v
-    }
-    def lenDelim(): (Int, Int) = { // (start, length)
-      val n = varint()
-      require(n >= 0 && pos + n <= limit,
-        s"proto: length-delimited field of $n bytes overruns the message")
-      val start = pos
-      pos += n.toInt
-      (start, n.toInt)
-    }
+  /** (start, length) of a length-delimited field, skipped past. */
+  private def lenDelim(in: Bin.Cursor): (Int, Int) = {
+    val n = in.varint()
+    val start = in.pos
+    in.skip(n)
+    (start, n.toInt)
   }
 
   def parse(bytes: Array[Byte]): ProtoRec = {
-    val in = new In(bytes, bytes.length)
+    val in = new Bin.Cursor(bytes, 0, bytes.length, "proto")
     var recId = 0L
     var name: String = null
     var score = 0.0
@@ -83,24 +45,23 @@ object Proto {
       (field, wire) match {
         case (1, 0) => recId = in.varint()
         case (2, 2) =>
-          val (s, n) = in.lenDelim()
+          val (s, n) = lenDelim(in)
           name = new String(in.b, s, n, "UTF-8")
         case (3, 1) =>
-          score = java.lang.Double.longBitsToDouble(in.fixed64())
+          score = java.lang.Double.longBitsToDouble(in.u64le())
         case (4, 2) => // packed repeated int32
-          val (s, n) = in.lenDelim()
-          val sub = new In(in.b, s + n)
-          sub.pos = s
+          val (s, n) = lenDelim(in)
+          val sub = new Bin.Cursor(in.b, s, s + n, "proto")
           while (sub.hasMore) tags += sub.varint().toInt
         case (5, 0) => // sint64: zigzag varint
-          val z = in.varint()
-          delta = (z >>> 1) ^ -(z & 1L)
+          delta = in.zigzag()
         case (_, 0) => in.varint() // unknown varint: skip
-        case (_, 1) => in.fixed64() // unknown fixed64: skip
-        case (_, 5) => in.fixed32() // unknown fixed32: skip
-        case (_, 2) => in.lenDelim() // unknown length-delimited: skip
+        case (_, 1) => in.u64le() // unknown fixed64: skip
+        case (_, 5) => in.u32le() // unknown fixed32: skip
+        case (_, 2) => lenDelim(in) // unknown length-delimited: skip
         case (_, w) =>
-          sys.error(s"proto: wire type $w (group or reserved) on " +
+          throw new IllegalArgumentException(
+            s"proto: wire type $w (group or reserved) on " +
             s"field $field is outside the walk's scope")
       }
     }

@@ -23,19 +23,6 @@ object Sfnt {
       numGlyphs: Int, xMin: Int, yMin: Int, xMax: Int, yMax: Int,
       family: String, locFormat: Int)
 
-  private def u16(b: Array[Byte], o: Int): Int = {
-    require(o >= 0 && o + 2 <= b.length, "sfnt truncated")
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-  }
-
-  private def s16(b: Array[Byte], o: Int): Int = u16(b, o).toShort.toInt
-
-  private def u32(b: Array[Byte], o: Int): Long = {
-    require(o >= 0 && o + 4 <= b.length, "sfnt truncated")
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
-  }
-
   /** The spec checksum: big-endian u32 word sum over [off, off+len)
     * zero-padded to a word boundary, mod 2^32. */
   private def checksum(b: Array[Byte], off: Int, len: Int): Long = {
@@ -56,10 +43,10 @@ object Sfnt {
 
   def parse(bytes: Array[Byte]): SfntMeta = {
     require(bytes.length >= 12, "sfnt shorter than its offset table")
-    val ver = u32(bytes, 0)
+    val ver = Bin.u32be(bytes, 0, bytes.length, "sfnt")
     require(ver == 0x00010000L,
       f"sfnt version 0x$ver%08x is outside the TrueType subset")
-    val n = u16(bytes, 4)
+    val n = Bin.u16be(bytes, 4, bytes.length, "sfnt")
     require(n >= 1 && 12 + 16 * n <= bytes.length,
       s"table directory claims $n tables beyond the file")
     var headAt = -1
@@ -70,16 +57,20 @@ object Sfnt {
     (0 until n).foreach { i =>
       val e = 12 + 16 * i
       val tag = new String(bytes, e, 4, "US-ASCII")
-      val stored = u32(bytes, e + 4)
-      val off = u32(bytes, e + 8).toInt
-      val len = u32(bytes, e + 12).toInt
-      require(off >= 12 + 16 * n && len >= 0 && off + len <= bytes.length,
-        s"table '$tag' [${off}, ${off + len}) escapes the file")
+      val stored = Bin.u32be(bytes, e + 4, bytes.length, "sfnt")
+      val offL = Bin.u32be(bytes, e + 8, bytes.length, "sfnt")
+      val lenL = Bin.u32be(bytes, e + 12, bytes.length, "sfnt")
+      require(offL >= 12 + 16 * n,
+        s"table '$tag' at $offL overlaps the table directory")
+      Bin.checkRange(offL, lenL, bytes.length, "sfnt table escapes the file")
+      val off = offL.toInt
+      val len = lenL.toInt
       val sum =
         if (tag == "head") {
           // the adjustment slot (bytes 8-11 of head) counts as zero
           require(len >= 54, "head table shorter than 54 bytes")
-          (checksum(bytes, off, len) - u32(bytes, off + 8)) & 0xffffffffL
+          (checksum(bytes, off, len) - Bin.u32be(bytes, off + 8, bytes.length,
+            "sfnt")) & 0xffffffffL
         } else checksum(bytes, off, len)
       require(sum == stored,
         f"table '$tag' checksum 0x$sum%08x != directory 0x$stored%08x")
@@ -94,40 +85,44 @@ object Sfnt {
     require(maxpAt >= 0, "font carries no maxp table")
     require(nameAt >= 0, "font carries no name table")
     // the font-wide adjustment ladder
-    val adj = u32(bytes, headAt + 8)
+    val adj = Bin.u32be(bytes, headAt + 8, bytes.length, "sfnt")
     val fileSum = (checksum(bytes, 0, bytes.length) - adj) & 0xffffffffL
     require(adj == ((0xB1B0AFBAL - fileSum) & 0xffffffffL),
       "head.checkSumAdjustment disagrees with the whole-file sum")
-    require(u32(bytes, headAt + 12) == 0x5F0F3CF5L, "bad head magic")
-    val unitsPerEm = u16(bytes, headAt + 18)
+    require(Bin.u32be(bytes, headAt + 12, bytes.length, "sfnt") == 0x5F0F3CF5L,
+      "bad head magic")
+    val unitsPerEm = Bin.u16be(bytes, headAt + 18, bytes.length, "sfnt")
     require(unitsPerEm >= 16 && unitsPerEm <= 16384,
       s"unitsPerEm $unitsPerEm out of the spec range")
-    val xMin = s16(bytes, headAt + 36)
-    val yMin = s16(bytes, headAt + 38)
-    val xMax = s16(bytes, headAt + 40)
-    val yMax = s16(bytes, headAt + 42)
+    val xMin = Bin.u16be(bytes, headAt + 36, bytes.length, "sfnt").toShort.toInt
+    val yMin = Bin.u16be(bytes, headAt + 38, bytes.length, "sfnt").toShort.toInt
+    val xMax = Bin.u16be(bytes, headAt + 40, bytes.length, "sfnt").toShort.toInt
+    val yMax = Bin.u16be(bytes, headAt + 42, bytes.length, "sfnt").toShort.toInt
     require(xMin <= xMax && yMin <= yMax, "head bbox is inverted")
-    val locFormat = s16(bytes, headAt + 50)
-    val numGlyphs = u16(bytes, maxpAt + 4)
+    val locFormat = Bin.u16be(bytes, headAt + 50, bytes.length, "sfnt").toShort.toInt
+    val numGlyphs = Bin.u16be(bytes, maxpAt + 4, bytes.length, "sfnt")
     // name: format 0, first family-name record (nameID 1)
-    require(u16(bytes, nameAt) == 0, "name table format != 0")
-    val count = u16(bytes, nameAt + 2)
-    val strBase = nameAt + u16(bytes, nameAt + 4)
+    require(Bin.u16be(bytes, nameAt, bytes.length, "sfnt") == 0,
+      "name table format != 0")
+    val count = Bin.u16be(bytes, nameAt + 2, bytes.length, "sfnt")
+    val strBase = nameAt + Bin.u16be(bytes, nameAt + 4, bytes.length, "sfnt")
     var family: String = null
     (0 until count).foreach { i =>
       val r = nameAt + 6 + 12 * i
       require(r + 12 <= nameAt + nameLen, "name record overruns the table")
-      val platform = u16(bytes, r)
-      val nameId = u16(bytes, r + 6)
-      val len = u16(bytes, r + 8)
-      val off = u16(bytes, r + 10)
-      require(strBase + off + len <= bytes.length,
+      val platform = Bin.u16be(bytes, r, bytes.length, "sfnt")
+      val nameId = Bin.u16be(bytes, r + 6, bytes.length, "sfnt")
+      val len = Bin.u16be(bytes, r + 8, bytes.length, "sfnt")
+      val off = Bin.u16be(bytes, r + 10, bytes.length, "sfnt")
+      Bin.checkRange(strBase + off, len, bytes.length,
         "name string escapes the file")
       if (nameId == 1 && family == null) {
         family = platform match {
           case 3 => new String(bytes, strBase + off, len, "UTF-16BE")
           case 1 => new String(bytes, strBase + off, len, "ISO-8859-1")
-          case p => sys.error(s"name platform $p is outside the subset")
+          case p =>
+            throw new IllegalArgumentException(
+              s"name platform $p is outside the subset")
         }
       }
     }
@@ -140,9 +135,7 @@ object Sfnt {
     * all checksums genuine (incl. the zeroed-slot head rule and the
     * font-wide 0xB1B0AFBA adjustment). */
   def synth(d: Long): Array[Byte] = {
-    def be16(v: Int) = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be32(v: Long) = Array(((v >> 24) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    import Bin.{be16, be32}
     val unitsPerEm = Array(1000, 1024, 2048)((d % 3).toInt)
     val head = new java.io.ByteArrayOutputStream()
     head.write(be32(0x00010000L)); head.write(be32((d % 100) << 16))

@@ -129,25 +129,6 @@ object Tiff {
 
   // TIFF6 §13 LZW — MSB-first code packing, both directions.
 
-  private final class MsbWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def write(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        n += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def finish(): Array[Byte] = {
-      if (n > 0) { out.write(cur << (8 - n)); cur = 0; n = 0 }
-      out.toByteArray
-    }
-  }
-
   /** LZW-encode one strip (the fixture side): Clear first, EOI last,
     * prefix table keyed (prefixCode, byte), and the spec's EARLY
     * width change — after the entry making the next free code equal
@@ -155,13 +136,13 @@ object Tiff {
     * libtiff-compatible convention the decoder mirrors). Fixture
     * strips never fill the 12-bit table, so no mid-stream Clear. */
   private def lzwEncode(data: Array[Byte]): Array[Byte] = {
-    val w = new MsbWriter
+    val w = new Bin.MsbWriter
     var width = 9
     var next = 258
     // LongMap keyed (prefix << 8 | byte): no tuple boxing — this
     // encoder runs once per fixture strip at corpus scale
     val table = collection.mutable.LongMap.empty[Int]
-    w.write(256, width) // Clear
+    w.u(256, width) // Clear
     var prefix = -1
     data.foreach { b =>
       val k = b & 0xff
@@ -171,7 +152,7 @@ object Tiff {
         val c = table.getOrElse(key, -1)
         if (c >= 0) prefix = c
         else {
-          w.write(prefix, width)
+          w.u(prefix, width)
           table(key) = next
           next += 1
           require(next < 4094, "tiff: fixture strip would fill the LZW table")
@@ -180,9 +161,9 @@ object Tiff {
         }
       }
     }
-    if (prefix >= 0) w.write(prefix, width)
-    w.write(257, width) // EOI
-    w.finish()
+    if (prefix >= 0) w.u(prefix, width)
+    w.u(257, width) // EOI
+    w.toBytes
   }
 
   /** LZW-decode one strip into exactly `expect` bytes. Table entries
@@ -195,21 +176,7 @@ object Tiff {
       expect: Int): Array[Byte] = {
     val out = new Array[Byte](expect)
     var o = 0
-    var bit = 0
-    val totalBits = (until - from) * 8
-    def read(width: Int): Int = {
-      require(bit + width <= totalBits,
-        "tiff: LZW stream ends mid-code (no EOI)")
-      var v = 0
-      var i = 0
-      while (i < width) {
-        val j = bit + i
-        v = (v << 1) | ((b(from + (j >> 3)) >> (7 - (j & 7))) & 1)
-        i += 1
-      }
-      bit += width
-      v
-    }
+    val in = new Bin.MsbReader(b, from, until, "tiff: LZW stream (no EOI)")
     // (prefix, suffix, firstByte, length) per dynamic entry
     val prefixOf = new Array[Int](4096)
     val suffixOf = new Array[Byte](4096)
@@ -234,7 +201,7 @@ object Tiff {
       if (code < 256) code.toByte else firstOf(code)
     var done = false
     while (!done) {
-      val code = read(width)
+      val code = in.u(width)
       if (code == 257) { // EOI
         done = true
       } else if (code == 256) { // Clear
@@ -273,7 +240,7 @@ object Tiff {
       s"tiff: LZW strip decodes to $o bytes, expected $expect")
     // only bit padding may follow EOI — whole trailing bytes mean the
     // strip byte count lies about where the stream ends
-    require(totalBits - bit < 8,
+    require(in.remaining < 8,
       "tiff: LZW strip carries whole bytes past its EOI code")
     out
   }
@@ -356,22 +323,6 @@ object Tiff {
     private val whiteRuns = toMap(whiteTerm, whiteMakeup)
     private val blackRuns = toMap(blackTerm, blackMakeup)
 
-    private final class BitReader(b: Array[Byte], from: Int, until: Int) {
-      private var bit = 0
-      private val total = (until - from) * 8
-      def remaining: Int = total - bit
-      def read1(): Int = {
-        require(bit < total, "tiff: G4 stream ends mid-code")
-        val v = (b(from + (bit >> 3)) >> (7 - (bit & 7))) & 1
-        bit += 1
-        v
-      }
-      def allZeroToEnd(): Boolean =
-        (bit until total).forall { j =>
-          ((b(from + (j >> 3)) >> (7 - (j & 7))) & 1) == 0
-        }
-    }
-
     /** Changing-element positions of one 0/1 pixel row (positions
       * where the color differs from the previous pixel; pixel −1 is
       * white). Returned with two `w` sentinels. */
@@ -407,26 +358,26 @@ object Tiff {
     /** Encode `rows` lines of 0/1 pixels (row-major, width w). */
     def encode(pix: Array[Byte], w: Int, rows: Int): Array[Byte] = {
       require(w > 0 && rows > 0, "tiff: G4 encode on an empty strip")
-      val bits = new MsbWriter
+      val bits = new Bin.MsbWriter
       def put(s: String): Unit =
-        bits.write(Integer.parseInt(s, 2), s.length)
+        bits.u(Integer.parseInt(s, 2), s.length)
       def putRun(run0: Int, white: Boolean): Unit = {
         var run = run0
         while (run >= 2624) { // chain 2560 makeups for very long runs
-          val (c, l) = extMakeup(12); bits.write(c, l); run -= 2560
+          val (c, l) = extMakeup(12); bits.u(c, l); run -= 2560
         }
         if (run >= 1792) {
           val k = (run - 1792) / 64
-          val (c, l) = extMakeup(k); bits.write(c, l)
+          val (c, l) = extMakeup(k); bits.u(c, l)
           run -= 1792 + 64 * k
         } else if (run >= 64) {
           val k = run / 64 - 1
           val (c, l) = (if (white) whiteMakeup else blackMakeup)(k)
-          bits.write(c, l)
+          bits.u(c, l)
           run -= 64 * (k + 1)
         }
         val (c, l) = (if (white) whiteTerm else blackTerm)(run)
-        bits.write(c, l)
+        bits.u(c, l)
       }
       var ref = Array(w, w)
       var refN = 0
@@ -465,14 +416,14 @@ object Tiff {
         }
         ref = cur; refN = curN
       }
-      bits.finish()
+      bits.toBytes
     }
 
     /** Decode exactly `rows` lines of width `w` into 0/1 bytes. */
     def decode(b: Array[Byte], from: Int, until: Int, w: Int,
         rows: Int): Array[Byte] = {
       require(w > 0 && rows > 0, "tiff: G4 decode on an empty strip")
-      val in = new BitReader(b, from, until)
+      val in = new Bin.MsbReader(b, from, until, "tiff: G4 stream mid-code")
       val out = new Array[Byte](rows * w)
       def readRun(white: Boolean): Int = {
         val table = if (white) whiteRuns else blackRuns
@@ -482,7 +433,7 @@ object Tiff {
           var code = 0; var len = 0
           var hit = -1
           while (hit < 0) {
-            code = (code << 1) | in.read1(); len += 1
+            code = (code << 1) | in.u(1); len += 1
             require(len <= 13,
               "tiff: G4 run code matches no T.4 entry within 13 bits")
             hit = table.getOrElse((len << 16) | code, -1)
@@ -510,21 +461,21 @@ object Tiff {
           val (b1, b2) = refPair(ref, refN, a0, white)
           // mode tree: V0=1 VR1=011 VL1=010 H=001 P=0001
           //            VR2=000011 VL2=000010 VR3=0000011 VL3=0000010
-          if (in.read1() == 1) { // V0
+          if (in.u(1) == 1) { // V0
             val a1 = b1
             require(a1 > a0 && a1 <= w,
               s"tiff: G4 vertical mode does not advance (a0=$a0 a1=$a1)")
             fill(a1, white)
             if (a1 < w) { curBuf(curN) = a1; curN += 1 }
             a0 = a1; white = !white
-          } else if (in.read1() == 1) { // 01x
-            val a1 = if (in.read1() == 1) b1 + 1 else b1 - 1
+          } else if (in.u(1) == 1) { // 01x
+            val a1 = if (in.u(1) == 1) b1 + 1 else b1 - 1
             require(a1 > a0 && a1 <= w,
               s"tiff: G4 vertical mode does not advance (a0=$a0 a1=$a1)")
             fill(a1, white)
             if (a1 < w) { curBuf(curN) = a1; curN += 1 }
             a0 = a1; white = !white
-          } else if (in.read1() == 1) { // 001 horizontal
+          } else if (in.u(1) == 1) { // 001 horizontal
             val a0s = math.max(a0, 0)
             val run1 = readRun(white)
             val run2 = readRun(!white)
@@ -540,16 +491,16 @@ object Tiff {
             fill(a2, !white)
             if (a2 < w) { curBuf(curN) = a2; curN += 1 }
             a0 = a2
-          } else if (in.read1() == 1) { // 0001 pass
+          } else if (in.u(1) == 1) { // 0001 pass
             require(b2 > math.max(a0, 0) || a0 < 0,
               s"tiff: G4 pass mode does not advance (a0=$a0 b2=$b2)")
             fill(b2, white)
             a0 = b2
           } else { // 00000.. — vertical ±2/±3 or garbage
             val a1 =
-              if (in.read1() == 1) { if (in.read1() == 1) b1 + 2 else b1 - 2 }
-              else if (in.read1() == 1) {
-                if (in.read1() == 1) b1 + 3 else b1 - 3
+              if (in.u(1) == 1) { if (in.u(1) == 1) b1 + 2 else b1 - 2 }
+              else if (in.u(1) == 1) {
+                if (in.u(1) == 1) b1 + 3 else b1 - 3
               } else throw new IllegalArgumentException(
                 "tiff: G4 mode code matches no T.6 entry")
             require(a1 > a0 && a1 <= w,
@@ -568,12 +519,16 @@ object Tiff {
       if (in.remaining >= 24) {
         var ok = true
         (0 until 2).foreach { _ =>
-          (0 until 11).foreach(_ => ok &= in.read1() == 0)
-          ok &= in.read1() == 1
+          (0 until 11).foreach(_ => ok &= in.u(1) == 0)
+          ok &= in.u(1) == 1
         }
         require(ok, "tiff: G4 trailing bytes are neither EOFB nor padding")
       }
-      require(in.remaining < 32 && in.allZeroToEnd(),
+      require(in.remaining < 32 && {
+        var zero = true
+        while (in.remaining > 0) zero &= in.u(1) == 0
+        zero
+      },
         "tiff: G4 stream carries non-zero bits past the last coded line")
       out
     }
@@ -618,14 +573,8 @@ object Tiff {
   def synth(d: Long): Array[Byte] = {
     val le = d % 2 == 0
     val out = new java.io.ByteArrayOutputStream(4096)
-    def w16(v: Int): Unit =
-      if (le) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def w32(v: Int): Unit =
-      if (le) { out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff) }
-      else { out.write((v >> 24) & 0xff); out.write((v >> 16) & 0xff)
-        out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+    def w16(v: Int): Unit = out.write(if (le) Bin.le16(v) else Bin.be16(v))
+    def w32(v: Int): Unit = out.write(if (le) Bin.le32(v) else Bin.be32(v))
     out.write(if (le) 'I' else 'M'); out.write(if (le) 'I' else 'M')
     w16(42)
     // layout: header(8) | per page: payloads (strips or tiles) then
@@ -753,7 +702,8 @@ object Tiff {
       val n = b(i); i += 1
       if (n >= 0) {
         val lit = n + 1
-        require(i + lit <= until, "tiff: PackBits literal overruns its strip")
+        Bin.checkRange(i, lit, until,
+          "tiff: PackBits literal overruns its strip")
         require(o + lit <= expect,
           "tiff: PackBits output exceeds the declared strip size")
         System.arraycopy(b, i, out, o, lit)
@@ -780,18 +730,12 @@ object Tiff {
       case _ => throw new IllegalArgumentException(
         "tiff: bad byte-order mark")
     }
-    def u16(o: Int): Int = {
-      require(o >= 0 && o + 2 <= bytes.length, "tiff: read out of bounds")
-      if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8)
-      else ((bytes(o) & 0xff) << 8) | (bytes(o + 1) & 0xff)
-    }
-    def u32(o: Int): Int = {
-      require(o >= 0 && o + 4 <= bytes.length, "tiff: read out of bounds")
-      if (le) (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-        ((bytes(o + 2) & 0xff) << 16) | ((bytes(o + 3) & 0xff) << 24)
-      else ((bytes(o) & 0xff) << 24) | ((bytes(o + 1) & 0xff) << 16) |
-        ((bytes(o + 2) & 0xff) << 8) | (bytes(o + 3) & 0xff)
-    }
+    def u16(o: Int): Int =
+      if (le) Bin.u16le(bytes, o, bytes.length, "tiff")
+      else Bin.u16be(bytes, o, bytes.length, "tiff")
+    def u32(o: Int): Int =
+      (if (le) Bin.u32le(bytes, o, bytes.length, "tiff")
+       else Bin.u32be(bytes, o, bytes.length, "tiff")).toInt
     require(u16(2) == 42, "tiff: bad magic")
     var ifd = u32(4)
     val pages = collection.mutable.ArrayBuffer.empty[TiffPage]
@@ -831,8 +775,8 @@ object Tiff {
           }
           val size = unit * cnt
           val at = if (size <= 4) e + 8 else u32(e + 8)
-          require(at >= 0 && at + size <= bytes.length,
-            s"tiff: tag $tag value array overruns the file")
+          require(at >= 0, s"tiff: tag $tag value array overruns the file")
+          Bin.checkRange(at, size, bytes.length, "tiff: tag")
           Array.tabulate(cnt)(i =>
             if (unit == 2) u16(at + 2 * i) else u32(at + 4 * i))
         }
@@ -888,8 +832,8 @@ object Tiff {
       // one payload decode shared by both organizations
       def decodePayload(idx: Int, o: Int, c: Int, expect: Int,
           rowBytes: Int, what: String): Array[Byte] = {
-        require(o >= 0 && c >= 0 && o + c <= bytes.length,
-          s"tiff: $what $idx overruns the file")
+        require(o >= 0 && c >= 0, s"tiff: $what $idx overruns the file")
+        Bin.checkRange(o, c, bytes.length, "tiff")
         comp match {
           case 1 =>
             require(c == expect,

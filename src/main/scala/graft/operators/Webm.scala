@@ -307,41 +307,6 @@ object Webm {
     profile * 1000L + depth * 10L + cs
   }
 
-  private final class BitsMsb(b: Array[Byte]) {
-    var pos = 0
-    def f(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val j = pos + i
-        require((j >> 3) < b.length, "webm: VP9 header truncated")
-        v = (v << 1) | ((b(j >> 3) >> (7 - (j & 7))) & 1)
-        i += 1
-      }
-      pos += n
-      v
-    }
-  }
-
-  private final class BitsMsbW {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def f(v: Int, bits: Int): Unit = {
-      var i = bits - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        n += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def finish(): Array[Byte] = {
-      if (n > 0) { out.write(cur << (8 - n)); cur = 0; n = 0 }
-      out.toByteArray
-    }
-  }
-
   /** A VP9 KEY-frame uncompressed header (public VP9 bitstream spec
     * §6.2 + §6.1.2 color_config): frame marker, profile bits (all
     * FOUR profiles — profile 3 carries its extra reserved bit), sync
@@ -350,33 +315,33 @@ object Webm {
     * dims keyed on `dimSeed`, the rest on `hdrSeed`; padded with
     * filler modeling coded data. */
   def synthVp9Frame(dimSeed: Long, hdrSeed: Long): Array[Byte] = {
-    val w = new BitsMsbW
+    val w = new Bin.MsbWriter
     val profile = (hdrSeed % 4).toInt
-    w.f(2, 2)                       // frame_marker 0b10
-    w.f(profile & 1, 1)             // profile_low_bit
-    w.f((profile >> 1) & 1, 1)      // profile_high_bit
-    if (profile == 3) w.f(0, 1)     // reserved_zero
-    w.f(0, 1)                       // show_existing_frame
-    w.f(0, 1)                       // frame_type: KEY
-    w.f(1, 1)                       // show_frame
-    w.f((hdrSeed % 2).toInt, 1)     // error_resilient_mode
-    w.f(0x49, 8); w.f(0x83, 8); w.f(0x42, 8) // frame_sync_code
-    if (profile >= 2) w.f((hdrSeed % 2).toInt, 1) // ten_or_twelve_bit
+    w.u(2, 2)                       // frame_marker 0b10
+    w.u(profile & 1, 1)             // profile_low_bit
+    w.u((profile >> 1) & 1, 1)      // profile_high_bit
+    if (profile == 3) w.u(0, 1)     // reserved_zero
+    w.u(0, 1)                       // show_existing_frame
+    w.u(0, 1)                       // frame_type: KEY
+    w.u(1, 1)                       // show_frame
+    w.u((hdrSeed % 2).toInt, 1)     // error_resilient_mode
+    w.u(0x49, 8); w.u(0x83, 8); w.u(0x42, 8) // frame_sync_code
+    if (profile >= 2) w.u((hdrSeed % 2).toInt, 1) // ten_or_twelve_bit
     val cs = if (profile % 2 == 1 && hdrSeed % 7 == 0) 7
       else 1 + (hdrSeed % 5).toInt
-    w.f(cs, 3)                      // color_space (RGB on 4:4:4 only)
+    w.u(cs, 3)                      // color_space (RGB on 4:4:4 only)
     if (cs != 7) {
-      w.f((hdrSeed % 2).toInt, 1)   // color_range
-      if (profile % 2 == 1) { w.f(0, 1); w.f(0, 1); w.f(0, 1) } // ss+rsvd
+      w.u((hdrSeed % 2).toInt, 1)   // color_range
+      if (profile % 2 == 1) { w.u(0, 1); w.u(0, 1); w.u(0, 1) } // ss+rsvd
     } else {
       // RGB: color_range implied FULL; 4:4:4 implied; profile 1/3
       // carry one reserved_zero bit
-      w.f(0, 1)
+      w.u(0, 1)
     }
-    w.f((320 + dimSeed % 33).toInt - 1, 16) // frame_width_minus_1
-    w.f((240 + dimSeed % 25).toInt - 1, 16) // frame_height_minus_1
-    w.f(0, 1)                       // render_and_frame_size_different
-    val hdr = w.finish()
+    w.u((320 + dimSeed % 33).toInt - 1, 16) // frame_width_minus_1
+    w.u((240 + dimSeed % 25).toInt - 1, 16) // frame_height_minus_1
+    w.u(0, 1)                       // render_and_frame_size_different
+    val hdr = w.toBytes
     val pad = Array.tabulate((40 + hdrSeed % 30).toInt)(i =>
       ((11 * hdrSeed + i) % 256).toByte)
     hdr ++ pad
@@ -387,25 +352,25 @@ object Webm {
     * RGB color space on a non-4:4:4 profile (profile 0/2 RGB is
     * illegal per the spec's color_config). */
   def parseVp9Header(payload: Array[Byte]): Vp9Header = {
-    val r = new BitsMsb(payload)
-    require(r.f(2) == 2, "webm: VP9 frame marker is not 0b10")
-    val profile = r.f(1) | (r.f(1) << 1)
+    val r = new Bin.MsbReader(payload, "webm: VP9 header")
+    require(r.u(2) == 2, "webm: VP9 frame marker is not 0b10")
+    val profile = r.u(1) | (r.u(1) << 1)
     if (profile == 3)
-      require(r.f(1) == 0, "webm: VP9 profile-3 reserved bit set")
-    require(r.f(1) == 0,
+      require(r.u(1) == 0, "webm: VP9 profile-3 reserved bit set")
+    require(r.u(1) == 0,
       "webm: show_existing_frame VP9 blocks carry no header to parse")
-    require(r.f(1) == 0, "webm: non-key VP9 frame in a key SimpleBlock")
-    r.f(1) // show_frame
-    r.f(1) // error_resilient_mode
-    require(r.f(8) == 0x49 && r.f(8) == 0x83 && r.f(8) == 0x42,
+    require(r.u(1) == 0, "webm: non-key VP9 frame in a key SimpleBlock")
+    r.u(1) // show_frame
+    r.u(1) // error_resilient_mode
+    require(r.u(8) == 0x49 && r.u(8) == 0x83 && r.u(8) == 0x42,
       "webm: VP9 key frame lacks its sync code")
-    val depth = if (profile >= 2) 10 + 2 * r.f(1) else 8
-    val cs = r.f(3)
+    val depth = if (profile >= 2) 10 + 2 * r.u(1) else 8
+    val cs = r.u(3)
     if (cs != 7) {
-      r.f(1) // color_range
+      r.u(1) // color_range
       if (profile % 2 == 1) {
-        r.f(1); r.f(1)
-        require(r.f(1) == 0, "webm: reserved VP9 subsampling bit set")
+        r.u(1); r.u(1)
+        require(r.u(1) == 0, "webm: reserved VP9 subsampling bit set")
       }
     } else {
       // CS_RGB: color_range implied full, 4:4:4 implied — legal only
@@ -413,11 +378,11 @@ object Webm {
       require(profile % 2 == 1,
         s"webm: VP9 RGB color space on profile $profile (4:2:0) is " +
           "illegal — profiles 1/3 only")
-      require(r.f(1) == 0, "webm: reserved VP9 RGB bit set")
+      require(r.u(1) == 0, "webm: reserved VP9 RGB bit set")
     }
-    val w = r.f(16) + 1
-    val h = r.f(16) + 1
-    r.f(1) // render_and_frame_size_different
+    val w = r.u(16) + 1
+    val h = r.u(16) + 1
+    r.u(1) // render_and_frame_size_different
     Vp9Header(profile, depth, cs, w, h)
   }
 
@@ -687,22 +652,18 @@ object Webm {
       nBlockGroups: Int, sumBlockDurTicks: Long,
       nSeekEntries: Int, nCuePoints: Int)
 
-  private final class R(bytes: Array[Byte]) {
-    var pos = 0
-    def u8(): Int = {
-      require(pos < bytes.length, "webm: truncated EBML data")
-      val v = bytes(pos) & 0xff; pos += 1; v
-    }
+  /** EBML element heads over the shared byte cursor. */
+  private implicit final class Ebml(private val r: Bin.Cursor) extends AnyVal {
     /** Element id: raw value INCLUDING the length-marker bits, 1-4
       * bytes (EBMLMaxIDLength). */
     def readId(): Long = {
-      val b0 = u8()
+      val b0 = r.u8()
       require(b0 != 0, "webm: invalid EBML id lead byte 0x00")
       val len = Integer.numberOfLeadingZeros(b0) - 24 + 1
       require(len >= 1 && len <= 4, s"webm: EBML id length $len out of range")
       var v = b0.toLong
       var i = 1
-      while (i < len) { v = (v << 8) | u8(); i += 1 }
+      while (i < len) { v = (v << 8) | r.u8(); i += 1 }
       v
     }
     /** Element size: marker bit stripped, 1-8 bytes; the all-ones
@@ -721,23 +682,18 @@ object Webm {
     /** Size vint where the all-ones unknown pattern is legal: returns
       * -1 for unknown size. */
     def readSizeAllowUnknown(): Long = {
-      val b0 = u8()
+      val b0 = r.u8()
       require(b0 != 0, "webm: invalid EBML size lead byte 0x00")
       val len = Integer.numberOfLeadingZeros(b0) - 24 + 1
       require(len >= 1 && len <= 8,
         s"webm: EBML size length $len out of range")
       var v = (b0 & (0xff >>> len)).toLong
       var i = 1
-      while (i < len) { v = (v << 8) | u8(); i += 1 }
+      while (i < len) { v = (v << 8) | r.u8(); i += 1 }
       if (v == (1L << (7 * len)) - 1) return -1L
-      require(v <= bytes.length - pos,
+      require(v <= r.remaining,
         s"webm: element size $v overruns the stream")
       v
-    }
-    def bin(n: Long): Array[Byte] = {
-      require(n >= 0 && n <= bytes.length - pos, "webm: truncated payload")
-      val a = java.util.Arrays.copyOfRange(bytes, pos, pos + n.toInt)
-      pos += n.toInt; a
     }
     def uintOf(payload: Array[Byte]): Long = {
       require(payload.length >= 1 && payload.length <= 8,
@@ -758,7 +714,7 @@ object Webm {
       width: Int, height: Int, channels: Int, codecPrivate: Array[Byte])
 
   def parse(bytes: Array[Byte]): WebmInfo = {
-    val r = new R(bytes)
+    val r = new Bin.Cursor(bytes, 0, bytes.length, "webm: EBML data")
     // ---- EBML header
     require(r.readId() == IdEbml, "webm: stream does not start with EBML")
     val ebmlEnd = { val sz = r.readSize(); r.pos + sz }
@@ -769,7 +725,7 @@ object Webm {
       val id = r.readId(); val sz = r.readSize()
       require(r.pos + sz <= ebmlEnd,
         s"webm: EBML header child overruns its parent")
-      val payload = r.bin(sz)
+      val payload = r.bytes(sz)
       id match {
         case IdDocType => docType =
           new String(payload, "US-ASCII").takeWhile(_ != ' ')
@@ -836,7 +792,7 @@ object Webm {
       * boundary, so only the tag is cross-checked. */
     def handleBlock(blockBytes: Array[Byte], base: Long, simple: Boolean,
         refPresent: Boolean, durTicks: Option[Long]): Unit = {
-      val br = new R(blockBytes)
+      val br = new Bin.Cursor(blockBytes, 0, blockBytes.length, "webm: block")
       val what = if (simple) "SimpleBlock" else "Block"
       // track number vint (subset: 1-byte, covers 1..126)
       val tb = br.u8()
@@ -846,7 +802,7 @@ object Webm {
       val track = tracks.find(_.num == trackNum).getOrElse(
         throw new IllegalArgumentException(
           s"webm: $what references undeclared track $trackNum"))
-      val rel = ((br.u8() << 8) | br.u8()).toShort.toLong
+      val rel = br.u16be().toShort.toLong
       val flags = br.u8()
       val lace = flags & 0x06
       val key =
@@ -856,7 +812,7 @@ object Webm {
             "webm: Block flags set the SimpleBlock-only keyframe bit")
           !refPresent
         }
-      val payload = br.bin((blockBytes.length - br.pos).toLong)
+      val payload = br.bytes(br.remaining)
       val absTicks = base + rel
       // un-lace: all THREE Matroska schemes (Xiph 255-run sizes,
       // fixed equal split, EBML vint + signed-vint deltas) plus the
@@ -902,8 +858,9 @@ object Webm {
                   "webm: invalid lace-size vint lead byte")
                 val len =
                   Integer.numberOfLeadingZeros(b0) - 24 + 1
-                require(len >= 1 && len <= 8 &&
-                  p + len <= payload.length,
+                require(len >= 1 && len <= 8,
+                  "webm: lace-size vint overruns the block")
+                Bin.checkRange(p, len, payload.length,
                   "webm: lace-size vint overruns the block")
                 var v = (b0 & (0xff >>> len)).toLong
                 (1 until len).foreach { i =>
@@ -933,7 +890,7 @@ object Webm {
           }
           var q = if (lace == 0x04) 1 else p
           sizes.toSeq.map { sz =>
-            require(q + sz <= payload.length,
+            Bin.checkRange(q, sz, payload.length,
               "webm: laced frame overruns its block")
             val fr = java.util.Arrays.copyOfRange(
               payload, q, q + sz)
@@ -958,9 +915,7 @@ object Webm {
               case "V_VP8" =>
                 // VP8 frame tag (RFC 6386 §9.1): bit 0 = frame type
                 require(fp.length >= 3, "webm: VP8 frame too short")
-                val tag = (fp(0) & 0xff) |
-                  ((fp(1) & 0xff) << 8) |
-                  ((fp(2) & 0xff) << 16)
+                val tag = Bin.u24le(fp, 0, fp.length, "webm: VP8 frame tag")
                 val isKey = (tag & 1) == 0
                 require(isKey == key,
                   if (simple) "webm: SimpleBlock keyframe flag disagrees " +
@@ -1002,16 +957,16 @@ object Webm {
                     "webm: VP9 key frame in a non-key SimpleBlock")
                   // non-key: cross-check the frame-type bits only; the
                   // inter-frame header layout is the codec boundary
-                  val r9 = new BitsMsb(fp)
-                  require(r9.f(2) == 2, "webm: VP9 frame marker is not 0b10")
-                  val prof = r9.f(1) | (r9.f(1) << 1)
+                  val r9 = new Bin.MsbReader(fp, "webm: VP9 header")
+                  require(r9.u(2) == 2, "webm: VP9 frame marker is not 0b10")
+                  val prof = r9.u(1) | (r9.u(1) << 1)
                   if (prof == 3)
-                    require(r9.f(1) == 0,
+                    require(r9.u(1) == 0,
                       "webm: VP9 profile-3 reserved bit set")
-                  require(r9.f(1) == 0,
+                  require(r9.u(1) == 0,
                     "webm: show_existing_frame VP9 blocks carry no header " +
                       "to parse")
-                  require(r9.f(1) == 1,
+                  require(r9.u(1) == 1,
                     "webm: ReferenceBlock marks a non-key block but the " +
                       "VP9 frame type is KEY")
                 }
@@ -1062,8 +1017,8 @@ object Webm {
           while (r.pos < end) {
             ch += 1; require(ch <= MaxChildren, "webm: Info child bomb")
             val cid = r.readId(); val csz = r.readSize()
-            require(r.pos + csz <= end, "webm: Info child overruns it")
-            val p = r.bin(csz)
+            Bin.checkRange(r.pos, csz, end, "webm: Info child overruns it")
+            val p = r.bytes(csz)
             cid match {
               case IdTimestampScale =>
                 tsScale = r.uintOf(p)
@@ -1080,7 +1035,7 @@ object Webm {
           while (r.pos < end) {
             ch += 1; require(ch <= MaxChildren, "webm: Tracks child bomb")
             val cid = r.readId(); val csz = r.readSize()
-            require(r.pos + csz <= end, "webm: TrackEntry overruns Tracks")
+            Bin.checkRange(r.pos, csz, end, "webm: TrackEntry overruns Tracks")
             val tEnd = r.pos + csz
             require(cid == IdTrackEntry,
               s"webm: non-TrackEntry 0x${cid.toHexString} inside Tracks")
@@ -1095,11 +1050,11 @@ object Webm {
                 "webm: track child overruns its TrackEntry")
               val eEnd = r.pos + esz
               eid match {
-                case IdTrackNumber => num = r.uintOf(r.bin(esz))
-                case IdTrackType => tpe = r.uintOf(r.bin(esz))
+                case IdTrackNumber => num = r.uintOf(r.bytes(esz))
+                case IdTrackType => tpe = r.uintOf(r.bytes(esz))
                 case IdCodecId =>
-                  codec = new String(r.bin(esz), "US-ASCII")
-                case IdCodecPrivate => cp = r.bin(esz)
+                  codec = new String(r.bytes(esz), "US-ASCII")
+                case IdCodecPrivate => cp = r.bytes(esz)
                 case IdVideo =>
                   var vch = 0
                   while (r.pos < eEnd) {
@@ -1108,7 +1063,7 @@ object Webm {
                     val vid = r.readId(); val vsz = r.readSize()
                     require(r.pos + vsz <= eEnd,
                       "webm: Video child overruns it")
-                    val p = r.bin(vsz)
+                    val p = r.bytes(vsz)
                     vid match {
                       case IdPixelWidth => w = r.uintOf(p).toInt
                       case IdPixelHeight => h = r.uintOf(p).toInt
@@ -1124,14 +1079,14 @@ object Webm {
                     val aid = r.readId(); val asz = r.readSize()
                     require(r.pos + asz <= eEnd,
                       "webm: Audio child overruns it")
-                    val p = r.bin(asz)
+                    val p = r.bytes(asz)
                     aid match {
                       case IdChannels => chans = r.uintOf(p).toInt
                       case _ => () // SamplingFrequency — informational
                     }
                   }
                   require(r.pos == eEnd, "webm: Audio children under-fill it")
-                case _ => r.bin(esz); () // unknown — skip by size
+                case _ => r.bytes(esz); () // unknown — skip by size
               }
             }
             require(r.pos == tEnd, "webm: TrackEntry children under-fill it")
@@ -1151,10 +1106,10 @@ object Webm {
           while (r.pos < end && !(sz < 0 && nextIsTopLevel())) {
             ch += 1; require(ch <= MaxChildren, "webm: Cluster child bomb")
             val cid = r.readId(); val csz = r.readSize()
-            require(r.pos + csz <= end, "webm: Cluster child overruns it")
+            Bin.checkRange(r.pos, csz, end, "webm: Cluster child overruns it")
             cid match {
               case IdClusterTimestamp =>
-                base = r.uintOf(r.bin(csz))
+                base = r.uintOf(r.bytes(csz))
                 // ticks × tsScale(ns) must stay inside a Long: 2^40
                 // ticks at the max 1 s scale is ~35 years of media —
                 // anything above is a crafted overflow, not a file
@@ -1163,7 +1118,7 @@ object Webm {
               case IdSimpleBlock =>
                 require(base >= 0,
                   "webm: SimpleBlock before the cluster Timestamp")
-                handleBlock(r.bin(csz), base, simple = true,
+                handleBlock(r.bytes(csz), base, simple = true,
                   refPresent = false, durTicks = None)
               case IdBlockGroup =>
                 // BlockGroup → Block (+ BlockDuration, ReferenceBlock):
@@ -1188,11 +1143,11 @@ object Webm {
                     case IdBlock =>
                       require(blockBytes == null,
                         "webm: BlockGroup with more than one Block")
-                      blockBytes = r.bin(gsz)
+                      blockBytes = r.bytes(gsz)
                     case IdBlockDuration =>
                       require(durTicks.isEmpty,
                         "webm: BlockGroup with more than one BlockDuration")
-                      val t = r.uintOf(r.bin(gsz))
+                      val t = r.uintOf(r.bytes(gsz))
                       // same Long-overflow bound as the cluster timestamp
                       require(t <= (1L << 40),
                         s"webm: implausible BlockDuration $t ticks")
@@ -1201,9 +1156,9 @@ object Webm {
                     case IdReferenceBlock =>
                       // signed-vint relative timestamp of the reference;
                       // PRESENCE is the non-key marker the dispatch uses
-                      r.bin(gsz); ()
+                      r.bytes(gsz); ()
                       refPresent = true
-                    case _ => r.bin(gsz); () // DiscardPadding/… — skip
+                    case _ => r.bytes(gsz); () // DiscardPadding/… — skip
                   }
                 }
                 require(r.pos == gEnd,
@@ -1212,7 +1167,7 @@ object Webm {
                   "webm: BlockGroup without a Block")
                 handleBlock(blockBytes, base, simple = false,
                   refPresent, durTicks)
-              case _ => r.bin(csz); () // unknown cluster child — skip
+              case _ => r.bytes(csz); () // unknown cluster child — skip
             }
           }
           if (sz >= 0)
@@ -1227,7 +1182,7 @@ object Webm {
           while (r.pos < end) {
             ch += 1; require(ch <= MaxChildren, "webm: SeekHead child bomb")
             val cid = r.readId(); val csz = r.readSize()
-            require(r.pos + csz <= end, "webm: SeekHead child overruns it")
+            Bin.checkRange(r.pos, csz, end, "webm: SeekHead child overruns it")
             if (cid == IdSeek) {
               val sEnd = r.pos + csz
               var target = -1L; var position = -1L
@@ -1236,7 +1191,7 @@ object Webm {
                 sch += 1; require(sch <= MaxChildren, "webm: Seek child bomb")
                 val eid = r.readId(); val esz = r.readSize()
                 require(r.pos + esz <= sEnd, "webm: Seek child overruns it")
-                val p = r.bin(esz)
+                val p = r.bytes(esz)
                 eid match {
                   case IdSeekId =>
                     require(p.length >= 1 && p.length <= 4,
@@ -1250,7 +1205,7 @@ object Webm {
               require(target >= 0 && position >= 0,
                 "webm: Seek entry lacks its target id or position")
               seekEntries :+= (target, position)
-            } else r.bin(csz)
+            } else r.bytes(csz)
           }
           require(r.pos == end, "webm: SeekHead children under-fill it")
         case IdCues =>
@@ -1259,7 +1214,7 @@ object Webm {
           while (r.pos < end) {
             ch += 1; require(ch <= MaxChildren, "webm: Cues child bomb")
             val cid = r.readId(); val csz = r.readSize()
-            require(r.pos + csz <= end, "webm: Cues child overruns it")
+            Bin.checkRange(r.pos, csz, end, "webm: Cues child overruns it")
             require(cid == IdCuePoint,
               s"webm: non-CuePoint 0x${cid.toHexString} inside Cues")
             val cpEnd = r.pos + csz
@@ -1270,7 +1225,7 @@ object Webm {
               val eid = r.readId(); val esz = r.readSize()
               require(r.pos + esz <= cpEnd, "webm: CuePoint child overruns it")
               eid match {
-                case IdCueTime => time = r.uintOf(r.bin(esz))
+                case IdCueTime => time = r.uintOf(r.bytes(esz))
                 case IdCueTrackPositions =>
                   val tpEnd = r.pos + esz
                   var trk = -1L; var cpos = -1L
@@ -1282,7 +1237,7 @@ object Webm {
                     val tid = r.readId(); val tsz = r.readSize()
                     require(r.pos + tsz <= tpEnd,
                       "webm: CueTrackPositions child overruns it")
-                    val p = r.bin(tsz)
+                    val p = r.bytes(tsz)
                     tid match {
                       case IdCueTrack => trk = r.uintOf(p)
                       case IdCueClusterPosition => cpos = r.uintOf(p)
@@ -1296,14 +1251,14 @@ object Webm {
                   require(time >= 0,
                     "webm: CueTrackPositions before the CuePoint's CueTime")
                   cuePoints :+= ((time, trk, cpos))
-                case _ => r.bin(esz); () // unknown — skip by size
+                case _ => r.bytes(esz); () // unknown — skip by size
               }
             }
             require(r.pos == cpEnd, "webm: CuePoint children under-fill it")
           }
           require(r.pos == end, "webm: Cues children under-fill it")
-        case IdVoid => r.bin(sz); ()
-        case _ => r.bin(sz); () // Tags/Chapters/… — skip by size
+        case IdVoid => r.bytes(sz); ()
+        case _ => r.bytes(sz); () // Tags/Chapters/… — skip by size
       }
     }
     require(r.pos == segEnd, "webm: Segment children under-fill it")

@@ -55,48 +55,11 @@ object Webp {
 
   // ------------------------------------------------------------ bit I/O
 
-  /** LSB-first bit reader (DEFLATE convention), bounds-checked so a
-    * truncated or hostile stream fails loudly instead of reading OOB. */
-  private final class BitReader(bytes: Array[Byte], startByte: Int) {
-    private var bit: Long = startByte.toLong * 8
-    private val limit: Long = bytes.length.toLong * 8
-    def readBit(): Int = {
-      require(bit < limit, "VP8L stream truncated")
-      val v = (bytes((bit >> 3).toInt) >> (bit & 7).toInt) & 1
-      bit += 1
-      v
-    }
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-  }
-
-  /** LSB-first bit writer; writeCode emits a canonical Huffman code
-    * MSB-first (the first bit on the wire is the code's MSB). */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var buf = 0
-    private var nBits = 0
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        buf |= ((v >> i) & 1) << nBits
-        nBits += 1
-        if (nBits == 8) { out.write(buf); buf = 0; nBits = 0 }
-        i += 1
-      }
-    }
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBits((code >> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (nBits > 0) { out.write(buf); buf = 0; nBits = 0 }
-      out.toByteArray
-    }
+  /** A canonical Huffman code goes on the LSB-first wire MSB-first
+    * (the first bit on the wire is the code's MSB). */
+  private def writeCode(bw: Bin.LsbWriter, code: Int, len: Int): Unit = {
+    var i = len - 1
+    while (i >= 0) { bw.u((code >> i) & 1, 1); i -= 1 }
   }
 
   // ------------------------------------------------- canonical Huffman
@@ -109,16 +72,16 @@ object Webp {
       single: Int, listed: Array[Int],
       counts: Array[Int], firsts: Array[Int],
       offs: Array[Int], syms: Array[Int]) {
-    def next(br: BitReader): Int =
+    def next(br: Bin.LsbReader): Int =
       if (single >= 0) single
-      else if (listed != null) listed(br.readBit())
+      else if (listed != null) listed(br.u(1))
       else {
         var code = 0
         var len = 0
         while (true) {
           len += 1
           require(len <= 15, "corrupt Huffman code in VP8L stream")
-          code = (code << 1) | br.readBit()
+          code = (code << 1) | br.u(1)
           val d = code - firsts(len)
           if (d >= 0 && d < counts(len)) return syms(offs(len) + d)
         }
@@ -181,8 +144,8 @@ object Webp {
       if (used.size == 1) used.head else -1
     }
     private val codes = canonCodes(lengths)
-    def write(bw: BitWriter, sym: Int): Unit =
-      if (single < 0) bw.writeCode(codes(sym), lengths(sym))
+    def write(bw: Bin.LsbWriter, sym: Int): Unit =
+      if (single < 0) writeCode(bw, codes(sym), lengths(sym))
   }
 
   /** Complete length-limited code lengths from frequencies: plain
@@ -245,30 +208,30 @@ object Webp {
   private val ClOrder =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
-  private def readHuffmanCode(br: BitReader, alphabetSize: Int): HuffDec = {
-    if (br.readBits(1) == 1) {
+  private def readHuffmanCode(br: Bin.LsbReader, alphabetSize: Int): HuffDec = {
+    if (br.u(1) == 1) {
       // simple code: 1 or 2 symbols, zero or one bit per emission
-      val nSyms = br.readBits(1) + 1
-      val s0 = if (br.readBits(1) == 1) br.readBits(8) else br.readBits(1)
+      val nSyms = br.u(1) + 1
+      val s0 = if (br.u(1) == 1) br.u(8) else br.u(1)
       require(s0 < alphabetSize, s"simple-code symbol $s0 out of alphabet")
       if (nSyms == 1) HuffDec.singleSym(s0)
       else {
-        val s1 = br.readBits(8)
+        val s1 = br.u(8)
         require(s1 < alphabetSize && s1 != s0,
           s"bad simple-code symbol pair ($s0, $s1)")
         HuffDec.pair(s0, s1)
       }
     } else {
-      val nCl = 4 + br.readBits(4)
+      val nCl = 4 + br.u(4)
       val clLens = new Array[Int](19)
       var i = 0
-      while (i < nCl) { clLens(ClOrder(i)) = br.readBits(3); i += 1 }
+      while (i < nCl) { clLens(ClOrder(i)) = br.u(3); i += 1 }
       val clDec = HuffDec.fromLengths(clLens)
       // optional max_symbol: bounds how many CL symbols are read
       var budget =
-        if (br.readBits(1) == 1) {
-          val nb = 2 + 2 * br.readBits(3)
-          2 + br.readBits(nb)
+        if (br.u(1) == 1) {
+          val nb = 2 + 2 * br.u(3)
+          2 + br.u(nb)
         } else Int.MaxValue
       val lengths = new Array[Int](alphabetSize)
       var prev = 8
@@ -281,9 +244,9 @@ object Webp {
           if (cl != 0) prev = cl
         } else {
           val (v, n) = cl match {
-            case 16 => (prev, 3 + br.readBits(2))
-            case 17 => (0, 3 + br.readBits(3))
-            case _  => (0, 11 + br.readBits(7))
+            case 16 => (prev, 3 + br.u(2))
+            case 17 => (0, 3 + br.u(3))
+            case _  => (0, 11 + br.u(7))
           }
           require(sym + n <= alphabetSize,
             "code-length repeat overruns the alphabet")
@@ -295,19 +258,19 @@ object Webp {
     }
   }
 
-  private def writeHuffmanCode(bw: BitWriter, lengths: Array[Int]): Unit = {
+  private def writeHuffmanCode(bw: Bin.LsbWriter, lengths: Array[Int]): Unit = {
     val used = lengths.indices.filter(lengths(_) > 0)
     if (used.size <= 2 && used.nonEmpty && used.max <= 255) {
       // simple representation (our encoder lists symbols ascending,
       // which coincides with canonical assignment)
-      bw.writeBits(1, 1)
-      bw.writeBits(used.size - 1, 1)
+      bw.u(1, 1)
+      bw.u(used.size - 1, 1)
       val s0 = used.head
-      if (s0 <= 1) { bw.writeBits(0, 1); bw.writeBits(s0, 1) }
-      else { bw.writeBits(1, 1); bw.writeBits(s0, 8) }
-      if (used.size == 2) bw.writeBits(used(1), 8)
+      if (s0 <= 1) { bw.u(0, 1); bw.u(s0, 1) }
+      else { bw.u(1, 1); bw.u(s0, 8) }
+      if (used.size == 2) bw.u(used(1), 8)
     } else {
-      bw.writeBits(0, 1)
+      bw.u(0, 1)
       // RLE the length array into code-length-code tokens
       val toks = collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
       var i = 0
@@ -336,13 +299,13 @@ object Webp {
       var lastPos = 0
       ClOrder.indices.foreach(p => if (clLens(ClOrder(p)) > 0) lastPos = p)
       val nCl = math.max(4, lastPos + 1)
-      bw.writeBits(nCl - 4, 4)
-      (0 until nCl).foreach(p => bw.writeBits(clLens(ClOrder(p)), 3))
-      bw.writeBits(0, 1) // no max_symbol
+      bw.u(nCl - 4, 4)
+      (0 until nCl).foreach(p => bw.u(clLens(ClOrder(p)), 3))
+      bw.u(0, 1) // no max_symbol
       val clEnc = new HuffEnc(clLens)
       toks.foreach { case (s, ev, eb) =>
         clEnc.write(bw, s)
-        if (eb > 0) bw.writeBits(ev, eb)
+        if (eb > 0) bw.u(ev, eb)
       }
     }
   }
@@ -365,12 +328,12 @@ object Webp {
     }
   }
 
-  private def decodePrefix(br: BitReader, code: Int): Int =
+  private def decodePrefix(br: Bin.LsbReader, code: Int): Int =
     if (code < 4) code + 1
     else {
       val eb = (code - 2) >> 1
       val offset = (2 + (code & 1)) << eb
-      offset + br.readBits(eb) + 1
+      offset + br.u(eb) + 1
     }
 
   /** The 120-entry 2D distance-code window, GENERATED from the rule
@@ -575,7 +538,7 @@ object Webp {
       val green: HuffDec, val red: HuffDec, val blue: HuffDec,
       val alpha: HuffDec, val dist: HuffDec)
 
-  private def readGroup(br: BitReader, cacheSize: Int): CodeGroup =
+  private def readGroup(br: Bin.LsbReader, cacheSize: Int): CodeGroup =
     new CodeGroup(
       readHuffmanCode(br, 256 + 24 + cacheSize),
       readHuffmanCode(br, 256),
@@ -585,11 +548,11 @@ object Webp {
 
   /** Decode one entropy- or spatially-coded image. Top-level images
     * may carry a meta-Huffman entropy image; subimages never do. */
-  private def decodeInner(br: BitReader, w: Int, h: Int,
+  private def decodeInner(br: Bin.LsbReader, w: Int, h: Int,
       top: Boolean): Array[Int] = {
     val cacheBits =
-      if (br.readBits(1) == 1) {
-        val b = br.readBits(4)
+      if (br.u(1) == 1) {
+        val b = br.u(4)
         require(b >= 1 && b <= 11, s"bad color-cache size $b")
         b
       } else 0
@@ -598,8 +561,8 @@ object Webp {
     var ebits = 0
     var ew = 0
     var nGroups = 1
-    if (top && br.readBits(1) == 1) {
-      ebits = br.readBits(3) + 2
+    if (top && br.u(1) == 1) {
+      ebits = br.u(3) + 2
       ew = ceilDiv(w, 1 << ebits)
       val eh = ceilDiv(h, 1 << ebits)
       val eimg = decodeInner(br, ew, eh, top = false)
@@ -655,11 +618,11 @@ object Webp {
   def decodeVp8l(bytes: Array[Byte]): Argb = {
     require(bytes.length >= 5 && (bytes(0) & 0xff) == 0x2f,
       "not a VP8L stream (bad signature)")
-    val br = new BitReader(bytes, 1)
-    val w = br.readBits(14) + 1
-    val h = br.readBits(14) + 1
-    br.readBits(1) // alpha-is-used hint (informational)
-    require(br.readBits(3) == 0, "unsupported VP8L version")
+    val br = new Bin.LsbReader(bytes, 1, bytes.length, "VP8L stream")
+    val w = br.u(14) + 1
+    val h = br.u(14) + 1
+    br.u(1) // alpha-is-used hint (informational)
+    require(br.u(3) == 0, "unsupported VP8L version")
     require(w.toLong * h <= (1L << 24),
       s"VP8L dimensions $w x $h beyond the decode bound")
     // transforms, read in stream order; inverses applied in reverse
@@ -672,23 +635,23 @@ object Webp {
     var ctTiles: Array[Int] = null
     var order = List.empty[Int]
     val seen = collection.mutable.Set.empty[Int]
-    while (br.readBits(1) == 1) {
-      val t = br.readBits(2)
+    while (br.u(1) == 1) {
+      val t = br.u(2)
       require(!seen(t), s"transform $t appears twice")
       seen += t
       order = t :: order // reverse (= inverse application) order
       t match {
         case 0 =>
-          predBits = br.readBits(3) + 2
+          predBits = br.u(3) + 2
           predTiles = decodeInner(br,
             ceilDiv(w, 1 << predBits), ceilDiv(h, 1 << predBits), top = false)
         case 1 =>
-          ctBits = br.readBits(3) + 2
+          ctBits = br.u(3) + 2
           ctTiles = decodeInner(br,
             ceilDiv(w, 1 << ctBits), ceilDiv(h, 1 << ctBits), top = false)
         case 2 => ()
         case 3 =>
-          val nc = br.readBits(8) + 1
+          val nc = br.u(8) + 1
           val raw = decodeInner(br, nc, 1, top = false)
           palette = new Array[Int](nc)
           var acc = 0
@@ -803,15 +766,15 @@ object Webp {
   /** Emit one entropy- or spatially-coded image. `groupAt` (pixel
     * coords -> group id) is non-null only for the top-level image of
     * the meta-Huffman layout. */
-  private def encodeImageData(bw: BitWriter, w: Int, h: Int,
+  private def encodeImageData(bw: Bin.LsbWriter, w: Int, h: Int,
       px: Array[Int], cacheBits: Int, lz77: Boolean, top: Boolean,
       groupAt: (Int, Int) => Int, nGroups: Int, ebits: Int): Unit = {
-    if (cacheBits > 0) { bw.writeBits(1, 1); bw.writeBits(cacheBits, 4) }
-    else bw.writeBits(0, 1)
+    if (cacheBits > 0) { bw.u(1, 1); bw.u(cacheBits, 4) }
+    else bw.u(0, 1)
     if (top) {
       if (nGroups > 1) {
-        bw.writeBits(1, 1)
-        bw.writeBits(ebits - 2, 3)
+        bw.u(1, 1)
+        bw.u(ebits - 2, 3)
         val ew = ceilDiv(w, 1 << ebits)
         val eh = ceilDiv(h, 1 << ebits)
         val epx = Array.tabulate(ew * eh) { i =>
@@ -819,7 +782,7 @@ object Webp {
         }
         encodeImageData(bw, ew, eh, epx, 0, lz77 = false, top = false,
           null, 1, 0)
-      } else bw.writeBits(0, 1)
+      } else bw.u(0, 1)
     }
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val toks = tokenize(px, cacheBits, lz77)
@@ -875,10 +838,10 @@ object Webp {
         case Copy(len, dist) =>
           val (lc, lb, lv) = prefixEncode(len)
           ge.write(bw, 256 + lc)
-          if (lb > 0) bw.writeBits(lv, lb)
+          if (lb > 0) bw.u(lv, lb)
           val (dc, db, dv) = prefixEncode(tryPlaneCode(w, dist))
           de.write(bw, dc)
-          if (db > 0) bw.writeBits(dv, db)
+          if (db > 0) bw.u(dv, db)
       }
     }
   }
@@ -895,23 +858,23 @@ object Webp {
     *   5 = cross-channel color transform (rotating tile elements).
     */
   def encodeVp8l(img: Argb, layout: Int, seed: Long): Array[Byte] = {
-    val bw = new BitWriter
-    bw.writeBits(0x2f, 8)
-    bw.writeBits(img.width - 1, 14)
-    bw.writeBits(img.height - 1, 14)
+    val bw = new Bin.LsbWriter
+    bw.u(0x2f, 8)
+    bw.u(img.width - 1, 14)
+    bw.u(img.height - 1, 14)
     val hasAlpha = img.px.exists(p => (p >>> 24) != 255)
-    bw.writeBits(if (hasAlpha) 1 else 0, 1)
-    bw.writeBits(0, 3) // version
+    bw.u(if (hasAlpha) 1 else 0, 1)
+    bw.u(0, 3) // version
     val w = img.width
     val h = img.height
     layout match {
       case 0 =>
-        bw.writeBits(0, 1)
+        bw.u(0, 1)
         encodeImageData(bw, w, h, img.px, 0, lz77 = false, top = true,
           null, 1, 0)
       case 1 =>
-        bw.writeBits(1, 1); bw.writeBits(2, 2) // SUBTRACT_GREEN
-        bw.writeBits(0, 1)
+        bw.u(1, 1); bw.u(2, 2) // SUBTRACT_GREEN
+        bw.u(0, 1)
         val px2 = img.px.map(forwardSubtractGreen)
         encodeImageData(bw, w, h, px2, 2 + (seed % 7).toInt, lz77 = true,
           top = true, null, 1, 0)
@@ -920,13 +883,13 @@ object Webp {
         img.px.foreach(p => if (!pal.contains(p)) pal(p) = pal.size)
         require(pal.size <= 256, s"palette layout needs <= 256 colors")
         val palArr = pal.keys.toArray
-        bw.writeBits(1, 1); bw.writeBits(3, 2) // COLOR_INDEXING
-        bw.writeBits(palArr.length - 1, 8)
+        bw.u(1, 1); bw.u(3, 2) // COLOR_INDEXING
+        bw.u(palArr.length - 1, 8)
         val deltas = Array.tabulate(palArr.length)(i =>
           if (i == 0) palArr(0) else subPx(palArr(i), palArr(i - 1)))
         encodeImageData(bw, palArr.length, 1, deltas, 0, lz77 = false,
           top = false, null, 1, 0)
-        bw.writeBits(0, 1) // end of transforms
+        bw.u(0, 1) // end of transforms
         val pb = paletteWidthBits(palArr.length)
         val bitsPer = 8 >> pb
         val codedW = ceilDiv(w, 1 << pb)
@@ -955,13 +918,13 @@ object Webp {
         val tw = ceilDiv(w, 1 << tb)
         val th = ceilDiv(h, 1 << tb)
         val modes = Array.tabulate(tw * th)(i => ((i * 7 + seed) % 14).toInt)
-        bw.writeBits(1, 1); bw.writeBits(0, 2) // PREDICTOR
-        bw.writeBits(tb - 2, 3)
+        bw.u(1, 1); bw.u(0, 2) // PREDICTOR
+        bw.u(tb - 2, 3)
         val tiles = modes.map(m => 0xff000000 | (m << 8))
         encodeImageData(bw, tw, th, tiles, 0, lz77 = false, top = false,
           null, 1, 0)
-        bw.writeBits(1, 1); bw.writeBits(2, 2) // then SUBTRACT_GREEN
-        bw.writeBits(0, 1)
+        bw.u(1, 1); bw.u(2, 2) // then SUBTRACT_GREEN
+        bw.u(0, 1)
         val res = new Array[Int](w * h)
         var pos = 0
         while (pos < res.length) {
@@ -973,7 +936,7 @@ object Webp {
         encodeImageData(bw, w, h, res2, 0, lz77 = false, top = true,
           null, 1, 0)
       case 4 =>
-        bw.writeBits(0, 1)
+        bw.u(0, 1)
         val ebits = 2 + (seed % 2).toInt
         val groupAt = (x: Int, y: Int) => ((x >> ebits) + (y >> ebits)) % 2
         encodeImageData(bw, w, h, img.px, 0, lz77 = false, top = true,
@@ -988,11 +951,11 @@ object Webp {
             ((((3 * seed + 11 * i) % 256).toInt & 0xff) << 8) |
             (((7 * seed + 5 * i) % 256).toInt & 0xff)
         }
-        bw.writeBits(1, 1); bw.writeBits(1, 2) // COLOR transform
-        bw.writeBits(tb - 2, 3)
+        bw.u(1, 1); bw.u(1, 2) // COLOR transform
+        bw.u(tb - 2, 3)
         encodeImageData(bw, tw, th, ctes, 0, lz77 = false, top = false,
           null, 1, 0)
-        bw.writeBits(0, 1)
+        bw.u(0, 1)
         val res = Array.tabulate(w * h) { pos =>
           val cte = ctes(((pos / w) >> tb) * tw + ((pos % w) >> tb))
           forwardColorTransform(img.px(pos), cte)
@@ -1007,22 +970,17 @@ object Webp {
 
   // -------------------------------------------------- RIFF container
 
-  private def u32le(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
-    out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-  }
-
   /** Wrap chunks in a RIFF/WEBP container (odd payloads padded). */
   def riff(chunks: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val total = 4L + chunks.map(c => 8L + c._2.length + (c._2.length & 1)).sum
     out.write("RIFF".getBytes("US-ASCII"))
-    u32le(out, total)
+    out.write(Bin.le32(total))
     out.write("WEBP".getBytes("US-ASCII"))
     chunks.foreach { case (fourcc, payload) =>
       require(fourcc.length == 4, s"bad fourcc '$fourcc'")
       out.write(fourcc.getBytes("US-ASCII"))
-      u32le(out, payload.length.toLong)
+      out.write(Bin.le32(payload.length))
       out.write(payload)
       if ((payload.length & 1) == 1) out.write(0)
     }
@@ -1038,32 +996,21 @@ object Webp {
       hasXmp: Boolean, hasAnim: Boolean, nChunks: Int,
       exifLen: Int, vp8Version: Int, vp8Part0Len: Int)
 
-  private def rdU32le(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-
-  private def rdU24le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16)
-
-  private def rdU16le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-
   /** Walk the RIFF container; loud on bad magic, truncated chunks, a
     * wrong declared size, or a malformed image header. */
   private def riffChunks(bytes: Array[Byte]): Seq[(String, Int, Int)] = {
     require(bytes.length >= 20, "WebP file too short")
     require(new String(bytes, 0, 4, "US-ASCII") == "RIFF", "missing RIFF magic")
-    require(rdU32le(bytes, 4) == bytes.length - 8L,
+    require(Bin.u32le(bytes, 4, bytes.length, "webp") == bytes.length - 8L,
       "RIFF size does not match the file length")
     require(new String(bytes, 8, 4, "US-ASCII") == "WEBP", "missing WEBP form")
     var off = 12
     val chunks = collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
     while (off < bytes.length) {
-      require(off + 8 <= bytes.length, s"truncated chunk header at $off")
+      Bin.checkRange(off, 8, bytes.length, "truncated chunk header")
       val fourcc = new String(bytes, off, 4, "US-ASCII")
-      val size = rdU32le(bytes, off + 4)
-      require(size <= Int.MaxValue && off + 8 + size <= bytes.length,
-        s"chunk $fourcc overruns the file")
+      val size = Bin.u32le(bytes, off + 4, bytes.length)
+      Bin.checkRange(off + 8, size, bytes.length, "webp chunk")
       chunks += ((fourcc, off + 8, size.toInt))
       off += 8 + size.toInt + (size.toInt & 1)
     }
@@ -1085,7 +1032,7 @@ object Webp {
     chunks.head match {
       case ("VP8L", o, sz) =>
         require(sz >= 5 && (bytes(o) & 0xff) == 0x2f, "bad VP8L header")
-        val v = rdU32le(bytes, o + 1)
+        val v = Bin.u32le(bytes, o + 1, bytes.length, "webp")
         require(((v >> 29) & 7) == 0, "unsupported VP8L version")
         WebpMeta("vp8l", (v & 0x3fff).toInt + 1, ((v >> 14) & 0x3fff).toInt + 1,
           hasIcc = false, hasAlpha = ((v >> 28) & 1) == 1, hasExif = exifLen >= 0,
@@ -1095,19 +1042,20 @@ object Webp {
         require(sz == 10, s"VP8X payload must be 10 bytes, got $sz")
         val flags = bytes(o) & 0xff
         WebpMeta("vp8x",
-          rdU24le(bytes, o + 4) + 1, rdU24le(bytes, o + 7) + 1,
+          Bin.u24le(bytes, o + 4, bytes.length, "webp") + 1,
+          Bin.u24le(bytes, o + 7, bytes.length, "webp") + 1,
           hasIcc = (flags & 0x20) != 0, hasAlpha = (flags & 0x10) != 0,
           hasExif = (flags & 0x08) != 0, hasXmp = (flags & 0x04) != 0,
           hasAnim = (flags & 0x02) != 0, chunks.length, exifLen, -1, -1)
       case ("VP8 ", o, sz) =>
         require(sz >= 10, "VP8 payload too short for a keyframe header")
-        val tag = (bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-          ((bytes(o + 2) & 0xff) << 16)
+        val tag = Bin.u24le(bytes, o, bytes.length, "VP8 frame tag")
         require((tag & 1) == 0, "VP8 first frame is not a keyframe")
         require((bytes(o + 3) & 0xff) == 0x9d && (bytes(o + 4) & 0xff) == 0x01 &&
           (bytes(o + 5) & 0xff) == 0x2a, "missing VP8 keyframe start code")
         WebpMeta("vp8",
-          rdU16le(bytes, o + 6) & 0x3fff, rdU16le(bytes, o + 8) & 0x3fff,
+          Bin.u16le(bytes, o + 6, bytes.length, "webp") & 0x3fff,
+          Bin.u16le(bytes, o + 8, bytes.length, "webp") & 0x3fff,
           hasIcc = false, hasAlpha = false, hasExif = exifLen >= 0,
           hasXmp = false, hasAnim = false, chunks.length, exifLen,
           (tag >> 1) & 7, (tag >> 5) & 0x7ffff)
@@ -1157,10 +1105,7 @@ object Webp {
       0x08 | (if (xmp) 0x04 else 0)
     val vp8x = new java.io.ByteArrayOutputStream()
     vp8x.write(flags); vp8x.write(0); vp8x.write(0); vp8x.write(0)
-    def u24(v: Int): Unit = {
-      vp8x.write(v & 0xff); vp8x.write((v >> 8) & 0xff); vp8x.write((v >> 16) & 0xff)
-    }
-    u24(img.width - 1); u24(img.height - 1)
+    vp8x.write(Bin.le24(img.width - 1)); vp8x.write(Bin.le24(img.height - 1))
     val chunks = collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
     chunks += ("VP8X" -> vp8x.toByteArray)
     if (icc) chunks += ("ICCP" -> Icc.synth(d)) // a REAL profile
@@ -1187,7 +1132,7 @@ object Webp {
     val part0 = (100 + hdrSeed % 50).toInt
     val tag = (ver << 1) | (1 << 4) | (part0 << 5) // keyframe bit 0 = 0
     val out = new java.io.ByteArrayOutputStream()
-    out.write(tag & 0xff); out.write((tag >> 8) & 0xff); out.write((tag >> 16) & 0xff)
+    out.write(Bin.le24(tag))
     out.write(0x9d); out.write(0x01); out.write(0x2a)
     out.write(w & 0xff); out.write((w >> 8) & 0x3f)
     out.write(h & 0xff); out.write((h >> 8) & 0x3f)
@@ -1251,7 +1196,7 @@ object Webp {
   private[graft] final class BoolDecoder(buf: Array[Byte], start: Int) {
     require(buf.length - start >= 2, "VP8 partition shorter than 2 bytes")
     private var range = 255
-    private var value = ((buf(start) & 0xff) << 8) | (buf(start + 1) & 0xff)
+    private var value = Bin.u16be(buf, start, buf.length)
     private var pos = start + 2
     private var bitCount = 0
     def bool(prob: Int): Int = {
@@ -1421,10 +1366,6 @@ object Webp {
   final case class WebpAnim(canvasW: Int, canvasH: Int, loopCount: Int,
       frames: Seq[AnimFrame])
 
-  private def wr24(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff)
-  }
-
   /** Animated fixture: VP8X (anim flag) + ANIM (loop count d%4) +
     * 2 + d%3 ANMF frames, frame f a full VP8L image seeded d + 31f
     * at a closed-form 2-px-unit offset with a closed-form duration.
@@ -1444,7 +1385,7 @@ object Webp {
     val canvasH = frames.map(fr => 2 * fr._2 + fr._4.height).max
     val vp8x = new java.io.ByteArrayOutputStream()
     vp8x.write(0x02); vp8x.write(0); vp8x.write(0); vp8x.write(0) // ANIM
-    wr24(vp8x, canvasW - 1); wr24(vp8x, canvasH - 1)
+    vp8x.write(Bin.le24(canvasW - 1)); vp8x.write(Bin.le24(canvasH - 1))
     val anim = new java.io.ByteArrayOutputStream()
     anim.write(0); anim.write(0); anim.write(0); anim.write(0xff) // bg BGRA
     anim.write((d % 4).toInt); anim.write(0) // loop count LE16
@@ -1453,16 +1394,15 @@ object Webp {
     chunks += ("ANIM" -> anim.toByteArray)
     frames.zipWithIndex.foreach { case ((fx, fy, dur, img, payload), f) =>
       val anmf = new java.io.ByteArrayOutputStream()
-      wr24(anmf, fx); wr24(anmf, fy)
-      wr24(anmf, img.width - 1); wr24(anmf, img.height - 1)
-      wr24(anmf, dur)
+      anmf.write(Bin.le24(fx)); anmf.write(Bin.le24(fy))
+      anmf.write(Bin.le24(img.width - 1)); anmf.write(Bin.le24(img.height - 1))
+      anmf.write(Bin.le24(dur))
       // bit 1 = do-not-blend: set on frame 0 and every odd frame
       anmf.write(if (f == 0 || f % 2 == 1) 0x2 else 0x0)
       // the frame's own chunk, nested INSIDE the ANMF payload
       anmf.write("VP8L".getBytes("US-ASCII"))
       val pl = payload.length
-      anmf.write(pl & 0xff); anmf.write((pl >> 8) & 0xff)
-      anmf.write((pl >> 16) & 0xff); anmf.write((pl >> 24) & 0xff)
+      anmf.write(Bin.le32(pl))
       anmf.write(payload, 0, pl)
       if ((pl & 1) == 1) anmf.write(0)
       chunks += ("ANMF" -> anmf.toByteArray)
@@ -1481,21 +1421,21 @@ object Webp {
     val (_, xo, xsz) = chunks.head
     require(xsz == 10, "bad VP8X payload")
     require((bytes(xo) & 0x02) != 0, "VP8X lacks the animation flag")
-    val canvasW = rdU24le(bytes, xo + 4) + 1
-    val canvasH = rdU24le(bytes, xo + 7) + 1
+    val canvasW = Bin.u24le(bytes, xo + 4, bytes.length, "webp") + 1
+    val canvasH = Bin.u24le(bytes, xo + 7, bytes.length, "webp") + 1
     val anim = chunks.find(_._1 == "ANIM")
       .getOrElse(throw new IllegalArgumentException(
         "animated WebP without an ANIM chunk"))
     require(anim._3 == 6, "bad ANIM payload size")
-    val loopCount = rdU16le(bytes, anim._2 + 4)
+    val loopCount = Bin.u16le(bytes, anim._2 + 4, bytes.length, "webp")
     val frames = chunks.filter(_._1 == "ANMF").zipWithIndex.map {
       case ((_, o, sz), f) =>
         require(sz >= 16, "truncated ANMF header")
-        val fx = 2 * rdU24le(bytes, o)
-        val fy = 2 * rdU24le(bytes, o + 3)
-        val fw = rdU24le(bytes, o + 6) + 1
-        val fh = rdU24le(bytes, o + 9) + 1
-        val dur = rdU24le(bytes, o + 12)
+        val fx = 2 * Bin.u24le(bytes, o, bytes.length, "webp")
+        val fy = 2 * Bin.u24le(bytes, o + 3, bytes.length, "webp")
+        val fw = Bin.u24le(bytes, o + 6, bytes.length, "webp") + 1
+        val fh = Bin.u24le(bytes, o + 9, bytes.length, "webp") + 1
+        val dur = Bin.u24le(bytes, o + 12, bytes.length, "webp")
         val flags = bytes(o + 15) & 0xff
         // container spec: bit 1 SET means "do NOT blend" (the common
         // real-file setting on frame 0); clear means alpha-blend onto
@@ -1511,7 +1451,7 @@ object Webp {
         val fourcc = new String(bytes, o + 16, 4, "US-ASCII")
         require(fourcc == "VP8L",
           s"lossy animated frame ($fourcc) is outside the decode subset")
-        val plen = rdU32le(bytes, o + 20)
+        val plen = Bin.u32le(bytes, o + 20, bytes.length, "webp")
         require(plen <= sz - 24, "ANMF frame payload overruns the chunk")
         val img = decodeVp8l(java.util.Arrays.copyOfRange(
           bytes, o + 24, o + 24 + plen.toInt))

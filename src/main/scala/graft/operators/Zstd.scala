@@ -58,15 +58,6 @@ object Zstd {
 
   /** XXH64 of bytes[from, until) with the given seed (xxHash spec). */
   def xxh64(b: Array[Byte], from: Int, until: Int, seed: Long): Long = {
-    def u64le(o: Int): Long = {
-      var v = 0L
-      var i = 7
-      while (i >= 0) { v = (v << 8) | (b(o + i) & 0xffL); i -= 1 }
-      v
-    }
-    def u32le(o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
     def rotl(x: Long, r: Int): Long = (x << r) | (x >>> (64 - r))
     def round(acc: Long, in: Long): Long =
       rotl(acc + in * P2, 31) * P1
@@ -81,8 +72,10 @@ object Zstd {
         var v3 = seed
         var v4 = seed - P1
         while (p + 32 <= until) {
-          v1 = round(v1, u64le(p)); v2 = round(v2, u64le(p + 8))
-          v3 = round(v3, u64le(p + 16)); v4 = round(v4, u64le(p + 24))
+          v1 = round(v1, Bin.u64le(b, p, until))
+          v2 = round(v2, Bin.u64le(b, p + 8, until))
+          v3 = round(v3, Bin.u64le(b, p + 16, until))
+          v4 = round(v4, Bin.u64le(b, p + 24, until))
           p += 32
         }
         var acc = rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
@@ -91,55 +84,18 @@ object Zstd {
         acc
       } else seed + P5
     h += len
-    while (p + 8 <= until) { h = rotl(h ^ round(0L, u64le(p)), 27) * P1 + P4; p += 8 }
-    if (p + 4 <= until) { h = rotl(h ^ (u32le(p) * P1), 23) * P2 + P3; p += 4 }
+    while (p + 8 <= until) {
+      h = rotl(h ^ round(0L, Bin.u64le(b, p, until)), 27) * P1 + P4; p += 8
+    }
+    if (p + 4 <= until) {
+      h = rotl(h ^ (Bin.u32le(b, p, until) * P1), 23) * P2 + P3; p += 4
+    }
     while (p < until) { h = rotl(h ^ ((b(p) & 0xffL) * P5), 11) * P1; p += 1 }
     h ^= h >>> 33; h *= P2; h ^= h >>> 29; h *= P3; h ^= h >>> 32
     h
   }
 
   // ------------------------------------------------------ bitstreams
-
-  /** Forward little-endian bit reader (FSE table descriptions,
-    * RFC 8878 §4.1.1 reads these low-bit-first). */
-  private final class FwdBits(b: Array[Byte], from: Int, until: Int) {
-    private var bit = 0
-    def read(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val j = bit + i
-        val idx = from + (j >> 3)
-        require(idx < until,
-          "zstd: FSE table description overruns its region")
-        v |= ((b(idx) >> (j & 7)) & 1) << i
-        i += 1
-      }
-      bit += n
-      v
-    }
-    def bytesConsumed: Int = (bit + 7) >> 3
-  }
-
-  /** Forward little-endian bit writer (the writeNCount mirror). */
-  private final class FwdWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nb = 0
-    def write(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        cur |= ((v >> i) & 1) << nb
-        nb += 1
-        if (nb == 8) { out.write(cur); cur = 0; nb = 0 }
-        i += 1
-      }
-    }
-    def finish(): Array[Byte] = {
-      if (nb > 0) { out.write(cur); cur = 0; nb = 0 }
-      out.toByteArray
-    }
-  }
 
   /** Backward bitstream (RFC 8878 §3.1.1.1): the writer appends a
     * sentinel 1 bit then zero-pads to a byte; the reader locates the
@@ -180,10 +136,10 @@ object Zstd {
       if (n > 0) fields += ((v, n))
     }
     def finish(): Array[Byte] = {
-      val fw = new FwdWriter
-      fields.reverseIterator.foreach { case (v, n) => fw.write(v, n) }
-      fw.write(1, 1) // sentinel
-      fw.finish()
+      val fw = new Bin.LsbWriter
+      fields.reverseIterator.foreach { case (v, n) => fw.u(v, n) }
+      fw.u(1, 1) // sentinel
+      fw.toBytes
     }
   }
 
@@ -242,8 +198,9 @@ object Zstd {
     * (normalized counts, accuracy log, bytes consumed). */
   private def fseReadNCount(b: Array[Byte], from: Int, until: Int,
       maxSymbol: Int, maxLog: Int): (Array[Int], Int, Int) = {
-    val fb = new FwdBits(b, from, until)
-    val log = fb.read(4) + 5
+    val fb = new Bin.LsbReader(b, from, until,
+      "zstd: FSE table description") // low-bit-first, RFC 8878 §4.1.1
+    val log = fb.u(4) + 5
     require(log <= maxLog, s"zstd: FSE accuracy log $log exceeds $maxLog")
     val size = 1 << log
     var remaining = size + 1
@@ -254,9 +211,9 @@ object Zstd {
       require(norm.size <= maxSymbol,
         s"zstd: FSE table describes symbols beyond $maxSymbol")
       val max = (threshold << 1) - 1 - remaining
-      var count = fb.read(nbBits - 1)
+      var count = fb.u(nbBits - 1)
       if (count >= max) {
-        count |= fb.read(1) << (nbBits - 1)
+        count |= fb.u(1) << (nbBits - 1)
         if (count >= threshold) count -= max
       }
       count -= 1 // 0 encodes "-1" (less-than-one probability)
@@ -267,9 +224,9 @@ object Zstd {
       require(remaining >= 1, "zstd: FSE counts overran the table size")
       norm += count
       if (count == 0) {
-        var rep = fb.read(2)
+        var rep = fb.u(2)
         var zeros = rep
-        while (rep == 3) { rep = fb.read(2); zeros += rep }
+        while (rep == 3) { rep = fb.u(2); zeros += rep }
         require(norm.size + zeros <= maxSymbol + 1,
           "zstd: FSE zero-repeat run overruns the symbol range")
         (0 until zeros).foreach(_ => norm += 0)
@@ -277,14 +234,14 @@ object Zstd {
       while (remaining < threshold) { threshold >>= 1; nbBits -= 1 }
     }
     require(remaining == 1, "zstd: FSE counts did not close the table")
-    (norm.toArray, log, fb.bytesConsumed)
+    (norm.toArray, log, ((fb.bitPos + 7) >> 3).toInt - from)
   }
 
   /** Write an FSE table description — the exact mirror of
     * fseReadNCount, used by the fixture encoder. */
   private def fseWriteNCount(norm: Array[Int], log: Int): Array[Byte] = {
-    val fw = new FwdWriter
-    fw.write(log - 5, 4)
+    val fw = new Bin.LsbWriter
+    fw.u(log - 5, 4)
     val size = 1 << log
     var remaining = size + 1
     var threshold = size
@@ -294,9 +251,9 @@ object Zstd {
       require(i < norm.length, "zstd: counts exhausted before the table")
       val max = (threshold << 1) - 1 - remaining
       val coded = norm(i) + 1
-      if (coded < max) fw.write(coded, nbBits - 1)
-      else if (coded < threshold) fw.write(coded, nbBits)
-      else fw.write(coded + max, nbBits)
+      if (coded < max) fw.u(coded, nbBits - 1)
+      else if (coded < threshold) fw.u(coded, nbBits)
+      else fw.u(coded + max, nbBits)
       val c = norm(i)
       remaining -= (if (c < 0) -c else c)
       if (c == 0) {
@@ -307,7 +264,7 @@ object Zstd {
         var continue = true
         while (continue) {
           val chunk = math.min(rem, 3)
-          fw.write(chunk, 2)
+          fw.u(chunk, 2)
           rem -= chunk
           continue = chunk == 3
         }
@@ -316,7 +273,7 @@ object Zstd {
       while (remaining < threshold) { threshold >>= 1; nbBits -= 1 }
     }
     require(remaining == 1, "zstd: encoder counts did not close")
-    fw.finish()
+    fw.toBytes
   }
 
   /** Encode one FSE symbol chain (the inverse table walk): pick the
@@ -409,7 +366,7 @@ object Zstd {
     if (h >= 128) {
       val n = h - 127
       val nBytes = (n + 1) / 2
-      require(off + 1 + nBytes <= end, "zstd: truncated direct weights")
+      Bin.checkRange(off + 1, nBytes, end, "zstd: truncated direct weights")
       val ws = new Array[Int](n)
       var i = 0
       while (i < n) {
@@ -419,7 +376,7 @@ object Zstd {
       }
       (huffBuild(ws), 1 + nBytes)
     } else {
-      require(off + 1 + h <= end, "zstd: truncated FSE weight stream")
+      Bin.checkRange(off + 1, h, end, "zstd: truncated FSE weight stream")
       val (norm, log, hdr) =
         fseReadNCount(b, off + 1, off + 1 + h, maxSymbol = 255, maxLog = 6)
       val t = fseBuild(norm, log)
@@ -462,12 +419,6 @@ object Zstd {
   }
 
   // ------------------------------------------------------------- walk
-
-  private def u32le(b: Array[Byte], o: Int): Long = {
-    require(o >= 0 && o + 4 <= b.length, "zstd stream truncated")
-    (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-  }
 
   // ---------------------------------------------- compressed blocks
 
@@ -522,9 +473,7 @@ object Zstd {
     val b0 = b(off) & 0xff
     val tpe = b0 & 3
     val sf = (b0 >> 2) & 3
-    def u8(i: Int): Int = {
-      require(i < end, "zstd: literals header overruns the block"); b(i) & 0xff
-    }
+    def u8(i: Int): Int = Bin.u8(b, i, end, "zstd: literals header")
     if (tpe <= 1) {
       val (regen, hdr) = sf match {
         case 0 | 2 => (b0 >> 3, 1)
@@ -534,7 +483,8 @@ object Zstd {
       require(regen <= (1 << 17),
         s"zstd: literals regenerate $regen bytes — beyond the 128 KB block limit")
       if (tpe == 0) {
-        require(off + hdr + regen <= end, "zstd: raw literals overrun the block")
+        Bin.checkRange(off + hdr, regen, end,
+          "zstd: raw literals overrun the block")
         Lits(java.util.Arrays.copyOfRange(b, off + hdr, off + hdr + regen),
           hdr + regen)
       } else {
@@ -554,7 +504,7 @@ object Zstd {
       }
       require(regen <= (1 << 17),
         s"zstd: literals regenerate $regen bytes — beyond the 128 KB block limit")
-      require(off + hdr + comp <= end,
+      Bin.checkRange(off + hdr, comp, end,
         "zstd: compressed literals overrun the block")
       var p = off + hdr
       val streamsEnd = off + hdr + comp
@@ -569,8 +519,9 @@ object Zstd {
       if (streams == 1) huffDecodeStream(b, p, streamsEnd, out, 0, regen, huff)
       else {
         require(p + 6 <= streamsEnd, "zstd: truncated literals jump table")
-        def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-        val s1 = u16(p); val s2 = u16(p + 2); val s3 = u16(p + 4)
+        val s1 = Bin.u16le(b, p, streamsEnd)
+        val s2 = Bin.u16le(b, p + 2, streamsEnd)
+        val s3 = Bin.u16le(b, p + 4, streamsEnd)
         p += 6
         val r1 = (regen + 3) / 4
         val r4 = regen - 3 * r1
@@ -634,7 +585,7 @@ object Zstd {
         val v = ((b0 - 128) << 8) | (b(p + 1) & 0xff); p += 2; v
       } else {
         require(p + 3 <= end, "zstd: truncated sequence count")
-        val v = ((b(p + 1) & 0xff) | ((b(p + 2) & 0xff) << 8)) + 0x7f00
+        val v = (Bin.u16le(b, p + 1, b.length)) + 0x7f00
         p += 3; v
       }
     require(nbSeq <= (1 << 17), s"zstd: implausible sequence count $nbSeq")
@@ -707,9 +658,7 @@ object Zstd {
     val litBytes = lits.bytes
     var litPos = 0
     seqs.foreach { case (ll, ml, ofVal) =>
-      require(litPos + ll <= litBytes.length,
-        s"zstd: sequence consumes $ll literals but only " +
-          s"${litBytes.length - litPos} remain")
+      Bin.checkRange(litPos, ll, litBytes.length, "zstd: sequence literals")
       buf.append(litBytes, litPos, ll)
       litPos += ll
       val offset: Long =
@@ -780,10 +729,10 @@ object Zstd {
 
   private def parseDict(b: Array[Byte]): Dict = {
     require(b.length >= 8, "zstd: dictionary too short for its header")
-    if (u32le(b, 0) != DictMagic)
+    if (Bin.u32le(b, 0, b.length, "zstd stream") != DictMagic)
       // raw content-only dictionary: no id, no tables, default offsets
       return new Dict(0L, None, None, None, None, 1L, 4L, 8L, b.clone())
-    val id = u32le(b, 4)
+    val id = Bin.u32le(b, 4, b.length, "zstd stream")
     require(id != 0L, "zstd: structured dictionary with id 0")
     var pos = 8
     val (huff, hc) = huffRead(b, pos, b.length)
@@ -799,8 +748,9 @@ object Zstd {
     pos += c3
     require(pos + 12 <= b.length,
       "zstd: dictionary truncated before its repeat offsets")
-    val r1 = u32le(b, pos); val r2 = u32le(b, pos + 4)
-    val r3 = u32le(b, pos + 8)
+    val r1 = Bin.u32le(b, pos, b.length, "zstd stream")
+    val r2 = Bin.u32le(b, pos + 4, b.length, "zstd stream")
+    val r3 = Bin.u32le(b, pos + 8, b.length, "zstd stream")
     pos += 12
     val content = java.util.Arrays.copyOfRange(b, pos, b.length)
     // RFC 8878 §5: each repeat offset must be smaller than or equal
@@ -847,12 +797,12 @@ object Zstd {
     var checksummed = 0
     var dictId = -1L
     while (pos < bytes.length) {
-      val magic = u32le(bytes, pos)
+      val magic = Bin.u32le(bytes, pos, bytes.length, "zstd stream")
       if ((magic & 0xfffffff0L) == 0x184D2A50L) {
         // skippable frame: magic + u32 size + payload, never decoded
-        val sz = u32le(bytes, pos + 4)
-        require(pos + 8 + sz <= bytes.length,
-          s"skippable frame overruns the stream at $pos")
+        val sz = Bin.u32le(bytes, pos + 4, bytes.length, "zstd stream")
+        Bin.checkRange(pos + 8, sz, bytes.length,
+          "skippable frame overruns the stream")
         nSkip += 1
         pos += 8 + sz.toInt
       } else {
@@ -930,8 +880,7 @@ object Zstd {
         var last = false
         while (!last) {
           require(pos + 3 <= bytes.length, s"truncated block header at $pos")
-          val hdr = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8) |
-            ((bytes(pos + 2) & 0xff) << 16)
+          val hdr = Bin.u24le(bytes, pos, bytes.length)
           pos += 3
           last = (hdr & 1) == 1
           val btype = (hdr >> 1) & 0x3
@@ -942,8 +891,8 @@ object Zstd {
           nBlocks += 1
           btype match {
             case 0 =>
-              require(pos + bsize <= bytes.length,
-                s"raw block overruns the stream at $pos")
+              Bin.checkRange(pos, bsize, bytes.length,
+                "raw block overruns the stream")
               buf.append(bytes, pos, bsize)
               pos += bsize
             case 1 =>
@@ -952,8 +901,8 @@ object Zstd {
               buf.appendByte(bytes(pos), bsize)
               pos += 1
             case 2 =>
-              require(pos + bsize <= bytes.length,
-                s"compressed block overruns the stream at $pos")
+              Bin.checkRange(pos, bsize, bytes.length,
+                "compressed block overruns the stream")
               // a dictionary-fed frame's compressed blocks inherit
               // entropy tables / repeat offsets / window history from
               // the dictionary — decoding without it would either fail
@@ -982,7 +931,7 @@ object Zstd {
         require(fcs < 0 || fcs == fc.length,
           s"frame declares $fcs content bytes but decodes to ${fc.length}")
         if (checksumFlag) {
-          val stored = u32le(bytes, pos)
+          val stored = Bin.u32le(bytes, pos, bytes.length, "zstd stream")
           pos += 4
           val computed = xxh64(fc, 0, fc.length, 0L) & 0xffffffffL
           require(stored == computed,
@@ -1016,14 +965,14 @@ object Zstd {
     var pos = 0
     val out = new java.io.ByteArrayOutputStream()
     while (pos < bytes.length) {
-      val magic = u32le(bytes, pos)
+      val magic = Bin.u32le(bytes, pos, bytes.length, "zstd stream")
       if ((magic & 0xfffffff0L) == 0x184D2A50L) {
         // Long math + containment: a crafted >= 2^31 skippable size
         // went negative under .toInt and walked pos BACKWARD forever
         // (ADVICE r16) — mirror walk()'s guard
-        val sz = u32le(bytes, pos + 4)
-        require(pos + 8 + sz <= bytes.length,
-          s"skippable frame overruns the stream at $pos")
+        val sz = Bin.u32le(bytes, pos + 4, bytes.length, "zstd stream")
+        Bin.checkRange(pos + 8, sz, bytes.length,
+          "skippable frame overruns the stream")
         pos += 8 + sz.toInt
       } else {
         require(magic == 0xFD2FB528L, f"bad zstd magic 0x$magic%08x")
@@ -1075,8 +1024,7 @@ object Zstd {
         val cap = bytes.length.toLong * 4096 + (1L << 20) + histLen
         var last = false
         while (!last) {
-          val hdr = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8) |
-            ((bytes(pos + 2) & 0xff) << 16)
+          val hdr = Bin.u24le(bytes, pos, bytes.length)
           pos += 3
           last = (hdr & 1) == 1
           val btype = (hdr >> 1) & 0x3
@@ -1115,17 +1063,13 @@ object Zstd {
     * 0/2/4/8 by frame, single-segment on (d+j)%3==0. */
   def synth(d: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val nf = (1 + d % 3).toInt
     (0 until nf).foreach { j =>
       if (d % 4 == 0 && j == 1) {
         // a skippable frame between data frames
-        u32(0x184D2A50L + (d % 16))
+        out.write(Bin.le32(0x184D2A50L + (d % 16)))
         val sz = (5 + d % 20).toInt
-        u32(sz.toLong)
+        out.write(Bin.le32(sz.toLong))
         (0 until sz).foreach(i => out.write(((d + i) % 251).toInt))
       }
       // build this frame's content blocks first
@@ -1159,35 +1103,33 @@ object Zstd {
       }
       val fhd = (fcsUse << 6) | (if (single) 0x20 else 0) |
         (if (checksum) 0x04 else 0) | (if (dict) 0x3 else 0)
-      u32(0xFD2FB528L)
+      out.write(Bin.le32(0xFD2FB528L))
       out.write(fhd)
       if (!single) out.write(0x70) // window descriptor
-      if (dict) u32((d % 100000) + 1)
+      if (dict) out.write(Bin.le32((d % 100000) + 1))
       fcsUse match {
         case 0 => if (single) out.write(contentLen & 0xff)
         case 1 =>
           val v = contentLen - 256
-          out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        case 2 => u32(contentLen.toLong)
-        case _ => u32(contentLen.toLong); u32(0L)
+          out.write(Bin.le16(v))
+        case 2 => out.write(Bin.le32(contentLen.toLong))
+        case _ => out.write(Bin.le32(contentLen.toLong)); out.write(Bin.le32(0L))
       }
       blocks.zipWithIndex.foreach { case ((kind, data), k) =>
         val lastBit = if (k == nb - 1) 1 else 0
         if (kind == "raw") {
           val hdr = (data.length << 3) | (0 << 1) | lastBit
-          out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-          out.write((hdr >> 16) & 0xff)
+          out.write(Bin.le24(hdr))
           out.write(data, 0, data.length)
         } else {
           val hdr = (data.length << 3) | (1 << 1) | lastBit
-          out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-          out.write((hdr >> 16) & 0xff)
+          out.write(Bin.le24(hdr))
           out.write(data(0))
         }
       }
       if (checksum) {
         val fc = blocks.flatMap(_._2).toArray
-        u32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL)
+        out.write(Bin.le32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL))
       }
     }
     out.toByteArray
@@ -1248,7 +1190,8 @@ object Zstd {
       case _ =>
         val table = litKind match {
           case "treeless" => st.huff.getOrElse(
-            sys.error("zstd-enc: treeless without a previous tree"))
+            throw new IllegalArgumentException(
+              "zstd-enc: treeless without a previous tree"))
           case "c4s" =>
             val t = huffBuild(2 +: Array.fill(14)(1)) // sym15 implicit w=5
             st.huff = Some(t); t
@@ -1329,7 +1272,8 @@ object Zstd {
         val nm = normalize(hist(llCodes), 6)
         llDesc = fseWriteNCount(nm, 6); (2, fseBuild(nm, 6))
       case "rep" => (3, st.llT.getOrElse(
-        sys.error("zstd-enc: LL repeat without a previous table")))
+        throw new IllegalArgumentException(
+          "zstd-enc: LL repeat without a previous table")))
       case _ => (0, fseBuild(LLDefNorm, 6))
     }
     val (ofMode, ofT) = seqMode match {
@@ -1340,7 +1284,8 @@ object Zstd {
         require(ofCodes.distinct.length == 1, "zstd-enc: OF-RLE needs one code")
         ofDesc = Array(ofCodes(0).toByte); (1, fseRle(ofCodes(0)))
       case "rep" => (3, st.ofT.getOrElse(
-        sys.error("zstd-enc: OF repeat without a previous table")))
+        throw new IllegalArgumentException(
+          "zstd-enc: OF repeat without a previous table")))
       case _ => (0, fseBuild(OFDefNorm, 5))
     }
     val (mlMode, mlT) = seqMode match {
@@ -1348,7 +1293,8 @@ object Zstd {
         val nm = normalize(hist(mlCodes), 6)
         mlDesc = fseWriteNCount(nm, 6); (2, fseBuild(nm, 6))
       case "rep" => (3, st.mlT.getOrElse(
-        sys.error("zstd-enc: ML repeat without a previous table")))
+        throw new IllegalArgumentException(
+          "zstd-enc: ML repeat without a previous table")))
       case _ => (0, fseBuild(MLDefNorm, 6))
     }
     st.llT = Some(llT); st.ofT = Some(ofT); st.mlT = Some(mlT)
@@ -1424,10 +1370,6 @@ object Zstd {
     * repeat-offset history, content checksum always on. */
   def synthCompressed(d: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     for (j <- 0 until cFrames(d)) {
       val st = new EncState
       val bodies = collection.mutable.ArrayBuffer.empty[Array[Byte]]
@@ -1473,17 +1415,16 @@ object Zstd {
       }
       val fc = content.toByteArray
       // frame header: FCS 4-byte field, window descriptor, checksum on
-      u32(0xFD2FB528L)
+      out.write(Bin.le32(0xFD2FB528L))
       out.write((2 << 6) | 0x04)
       out.write(0x70) // window descriptor: far above any fixture frame
-      u32(fc.length.toLong)
+      out.write(Bin.le32(fc.length.toLong))
       bodies.zipWithIndex.foreach { case (body, k) =>
         val hdr = (body.length << 3) | (2 << 1) | (if (k == 1) 1 else 0)
-        out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-        out.write((hdr >> 16) & 0xff)
+        out.write(Bin.le24(hdr))
         out.write(body, 0, body.length)
       }
-      u32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL)
+      out.write(Bin.le32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL))
     }
     out.toByteArray
   }
@@ -1500,17 +1441,12 @@ object Zstd {
     val seqs = Array((1400, 3, 1200L + 3))
     val body = encodeCompressedBlock(lits, seqs, "raw", "pre", new EncState)
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(0xFD2FB528L)
+    out.write(Bin.le32(0xFD2FB528L))
     out.write(2 << 6)  // FCS 4 bytes, no checksum, no dict id
     out.write(0x00)    // window descriptor: wlog 10 → 1 KiB
-    u32(1403L)
+    out.write(Bin.le32(1403L))
     val hdr = (body.length << 3) | (2 << 1) | 1
-    out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-    out.write((hdr >> 16) & 0xff)
+    out.write(Bin.le24(hdr))
     out.write(body, 0, body.length)
     out.toByteArray
   }
@@ -1529,21 +1465,16 @@ object Zstd {
       Array.fill(reps - 2)((0, l, l.toLong + 3))
     val body = encodeCompressedBlock(base, seqs, "raw", "pre", new EncState)
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(0xFD2FB528L)
+    out.write(Bin.le32(0xFD2FB528L))
     out.write((2 << 6) | 0x04)
     out.write(0x70)
-    u32(l.toLong * reps)
+    out.write(Bin.le32(l.toLong * reps))
     val hdr = (body.length << 3) | (2 << 1) | 1
-    out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-    out.write((hdr >> 16) & 0xff)
+    out.write(Bin.le24(hdr))
     out.write(body, 0, body.length)
     val fc = new Array[Byte](l * reps)
     (0 until reps).foreach(i => System.arraycopy(base, 0, fc, i * l, l))
-    u32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL)
+    out.write(Bin.le32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL))
     out.toByteArray
   }
 
@@ -1585,12 +1516,8 @@ object Zstd {
     * discipline), three closed-form repeat offsets, then content. */
   def synthDict(d: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(DictMagic)
-    u32(dictIdOf(d))
+    out.write(Bin.le32(DictMagic))
+    out.write(Bin.le32(dictIdOf(d)))
     // Huffman tree description, direct form: 15 explicit weight-1
     // symbols, symbol 15 implicit — the c1u table
     val ws = Array.fill(15)(1)
@@ -1609,7 +1536,8 @@ object Zstd {
     out.write(of, 0, of.length)
     out.write(ml, 0, ml.length)
     out.write(ll, 0, ll.length)
-    u32(dRep1(d)); u32(dRep1(d) + 2); u32(dRep1(d) + 5)
+    out.write(Bin.le32(dRep1(d))); out.write(Bin.le32(dRep1(d) + 2))
+    out.write(Bin.le32(dRep1(d) + 5))
     (0 until dictContentLen(d)).foreach(i => out.write(dictByte(d, i)))
     out.toByteArray
   }
@@ -1657,20 +1585,15 @@ object Zstd {
     val body = encodeCompressedBlock(lits, seqs, "treeless", "rep", st)
     val fc = dictFrameContent(d)
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(0xFD2FB528L)
+    out.write(Bin.le32(0xFD2FB528L))
     out.write((2 << 6) | 0x04 | 0x3) // FCS 4B, checksum, dict id 4B
     out.write(0x70) // window descriptor
-    u32(dictIdOf(d))
-    u32(fc.length.toLong)
+    out.write(Bin.le32(dictIdOf(d)))
+    out.write(Bin.le32(fc.length.toLong))
     val hdr = (body.length << 3) | (2 << 1) | 1
-    out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-    out.write((hdr >> 16) & 0xff)
+    out.write(Bin.le24(hdr))
     out.write(body, 0, body.length)
-    u32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL)
+    out.write(Bin.le32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL))
     out.toByteArray
   }
 
@@ -1715,20 +1638,15 @@ object Zstd {
     val body = encodeCompressedBlock(lits, seqs, "treeless", "rep", st)
     val fc = sharedDictFrameContent(d, g)
     val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    u32(0xFD2FB528L)
+    out.write(Bin.le32(0xFD2FB528L))
     out.write((2 << 6) | 0x04 | 0x3) // FCS 4B, checksum, dict id 4B
     out.write(0x70) // window descriptor
-    u32(dictIdOf(g))
-    u32(fc.length.toLong)
+    out.write(Bin.le32(dictIdOf(g)))
+    out.write(Bin.le32(fc.length.toLong))
     val hdr = (body.length << 3) | (2 << 1) | 1
-    out.write(hdr & 0xff); out.write((hdr >> 8) & 0xff)
-    out.write((hdr >> 16) & 0xff)
+    out.write(Bin.le24(hdr))
     out.write(body, 0, body.length)
-    u32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL)
+    out.write(Bin.le32(xxh64(fc, 0, fc.length, 0L) & 0xffffffffL))
     out.toByteArray
   }
 

@@ -39,22 +39,4 @@ class AdtsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Adts.parse(good.take(10)))
   }
 
-  test("walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(1357)
-    for (trial <- 0 until 200) {
-      val b = Adts.synth((trial % 13).toLong).clone()
-      (0 to rng.nextInt(4)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Adts.parse(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

@@ -152,24 +152,4 @@ class ArrowIpcSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("magic"), e2.getMessage)
   }
 
-  test("walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(1818)
-    for (trial <- 0 until 250) {
-      val b = ArrowIpc.synth((trial % 13).toLong).clone()
-      (0 to rng.nextInt(5)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { ArrowIpc.walk(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case _: ArrayIndexOutOfBoundsException =>
-          fail(s"trial $trial: unguarded array access")
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

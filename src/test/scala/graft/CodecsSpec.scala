@@ -11,7 +11,7 @@ import graft.operators.Codecs.{Bmp, Wav}
   * 4-byte row padding, extreme sample values, sign extension).
   * scalacheck Gens sampled directly, per OperatorPropsSpec (the
   * scalatestplus bridge is not in the offline cache). */
-class CodecsSpec extends AnyFunSuite {
+class CodecsSpec extends AnyFunSuite with WalkerFuzz {
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
@@ -1063,112 +1063,6 @@ class CodecsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Codecs.mp4ExtractSamples(bad))
   }
 
-  test("decoders terminate (decode or throw) under random corruption — never hang") {
-    // Deterministic mutation fuzz over every decoder: flip 1-8 bytes
-    // of a valid payload at seeded positions, or feed pure garbage.
-    // The contract is TERMINATION with either a decoded result (benign
-    // flip in a comment/pixel) or an exception — a corrupt length
-    // field, Huffman table, box size, or scan script must never spin a
-    // loop or allocate unboundedly. Every bounded-loop argument in the
-    // decoders (Annex-C code length <= 16, unit counts, box-walk
-    // progress, inflate-progress require) is what this test leans on.
-    val rng = new scala.util.Random(42)
-    // Swallow ONLY the documented loud classes — require ->
-    // IllegalArgumentException (and subclasses), sys.error -> bare
-    // RuntimeException. Every OTHER RuntimeException subclass
-    // (ArrayIndexOutOfBounds, NegativeArraySize, NullPointer,
-    // MatchError, ...) is a MISSING GUARD and must propagate so this
-    // test FAILS — the r10 advice found the old blanket
-    // `_: RuntimeException` catch silently passed exactly the
-    // regressions the test's comment claimed to catch.
-    def mustTerminateLoudly(label: String)(t: => Any): Unit =
-      try { t; () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"$label: non-contract failure class " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    val fixtures: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
-      ("jpeg-baseline", Codecs.synthBaselineJpeg(7L),
-        b => Codecs.decodeJpeg(b)),
-      ("jpeg-420", Codecs.synthBaselineJpeg420(3L),
-        b => Codecs.decodeJpeg(b)),
-      ("jpeg-411", Codecs.synthBaselineJpeg411(5L),
-        b => Codecs.decodeJpeg(b)),
-      ("jpeg-h1v2", Codecs.synthBaselineJpegH1v2(10L),
-        b => Codecs.decodeJpeg(b)),
-      ("jpeg-progressive", Codecs.synthProgressiveJpeg(2L),
-        b => Codecs.decodeJpeg(b)),
-      ("png", Codecs.encodePng(Codecs.synthBmp(9L)),
-        b => Codecs.decodePng(b)),
-      ("bmp", Codecs.encodeBmp(Codecs.synthBmp(4L)),
-        b => Codecs.decodeBmp(b)),
-      ("wav", Codecs.encodeWavPcm16(Codecs.synthWav(6L)),
-        b => Codecs.decodeWav(b)),
-      ("mp4-meta", Codecs.synthMp4(5L), b => Codecs.mp4Meta(b)),
-      ("mp4-samples", Codecs.synthMp4Samples(8L), b => Codecs.mp4Samples(b)),
-      ("mp4-extract", Codecs.synthMp4Data(11L),
-        b => Codecs.mp4ExtractSamples(b)),
-      ("mp4-mjpeg", Codecs.synthMjpegMp4(6L),
-        b => Codecs.decodeMjpegFrames(b)),
-      ("warc", Codecs.synthWarc(9L), b => Codecs.warcRecords(b)),
-      ("warc-gz", Codecs.synthWarcGz(4L), b => Codecs.warcRecordsGz(b)),
-      ("gif", Codecs.encodeGif(Codecs.synthGif(5L)),
-        b => Codecs.decodeGif(b)),
-      ("gif-interlaced", Codecs.encodeGif(Codecs.synthGif(6L),
-        interlaced = true), b => Codecs.decodeGif(b)),
-      ("gif-anim", {
-        val (fs, ds) = Codecs.synthGifAnim(8L)
-        Codecs.encodeGifAnim(fs, ds)
-      }, b => Codecs.decodeGifFrames(b)),
-      ("http-cl", Codecs.synthHttpResponse(2L, 3), b => Codecs.httpParse(b)),
-      ("http-chunked", Codecs.synthHttpResponse(2L, 1),
-        b => Codecs.httpParse(b)),
-      ("warc-web", Codecs.synthWarcWebGz(7L), { b =>
-        val (plain, recs) = Codecs.warcRecordsGz(b)
-        recs.filter(_.recType == "response").map { r =>
-          Codecs.httpParse(java.util.Arrays.copyOfRange(
-            plain, r.payloadStart, r.payloadStart + r.contentLength))
-        }
-      }),
-      ("avc-avcc", Codecs.synthAvcStream(4L), b => Codecs.avcNalMeta(b)),
-      ("avc-annexb", Codecs.synthAvcStream(7L), b => Codecs.avcNalMeta(b)),
-      ("avcc-mp4", Codecs.synthAvcMp4(9L), b => Codecs.avccMeta(b)),
-      ("mp3-id3v2", Codecs.synthMp3(6L), b => Codecs.mp3Meta(b)),
-      ("mp3-id3v1", Codecs.synthMp3(5L), b => Codecs.mp3Meta(b)),
-      ("mp4a-esds", Codecs.synthMp4aMp4(7L), b => Codecs.mp4aMeta(b)),
-      ("tar", Codecs.synthTar(6L), b => Codecs.tarEntries(b)),
-      ("tar-docs", Codecs.synthTarDocs(9L), b => Codecs.tarExtract(b)),
-      ("zip", Codecs.synthZip(8L), b => Codecs.zipEntries(b)),
-      ("zip64", Codecs.synthZip64(4L), b => Codecs.zipEntries(b)))
-    fixtures.foreach { case (label, ok, dec) =>
-      (0 until 120).foreach { trial =>
-        val bad = ok.clone()
-        val flips = 1 + rng.nextInt(8)
-        (0 until flips).foreach { _ =>
-          bad(rng.nextInt(bad.length)) = rng.nextInt(256).toByte
-        }
-        // the failure contract is the DOCUMENTED loud classes only:
-        // require -> IllegalArgumentException, sys.error ->
-        // RuntimeException. A raw ArrayIndexOutOfBounds / NegativeArray
-        // is a missing guard and FAILS this test (two such JPEG sites
-        // were found and fixed by exactly this fuzz: unvalidated DQT
-        // and SOF quant-table ids indexing past the 4-slot array).
-        mustTerminateLoudly(s"$label flip trial $trial")(dec(bad))
-        // truncations at seeded cut points
-        val cut = 1 + rng.nextInt(ok.length - 1)
-        mustTerminateLoudly(s"$label cut@$cut trial $trial")(dec(ok.take(cut)))
-      }
-      // pure garbage
-      (0 until 20).foreach { g =>
-        val junk = Array.fill(64 + rng.nextInt(512))(rng.nextInt(256).toByte)
-        mustTerminateLoudly(s"$label garbage trial $g")(dec(junk))
-      }
-    }
-  }
 
   test("MJPEG frame decode equals per-frame JPEG decode; non-JPEG samples reject loudly") {
     (0L until 12L).foreach { d =>
@@ -1887,4 +1781,53 @@ class CodecsSpec extends AnyFunSuite {
     badPay(dataOff + 5) = (badPay(dataOff + 5) ^ 1).toByte
     intercept[RuntimeException](Codecs.zipEntries(badPay))
   }
+
+  private val codecsCases: Seq[Case] = Seq(
+    fixed("jpeg-baseline", Codecs.synthBaselineJpeg(7L))(Codecs.decodeJpeg),
+    fixed("jpeg-420", Codecs.synthBaselineJpeg420(3L))(Codecs.decodeJpeg),
+    fixed("jpeg-411", Codecs.synthBaselineJpeg411(5L))(Codecs.decodeJpeg),
+    fixed("jpeg-h1v2", Codecs.synthBaselineJpegH1v2(10L))(Codecs.decodeJpeg),
+    fixed("jpeg-progressive", Codecs.synthProgressiveJpeg(2L))(
+      Codecs.decodeJpeg),
+    fixed("png", Codecs.encodePng(Codecs.synthBmp(9L)))(Codecs.decodePng),
+    fixed("bmp", Codecs.encodeBmp(Codecs.synthBmp(4L)))(Codecs.decodeBmp),
+    fixed("wav", Codecs.encodeWavPcm16(Codecs.synthWav(6L)))(
+      Codecs.decodeWav),
+    fixed("mp4-meta", Codecs.synthMp4(5L))(Codecs.mp4Meta),
+    fixed("mp4-samples", Codecs.synthMp4Samples(8L))(Codecs.mp4Samples),
+    fixed("mp4-extract", Codecs.synthMp4Data(11L))(Codecs.mp4ExtractSamples),
+    fixed("mp4-mjpeg", Codecs.synthMjpegMp4(6L))(Codecs.decodeMjpegFrames),
+    fixed("warc", Codecs.synthWarc(9L))(Codecs.warcRecords),
+    fixed("warc-gz", Codecs.synthWarcGz(4L))(Codecs.warcRecordsGz(_)),
+    fixed("gif", Codecs.encodeGif(Codecs.synthGif(5L)))(Codecs.decodeGif),
+    fixed("gif-interlaced",
+      Codecs.encodeGif(Codecs.synthGif(6L), interlaced = true))(
+      Codecs.decodeGif),
+    fixed("gif-anim", {
+      val (fs, ds) = Codecs.synthGifAnim(8L)
+      Codecs.encodeGifAnim(fs, ds)
+    })(Codecs.decodeGifFrames),
+    fixed("http-cl", Codecs.synthHttpResponse(2L, 3))(Codecs.httpParse),
+    fixed("http-chunked", Codecs.synthHttpResponse(2L, 1))(Codecs.httpParse),
+    fixed("warc-web", Codecs.synthWarcWebGz(7L)) { b =>
+      val (plain, recs) = Codecs.warcRecordsGz(b)
+      recs.filter(_.recType == "response").map { r =>
+        Codecs.httpParse(java.util.Arrays.copyOfRange(
+          plain, r.payloadStart, r.payloadStart + r.contentLength))
+      }
+    },
+    fixed("avc-avcc", Codecs.synthAvcStream(4L))(Codecs.avcNalMeta),
+    fixed("avc-annexb", Codecs.synthAvcStream(7L))(Codecs.avcNalMeta),
+    fixed("avcc-mp4", Codecs.synthAvcMp4(9L))(Codecs.avccMeta),
+    fixed("mp3-id3v2", Codecs.synthMp3(6L))(Codecs.mp3Meta),
+    fixed("mp3-id3v1", Codecs.synthMp3(5L))(Codecs.mp3Meta),
+    fixed("mp4a-esds", Codecs.synthMp4aMp4(7L))(Codecs.mp4aMeta),
+    fixed("tar", Codecs.synthTar(6L))(Codecs.tarEntries),
+    fixed("tar-docs", Codecs.synthTarDocs(9L))(Codecs.tarExtract),
+    fixed("zip", Codecs.synthZip(8L))(Codecs.zipEntries),
+    fixed("zip64", Codecs.synthZip64(4L))(Codecs.zipEntries))
+
+  fuzzTest(Row("decoders terminate (decode or throw) under random " +
+    "corruption — never hang", 42, 120, 8, codecsCases, cuts = true,
+    garbage = 20))
 }

@@ -83,41 +83,5 @@ class HevcSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("dims"), e2.getMessage)
   }
 
-  test("hvcC walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(8181)
-    for (trial <- 0 until 200) {
-      val b = Hevc.synthHevcMp4((trial % 15).toLong).clone()
-      (0 to rng.nextInt(5)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Hevc.hvccMeta(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
-  test("walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(6565)
-    for (trial <- 0 until 300) {
-      val b = Hevc.synthHevcStream((trial % 19).toLong).clone()
-      (0 to rng.nextInt(5)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Hevc.nalMeta(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

@@ -58,22 +58,4 @@ class IcoSpec extends AnyFunSuite {
       .getMessage.contains("type"))
   }
 
-  test("walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(1337)
-    for (trial <- 0 until 200) {
-      val b = Ico.synth((trial % 9).toLong).clone()
-      (0 to rng.nextInt(4)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Ico.entries(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

@@ -142,32 +142,6 @@ class ParquetFooterSpec extends SparkSpec {
     }
   }
 
-  test("footer parse terminates loudly under random corruption") {
-    val good = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$sf0001/events.parquet"))
-    val footerLen = (good(good.length - 8) & 0xff) |
-      ((good(good.length - 7) & 0xff) << 8) |
-      ((good(good.length - 6) & 0xff) << 16) |
-      ((good(good.length - 5) & 0xff) << 24)
-    val start = good.length - 8 - footerLen
-    val rng = new scala.util.Random(1515)
-    for (trial <- 0 until 200) {
-      val footer = java.util.Arrays.copyOfRange(good, start,
-        good.length - 8)
-      (0 to rng.nextInt(4)).foreach { _ =>
-        footer(rng.nextInt(footer.length)) = rng.nextInt(256).toByte
-      }
-      try { ParquetFooter.parseFooter(footer); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
   // scala.jdk.CollectionConverters without the import-dance noise
   private implicit class JList[A](l: java.util.List[A]) {

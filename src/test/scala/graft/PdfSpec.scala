@@ -126,32 +126,4 @@ class PdfSpec extends AnyFunSuite {
     }
   }
 
-  test("parser terminates loudly under random corruption — never hangs") {
-    val rng = new scala.util.Random(1234)
-    def mustTerminateLoudly(label: String)(t: => Any): Unit =
-      try { t; () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] ||
-              e.isInstanceOf[NumberFormatException] => ()
-        case other: Throwable =>
-          fail(s"$label: non-contract failure class " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    for (trial <- 0 until 400) {
-      val base = Pdf.synthPdf((trial % 9).toLong)
-      val b = base.clone()
-      val flips = 1 + rng.nextInt(8)
-      (0 until flips).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      mustTerminateLoudly(s"flip trial $trial") { Pdf.extract(b) }
-    }
-    for (trial <- 0 until 100) {
-      val b = new Array[Byte](64 + rng.nextInt(512))
-      rng.nextBytes(b)
-      mustTerminateLoudly(s"garbage trial $trial") { Pdf.extract(b) }
-    }
-  }
 }

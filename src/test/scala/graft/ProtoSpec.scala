@@ -55,22 +55,4 @@ class ProtoSpec extends AnyFunSuite {
     assert(e3.getMessage.contains("varint"), e3.getMessage)
   }
 
-  test("parser terminates loudly under random corruption") {
-    val rng = new scala.util.Random(515151)
-    for (trial <- 0 until 300) {
-      val b = Proto.synth((trial % 9).toLong).clone()
-      (0 to rng.nextInt(4)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Proto.parse(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

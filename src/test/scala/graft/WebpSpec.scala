@@ -144,25 +144,6 @@ class WebpSpec extends AnyFunSuite {
       .getMessage.contains("start code"))
   }
 
-  test("VP8L decoder terminates loudly under random corruption") {
-    val rng = new scala.util.Random(2026)
-    for (trial <- 0 until 300) {
-      val d = (trial % 17).toLong
-      val b = Webp.encodeVp8l(Webp.synthImage(d), (d % 6).toInt, d).clone()
-      (0 to rng.nextInt(6)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Webp.decodeVp8l(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
   test("RFC 6386 boolean coder round-trips random sequences") {
     // property test across probabilities: the encoder/decoder pair
@@ -222,41 +203,5 @@ class WebpSpec extends AnyFunSuite {
     assert(Webp.animFrames(alt).frames.head.blend)
   }
 
-  test("animated walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(3434)
-    for (trial <- 0 until 150) {
-      val b = Webp.synthAnim((trial % 11).toLong).clone()
-      (0 to rng.nextInt(5)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Webp.animFrames(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
-  test("container walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(777)
-    for (trial <- 0 until 150) {
-      val b = Webp.synthWebp((trial % 9).toLong).clone()
-      (0 to rng.nextInt(4)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Webp.meta(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Zstd
 
-class ZstdSpec extends AnyFunSuite {
+class ZstdSpec extends AnyFunSuite with WalkerFuzz {
 
   test("XXH64 matches Spark's catalyst implementation") {
     // the independent cross-check the checksum ladder rests on: our
@@ -166,46 +166,7 @@ class ZstdSpec extends AnyFunSuite {
     }
   }
 
-  test("compressed-block walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(16161)
-    for (trial <- 0 until 250) {
-      val b = Zstd.synthCompressed((trial % 19).toLong).clone()
-      (0 to rng.nextInt(5)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Zstd.walk(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.isInstanceOf[IllegalStateException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case _: ArrayIndexOutOfBoundsException =>
-          fail(s"trial $trial: unguarded array access")
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
-  test("walk terminates loudly under random corruption") {
-    val rng = new scala.util.Random(2848)
-    for (trial <- 0 until 200) {
-      val b = Zstd.synth((trial % 17).toLong).clone()
-      (0 to rng.nextInt(4)).foreach { _ =>
-        b(rng.nextInt(b.length)) = rng.nextInt(256).toByte
-      }
-      try { Zstd.walk(b); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
 
   // ------------------------------------------------------ dictionaries
 
@@ -393,30 +354,14 @@ class ZstdSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("overruns"), e2.getMessage)
   }
 
-  test("dictionary parsing and dict-fed walk terminate loudly under " +
-      "random corruption") {
-    val rng = new scala.util.Random(17017)
-    for (trial <- 0 until 200) {
-      val d = (trial % 11).toLong
-      val corruptDict = trial % 2 == 0
-      val dict = Zstd.synthDict(d).clone()
-      val frame = Zstd.synthDictFrame(d).clone()
-      val target = if (corruptDict) dict else frame
-      (0 to rng.nextInt(4)).foreach { _ =>
-        target(rng.nextInt(target.length)) = rng.nextInt(256).toByte
-      }
-      try { Zstd.walk(frame, dict); () }
-      catch {
-        case e: RuntimeException
-            if e.isInstanceOf[IllegalArgumentException] ||
-              e.isInstanceOf[IllegalStateException] ||
-              e.getClass == classOf[RuntimeException] => ()
-        case _: ArrayIndexOutOfBoundsException =>
-          fail(s"trial $trial: unguarded array access")
-        case other: Throwable =>
-          fail(s"trial $trial: non-contract failure " +
-            s"${other.getClass.getName}: ${other.getMessage}", other)
-      }
-    }
-  }
+  // even trials corrupt the dictionary, odd trials the frame
+  fuzzTest(Row("dictionary parsing and dict-fed walk terminate loudly " +
+    "under random corruption", 17017, 200, 4, Seq(Case("zstd-dict",
+      t => if (t % 2 == 0) Zstd.synthDict((t % 11).toLong)
+           else Zstd.synthDictFrame((t % 11).toLong),
+      { (t, b) =>
+        val d = (t % 11).toLong
+        if (t % 2 == 0) Zstd.walk(Zstd.synthDictFrame(d), b)
+        else Zstd.walk(b, Zstd.synthDict(d))
+      }))))
 }
