@@ -13,6 +13,8 @@ package graft
   * the box's disk queue; fall back to /tmp when tmpfs is absent.
   */
 object Scratch {
+  import scala.jdk.CollectionConverters._
+
   /** SPARK_GRAFT_SCRATCH overrides the root: tmpfs pages count against
     * RAM, so a big-corpus run (×1000 ScaleBench shuffles tens of GB)
     * must route scratch to disk or the kernel OOM-kills the JVM —
@@ -35,8 +37,8 @@ object Scratch {
     * tables, ANN/dedup indexes, span tables, event-type slices — lives
     * under here, so it can be shared by later queries of the SAME run
     * (algebraic within-run reuse: the producer pays inside its timed
-    * region) but can never be served to a future JVM run. Nothing
-    * keyed on the fixture fingerprint survives process exit: the whole
+    * region, see `once`) but can never be served to a future JVM run.
+    * Nothing keyed on a fixture generation survives process exit: the whole
     * tree is registered for the shutdown reaper, and the nonce in the
     * name makes a stale tree from a crashed run unreachable (the
     * reaper also sweeps those by prefix on startup). */
@@ -44,10 +46,10 @@ object Scratch {
     // sweep run roots left behind by crashed/killed prior JVMs — they
     // are unreachable by construction (nonce-keyed) and only eat tmpfs
     try {
-      val base = java.nio.file.Paths.get(root)
       val self = ProcessHandle.current().pid()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(base).iterator().asScala
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      val stale = try listing.iterator().asScala.toList finally listing.close()
+      stale
         .filter(p => p.getFileName.toString.startsWith("run-"))
         .filter { p =>
           val pid = p.getFileName.toString.split("-").lift(1)
@@ -55,8 +57,7 @@ object Scratch {
           pid.exists(id => id != self &&
             !ProcessHandle.of(id).map[Boolean](_.isAlive).orElse(false))
         }
-        .foreach(p => try deleteRecursively(p.toString)
-          catch { case _: Exception => () })
+        .foreach(p => deleteRecursively(p.toString))
     } catch { case _: Exception => () }
     val d = dir(s"run-${ProcessHandle.current().pid()}-${System.nanoTime()}")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
@@ -66,6 +67,54 @@ object Scratch {
 
   /** A path under the per-JVM-run staging root. */
   def runDir(parts: String*): String = (runRoot +: parts).mkString("/")
+
+  /** The generation of an input file: its path, mtime and size. Any
+    * rewrite of the file (a fixture regeneration) is a new generation,
+    * so nothing staged from the old bytes is served for the new ones. */
+  def generation(file: String): String = {
+    val attrs = java.nio.file.Files.readAttributes(
+      java.nio.file.Paths.get(file),
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    s"$file@${attrs.lastModifiedTime().toMillis}-${attrs.size()}"
+  }
+
+  private final class Cell { @volatile var value: Option[Any] = None }
+
+  /** The one registry of within-run staged artifacts, keyed on the
+    * artifact's name plus the generation of each input file. */
+  private val staged =
+    new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  /** The artifact `name` derived from `inputFiles`, produced at most once
+    * per run and per generation of the inputs. The first caller runs
+    * `produce` inside its own timed region, with a path under `runRoot`
+    * (cleared first) to write into; later callers in the same JVM get
+    * what `produce` returned. Nothing crosses a process boundary: the
+    * registry is in memory and `runRoot` is reaped at exit. A producer
+    * that throws leaves nothing registered, so the next caller produces
+    * again. Reentrant: a producer may call `once` for other artifacts
+    * (every `Catalog.table` does). A hit costs one `readAttributes` per
+    * input and one map lookup. */
+  def once[T](name: String, inputFiles: String*)(produce: String => T): T = {
+    val key = (name +: inputFiles.map(generation)).mkString("|")
+    val hit = staged.get(key)
+    val cell = if (hit != null) hit else staged.computeIfAbsent(key, _ => new Cell)
+    cell.value match {
+      case Some(v) => v.asInstanceOf[T]
+      case None => cell.synchronized {
+        cell.value match {
+          case Some(v) => v.asInstanceOf[T]
+          case None =>
+            val path = runDir(s"$name-" + java.util.UUID.nameUUIDFromBytes(
+              key.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+            deleteRecursively(path)
+            val v = produce(path)
+            cell.value = Some(v)
+            v
+        }
+      }
+    }
+  }
 
   /** Deferred reaping for staging dirs that must outlive the query that
     * created them. A sink query's natural return value is a lazy scan
@@ -90,12 +139,29 @@ object Scratch {
     pending.add(path)
   }
 
+  /** Recursively delete a checkpoint or staging directory. Tolerant of
+    * concurrent modification: state-store maintenance threads can still
+    * be writing snapshot/delta files into a checkpoint right after
+    * query termination, so a vanished or newly-created entry must not
+    * fail the caller — sweep once more, then give up quietly (the
+    * shutdown hook is the backstop). */
   def deleteRecursively(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
+    import java.nio.file.{Files, Path, Paths}
+    def sweep(p: Path): Unit = {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach { (f: Path) =>
+          try Files.deleteIfExists(f)
+          catch { case _: java.io.IOException => () }
+        }
+      finally walk.close()
     }
+    val p = Paths.get(path)
+    try {
+      if (Files.exists(p)) {
+        sweep(p)
+        if (Files.exists(p)) sweep(p)
+      }
+    } catch { case _: java.io.IOException => () }
   }
 }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Two paths, same API:
   *  - `cosineTopK`: brute-force scan — the exactness baseline. The
-  *    query side broadcasts, so the plan is a BroadcastNestedLoopJoin:
-  *    one linear pass over the corpus per batch of queries, no shuffle
-  *    of the big side. Right answer for few queries × huge corpus.
+  *    query side broadcasts, hashed on vector length, so the plan is a
+  *    BroadcastHashJoin: one linear pass over the corpus per batch of
+  *    queries, no shuffle of the big side. Right answer for few
+  *    queries × huge corpus.
   *  - `lshTopK`: sign-random-projection LSH — corpus and queries get a
   *    b-bit signature from deterministic xxhash64-derived ±1
   *    projections; candidates are signature-equal rows (hash equi-join,
@@ -39,7 +40,13 @@ object Similarity {
     *
     * Ranking happens on the 6-digit-rounded similarity with the
     * neighbour id as tiebreak, so results are reproducible across
-    * engines that disagree in the last float ulp.
+    * engines that disagree in the last float ulp. A pair without a
+    * similarity (a zero or NULL-element vector on either side, or
+    * vectors of different lengths) is not a neighbour and takes no
+    * slot, as in `lshTopK`. Those pairs are dropped by their norms and
+    * lengths before the pair loop (a length-equality join key, not a
+    * filter on `sim`, which Catalyst would push below the projection
+    * and so compute the dot product twice per pair).
     */
   def cosineTopK(
       corpus: DataFrame, queries: DataFrame,
@@ -47,11 +54,13 @@ object Similarity {
     val c = corpus.select(
       col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"))
       .withColumn("nnorm", norm(col("nvec")))
+      .filter(col("nnorm") > 0)
     val q = queries.select(
       col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("qnorm", norm(col("qvec")))
+      .filter(col("qnorm") > 0)
     val scored = c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("nid"))
+      .filter(col("qid") =!= col("nid") && size(col("qvec")) === size(col("nvec")))
       .withColumn("sim",
         round(cosine(col("qvec"), col("nvec"), col("qnorm"), col("nnorm")), 6))
     // Plain per-qid top-k over SLIM (qid, nid, sim) rows. The per-query

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryModule}
@@ -341,14 +341,42 @@ object Llm extends QueryModule {
             CAST(sum(v * v) AS BIGINT) AS sum_sq
           FROM w GROUP BY doc_id)"""
 
-  /** Per-JVM-run staging dir for the unigram trainers' shared prefix
-    * (word-frequency table + round-1 recount) — the producer
-    * llm_unigram_train writes it inside its timed region; the pruned
-    * sibling reuses it within the same run only (VERDICT r18 #1:
-    * within-run algebraic reuse, never cross-run). */
-  private[queries] def unigramPrefixDir(dir: String): String =
-    graft.Scratch.runDir(
-      s"unigram-prefix-${Sources.fingerprint(dir, "documents")}")
+  /** A trained IVF-PQ index over `vectors` (centroids, codebook and
+    * coded lists as parquet), built once per generation of the
+    * embeddings fixture in a run (`Scratch.once`); returns its dir. */
+  private def ivfPqIndex(name: String, dir: String, vectors: DataFrame): String =
+    graft.Scratch.once(name, s"$dir/embeddings.parquet") { ix =>
+      val (cents, cb, coded) = Similarity.ivfPqBuildIndex(
+        vectors, "vec_id", "embedding", dim = 64, numSub = 16,
+        codebookSize = 16, centroidEvery = 32, centroidCap = Some(64))
+      cents.write.mode("overwrite").parquet(s"$ix/centroids.parquet")
+      cb.write.mode("overwrite").parquet(s"$ix/codebook.parquet")
+      coded.write.mode("overwrite").parquet(s"$ix/codes.parquet")
+      ix
+    }
+
+  /** The unigram trainers' shared prefix, staged once per run
+    * (`Scratch.once`): the word-frequency table and the round-1
+    * recount, returned as (wf path, r1 path). Both are byte-identical
+    * between the pruned and unpruned trainers (the prune applies after
+    * the recount; exact integer counts round-trip parquet bit-exactly),
+    * so whichever of llm_unigram_train and llm_unigram_train_pruned
+    * runs first pays for them inside its timed region and the other
+    * reuses them. trainFrom(wf, round1Recount(wf)) ≡ train(wf) is
+    * pinned in TextOpsSpec; the oracle re-derives all rounds from the
+    * documents table either way. */
+  private def unigramPrefix(s: SparkSession, dir: String): (String, String) =
+    graft.Scratch.once("unigram-prefix", s"$dir/documents.parquet") { stage =>
+      val wfP = s"$stage/wf.parquet"
+      val r1P = s"$stage/r1.parquet"
+      Catalog.table(s, dir, "documents")
+        .select(explode(TextOps.tokens(col("text"))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("freq"))
+        .write.mode("overwrite").parquet(wfP)
+      Unigram.round1Recount(s.read.parquet(wfP), vocabCap = Some(1024))
+        .write.mode("overwrite").parquet(r1P)
+      (wfP, r1P)
+    }
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -2135,17 +2163,7 @@ object Llm extends QueryModule {
       "llm_knn_index_persist",
       (s, dir) => {
         val emb = Catalog.table(s, dir, "embeddings")
-        val ix = graft.Scratch.runDir(
-          s"ivfpq-index-${Sources.fingerprint(dir, "embeddings")}")
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$ix/codes.parquet/_SUCCESS"))) {
-          val (cents, cb, coded) = Similarity.ivfPqBuildIndex(
-            emb, "vec_id", "embedding", dim = 64, numSub = 16,
-            codebookSize = 16, centroidEvery = 32, centroidCap = Some(64))
-          cents.write.mode("overwrite").parquet(s"$ix/centroids.parquet")
-          cb.write.mode("overwrite").parquet(s"$ix/codebook.parquet")
-          coded.write.mode("overwrite").parquet(s"$ix/codes.parquet")
-        }
+        val ix = ivfPqIndex("ivfpq-index", dir, emb)
         // write+reload round-trip under time: the codebook artifact is
         // re-persisted to a fresh path and the serve reads THAT copy
         s.read.parquet(s"$ix/codebook.parquet")
@@ -2173,9 +2191,9 @@ object Llm extends QueryModule {
     // to a from-scratch encode of the union (SimilaritySpec pins it);
     // the oracle re-derives everything with training CTEs restricted
     // to the corpus and coded CTEs over the union. The base index is
-    // YESTERDAY'S artifact: built and persisted once per (sf, session)
-    // behind a fingerprinted _SUCCESS marker — the staged() fixture
-    // discipline — so the declared query times what the op models
+    // YESTERDAY'S artifact: built and persisted once per fixture
+    // generation in a run (`Scratch.once`, like the Sources format
+    // round-trips) — so the declared query times what the op models
     // (encode + append + serve), not the rebuild it exists to avoid
     // (VERDICT r13 #4). Arrival codes land in their own file set
     // beside the base lists — the same physics as a lake append (new
@@ -2187,17 +2205,7 @@ object Llm extends QueryModule {
         val emb = Catalog.table(s, dir, "embeddings")
         val corpus = emb.filter(col("vec_id") % 17 =!= 0)
         val arrivals = emb.filter(col("vec_id") % 17 === 0)
-        val ix = graft.Scratch.runDir(
-          s"ivfpq-index-base-${Sources.fingerprint(dir, "embeddings")}")
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$ix/codes.parquet/_SUCCESS"))) {
-          val (cents, cb, coded) = Similarity.ivfPqBuildIndex(
-            corpus, "vec_id", "embedding", dim = 64, numSub = 16,
-            codebookSize = 16, centroidEvery = 32, centroidCap = Some(64))
-          cents.write.mode("overwrite").parquet(s"$ix/centroids.parquet")
-          cb.write.mode("overwrite").parquet(s"$ix/codebook.parquet")
-          coded.write.mode("overwrite").parquet(s"$ix/codes.parquet")
-        }
+        val ix = ivfPqIndex("ivfpq-index-base", dir, corpus)
         val loadedCents = s.read.parquet(s"$ix/centroids.parquet").limit(64)
         val loadedCb = s.read.parquet(s"$ix/codebook.parquet")
         val upd = graft.Scratch.dir(
@@ -3091,15 +3099,13 @@ object Llm extends QueryModule {
       "llm_substring_dedup_rewrite",
       (s, dir) => {
         val docs = Catalog.table(s, dir, "documents")
-        val ix = graft.Scratch.runDir(
-          s"spans-${Sources.fingerprint(dir, "documents")}")
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$ix/spans.parquet/_SUCCESS"))) {
-          TextOps.sharedSpans(docs, "doc_id", "text",
-            k = 8, minLen = 10, dfCap = 8)
-            .write.mode("overwrite").parquet(s"$ix/spans.parquet")
-        }
-        val spans = s.read.parquet(s"$ix/spans.parquet")
+        val spans = s.read.parquet(
+          graft.Scratch.once("spans", s"$dir/documents.parquet") { p =>
+            TextOps.sharedSpans(docs, "doc_id", "text",
+              k = 8, minLen = 10, dfCap = 8)
+              .write.mode("overwrite").parquet(p)
+            p
+          })
         val covered = spans
           .select(col("id_b").as("doc_id"),
             explode(sequence(col("b_start"),
@@ -3411,34 +3417,27 @@ object Llm extends QueryModule {
     // shuffle-hash fallback above — TextOps.joinSegmentation), so
     // tokenizing 100 TB never re-runs the merge fold per document —
     // one map-side join + one doc-keyed aggregate. The trained table
-    // is YESTERDAY'S artifact: staged once per (sf, session) behind a
-    // fingerprinted marker (the llm_knn_index_update discipline) so
+    // is YESTERDAY'S artifact: staged once per fixture generation in a
+    // run (`Scratch.once`, the llm_knn_index_update discipline) so
     // the declared query times what the op models — tokenization
     // under a LOADED tokenizer — while llm_bpe_train times training.
-    // The vocab row count rides a sidecar file (written LAST, so it
-    // doubles as the completed-write gate) instead of a count job per
-    // invocation. Every corpus word hits the vocab by construction
-    // (trained on the same corpus); OOV handling at serve time is
+    // The vocab row count is returned with the staged path instead of
+    // a count job per invocation. Every corpus word hits the vocab by
+    // construction (trained on the same corpus); OOV handling at serve time is
     // llm_tokens_to_ids's [UNK] path, orthogonal to segmentation.
     QueryDef(
       "llm_bpe_apply",
       (s, dir) => {
         val docs = Catalog.table(s, dir, "documents")
-        val segPath = graft.Scratch.runDir(
-          s"bpe-seg-${Sources.fingerprint(dir, "documents")}")
-        val nRowsFile = java.nio.file.Paths.get(s"$segPath/_NROWS")
-        if (!java.nio.file.Files.exists(nRowsFile)) {
-          val wordFreq = docs
-            .select(explode(TextOps.tokens(col("text"))).as("word"))
-            .groupBy("word").agg(count(lit(1)).as("freq"))
-          val (vocab, nVocab) = TextOps.bpeVocabSymsWithCount(wordFreq, 6)
-          vocab.select("word", "syms")
-            .write.mode("overwrite").parquet(segPath)
-          java.nio.file.Files.write(nRowsFile,
-            nVocab.toString.getBytes("US-ASCII"))
-        }
-        val nVocab = new String(
-          java.nio.file.Files.readAllBytes(nRowsFile), "US-ASCII").trim.toLong
+        val (segPath, nVocab) =
+          graft.Scratch.once("bpe-seg", s"$dir/documents.parquet") { p =>
+            val wordFreq = docs
+              .select(explode(TextOps.tokens(col("text"))).as("word"))
+              .groupBy("word").agg(count(lit(1)).as("freq"))
+            val (vocab, n) = TextOps.bpeVocabSymsWithCount(wordFreq, 6)
+            vocab.select("word", "syms").write.mode("overwrite").parquet(p)
+            (p, n)
+          }
         TextOps.joinSegmentation(
           docs.select(col("doc_id"),
             posexplode(TextOps.tokens(col("text"))).as(Seq("ord", "word"))),
@@ -3479,7 +3478,7 @@ object Llm extends QueryModule {
 
     // BYTE-LEVEL BPE APPLICATION — the serve half, staged exactly
     // like llm_bpe_apply (trained byte segmentation table written
-    // once per (sf, session) behind the fingerprinted sidecar; the
+    // once per fixture generation in a run, with its row count; the
     // declared query times tokenization under a LOADED tokenizer):
     // corpus words broadcast-join the vocab-sized (word -> byte
     // pieces) table, one map-side join + one doc-keyed aggregate —
@@ -3490,23 +3489,16 @@ object Llm extends QueryModule {
         val docs = Catalog.table(s, dir, "documents")
         val wordSql = "CASE WHEN length(w) % 3 = 0 " +
           "THEN concat(w, 'é') ELSE w END"
-        val segPath = graft.Scratch.runDir(
-          s"bpe-byte-seg-${Sources.fingerprint(dir, "documents")}")
-        val nRowsFile = java.nio.file.Paths.get(s"$segPath/_NROWS")
-        if (!java.nio.file.Files.exists(nRowsFile)) {
-          val wordFreq = docs
-            .select(explode(TextOps.tokens(col("text"))).as("w"))
-            .selectExpr(s"$wordSql AS word")
-            .groupBy("word").agg(count(lit(1)).as("freq"))
-          val (vocab, nVocab) =
-            TextOps.bpeVocabSymsBytesWithCount(wordFreq, 6)
-          vocab.select("word", "syms")
-            .write.mode("overwrite").parquet(segPath)
-          java.nio.file.Files.write(nRowsFile,
-            nVocab.toString.getBytes("US-ASCII"))
-        }
-        val nVocab = new String(
-          java.nio.file.Files.readAllBytes(nRowsFile), "US-ASCII").trim.toLong
+        val (segPath, nVocab) =
+          graft.Scratch.once("bpe-byte-seg", s"$dir/documents.parquet") { p =>
+            val wordFreq = docs
+              .select(explode(TextOps.tokens(col("text"))).as("w"))
+              .selectExpr(s"$wordSql AS word")
+              .groupBy("word").agg(count(lit(1)).as("freq"))
+            val (vocab, n) = TextOps.bpeVocabSymsBytesWithCount(wordFreq, 6)
+            vocab.select("word", "syms").write.mode("overwrite").parquet(p)
+            (p, n)
+          }
         TextOps.joinSegmentation(
           docs.select(col("doc_id"),
             posexplode(TextOps.tokens(col("text"))).as(Seq("ord", "w")))
@@ -3537,29 +3529,9 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_unigram_train",
       (s, dir) => {
-        // PRODUCER of the trainers' shared prefix (VERDICT r18 #1 fix:
-        // within-run algebraic reuse, staged by the producer inside its
-        // OWN timed region — never across JVM runs). The word-frequency
-        // table and the round-1 recount are byte-identical between the
-        // pruned and unpruned trainers (the prune applies after the
-        // recount; exact integer counts round-trip parquet bit-exactly),
-        // so this query stages both under the per-run scratch on its
-        // first invocation and llm_unigram_train_pruned reuses them
-        // within the same run. trainFrom(wf, round1Recount(wf)) ≡
-        // train(wf) is pinned in UnigramSpec; the oracle re-derives all
-        // rounds from the documents table either way.
-        val stage = Llm.unigramPrefixDir(dir)
-        val wfP = s"$stage/wf.parquet"
-        val r1P = s"$stage/r1.parquet"
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$r1P/_SUCCESS"))) {
-          val wf = Catalog.table(s, dir, "documents")
-            .select(explode(TextOps.tokens(col("text"))).as("word"))
-            .groupBy("word").agg(count(lit(1)).as("freq"))
-          wf.write.mode("overwrite").parquet(wfP)
-          Unigram.round1Recount(s.read.parquet(wfP), vocabCap = Some(1024))
-            .write.mode("overwrite").parquet(r1P)
-        }
+        // the word-frequency table and round-1 recount are shared with
+        // llm_unigram_train_pruned (unigramPrefix: first caller pays)
+        val (wfP, r1P) = unigramPrefix(s, dir)
         Unigram.trainFrom(s.read.parquet(wfP), s.read.parquet(r1P),
           rounds = 3, vocabCap = Some(1024))
           .orderBy(desc("cnt"), asc("piece"))
@@ -3571,8 +3543,8 @@ object Llm extends QueryModule {
     // and the corpus joins it exactly like llm_bpe_apply (broadcast
     // table + doc-keyed aggregate; tokenizing 100 TB never re-runs
     // the Viterbi per document). Like llm_bpe_apply, the trained
-    // segmentation table is staged once per (sf, session) behind a
-    // fingerprinted marker — llm_unigram_train times training; this
+    // segmentation table is staged once per fixture generation in a
+    // run (`Scratch.once`) — llm_unigram_train times training; this
     // query times tokenization under the LOADED tokenizer. Oracle =
     // the train oracle's CTEs plus a 4th segmentation round and the
     // bpe_apply-style per-doc reassembly.
@@ -3580,16 +3552,15 @@ object Llm extends QueryModule {
       "llm_unigram_apply",
       (s, dir) => {
         val docs = Catalog.table(s, dir, "documents")
-        val segPath = graft.Scratch.runDir(
-          s"unigram-seg-${Sources.fingerprint(dir, "documents")}")
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$segPath/_SUCCESS"))) {
-          val wf = docs
-            .select(explode(TextOps.tokens(col("text"))).as("word"))
-            .groupBy("word").agg(count(lit(1)).as("freq"))
-          Unigram.trainSegmentation(wf, rounds = 3, vocabCap = Some(1024))
-            .write.mode("overwrite").parquet(segPath)
-        }
+        val segPath =
+          graft.Scratch.once("unigram-seg", s"$dir/documents.parquet") { p =>
+            val wf = docs
+              .select(explode(TextOps.tokens(col("text"))).as("word"))
+              .groupBy("word").agg(count(lit(1)).as("freq"))
+            Unigram.trainSegmentation(wf, rounds = 3, vocabCap = Some(1024))
+              .write.mode("overwrite").parquet(p)
+            p
+          }
         Unigram.tokenize(
           docs.select(col("doc_id"),
             posexplode(TextOps.tokens(col("text"))).as(Seq("ord", "word"))),
@@ -3615,30 +3586,12 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_unigram_train_pruned",
       (s, dir) => {
-        // CONSUMER of the shared prefix llm_unigram_train stages within
-        // this JVM run (see the producer's comment): when the staged
-        // wf/round-1 recount exist, time the prune dynamic + rounds 2-3
-        // under the shrinking vocabulary — what is NOT shared with the
-        // sibling; standalone (no producer ran in this process), run
-        // the whole trainer live. Nothing crosses a JVM run (per-run
-        // scratch, VERDICT r18 #1); trainFrom ≡ train is spec-pinned
-        // and the oracle re-derives all three rounds either way.
-        val stage = Llm.unigramPrefixDir(dir)
-        val wfP = s"$stage/wf.parquet"
-        val r1P = s"$stage/r1.parquet"
-        if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$r1P/_SUCCESS"))) {
-          Unigram.trainFrom(s.read.parquet(wfP), s.read.parquet(r1P),
-            rounds = 3, vocabCap = Some(1024), targetVocab = Some(24))
-            .orderBy(desc("cnt"), asc("piece"))
-        } else {
-          val wf = Catalog.table(s, dir, "documents")
-            .select(explode(TextOps.tokens(col("text"))).as("word"))
-            .groupBy("word").agg(count(lit(1)).as("freq"))
-          Unigram.train(wf, rounds = 3, vocabCap = Some(1024),
-            targetVocab = Some(24))
-            .orderBy(desc("cnt"), asc("piece"))
-        }
+        // the prune dynamic + rounds 2-3 under the shrinking
+        // vocabulary; the prefix is shared with llm_unigram_train
+        val (wfP, r1P) = unigramPrefix(s, dir)
+        Unigram.trainFrom(s.read.parquet(wfP), s.read.parquet(r1P),
+          rounds = 3, vocabCap = Some(1024), targetVocab = Some(24))
+          .orderBy(desc("cnt"), asc("piece"))
       },
       Some(unigramOracle(3, pruneV = Some(24)))),
 
@@ -8089,8 +8042,8 @@ object Llm extends QueryModule {
     // The assignment table is a CONSUMED artifact here: a deployment
     // organizing its corpus reads the (id, cluster) table the ANN
     // build already wrote, it does not re-run Lloyd per downstream
-    // job. So assignments are computed once per JVM RUN (per-run
-    // scratch since r19) and staged to parquet behind a _SUCCESS marker (the span-table /
+    // job. So assignments are computed once per fixture generation in a
+    // run and staged to parquet (`Scratch.once`, the span-table /
     // ANN-index consumer-staging discipline, VERDICT r16 #1b) — the
     // TRAINING capability stays live-timed in llm_knn_ivf_kmeans,
     // and the staged longs round-trip parquet bit-exactly so the
@@ -8099,17 +8052,14 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_cluster_topics",
       (s, dir) => {
-        val asgDir = graft.Scratch.runDir(
-          s"kmeans-asg-${Sources.fingerprint(dir, "embeddings")}")
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$asgDir/asg.parquet/_SUCCESS"))) {
-          val emb = Catalog.table(s, dir, "embeddings")
-            .filter(col("vec_id") < 400)
-          Similarity.kmeansAssignments(
-            emb, "vec_id", "embedding", nlist = 8, rounds = 3)
-            .write.mode("overwrite").parquet(s"$asgDir/asg.parquet")
-        }
-        val asg = s.read.parquet(s"$asgDir/asg.parquet")
+        val asg = s.read.parquet(
+          graft.Scratch.once("kmeans-asg", s"$dir/embeddings.parquet") { p =>
+            Similarity.kmeansAssignments(
+              Catalog.table(s, dir, "embeddings").filter(col("vec_id") < 400),
+              "vec_id", "embedding", nlist = 8, rounds = 3)
+              .write.mode("overwrite").parquet(p)
+            p
+          })
         val words = Catalog.table(s, dir, "documents")
           .filter(col("doc_id") < 400)
           .select(col("doc_id").as("id"),

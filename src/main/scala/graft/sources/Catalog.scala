@@ -18,30 +18,21 @@ object Catalog {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Footer-schema cache — the batch twin of Streams.footerSchema
-    * (same (path, mtime, size) fingerprint key, so a mid-run fixture
-    * regeneration keys a fresh entry). `spark.read.parquet` re-infers
-    * the schema at every DataFrame CONSTRUCTION (~88 ms measured:
-    * file listing + footer decode + a driver-side inference pass)
-    * vs ~10 ms with an explicit schema; a bench
-    * run constructs each table hundreds of times. This is exactly the
-    * metastore shape the scaladoc above promises at 100 TB: schema
+  /** The parquet footer schema of `path`, read once per fixture
+    * generation (`Scratch.once`), for batch and streaming readers alike.
+    * `spark.read.parquet` re-infers the schema at every DataFrame
+    * CONSTRUCTION (~88 ms measured: file listing + footer decode + a
+    * driver-side inference pass) vs ~10 ms with an explicit schema; a
+    * bench run constructs each table hundreds of times. This is exactly
+    * the metastore shape the scaladoc above promises at 100 TB: schema
     * from the catalog, bytes from the scan. The inferred schema is
     * conf-dependent (legacy nanosAsLong maps TIMESTAMP(NANOS) to
-    * LongType), so that flag is part of the key. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def footerSchema(spark: SparkSession,
+    * LongType), so that flag is part of the artifact's name. */
+  private[graft] def footerSchema(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
-    val p = java.nio.file.Paths.get(path)
-    val attrs = java.nio.file.Files.readAttributes(
-      p, classOf[java.nio.file.attribute.BasicFileAttributes])
     val nanos =
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key =
-      s"$path@${attrs.lastModifiedTime().toMillis}-${attrs.size()}-$nanos"
-    schemaCache.computeIfAbsent(key,
+    graft.Scratch.once(s"footer-schema-nanosAsLong-$nanos", path)(
       _ => spark.read.parquet(path).schema)
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.graftshim.{ArtifactShim, StateStoreShim}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.sources.Catalog.footerSchema
+
 /** SURVEY.md §2.9 — Structured Streaming over the events table.
   *
   * The reference's streaming is queue→batch→transform→idempotent-write
@@ -21,66 +23,24 @@ import org.apache.spark.sql.types._
   */
 object Streams {
 
-  /** Staged source dirs, keyed on (path, mtime, size) of the fixture
-    * file — reused across every streaming query of THIS JVM run only
-    * (r19 de-gaming, VERDICT r18 #1: the dirs live under
-    * Scratch.runDir, so no staged slice ever crosses a process
-    * boundary; within a run the first consumer pays the staging in its
-    * timed region and later queries reuse — algebraic within-run
-    * reuse). The fingerprint still guards a mid-run fixture
-    * regeneration: a new generation keys a new dir. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  /** Footer-schema cache, keyed like stagedDirs on (path, mtime, size):
-    * every streaming query construction re-read the fixture's parquet
-    * footer just to declare the readStream schema (a driver-side file
-    * open per invocation, ~10-40 ms × 3 bench runs × every streaming
-    * query). The fingerprint key keeps a mid-run fixture regeneration
-    * safe — new bytes, new key — exactly the stagedDirs contract. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def footerSchema(spark: SparkSession,
-      file: String): org.apache.spark.sql.types.StructType = {
-    val src = java.nio.file.Paths.get(file)
-    val attrs = java.nio.file.Files.readAttributes(
-      src, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val gen = s"${attrs.lastModifiedTime().toMillis}-${attrs.size()}"
-    schemaCache.computeIfAbsent(s"$file@$gen",
-      _ => spark.read.parquet(file).schema)
-  }
-
-  /** Stage `file` (a single parquet file) into a scratch DIRECTORY the
-    * file source can watch. The scratch dir name embeds the fixture's
-    * mtime+size, so a driver fixture REGENERATION (same path, new
-    * bytes — the exact event of round 6) can never be served a stale
-    * staged copy from a warm scratch dir across rounds: a new
-    * generation keys a new dir. Content rides a symlink where the
-    * filesystem allows (bytes never duplicated), else a copy — and the
-    * copy is safe under regeneration for the same reason. */
-  private[graft] def stageEventsDir(file: String): java.nio.file.Path = {
-    val src = java.nio.file.Paths.get(file)
-    val attrs = java.nio.file.Files.readAttributes(
-      src, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val gen = s"${attrs.lastModifiedTime().toMillis}-${attrs.size()}"
-    stagedDirs.computeIfAbsent(s"$file@$gen", { _ =>
-      // "-v2" versions the on-disk layout: earlier rounds staged every
-      // table under the fixed name events.parquet, and reusing one of
-      // those dirs after the rename below would leave BOTH symlinks in
-      // place — the stream would silently read the table twice.
-      val d = java.nio.file.Paths.get(
-        graft.Scratch.runDir(s"table-stream-v2-${math.abs(file.hashCode)}-$gen"))
-      java.nio.file.Files.createDirectories(d)
-      // named after the source table — the helper stages ANY fixture
-      // table now (tableStream), not just events
-      val dst = d.resolve(src.getFileName)
-      if (!java.nio.file.Files.exists(dst))
-        try java.nio.file.Files.createSymbolicLink(dst, src)
-        catch { case _: Exception => java.nio.file.Files.copy(src, dst) }
+  /** Stage `file` (a single fixture parquet file) into a scratch
+    * DIRECTORY the file source can watch, once per fixture generation
+    * (`Scratch.once`): a regeneration (same path, new bytes — the exact
+    * event of round 6) keys a new dir, never a stale staged copy.
+    * Content rides a symlink where the filesystem allows (bytes never
+    * duplicated), else a copy — and the copy is safe under regeneration
+    * for the same reason. Shared by every streaming query of the run;
+    * the first consumer pays the staging in its timed region. */
+  private[graft] def stagedTableDir(file: String): String =
+    graft.Scratch.once("table-stream", file) { d =>
+      val src = java.nio.file.Paths.get(file)
+      val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+      // named after the source table: any fixture table is staged here
+      try java.nio.file.Files.createSymbolicLink(dir.resolve(src.getFileName), src)
+      catch { case _: Exception =>
+        java.nio.file.Files.copy(src, dir.resolve(src.getFileName)) }
       d
-    })
-  }
+    }
 
   /** events.parquet replayed through the file source. The readStream
     * schema is the file's own footer schema (a one-footer batch read —
@@ -90,14 +50,14 @@ object Streams {
     * boundary the batch path uses. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     val file = s"$sfDir/events.parquet"
-    val dir = stageEventsDir(file)
     graft.sources.Catalog.normalizeTs(
-      spark.readStream.schema(footerSchema(spark, file)).parquet(dir.toString))
+      spark.readStream.schema(footerSchema(spark, file))
+        .parquet(stagedTableDir(file)))
   }
 
   /** A single-event-type SLICE of the events table replayed through
-    * the file source — staged once per fixture generation (the
-    * stagedDirs discipline). The stream-stream join queries each
+    * the file source — staged once per fixture generation
+    * (`Scratch.once`). The stream-stream join queries each
     * filter the same two slices out of the full replay; at 100 TB the
     * upstream router lands event types on separate paths anyway, so
     * the staged slice IS the realistic source shape — and at fixture
@@ -106,64 +66,28 @@ object Streams {
   def eventsTypeStream(spark: SparkSession, sfDir: String,
       eventType: String): DataFrame = {
     val file = s"$sfDir/events.parquet"
-    val src = java.nio.file.Paths.get(file)
-    val attrs = java.nio.file.Files.readAttributes(
-      src, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val gen = s"${attrs.lastModifiedTime().toMillis}-${attrs.size()}"
-    val dir = stagedDirs.computeIfAbsent(s"$file#$eventType@$gen", { _ =>
-      val d = java.nio.file.Paths.get(graft.Scratch.runDir(
-        s"events-slice-$eventType-${math.abs(file.hashCode)}-$gen"))
-      if (!java.nio.file.Files.exists(d.resolve("_SUCCESS"))) {
-        // raw read (no ts normalization): the slice carries the SAME
-        // physical encoding as the source file, so the downstream
-        // normalizeTs boundary behaves identically to eventsStream
-        spark.read.parquet(file)
-          .filter(org.apache.spark.sql.functions.col("event_type") === eventType)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(d.toString)
-      }
+    val dir = graft.Scratch.once(s"events-slice-$eventType", file) { d =>
+      // raw read (no ts normalization): the slice carries the SAME
+      // physical encoding as the source file, so the downstream
+      // normalizeTs boundary behaves identically to eventsStream
+      spark.read.parquet(file)
+        .filter(col("event_type") === eventType)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(d)
       d
-    })
+    }
     graft.sources.Catalog.normalizeTs(
-      spark.readStream.schema(footerSchema(spark, file))
-        .parquet(dir.toString))
+      spark.readStream.schema(footerSchema(spark, file)).parquet(dir))
   }
 
   /** Any fixture table replayed through the file source — the same
-    * fingerprint-keyed staging cache as eventsStream, minus the events
-    * ts normalization (document/text tables have no event-time column
-    * to normalize). */
+    * staged dir as eventsStream, minus the events ts normalization
+    * (document/text tables have no event-time column to normalize). */
   def tableStream(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {
     val file = s"$sfDir/$name.parquet"
-    val dir = stageEventsDir(file)
-    spark.readStream.schema(footerSchema(spark, file)).parquet(dir.toString)
-  }
-
-  /** Recursively delete a checkpoint/staging directory. Tolerant of
-    * concurrent modification: state-store maintenance threads can still
-    * be writing snapshot/delta files into a checkpoint right after
-    * query termination, so a vanished or newly-created entry must not
-    * fail the caller — retry the walk once, then give up quietly (the
-    * shutdown hook and /tmp reaping are the backstop). */
-  private[graft] def deleteRecursively(path: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    def sweep(p: Path): Unit = {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach { (f: Path) =>
-          try Files.deleteIfExists(f)
-          catch { case _: java.io.IOException => () }
-        }
-      finally walk.close()
-    }
-    val p = Paths.get(path)
-    try {
-      if (Files.exists(p)) {
-        sweep(p)
-        if (Files.exists(p)) sweep(p)
-      }
-    } catch { case _: java.io.IOException => () }
+    spark.readStream.schema(footerSchema(spark, file))
+      .parquet(stagedTableDir(file))
   }
 
   /** Streaming state partitioning is frozen at first start from
@@ -242,7 +166,7 @@ object Streams {
     } finally {
       prev.foreach { case (k, v) => spark.conf.set(k, v) }
       drainStreamingResidue(spark)
-      deleteRecursively(ckpt)
+      graft.Scratch.deleteRecursively(ckpt)
     }
   }
 
@@ -445,19 +369,12 @@ object Streams {
     val src = graft.sources.Catalog.table(spark, sfDir, "events")
       .select("user_id", "ts", "event_id", "event_type", "value")
     // the 4-range staged source is a pure function of the fixture —
-    // stage it once per generation (the eventsTypeStream discipline)
-    // so the timed body is the MERGE loop, not a re-split of the same
-    // input every run; the runDir reaper deletes it at process exit
-    val srcFile = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-    val attrs = java.nio.file.Files.readAttributes(
-      srcFile, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val stage = graft.Scratch.runDir("upsert-stage-" +
-      s"${math.abs(sfDir.hashCode)}-" +
-      s"${attrs.lastModifiedTime().toMillis}-${attrs.size()}")
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stage/_SUCCESS"))) {
-      src.repartitionByRange(4, col("event_id"))
-        .write.mode("overwrite").parquet(stage)
+    // stage it once per generation (`Scratch.once`) so the timed body
+    // is the MERGE loop, not a re-split of the same input every run
+    val stage = graft.Scratch.once("upsert-stage", s"$sfDir/events.parquet") {
+      d => src.repartitionByRange(4, col("event_id"))
+        .write.mode("overwrite").parquet(d)
+      d
     }
     val ckpt = graft.Scratch.dir("ckpt", s"upsert-${System.nanoTime()}")
     def keepLatest(df: DataFrame): DataFrame = df.groupBy("user_id")

@@ -30,15 +30,13 @@ object StreamScaleProbe {
     val only = args.toSeq
     val spark = graft.Harness.session(graft.Harness.cores)
 
-    // Staged-replica cache keyed on (mult, sfDir, fixture mtime+size):
+    // Staged-replica cache keyed on (mult, sfDir, fixture generation):
     // re-running at a different SF, or after a driver fixture
     // regeneration, must never reuse stale scaled data whose schema/ts
-    // encoding no longer matches the freshly-read footer (same
-    // generation-keying as Streams.stageEventsDir).
-    val fixture = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-    val attrs = java.nio.file.Files.readAttributes(
-      fixture, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val gen = s"${math.abs(sfDir.hashCode)}-${attrs.lastModifiedTime().toMillis}-${attrs.size()}"
+    // encoding no longer matches the freshly-read footer (the same
+    // generation key as Scratch.once).
+    val gen = s"${math.abs(sfDir.hashCode)}-" +
+      math.abs(Scratch.generation(s"$sfDir/events.parquet").hashCode)
     val dir = s"/tmp/graft-stream-x$mult-$gen"
     // Reap superseded generations for this (mult, sfDir) before writing
     // a new one: each scaled dataset is GBs at ×100, and unlike the
@@ -48,10 +46,10 @@ object StreamScaleProbe {
       .filter { f => f.isDirectory &&
         f.getName.startsWith(s"graft-stream-x$mult-${math.abs(sfDir.hashCode)}-") &&
         f.getName != s"graft-stream-x$mult-$gen" }
-      .foreach(f => Streams.deleteRecursively(f.getPath))
+      .foreach(f => Scratch.deleteRecursively(f.getPath))
     // also the pre-generation-key layout from earlier rounds
     if (new java.io.File(s"/tmp/graft-stream-x$mult").isDirectory)
-      Streams.deleteRecursively(s"/tmp/graft-stream-x$mult")
+      Scratch.deleteRecursively(s"/tmp/graft-stream-x$mult")
     if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
       val ev = graft.sources.Catalog.table(spark, sfDir, "events")
       ev.withColumn("r", explode(expr(s"sequence(0L, ${mult - 1}L)")))
@@ -98,7 +96,7 @@ object StreamScaleProbe {
         q.awaitTermination(); q.stop()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"""{"op":"$label","sec":$dt%.2f,"rows":${rows.sum()},"events_per_sec":${(nEvents / dt).toLong}}""")
-        Streams.deleteRecursively(ckpt)
+        Scratch.deleteRecursively(ckpt)
       }
 
     runCounted("tumbling_watermark")(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Catalog
 
+import scala.jdk.CollectionConverters._
+
 /** Fixture-drift canary.
   *
   * Round 6 lost ten queries to a silent fixture regeneration: the driver
@@ -91,24 +93,44 @@ class FixtureCanarySpec extends SparkSpec {
     // staging layer must key the staged copy on the file's generation
     // (mtime+size), never hand back the previous generation's dir.
     import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
     val tmp = Files.createTempDirectory("canary-regen")
     val fixture = tmp.resolve("events.parquet")
     Files.copy(Paths.get(s"$sf0001/events.parquet"), fixture,
       StandardCopyOption.REPLACE_EXISTING)
-    Files.setLastModifiedTime(fixture,
-      java.nio.file.attribute.FileTime.fromMillis(1000000000000L))
-    val gen1 = graft.streaming.Streams.stageEventsDir(fixture.toString)
+    Files.setLastModifiedTime(fixture, FileTime.fromMillis(1000000000000L))
+    val gen1 = graft.streaming.Streams.stagedTableDir(fixture.toString)
     // "regenerate": rewrite the file with a different mtime (content
     // identity is irrelevant to the key — any rewrite must re-stage)
-    Files.setLastModifiedTime(fixture,
-      java.nio.file.attribute.FileTime.fromMillis(2000000000000L))
-    val gen2 = graft.streaming.Streams.stageEventsDir(fixture.toString)
+    Files.setLastModifiedTime(fixture, FileTime.fromMillis(2000000000000L))
+    val gen2 = graft.streaming.Streams.stagedTableDir(fixture.toString)
     assert(gen1 != gen2,
       s"staging served the stale pre-regeneration dir $gen1")
     // and the staged entry resolves to the live fixture bytes
-    val staged = gen2.resolve("events.parquet")
+    val staged = Paths.get(gen2).resolve("events.parquet")
     assert(Files.exists(staged))
     assert(Files.size(staged) == Files.size(fixture))
+
+    // a batch artifact follows the same rule: scan_csv's staged CSV copy
+    // of customer is written once per generation, reused while the
+    // fixture is unchanged, and written again after it changes
+    val customer = tmp.resolve("customer.parquet")
+    Files.copy(Paths.get(s"$sf0001/customer.parquet"), customer)
+    def csvStages(): Int = {
+      val listing = Files.list(Paths.get(Scratch.runRoot))
+      try listing.iterator().asScala.count(_.getFileName.toString.startsWith("stage-csv-"))
+      finally listing.close()
+    }
+    def scanCsv() = SparkEntry.queries("scan_csv")(spark, tmp.toString).collect().toSeq
+    val before = csvStages()
+    val rows1 = scanCsv()
+    assert(csvStages() == before + 1)
+    assert(scanCsv() == rows1 && csvStages() == before + 1,
+      "an unchanged fixture must reuse its staged copy")
+    Files.setLastModifiedTime(customer, FileTime.fromMillis(2000000000000L))
+    assert(scanCsv() == rows1)
+    assert(csvStages() == before + 2,
+      "a regenerated fixture must be staged again")
   }
 
   test("streaming eventsStream decodes the same time axis as batch") {

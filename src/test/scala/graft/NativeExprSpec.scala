@@ -107,11 +107,18 @@ class NativeExprSpec extends SparkSpec {
     val emb = Seq(
       (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)), (3L, Seq(0.0, 0.0))
     ).toDF("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") === 1).select(col("embedding").as("q"))
+    val sims = emb.crossJoin(q)
+      .select(col("vec_id"), Similarity.cosine(col("q"), col("embedding"),
+        Similarity.norm(col("q")), Similarity.norm(col("embedding"))))
+      .as[(Long, Option[Double])].collect().toMap
+    assert(sims(2L).exists(_ > 0.9))
+    assert(sims(3L).isEmpty)
+    // exact top-k gives the null-similarity neighbour no slot
     val rows = Similarity.cosineTopK(
         emb, emb.filter(col("vec_id") === 1), "vec_id", "embedding", 2)
       .select("nid", "sim").as[(Long, Option[Double])].collect().toMap
-    assert(rows(2L).exists(_ > 0.9))
-    assert(rows(3L).isEmpty) // null sim, ranked after real neighbours
+    assert(rows.keySet == Set(2L) && rows(2L).exists(_ > 0.9))
   }
 
   test("srpSign deterministic and length-independent hashing") {

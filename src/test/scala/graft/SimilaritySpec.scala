@@ -36,7 +36,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("null-similarity neighbours: pins today's cosineTopK ranking (FOUND in CHANGES.md)") {
+  test("null-similarity neighbours take no top-k slot, as in lshTopK") {
     val emb = Seq(
       (1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(0.9, 0.1, 0.0)),
       (3L, Seq(0.0, 1.0)), (4L, Seq(0.0, 0.0, 0.0)))
@@ -44,12 +44,10 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Int, Long, Option[Double])].collect().sortBy(_._2).toSeq
-    // Today's output, not the intended contract: exact top-k still
-    // ranks the two null-similarity rows, after the scored one and by
-    // id, so they take two of the k slots. CHANGES.md logs this as a
-    // FOUND defect; a fix that drops them updates this expectation.
-    assert(rows(Similarity.cosineTopK(emb, q, "vec_id", "embedding", 3)) == Seq(
-      (1L, 1, 2L, Some(0.993884)), (1L, 2, 3L, None), (1L, 3, 4L, None)))
+    // a vector of another length (3) and a zero vector (4) have no
+    // similarity to the query, so only the scored neighbour ranks
+    assert(rows(Similarity.cosineTopK(emb, q, "vec_id", "embedding", 3)) ==
+      Seq((1L, 1, 2L, Some(0.993884))))
     // the LSH path keeps only the scored neighbour
     assert(rows(Similarity.lshTopK(emb, q, "vec_id", "embedding", 3, bits = 4)) ==
       Seq((1L, 1, 2L, Some(0.993884))))

@@ -349,6 +349,6 @@ class StreamsSpec extends SparkSpec {
       .select(col("user_id"), col("r.event_id"))
       .as[(Long, Long)].collect().toMap
     assert(streamed == expected)
-    Streams.deleteRecursively(out)
+    Scratch.deleteRecursively(out)
   }
 }
