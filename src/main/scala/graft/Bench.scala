@@ -4,7 +4,7 @@ object Bench {
 
   /** 1-minute load average — recorded in the bench line so a measure
     * taken on a contended box is visible in the artifact itself
-    * (BENCH_r05 recorded 5.1× baseline purely because ScaleBench jobs
+    * (BENCH_r05 recorded 5.1× baseline purely because ×N scale jobs
     * shared the box; the number was unexplainable from the record). */
   private def load1(): Double =
     try {

@@ -24,7 +24,7 @@ object Harness {
   def session(cores: Int): SparkSession = {
     // SPARK_GRAFT_LOCAL_DIRS (comma-separated) spreads shuffle spill
     // across several devices — the local.dir-lists-every-NVMe shape a
-    // real cluster node runs; the ×1000 ScaleBench verify shuffles
+    // real cluster node runs; a ×1000 `ScaleCorpus` dedup verify shuffles
     // (~80 GB) exceed any single device of a one-box run.
     val spill = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIRS", Scratch.dir("spark-local"))
     spill.split(',').foreach(d => Files.createDirectories(Paths.get(d)))

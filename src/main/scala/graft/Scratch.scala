@@ -16,10 +16,11 @@ object Scratch {
   import scala.jdk.CollectionConverters._
 
   /** SPARK_GRAFT_SCRATCH overrides the root: tmpfs pages count against
-    * RAM, so a big-corpus run (×1000 ScaleBench shuffles tens of GB)
-    * must route scratch to disk or the kernel OOM-kills the JVM —
-    * exactly the trade a real deployment makes choosing NVMe over
-    * ramdisk for shuffle. Benches at fixture scale keep tmpfs. */
+    * RAM, so a big-corpus run (a declared query on a ×1000
+    * `ScaleCorpus` dir shuffles tens of GB) must route scratch to disk
+    * or the kernel OOM-kills the JVM — exactly the trade a real
+    * deployment makes choosing NVMe over ramdisk for shuffle. Benches at
+    * fixture scale keep tmpfs. */
   lazy val root: String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
@@ -45,25 +46,36 @@ object Scratch {
   lazy val runRoot: String = {
     // sweep run roots left behind by crashed/killed prior JVMs — they
     // are unreachable by construction (nonce-keyed) and only eat tmpfs
+    reapOrphans(root, "run")
+    val d = dir(ownedName("run"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+    reapLater(d)
+    d
+  }
+
+  /** A new name `<prefix>-<pid>-<nonce>` owned by this JVM, for a dir
+    * that `reapOrphans` may delete once this JVM is gone. */
+  private[graft] def ownedName(prefix: String): String =
+    s"$prefix-${ProcessHandle.current().pid()}-${System.nanoTime()}"
+
+  /** Delete every `ownedName(prefix)` entry of `parent` whose process is
+    * no longer alive: what a crashed or killed JVM left half-written. */
+  private[graft] def reapOrphans(parent: String, prefix: String): Unit =
     try {
       val self = ProcessHandle.current().pid()
-      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get(parent))
       val stale = try listing.iterator().asScala.toList finally listing.close()
       stale
-        .filter(p => p.getFileName.toString.startsWith("run-"))
+        .filter(p => p.getFileName.toString.startsWith(s"$prefix-"))
         .filter { p =>
-          val pid = p.getFileName.toString.split("-").lift(1)
+          val pid = p.getFileName.toString.stripPrefix(s"$prefix-")
+            .split("-").headOption
             .flatMap(s => scala.util.Try(s.toLong).toOption)
           pid.exists(id => id != self &&
             !ProcessHandle.of(id).map[Boolean](_.isAlive).orElse(false))
         }
         .foreach(p => deleteRecursively(p.toString))
     } catch { case _: Exception => () }
-    val d = dir(s"run-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    reapLater(d)
-    d
-  }
 
   /** A path under the per-JVM-run staging root. */
   def runDir(parts: String*): String = (runRoot +: parts).mkString("/")

@@ -43,10 +43,13 @@ object Similarity {
     * engines that disagree in the last float ulp. A pair without a
     * similarity (a zero or NULL-element vector on either side, or
     * vectors of different lengths) is not a neighbour and takes no
-    * slot, as in `lshTopK`. Those pairs are dropped by their norms and
-    * lengths before the pair loop (a length-equality join key, not a
-    * filter on `sim`, which Catalyst would push below the projection
-    * and so compute the dot product twice per pair).
+    * slot, as in `lshTopK`. Those pairs never meet: the join key is
+    * the vector length, and a corpus vector without a positive norm
+    * gets the key -1, which no query length equals. (A filter on
+    * `sim` or on the corpus norm, or a NULL key with the not-null
+    * filter Catalyst infers for it, would be pushed below the
+    * projection that defines it and so compute the dot product twice
+    * per pair, or the norm twice per corpus row.)
     */
   def cosineTopK(
       corpus: DataFrame, queries: DataFrame,
@@ -54,13 +57,14 @@ object Similarity {
     val c = corpus.select(
       col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"))
       .withColumn("nnorm", norm(col("nvec")))
-      .filter(col("nnorm") > 0)
+      .withColumn("nlen",
+        coalesce(when(col("nnorm") > 0, size(col("nvec"))), lit(-1)))
     val q = queries.select(
       col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("qnorm", norm(col("qvec")))
       .filter(col("qnorm") > 0)
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("nid") && size(col("qvec")) === size(col("nvec")))
+    val scored = c.join(broadcast(q),
+        col("nlen") === size(col("qvec")) && col("qid") =!= col("nid"))
       .withColumn("sim",
         round(cosine(col("qvec"), col("nvec"), col("qnorm"), col("nnorm")), 6))
     // Plain per-qid top-k over SLIM (qid, nid, sim) rows. The per-query
@@ -105,9 +109,9 @@ object Similarity {
     * with the corpus (spec-pinned: growing nlist at fixed ratio keeps
     * recall), and raise nprobe when recall matters more than latency.
     *
-    * DEFAULT nprobe ≈ nlist/16 (6% probe fraction — ScaleBench's
-    * standing rule), now with measured evidence (graft.tools.IvfRecall,
-    * ×100 corpus: 200k × dim-64, nlist=447, 1000 queries vs brute-force
+    * DEFAULT nprobe ≈ nlist/16 (6% probe fraction), with measured
+    * evidence (graft.tools.IvfRecall, ×100 replica corpus of sf0.1:
+    * 200k × dim-64, nlist=447, 1000 queries vs brute-force
     * ground truth): recall@10 = 0.9882 at nprobe=9 (2%), 0.9998 at
     * nprobe=27 (6%), 1.0000 at nprobe=81 (18%), with cost linear in
     * the probe fraction past the fixed assignment stage. nlist/16 sits

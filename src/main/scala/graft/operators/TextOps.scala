@@ -291,8 +291,8 @@ object TextOps {
   /** Content fingerprint: md5 of the normalized text (lower, strip
     * non-alnum, collapse whitespace) — the exact-dedup key. The
     * normalization runs as the fused one-pass native kernel
-    * (graft.plans.TextNorm — the regex chain it replaces was ~55 s of
-    * the 500k-doc ScaleBench exact_dedup run); `fingerprintRegex` keeps
+    * (graft.plans.TextNorm — the regex chain took ~55 s of an exact
+    * dedup on a 500k-doc ×100 corpus); `fingerprintRegex` keeps
     * the reference regex form for the property spec, and the DuckDB
     * oracle recomputes that regex form, pinning the two cross-engine. */
   def fingerprint(text: Column): Column =
@@ -554,14 +554,14 @@ object TextOps {
     * failures surface) when this is called, not when the returned
     * merges frame is first consumed. */
   def bpeTrainMerges(wordFreq: DataFrame, k: Int): DataFrame =
-    bpeTrain(wordFreq, k)._1
+    bpeTrain(bpeBaseOf(wordFreq), k)._1
 
   /** Trained word→pieces segmentation table (word, freq, syms) after k
     * merge rounds — the vocab-sized artifact a tokenizer APPLIES: at
     * serve time corpus words broadcast-join against this table, so
     * tokenization never re-runs the fold per document. */
   def bpeVocabSyms(wordFreq: DataFrame, k: Int): DataFrame =
-    bpeTrain(wordFreq, k)._2
+    bpeTrain(bpeBaseOf(wordFreq), k)._2
 
   /** `bpeVocabSyms` plus the vocab row count, read once from the
     * trainer's eager base checkpoint (a cached-block scan, not a plan
@@ -572,7 +572,7 @@ object TextOps {
   def bpeVocabSymsWithCount(wordFreq: DataFrame, k: Int): (DataFrame, Long) = {
     val base = bpeBaseOf(wordFreq)
     val n = base.count()
-    (bpeTrainShards(Seq(base), k)._2, n)
+    (bpeTrain(base, k)._2, n)
   }
 
   /** BYTE-LEVEL base (the GPT-2-family variant): each word splits
@@ -591,7 +591,7 @@ object TextOps {
   /** Byte-level BPE merge training — bpeTrainMerges over the byte
     * base; identical greedy left-to-right non-overlapping semantics. */
   def bpeTrainMergesBytes(wordFreq: DataFrame, k: Int): DataFrame =
-    bpeTrainShards(Seq(bpeByteBaseOf(wordFreq)), k)._1
+    bpeTrain(bpeByteBaseOf(wordFreq), k)._1
 
   /** Byte-level trained segmentation table + row count (the
     * bpeVocabSymsWithCount twin for the serve-time join). */
@@ -599,7 +599,7 @@ object TextOps {
       k: Int): (DataFrame, Long) = {
     val base = bpeByteBaseOf(wordFreq)
     val n = base.count()
-    (bpeTrainShards(Seq(base), k)._2, n)
+    (bpeTrain(base, k)._2, n)
   }
 
   /** EXACT shared-substring spans WITH LOCATION — the Lee et al.
@@ -744,67 +744,30 @@ object TextOps {
       filter(split(col("word"), ""), s => s =!= "").as("syms"))
     .localCheckpoint()
 
-  private def bpeTrain(wordFreq: DataFrame, k: Int)
-      : (DataFrame, DataFrame) = bpeTrainShards(Seq(bpeBaseOf(wordFreq)), k)
-
-  /** Horizontally SHARDED trainer — the ×1000 decade's documented scale
-    * dimension, implemented. BASELINE.md records the ~300M-type step as
-    * spill/OOM-bound in exactly two places: the word-frequency hash
-    * aggregate (outright `[AGGREGATE_OUT_OF_MEMORY]` at 48g) and the
-    * ~30 GB single base checkpoint. Every word-keyed structure shards
-    * cleanly by xxhash64(word) — the aggregate, the base checkpoint,
-    * the per-round containment scan, and the pair-delta fold carry zero
-    * cross-shard state; only the tiny (a,b) pair-count table and the
-    * 1-row top-merge selection are global. `words` is the UN-aggregated
-    * token stream (column `word`, one row per occurrence) so the
-    * frequency aggregate itself runs at 1/shards size — merge output is
-    * IDENTICAL to the unsharded trainer (counts are sums over disjoint
-    * word sets; the global top-1 sees the same totals). On a cluster the
-    * shards are a dimension to spread across executor groups; on one
-    * box they run sequentially, trading passes for peak memory.
-    *
-    * EAGER, like bpeTrainMerges: training executes at construction
-    * time (per-round driver-side top-1 collect). */
-  def bpeTrainMergesSharded(words: DataFrame, k: Int,
-      shards: Int): DataFrame = {
-    require(shards >= 1, "shards must be >= 1")
-    val bases = (0 until shards).map { s =>
-      bpeBaseOf(words
-        .filter(pmod(xxhash64(col("word")), lit(shards)) === s)
-        .groupBy("word").agg(count(lit(1)).as("freq")))
-    }
-    bpeTrainShards(bases, k)._1
-  }
-
-  private def bpeTrainShards(bases: Seq[DataFrame], k: Int)
-      : (DataFrame, DataFrame) = {
-    // Each base shard is checkpointed ONCE and never re-derived. The
-    // per-shard current state is base ∖ rewritten-words ∪ overrides,
-    // where overrides is the (tiny, checkpointed-per-round) set of
-    // words any merge has touched — so every round reads the SAME flat
-    // base scans through one broadcast anti-join each, instead of
-    // replaying an ever-growing chain of per-round containment filters
-    // (profiled at ×100/30M types: the chained-filter form spent
-    // 11→143 s/round on replay; this form pays one ~constant scan per
-    // round per shard).
-    val spark = bases.head.sparkSession
+  /** Trains `k` merges on a checkpointed (word, freq, syms) base:
+    * (merge steps, final segmentation table). */
+  private def bpeTrain(base: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    // The base is checkpointed ONCE and never re-derived. The current
+    // state is base ∖ rewritten-words ∪ overrides, where overrides is
+    // the (tiny, checkpointed-per-round) set of words any merge has
+    // touched — so every round reads the SAME flat base scan through
+    // one broadcast anti-join, instead of replaying an ever-growing
+    // chain of per-round containment filters (profiled at ×100/30M
+    // types: the chained-filter form spent 11→143 s/round on replay;
+    // this form pays one ~constant scan per round).
+    val spark = base.sparkSession
     import org.apache.spark.sql.types._
-    def emptyOverrides = spark.createDataFrame(
+    var overrides = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType(Seq(StructField("word", StringType),
         StructField("freq", LongType),
         StructField("syms", ArrayType(StringType)))))
-    val overrides = Array.fill(bases.size)(emptyOverrides)
-    def current(s: Int): DataFrame = bases(s)
-      .join(broadcast(overrides(s).select("word")), Seq("word"), "left_anti")
-      .unionAll(overrides(s))
-    // The maintained GLOBAL pair-count table: distinct (a,b) symbol
-    // pairs only — tiny — merged from one full aggregation per shard.
-    var counts = bases
-      .map(b => bpePairs(b).groupBy("a", "b").agg(sum("freq").as("cnt"))
-        .localCheckpoint())
-      .reduce(_.unionAll(_))
-      .groupBy("a", "b").agg(sum("cnt").as("cnt"))
+    def current: DataFrame = base
+      .join(broadcast(overrides.select("word")), Seq("word"), "left_anti")
+      .unionAll(overrides)
+    // The maintained pair-count table: distinct (a,b) symbol pairs
+    // only — tiny — from one full aggregation.
+    var counts = bpePairs(base).groupBy("a", "b").agg(sum("freq").as("cnt"))
       .localCheckpoint()
     val stepRows = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long)]
@@ -849,32 +812,30 @@ object TextOps {
             concat(slice(acc, lit(1), size(acc) - 1), array(col("mm"))))
             .otherwise(concat(acc, array(x))))
         // Only the words CONTAINING (a,b) change this round; materialize
-        // their before/after symbol lists once per shard — the overrides
-        // update and the count delta both read from this small frame.
-        val deltas = bases.indices.map { s =>
-          val changed = current(s)
-            .crossJoin(broadcast(topLocal))
-            .filter(hasPair)
-            .select(col("word"), col("freq"), col("syms").as("old_syms"),
-              fold.as("syms"))
-            .localCheckpoint()
-          // lazy checkpoint: the (tiny) overrides table still
-          // materializes once and truncates lineage, but inside its
-          // first consumer's job instead of as its own eager job
-          overrides(s) = overrides(s)
-            .join(broadcast(changed.select("word")), Seq("word"), "left_anti")
-            .unionAll(changed.select(col("word"), col("freq"), col("syms")))
-            .localCheckpoint(false)
-          // Count delta: -old pairs +new pairs of the changed words. Every
-          // occurrence of (a,b) lives in a changed word by definition, so
-          // its count nets to <= 0 globally and the filter retires it.
-          bpePairs(changed.select(col("freq"),
-              col("old_syms").as("syms")))
-              .groupBy("a", "b").agg((-sum("freq")).as("cnt"))
-            .unionAll(bpePairs(changed)
-              .groupBy("a", "b").agg(sum("freq").as("cnt")))
-        }
-        counts = (counts +: deltas).reduce(_.unionAll(_))
+        // their before/after symbol lists once — the overrides update
+        // and the count delta both read from this small frame.
+        val changed = current
+          .crossJoin(broadcast(topLocal))
+          .filter(hasPair)
+          .select(col("word"), col("freq"), col("syms").as("old_syms"),
+            fold.as("syms"))
+          .localCheckpoint()
+        // lazy checkpoint: the (tiny) overrides table still
+        // materializes once and truncates lineage, but inside its
+        // first consumer's job instead of as its own eager job
+        overrides = overrides
+          .join(broadcast(changed.select("word")), Seq("word"), "left_anti")
+          .unionAll(changed.select(col("word"), col("freq"), col("syms")))
+          .localCheckpoint(false)
+        // Count delta: -old pairs +new pairs of the changed words. Every
+        // occurrence of (a,b) lives in a changed word by definition, so
+        // its count nets to <= 0 and the filter retires it.
+        val delta = bpePairs(changed.select(col("freq"),
+            col("old_syms").as("syms")))
+            .groupBy("a", "b").agg((-sum("freq")).as("cnt"))
+          .unionAll(bpePairs(changed)
+            .groupBy("a", "b").agg(sum("freq").as("cnt")))
+        counts = counts.unionAll(delta)
           .groupBy("a", "b").agg(sum("cnt").as("cnt"))
           .filter(col("cnt") > 0)
           .localCheckpoint(false)
@@ -884,7 +845,6 @@ object TextOps {
     }
     val steps = spark.createDataFrame(stepRows.toSeq)
       .toDF("step", "left_sym", "right_sym", "merged", "cnt")
-    (steps.orderBy("step"),
-      bases.indices.map(current).reduce(_.unionAll(_)))
+    (steps.orderBy("step"), current)
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * differentially pinned through llm_exact_dedup's hash compare, and a
   * property spec asserts byte-equality on the fixture corpus. The regex
   * chain walks the string three times through the java.util.regex
-  * machinery; at 500k ~900-char docs that was ~55 s of the ×100
-  * ScaleBench exact_dedup run — the normalization IS the scan kernel of
+  * machinery; at 500k ~900-char docs (a ×100 corpus) that was ~55 s of
+  * an exact dedup run — the normalization IS the scan kernel of
   * exact dedup at 100 TB, so it gets the native-loop treatment like the
   * MinHash/vector kernels beside it.
   *

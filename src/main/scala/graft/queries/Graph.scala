@@ -40,8 +40,7 @@ object Graph extends QueryModule {
   /** PageRank on a symmetric (src, dst) long-keyed edge list: uniform
     * init, `iters` rounds of one |E|-linear equi-join + one aggregate
     * on dst. Assumes no dangling nodes (symmetrize first). Returns
-    * (node, rank) unrounded — callers own the determinism contract.
-    * Reused by the declared query and by ScaleBench's ×N probe. */
+    * (node, rank) unrounded — callers own the determinism contract. */
   /** `symmetric = true` is the caller's promise that the edge list is
     * symmetrized (u→v implies v→u), so every node's in-neighbour set is
     * nonempty and the per-iteration left-join re-extension against the
@@ -136,9 +135,7 @@ object Graph extends QueryModule {
       "graph_pagerank",
       // The edge list is consumed by every iteration (plus deg/nodes):
       // localCheckpoint materializes the join+distinct ONCE instead of
-      // re-deriving it per consumer (ScaleBench's ×N probe passes its
-      // exploded edges unmaterialized on purpose — at 100M+ edges the
-      // recompute is cheaper than the scratch write).
+      // re-deriving it per consumer.
       // repartition+sort by src BEFORE the checkpoint: the materialized
       // RDD then already satisfies every iteration's join distribution
       // and sort order on src (LogicalRDD preserves both), so the

@@ -1506,8 +1506,8 @@ object Llm extends QueryModule {
     // same candidates→verify→components pipeline with the native
     // single-pass MinHash expressions and capped hot buckets — the
     // shape that runs at 100 TB. no-sql like the other _fast twins;
-    // the md5 form above is its oracle-green shape proof, and the
-    // ScaleBench 500k-doc spot-bench is its scale evidence.
+    // the md5 form above is its oracle-green shape proof; QueryProbe on
+    // a `ScaleCorpus` dir times it at ×N.
     QueryDef(
       "llm_dedup_groups_fast",
       (s, dir) => {
@@ -8200,12 +8200,11 @@ object Llm extends QueryModule {
     * after a kept match is dropped, the kept position becomes the
     * merged symbol. */
   /** Vocabulary coverage curve body, budget-parameterized (round 10):
-    * the declared llm_vocab_coverage runs it at the fixture's k=16;
-    * ScaleBench drives k=1000 on the ×100 corpus so the curve is
-    * exercised at a real budget. One fine-key count aggregate, a
-    * TakeOrdered top-k (never a global sort), a broadcast 1-row total;
-    * the rank/cumsum windows see only the k-row table — the
-    * tokens_to_ids family's documented bounded-input window class. */
+    * the declared llm_vocab_coverage runs it at the fixture's k=16.
+    * One fine-key count aggregate, a TakeOrdered top-k (never a global
+    * sort), a broadcast 1-row total; the rank/cumsum windows see only
+    * the k-row table — the tokens_to_ids family's documented
+    * bounded-input window class. */
   /** Okapi BM25 top-k over a (doc_id, text) corpus: queries are the
     * distinct first-5 tokens of docs with doc_id < nQueries, scored
     * through the inverted-index join (query terms → postings on

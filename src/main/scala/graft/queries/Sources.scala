@@ -665,9 +665,8 @@ object Sources extends QueryModule {
     // SHAPES key on the shard so they agree with its tables; literal
     // payloads vary per doc. The oracle recomputes the shard id and
     // the decoded content's length and byte-sum from the (d, g)
-    // closed forms. ScaleBench's zstd_dict_shared row (shard 4096)
-    // is the ×1000 evidence that the amortized parse restores
-    // near-zstd_decode cost.
+    // closed forms. The query takes a fixed 300-doc slice, so a ×N
+    // corpus does not scale it.
     QueryDef(
       "etl_zstd_dict_shared",
       (s, dir) => graft.operators.Zstd.sharedDictFeatures(

@@ -80,11 +80,7 @@ object StreamingBatch extends QueryModule {
     QueryDef(
       "stream_session",
       (s, dir) =>
-        Catalog.table(s, dir, "events")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"),
-            col("session_window.start").as("session_start"), col("n_events"))
+        Streams.sessionCounts(Catalog.table(s, dir, "events"))
           .orderBy("user_id", "session_start"),
       Some("""WITH x AS (SELECT user_id, ts, event_id,
           CASE WHEN lag(ts) OVER w IS NULL
@@ -329,12 +325,8 @@ object StreamingBatch extends QueryModule {
       "stream_session_true",
       (s, dir) => {
         val out = Streams.runToMemory(
-          Streams.eventsStream(s, dir)
-            .withWatermark("ts", "2 hours")
-            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(col("user_id"),
-              col("session_window.start").as("session_start"), col("n_events")),
+          Streams.sessionCounts(
+            Streams.eventsStream(s, dir).withWatermark("ts", "2 hours")),
           s"sst_${System.nanoTime()}", OutputMode.Append())
         out.orderBy("user_id", "session_start")
       },

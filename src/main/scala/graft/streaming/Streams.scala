@@ -30,9 +30,13 @@ object Streams {
     * Content rides a symlink where the filesystem allows (bytes never
     * duplicated), else a copy — and the copy is safe under regeneration
     * for the same reason. Shared by every streaming query of the run;
-    * the first consumer pays the staging in its timed region. */
+    * the first consumer pays the staging in its timed region. A table
+    * that is already a directory (a `ScaleCorpus` replica) is watched
+    * as it is: a link to it inside the staged dir would be replayed as
+    * no files at all. */
   private[graft] def stagedTableDir(file: String): String =
-    graft.Scratch.once("table-stream", file) { d =>
+    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(file))) file
+    else graft.Scratch.once("table-stream", file) { d =>
       val src = java.nio.file.Paths.get(file)
       val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
       // named after the source table: any fixture table is staged here
@@ -197,33 +201,49 @@ object Streams {
     catch { case _: Throwable => () }
   }
 
-  /** Stream-stream interval join: clicks joined to the views the same
-    * user produced within the following 2 hours. Both sides carry
-    * watermarks and the join condition carries the time bound, so each
-    * side's buffered state is evicted once the other side's watermark
-    * passes the interval — state stays O(active interval), not
-    * O(stream length), which is what makes the operator viable on an
-    * unbounded 100 TB stream. */
-  def clickViewJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val clicks = eventsTypeStream(spark, sfDir, "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    val views = eventsTypeStream(spark, sfDir, "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
+  /** Stream-stream interval join of views and clicks, `joinType` one
+    * of inner, left_outer, full_outer and right_outer: each view is
+    * paired with the clicks the same user made in the 2 hours before
+    * it. `views` and `clicks` are event streams of one type each; both
+    * sides carry 2 h watermarks and the join condition carries the time
+    * bound, so each side's buffered state is evicted once the other
+    * side's watermark passes the interval. State stays O(active
+    * interval), not O(stream length), for every join type: matched
+    * pairs stream out at once, and only the unmatched tail inside the
+    * watermark horizon is buffered. Rows are (user_id, view_id,
+    * click_id). */
+  def viewClickJoin(views: DataFrame, clicks: DataFrame,
+      joinType: String): DataFrame = {
+    val v = views
+      .select(col("user_id"), col("ts").as("view_ts"),
         col("event_id").as("view_id"))
       .withWatermark("view_ts", "2 hours")
-    clicks.join(views,
-      col("user_id") === col("v_user") &&
-        col("view_ts") >= col("click_ts") &&
-        col("view_ts") <= col("click_ts") + expr("INTERVAL 2 HOURS"))
-      .select(col("user_id"), col("click_id"), col("view_id"))
+    val c = clicks
+      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("click_ts", "2 hours")
+    v.join(c,
+      col("user_id") === col("c_user") &&
+        col("click_ts") >= col("view_ts") - expr("INTERVAL 2 HOURS") &&
+        col("click_ts") <= col("view_ts"),
+      joinType)
+      .select(coalesce(col("user_id"), col("c_user")).as("user_id"),
+        col("view_id"), col("click_id"))
   }
 
-  /** Stream-stream LEFT OUTER interval join: every view paired with
-    * the clicks the same user made in the 2 hours BEFORE it — and a
-    * view with no such click still emits exactly once, null-extended,
-    * when the watermark proves no future click can match it.
+  private def viewClickJoin(spark: SparkSession, sfDir: String,
+      joinType: String): DataFrame =
+    viewClickJoin(eventsTypeStream(spark, sfDir, "view"),
+      eventsTypeStream(spark, sfDir, "click"), joinType)
+
+  /** Inner interval join, as (user_id, click_id, view_id): every match
+    * emits on the data batch that completes it. */
+  def clickViewJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "inner").select("user_id", "click_id", "view_id")
+
+  /** LEFT OUTER: a view with no click in its preceding 2 h still emits
+    * exactly once, null-extended, when the watermark proves no future
+    * click can match it.
     *
     * The emit-time reasoning (this is what the oracle encodes): a view
     * at time t can match clicks with click_ts ∈ [t − 2h, t]. Clicks
@@ -234,80 +254,28 @@ object Streams {
     * unmatched views NEWER than that horizon are withheld — the same
     * Append-mode horizon semantics as the windowed aggregates, and the
     * same construction that makes this hard-oracle-able: the batch
-    * LEFT JOIN plus the horizon predicate on the null-extended rows.
-    *
-    * State stays O(active interval) on both sides exactly as the inner
-    * form: matched pairs stream out immediately; only the unmatched
-    * tail inside the watermark horizon is buffered. */
-  def viewClickLeftOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val views = eventsTypeStream(spark, sfDir, "view")
-      .select(col("user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "2 hours")
-    val clicks = eventsTypeStream(spark, sfDir, "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    views.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("click_ts") >= col("view_ts") - expr("INTERVAL 2 HOURS") &&
-        col("click_ts") <= col("view_ts"),
-      "left_outer")
-      .select(col("user_id"), col("view_id"), col("click_id"))
-  }
+    * LEFT JOIN plus the horizon predicate on the null-extended rows. */
+  def viewClickLeftOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "left_outer")
 
-  /** Stream-stream FULL OUTER interval join — both directions of the
-    * left-outer form at once: matched (view, click) pairs stream out
-    * immediately; a view with no click in its preceding 2 h emits
-    * (user, view, null) once the watermark passes view_ts (no future
-    * click with click_ts ≥ wm can satisfy click_ts ≤ view_ts); a
-    * click no view answered within 2 h emits (user, null, click) once
-    * the watermark passes click_ts + 2h (future views have
-    * view_ts ≥ wm but must satisfy view_ts ≤ click_ts + 2h). The two
-    * eviction horizons are ASYMMETRIC — exactly the per-side
-    * predicates the oracle encodes — and state on each side stays
-    * O(active interval), as in the inner form. */
-  def viewClickFullOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val views = eventsTypeStream(spark, sfDir, "view")
-      .select(col("user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "2 hours")
-    val clicks = eventsTypeStream(spark, sfDir, "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    views.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("click_ts") >= col("view_ts") - expr("INTERVAL 2 HOURS") &&
-        col("click_ts") <= col("view_ts"),
-      "full_outer")
-      .select(coalesce(col("user_id"), col("c_user")).as("user_id"),
-        col("view_id"), col("click_id"))
-  }
+  /** FULL OUTER — both directions of the left-outer form at once: a
+    * view with no click in its preceding 2 h emits (user, view, null)
+    * once the watermark passes view_ts (no future click with
+    * click_ts ≥ wm can satisfy click_ts ≤ view_ts); a click no view
+    * answered within 2 h emits (user, null, click) once the watermark
+    * passes click_ts + 2h (future views have view_ts ≥ wm but must
+    * satisfy view_ts ≤ click_ts + 2h). The two eviction horizons are
+    * ASYMMETRIC — exactly the per-side predicates the oracle encodes. */
+  def viewClickFullOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "full_outer")
 
-  /** Stream-stream RIGHT OUTER interval join — the remaining join
-    * form beside inner/left/full: matched (view, click) pairs stream
-    * out immediately; a click no view answered within 2 h emits
-    * (user, null, click) once the watermark passes click_ts + 2h
-    * (the top of its match window) — the click-side half of the
-    * full-outer form's asymmetric horizons, isolated. */
+  /** RIGHT OUTER: a click no view answered within 2 h emits
+    * (user, null, click) once the watermark passes click_ts + 2h (the
+    * top of its match window) — the click-side half of the full-outer
+    * form's asymmetric horizons, isolated. */
   def viewClickRightOuterJoin(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val views = eventsTypeStream(spark, sfDir, "view")
-      .select(col("user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "2 hours")
-    val clicks = eventsTypeStream(spark, sfDir, "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "2 hours")
-    views.join(clicks,
-      col("user_id") === col("c_user") &&
-        col("click_ts") >= col("view_ts") - expr("INTERVAL 2 HOURS") &&
-        col("click_ts") <= col("view_ts"),
-      "right_outer")
-      .select(col("c_user").as("user_id"), col("view_id"), col("click_id"))
-  }
+      sfDir: String): DataFrame =
+    viewClickJoin(spark, sfDir, "right_outer")
 
   /** Tumbling-window counts with a 2h watermark: late rows beyond the
     * watermark are dropped and window state is evicted. */
@@ -318,6 +286,16 @@ object Streams {
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))
       .select(col("window.start").as("ws"), col("event_type"),
         col("n"), col("total"))
+
+  /** Gap-based session windows (30 min gap) per user:
+    * (user_id, session_start, n_events). On a watermarked stream in
+    * Append mode a session emits once the watermark passes its end. */
+  def sessionCounts(events: DataFrame): DataFrame =
+    events
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("session_window.start").as("session_start"),
+        col("n_events"))
 
   /** Exactly-once by event_id inside the watermark horizon. */
   def dedupWithinWatermark(events: DataFrame): DataFrame =

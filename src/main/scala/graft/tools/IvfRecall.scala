@@ -3,15 +3,16 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.sources.Catalog
 
-/** Recall-vs-cost curve for ivfTopK on the ×100 corpus (200k × dim-64,
-  * nlist≈√N=447) — the evidence behind the documented nprobe default.
+/** Recall-vs-cost curve for ivfTopK on the ×100 `ScaleCorpus` of sf0.1
+  * (200k × dim-64, nlist≈√N=447) — the evidence behind the documented
+  * nprobe default.
   *
-  * 1000 deterministic queries (vec_id < 10000, id % 10 == 0 — a strict
-  * subset of ScaleBench's standard 10k query set); ground truth is the
-  * exact brute-force cosineTopK over the full corpus (same 6-digit
-  * rounding + id tiebreak as ivfTopK, so ranking ties can't pollute
-  * recall). recall@k = |IVF ∩ GT| / |GT| over all queries.
+  * 1000 deterministic queries (vec_id < 10000, id % 10 == 0); ground
+  * truth is the exact brute-force cosineTopK over the full corpus (same
+  * 6-digit rounding + id tiebreak as ivfTopK, so ranking ties can't
+  * pollute recall). recall@k = |IVF ∩ GT| / |GT| over all queries.
   *
   * Usage: SPARK_DRIVER_MEM honored by sbt fork; optional args:
   *   [nprobe,nprobe,...] [k]   (defaults 9,27,81 and 10)
@@ -23,9 +24,10 @@ object IvfRecall {
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val spark = graft.Harness.session(graft.Harness.cores)
 
-    // The ×100 embeddings parquet is ~one 128 MB scan partition — left
-    // alone, the 200M-pair brute force runs on ONE core. Spread it.
-    val emb = spark.read.parquet("/tmp/graft-scale-x100/embeddings.parquet")
+    // The 64 small files pack into a few scan partitions — left alone,
+    // the 200M-pair brute force runs on a few cores. Spread it.
+    val emb = Catalog.table(spark,
+        ScaleCorpus.dir(spark, ScaleCorpus.defaultSfDir, 100), "embeddings")
       .repartition(64).cache()
     val nlist = 447
     val queries = emb.filter(col("vec_id") < 10000 && col("vec_id") % 10 === 0)

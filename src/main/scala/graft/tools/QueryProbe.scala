@@ -9,7 +9,8 @@ import graft.{Harness, SparkEntry}
 /** Times declared queries at a given SF dir — dev utility for iterating
   * on query plans without a full Bench run. Warms up, forces and times
   * through graft.Harness exactly as Bench does, with Bench's k. For the
-  * per-job and per-layer split, run perfbench with `--trace 1`.
+  * per-job and per-layer split, run perfbench with `--trace 1`. On a
+  * `ScaleCorpus` dir it is the ×N timing.
   *
   * Usage: runMain graft.tools.QueryProbe [sfDir] name [name ...]
   * Env:   QP_PLANS=dir    also write explain("formatted") to dir/<name>.txt

@@ -39,26 +39,6 @@ class TextOpsSpec extends SparkSpec {
     assert(out(1L) == 3L && out(3L) == 1L && out(6L) == 3L)
   }
 
-  test("sharded BPE trainer emits identical merges to the unsharded form") {
-    // Counts are sums over disjoint word-hash shards, so the global
-    // top-1 each round must see the same totals — merge rules must be
-    // row-identical for any shard count, including shards > distinct
-    // words (some shards empty).
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-      .limit(80)
-    val words = docs.select(explode(split(col("text"), " ")).as("word"))
-    val wf = words.groupBy("word").agg(count(lit(1)).as("freq"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("step", "left_sym", "right_sym", "merged", "cnt")
-      .as[(Int, String, String, String, Long)].collect().toSeq
-    val base = rows(TextOps.bpeTrainMerges(wf, 5))
-    assert(base.size == 5)
-    Seq(3, 8).foreach { s =>
-      assert(rows(TextOps.bpeTrainMergesSharded(words, 5, s)) == base,
-        s"shards=$s diverged")
-    }
-  }
-
   test("joinSegmentation shuffle fallback matches the broadcast path") {
     // The broadcast guard must be output-invisible: force the fallback
     // with a zero threshold and compare row-for-row against the
