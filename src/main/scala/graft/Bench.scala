@@ -61,7 +61,7 @@ object Bench {
     val cachedStart = cachedGb()
     val sectorsStart = sectorsRead()
     val spark = Harness.session(Harness.cores)
-    Harness.warmUp(spark)
+    Harness.warmUp(spark, Harness.suite.map(_._1))
     // Stage the target-SF format round-trips untimed (Scratch.once:
     // written once per fixture generation in this run and reused): the
     // timed scan_* queries measure the READ path, not a first-run

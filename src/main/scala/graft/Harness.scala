@@ -81,19 +81,21 @@ object Harness {
     batch ++ streaming
   }
 
-  /** Run the WHOLE suite untimed at the smallest fixture. One tiny
-    * query is not enough — the first timed queries otherwise pay
-    * JVM-wide costs that have nothing to do with them: whole-stage
-    * codegen compilation, parquet/orc reader init, and (measured at
-    * ~8 s) the streaming micro-batch + state store machinery, which
-    * all of it lands on whichever stream_* query happens to run first.
-    * Plans at sf0.001 have the same shapes, so JIT profiles carry over,
-    * and so do the compiled classes: the ~3,500 this warm-up compiles
-    * fit in the generated-class cache GraftExtensions sizes
-    * (CodegenCacheEntries). */
-  def warmUp(spark: SparkSession): Unit = {
-    suite.foreach { case (_, fn) =>
-      try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+  /** Run the named queries untimed at the smallest fixture, in the
+    * given order: Bench warms the whole `suite`, QueryProbe only the
+    * queries it times. One tiny query is not enough — the first timed
+    * queries otherwise pay JVM-wide costs that have nothing to do with
+    * them: whole-stage codegen compilation, parquet/orc reader init,
+    * and (measured at ~8 s) the streaming micro-batch + state store
+    * machinery, which all of it lands on whichever stream_* query
+    * happens to run first. Plans at sf0.001 have the same shapes, so
+    * JIT profiles carry over, and so do the compiled classes: the
+    * ~3,500 a whole-suite warm-up compiles fit in the generated-class
+    * cache GraftExtensions sizes (CodegenCacheEntries). */
+  def warmUp(spark: SparkSession, names: Seq[String]): Unit = {
+    val queries = SparkEntry.queries
+    names.foreach { n =>
+      try force(queries(n)(spark, warmDir)) catch { case _: Throwable => () }
     }
     spark.catalog.clearCache()
   }

@@ -195,8 +195,7 @@ object JxJson {
         // query with "archive_docs" — never a silent truncation.
         graft.operators.Multimodal.webTextFeatures(
           graft.operators.Multimodal.synthWarcWebGzMedia(
-            archiveDocIds(spark, sfDir, q), "doc_id"),
-          "id", gz = true)
+            archiveDocIds(spark, sfDir, q)), gz = true)
       // the MARKDOWN front door: `"from": "docs:markdown"` exposes the
       // extracted README/wiki fixture corpus (operators/Markdown) the
       // same way — extraction is partition-local map work ahead of
@@ -210,7 +209,7 @@ object JxJson {
       case JString("docs:pdf") =>
         graft.operators.Pdf.textFeatures(
           graft.operators.Pdf.synthDf(
-            archiveDocIds(spark, sfDir, q), "doc_id"),
+            archiveDocIds(spark, sfDir, q)),
           "id", "pdf")
       // the MIXED front door: `"from": "docs:any"` exposes the
       // mime-dispatched mixed-format corpus (html/markdown/pdf via
@@ -219,12 +218,11 @@ object JxJson {
       case JString("docs:any") =>
         graft.operators.Multimodal.docDispatchFeatures(
           graft.operators.Multimodal.synthMixedDocsMedia(
-            archiveDocIds(spark, sfDir, q), "doc_id"),
-          "id")
+            archiveDocIds(spark, sfDir, q)), "id")
       case JString("docs:markdown") =>
         graft.operators.Markdown.features(
           graft.operators.Markdown.synthDf(
-            archiveDocIds(spark, sfDir, q), "doc_id"),
+            archiveDocIds(spark, sfDir, q)),
           "id", "md")
       // the EPUB front door: `"from": "docs:epub"` exposes the
       // chapter-level ebook corpus (operators/Epub — OCF walk + OPF
@@ -234,21 +232,21 @@ object JxJson {
       // sources.
       case JString("docs:epub") =>
         graft.operators.Epub.epubFeatures(
-          archiveDocIds(spark, sfDir, q), "doc_id")
+          archiveDocIds(spark, sfDir, q))
       // the FEED front door: `"from": "web:feeds"` exposes the
       // RSS/Atom change-feed corpus (operators/Feed) beside the
       // archive source — one row per entry, dialect column included,
       // parse as partition-local map work; same bound and override.
       case JString("web:feeds") =>
         graft.operators.Feed.feedFeatures(
-          archiveDocIds(spark, sfDir, q), "doc_id")
+          archiveDocIds(spark, sfDir, q))
       // the AUDIO front door: `"from": "media:audio"` exposes the
       // Opus-in-Ogg walk (operators/Ogg.oggFeatures — pages, packets,
       // TOC mode counts, duration) the same way; walk as
       // partition-local map work, same bound and override.
       case JString("media:audio") =>
         graft.operators.Ogg.oggFeatures(
-          archiveDocIds(spark, sfDir, q), "doc_id")
+          archiveDocIds(spark, sfDir, q))
       // the IMAGE front door: `"from": "media:images"` exposes the
       // WebP container-walk features (operators/Webp.metaFeatures —
       // kind, canvas, feature flags, lossy header fields) so image-
@@ -257,7 +255,7 @@ object JxJson {
       // work, same fixture bound and "archive_docs" override.
       case JString("media:images") =>
         graft.operators.Webp.metaFeatures(
-          archiveDocIds(spark, sfDir, q), "doc_id")
+          archiveDocIds(spark, sfDir, q))
       // the VIDEO front door: `"from": "media:video"` exposes the
       // WebM/EBML walk (operators/Webm.webmFeatures — tracks,
       // clusters, per-block VP8 key-frame header decode, Opus TOC,
@@ -265,7 +263,7 @@ object JxJson {
       // curation gate beside images and audio; same bound/override.
       case JString("media:video") =>
         graft.operators.Webm.webmFeatures(
-          archiveDocIds(spark, sfDir, q), "doc_id")
+          archiveDocIds(spark, sfDir, q))
       case JString(from) =>
         val segs = from.split('.')
         segs.tail.foldLeft(Catalog.table(spark, sfDir, segs.head))(descendInto)

@@ -113,16 +113,10 @@ object Adts {
     StructField("duration_ms", LongType)))
 
   /** ids -> closed-form ADTS stream -> frame walk. Per-doc map work. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.profile, m.sampleRate, m.channels, m.nFrames,
-          m.nRawBlocks, m.totalBytes, m.maxFullness, m.durationMs)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.profile, m.sampleRate, m.channels, m.nFrames,
+        m.nRawBlocks, m.totalBytes, m.maxFullness, m.durationMs))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

@@ -553,16 +553,10 @@ object ArrowIpc {
 
   /** ids → footer + message-header walk of the closed-form .arrow
     * file. Per-doc map work. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = walk(synth(d))
-        Row(d, m.nFields, m.fieldSig, m.nBatches, m.nDicts, m.nRows,
-          m.nullCount, m.bodyBytes, m.version)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = walk(synth(d))
+      Iterator.single(Row(d, m.nFields, m.fieldSig, m.nBatches, m.nDicts,
+        m.nRows, m.nullCount, m.bodyBytes, m.version))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

@@ -717,22 +717,16 @@ object Avc {
 
   /** ids → synth real Annex-B IDR stream → decode for real → exact
     * integer frame features. Per-doc map work, no shuffle. */
-  def iframeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val f = decodeIFrame(synthIFrame(d))
-        var sy = 0L; var scb = 0L; var scr = 0L
-        f.y.foreach(sy += _)
-        f.cb.foreach(scb += _)
-        f.cr.foreach(scr += _)
-        Row(d, f.width, f.height, sy, scb, scr,
-          f.y(5 * f.width + 20), f.y(9 * f.width + 44))
-      }
+  def iframeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, frameSchema) { d =>
+      val f = decodeIFrame(synthIFrame(d))
+      var sy = 0L; var scb = 0L; var scr = 0L
+      f.y.foreach(sy += _)
+      f.cb.foreach(scb += _)
+      f.cr.foreach(scr += _)
+      Iterator.single(Row(d, f.width, f.height, sy, scb, scr,
+        f.y(5 * f.width + 20), f.y(9 * f.width + 44)))
     }
-    ids.sparkSession.createDataFrame(rdd, frameSchema)
-  }
 
   // ------------------------------------------- AVC-in-MP4 keyframes
 
@@ -801,26 +795,18 @@ object Avc {
     * reframe COMPOSED with the I-frame decoder — the H.264 analog of
     * videoFrameFeatures' MJPEG composition, one row per keyframe.
     * Per-doc map work, no shuffle. */
-  def keyframeFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val (spsNal, ppsNal, lenSize) = Codecs.avccParameterSets(bytes)
-        Codecs.mp4SampleSlices(bytes).iterator.map { case (idx, slice) =>
-          val f = decodeIFrame(
-            avccSampleToAnnexB(spsNal, ppsNal, lenSize, slice))
-          var sy = 0L; var scb = 0L; var scr = 0L
-          f.y.foreach(sy += _)
-          f.cb.foreach(scb += _)
-          f.cr.foreach(scr += _)
-          Row(d, idx, f.width, f.height, sy, scb, scr,
-            f.y(5 * f.width + 20), f.y(9 * f.width + 44))
-        }
+  def keyframeFeatures(df: DataFrame): DataFrame =
+    PerDoc.walkMedia(df, keyframeSchema) { (d, bytes) =>
+      val (spsNal, ppsNal, lenSize) = Codecs.avccParameterSets(bytes)
+      Codecs.mp4SampleSlices(bytes).iterator.map { case (idx, slice) =>
+        val f = decodeIFrame(
+          avccSampleToAnnexB(spsNal, ppsNal, lenSize, slice))
+        var sy = 0L; var scb = 0L; var scr = 0L
+        f.y.foreach(sy += _)
+        f.cb.foreach(scb += _)
+        f.cr.foreach(scr += _)
+        Row(d, idx, f.width, f.height, sy, scb, scr,
+          f.y(5 * f.width + 20), f.y(9 * f.width + 44))
       }
     }
-    df.sparkSession.createDataFrame(rdd, keyframeSchema)
-  }
 }

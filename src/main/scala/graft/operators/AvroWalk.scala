@@ -199,15 +199,9 @@ object AvroWalk {
 
   /** ids → one row per contained record — per-doc map work like the
     * other container walks. */
-  def avroFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        parse(synth(d)).iterator.map(a =>
-          Row(d, a.blockIdx, a.recIdx, a.recId, a.name, a.score))
-      }
+  def avroFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      parse(synth(d)).iterator.map(a =>
+        Row(d, a.blockIdx, a.recIdx, a.recId, a.name, a.score))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

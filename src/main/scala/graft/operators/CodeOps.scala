@@ -95,14 +95,11 @@ object CodeOps {
       srcCol: String): DataFrame = {
     val idIdx = df.schema.fieldIndex(idCol)
     val srcIdx = df.schema.fieldIndex(srcCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val s = strip(r.getString(srcIdx))
-        Row(r.getLong(idIdx), s.text, s.nLineComments, s.nBlockComments,
-          s.nStrings, s.nLinesKept)
-      }
+    PerDoc.rows(df, stripSchema) { r =>
+      val s = strip(r.getString(srcIdx))
+      Iterator.single(Row(r.getLong(idIdx), s.text, s.nLineComments,
+        s.nBlockComments, s.nStrings, s.nLinesKept))
     }
-    df.sparkSession.createDataFrame(rdd, stripSchema)
   }
 
   /** Closed-form C-family source for doc id d — a header line comment,
@@ -119,14 +116,10 @@ object CodeOps {
       s"z${d % 4}++; // t${d % 6}\n"
 
   /** ids → (id, src) rows of closed-form source text. */
-  def synthDf(ids: DataFrame, idCol: String): DataFrame = {
+  def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("src", StringType)))
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r => val d = r.getLong(idIdx); Row(d, synthSrc(d)) }
-    }
-    ids.sparkSession.createDataFrame(rdd, outSchema)
+    PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthSrc(d))))
   }
 
   // ---------------------------------------------------------------- //

@@ -157,16 +157,10 @@ object Epub {
 
   /** ids → one row per chapter IN SPINE ORDER over the closed-form
     * fixture — per-doc map work like the other container walks. */
-  def epubFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val b = parse(synth(d))
-        b.chapters.iterator.map(c =>
-          Row(d, c.spineIdx, c.href, c.title, c.nWords, b.title))
-      }
+  def epubFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val b = parse(synth(d))
+      b.chapters.iterator.map(c =>
+        Row(d, c.spineIdx, c.href, c.title, c.nWords, b.title))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

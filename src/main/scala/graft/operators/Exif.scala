@@ -192,16 +192,10 @@ object Exif {
     StructField("datetime", StringType)))
 
   /** ids → parsed EXIF features over closed-form fixtures. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.endian, m.nEntries, m.orientation, m.width, m.make,
-          m.dateTime)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, metaSchema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.endian, m.nEntries, m.orientation, m.width,
+        m.make, m.dateTime))
     }
-    ids.sparkSession.createDataFrame(rdd, metaSchema)
-  }
 }

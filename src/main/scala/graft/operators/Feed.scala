@@ -295,18 +295,12 @@ object Feed {
 
   /** ids → one row per feed entry over the closed-form fixture —
     * pure map work like sitemapFeatures. */
-  def feedFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val dialect = if (isRss(d)) "rss" else "atom"
-        parse(synth(d)).zipWithIndex.iterator.map { case (e, j) =>
-          Row(d, j, e.title, e.link, java.sql.Date.valueOf(e.published),
-            e.pubHour, e.nWords, dialect)
-        }
+  def feedFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val dialect = if (isRss(d)) "rss" else "atom"
+      parse(synth(d)).zipWithIndex.iterator.map { case (e, j) =>
+        Row(d, j, e.title, e.link, java.sql.Date.valueOf(e.published),
+          e.pubHour, e.nWords, dialect)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

@@ -1005,27 +1005,22 @@ object Flac {
     * path: Rice + fixed/LPC predictors + stereo decorrelation + both
     * CRCs on the oracle path). Zero crossings are counted PER CHANNEL
     * over the interleaved output and summed. */
-  def audioFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val a = decodeAudio(synthAudio(d))
-        var peak = 0; var zc = 0L; var sq = 0L
-        var i = 0
-        while (i < a.samples.length) {
-          val v = a.samples(i)
-          if (math.abs(v) > peak) peak = math.abs(v)
-          if (i >= a.channels && a.samples(i - a.channels) < 0 && v >= 0)
-            zc += 1
-          sq += v.toLong * v
-          i += 1
-        }
-        Row(d, a.samples.length, a.channels, a.sampleRate, peak, zc, sq)
+  def audioFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, audioSchema) { d =>
+      val a = decodeAudio(synthAudio(d))
+      var peak = 0; var zc = 0L; var sq = 0L
+      var i = 0
+      while (i < a.samples.length) {
+        val v = a.samples(i)
+        if (math.abs(v) > peak) peak = math.abs(v)
+        if (i >= a.channels && a.samples(i - a.channels) < 0 && v >= 0)
+          zc += 1
+        sq += v.toLong * v
+        i += 1
       }
+      Iterator.single(Row(d, a.samples.length, a.channels, a.sampleRate, peak,
+        zc, sq))
     }
-    ids.sparkSession.createDataFrame(rdd, audioSchema)
-  }
 
   private val metaSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1038,16 +1033,10 @@ object Flac {
     StructField("title", StringType)))
 
   /** ids → parsed metadata features over closed-form FLAC shells. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = meta(synth(d))
-        Row(d, m.sampleRate, m.channels, m.bitsPerSample, m.totalSamples,
-          m.durationMs, m.nBlocks, m.title)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, metaSchema) { d =>
+      val m = meta(synth(d))
+      Iterator.single(Row(d, m.sampleRate, m.channels, m.bitsPerSample,
+        m.totalSamples, m.durationMs, m.nBlocks, m.title))
     }
-    ids.sparkSession.createDataFrame(rdd, metaSchema)
-  }
 }

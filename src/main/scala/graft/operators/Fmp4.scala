@@ -335,18 +335,12 @@ object Fmp4 {
   /** ids -> closed-form fMP4 -> fragment walk -> per-sample rows.
     * Per-doc map work: at 100 TB the walk costs the scan stage only,
     * like the moov-path llm_video_sample_bytes. */
-  def dataSampleFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        fragmentSamples(synthFmp4Data(d)).iterator.map(s =>
-          Row(d, s.fragIdx, s.seq.toInt, s.tfdt, s.globalIdx, s.size,
-            s.byteSum, if (s.fromDefault) 1 else 0))
-      }
+  def dataSampleFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, sampleSchema) { d =>
+      fragmentSamples(synthFmp4Data(d)).iterator.map(s =>
+        Row(d, s.fragIdx, s.seq.toInt, s.tfdt, s.globalIdx, s.size,
+          s.byteSum, if (s.fromDefault) 1 else 0))
     }
-    ids.sparkSession.createDataFrame(rdd, sampleSchema)
-  }
 
   private val keyframeSchema = StructType(Seq(
     StructField("id", LongType),
@@ -363,25 +357,19 @@ object Fmp4 {
   /** ids -> AVCC fMP4 -> fragment walk -> AVCC->Annex-B reframe ->
     * REAL H.264 I-frame decode per sample — llm_video_keyframes'
     * composition over the fragmented layout. */
-  def keyframeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val bytes = synthIdrFmp4(d)
-        val (spsNal, ppsNal, lenSize) = Codecs.avccParameterSets(bytes)
-        fragmentSamples(bytes).iterator.map { s =>
-          val f = Avc.decodeIFrame(
-            Avc.avccSampleToAnnexB(spsNal, ppsNal, lenSize, s.slice))
-          var sy = 0L; var scb = 0L; var scr = 0L
-          f.y.foreach(sy += _)
-          f.cb.foreach(scb += _)
-          f.cr.foreach(scr += _)
-          Row(d, s.fragIdx, s.globalIdx, f.width, f.height, sy, scb, scr,
-            f.y(5 * f.width + 20), f.y(9 * f.width + 44))
-        }
+  def keyframeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, keyframeSchema) { d =>
+      val bytes = synthIdrFmp4(d)
+      val (spsNal, ppsNal, lenSize) = Codecs.avccParameterSets(bytes)
+      fragmentSamples(bytes).iterator.map { s =>
+        val f = Avc.decodeIFrame(
+          Avc.avccSampleToAnnexB(spsNal, ppsNal, lenSize, s.slice))
+        var sy = 0L; var scb = 0L; var scr = 0L
+        f.y.foreach(sy += _)
+        f.cb.foreach(scb += _)
+        f.cr.foreach(scr += _)
+        Row(d, s.fragIdx, s.globalIdx, f.width, f.height, sy, scb, scr,
+          f.y(5 * f.width + 20), f.y(9 * f.width + 44))
       }
     }
-    ids.sparkSession.createDataFrame(rdd, keyframeSchema)
-  }
 }

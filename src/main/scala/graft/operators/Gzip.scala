@@ -184,18 +184,12 @@ object Gzip {
 
   /** ids -> multi-member .gz -> member walk with verified trailers.
     * Per-doc map work. */
-  def memberFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        members(synth(d)).zipWithIndex.iterator.map { case (m, i) =>
-          Row(d, i, m.name, m.mtime, m.os,
-            if (m.hasExtra) 1 else 0, if (m.hasComment) 1 else 0,
-            if (m.hasHcrc) 1 else 0, m.contentLen, m.contentSum)
-        }
+  def memberFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      members(synth(d)).zipWithIndex.iterator.map { case (m, i) =>
+        Row(d, i, m.name, m.mtime, m.os,
+          if (m.hasExtra) 1 else 0, if (m.hasComment) 1 else 0,
+          if (m.hasHcrc) 1 else 0, m.contentLen, m.contentSum)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

@@ -352,19 +352,13 @@ object Hevc {
     StructField("height", IntegerType)))
 
   /** ids -> hvcC-in-MP4 shell -> record walk + SPS cross-check. */
-  def hvccFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = hvccMeta(synthHevcMp4(d))
-        Row(d, m.nVps, m.nSps, m.nPps, m.nalLenSize, m.tier, m.profile,
-          m.level, m.chromaFormat, m.bitDepthLuma, m.bitDepthChroma,
-          m.width, m.height)
-      }
+  def hvccFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, hvccSchema) { d =>
+      val m = hvccMeta(synthHevcMp4(d))
+      Iterator.single(Row(d, m.nVps, m.nSps, m.nPps, m.nalLenSize, m.tier,
+        m.profile, m.level, m.chromaFormat, m.bitDepthLuma, m.bitDepthChroma,
+        m.width, m.height))
     }
-    ids.sparkSession.createDataFrame(rdd, hvccSchema)
-  }
 
   // ---------------------------------------------------- Spark features
 
@@ -387,17 +381,11 @@ object Hevc {
   /** ids -> closed-form HEVC shell -> NAL/SPS walk. Pure per-doc map
     * work — the scan-stage-only gate a 100 TB video corpus runs
     * before deciding what to transcode or decode. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = nalMeta(synthHevcStream(d))
-        Row(d, m.framing, m.nNals, m.nSlices, if (m.hasVps) 1 else 0,
-          m.tier, m.profile, m.level, m.width, m.height, m.chromaFormat,
-          m.bitDepthLuma, m.bitDepthChroma, m.ppsRbspLen)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, metaSchema) { d =>
+      val m = nalMeta(synthHevcStream(d))
+      Iterator.single(Row(d, m.framing, m.nNals, m.nSlices,
+        if (m.hasVps) 1 else 0, m.tier, m.profile, m.level, m.width, m.height,
+        m.chromaFormat, m.bitDepthLuma, m.bitDepthChroma, m.ppsRbspLen))
     }
-    ids.sparkSession.createDataFrame(rdd, metaSchema)
-  }
 }

@@ -118,16 +118,10 @@ object Icc {
     StructField("n_tags", IntegerType)))
 
   /** ids -> closed-form profile -> header walk. Per-doc map work. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.size, m.verMajor, m.verMinor, m.deviceClass,
-          m.colorSpace, m.pcs, m.intent, m.year, m.month, m.nTags)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.size, m.verMajor, m.verMinor, m.deviceClass,
+        m.colorSpace, m.pcs, m.intent, m.year, m.month, m.nTags))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

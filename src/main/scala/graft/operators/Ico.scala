@@ -102,16 +102,10 @@ object Ico {
     StructField("sum_b", LongType)))
 
   /** ids -> favicon -> directory walk + full PNG decode per entry. */
-  def features(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        entries(synth(d)).zipWithIndex.iterator.map { case (e, i) =>
-          Row(d, i, e.width, e.height, e.bpp, e.sumR, e.sumG, e.sumB)
-        }
+  def features(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      entries(synth(d)).zipWithIndex.iterator.map { case (e, i) =>
+        Row(d, i, e.width, e.height, e.bpp, e.sumR, e.sumG, e.sumB)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

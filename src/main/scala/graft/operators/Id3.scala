@@ -124,15 +124,10 @@ object Id3 {
     StructField("year", IntegerType)))
 
   /** ids → parsed tag features over closed-form fixtures. */
-  def tagFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val t = parse(synth(d))
-        Row(d, t.tagSize, t.nFrames, t.title, t.artist, t.album, t.year)
-      }
+  def tagFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, tagSchema) { d =>
+      val t = parse(synth(d))
+      Iterator.single(Row(d, t.tagSize, t.nFrames, t.title, t.artist, t.album,
+        t.year))
     }
-    ids.sparkSession.createDataFrame(rdd, tagSchema)
-  }
 }

@@ -137,14 +137,10 @@ object Markdown {
   }
 
   /** ids → (id, md) rows of closed-form markdown. */
-  def synthDf(ids: DataFrame, idCol: String): DataFrame = {
+  def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("md", StringType)))
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r => val d = r.getLong(idIdx); Row(d, synthMd(d)) }
-    }
-    ids.sparkSession.createDataFrame(rdd, outSchema)
+    PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthMd(d))))
   }
 
   /** Per-partition extraction: (id, text, n_headings, n_links,
@@ -161,15 +157,12 @@ object Markdown {
       StructField("first_link", StringType)))
     val idIdx = df.schema.fieldIndex(idCol)
     val mdIdx = df.schema.fieldIndex(mdCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val doc = extract(r.getString(mdIdx))
-        val nWords = if (doc.text.isEmpty) 0 else doc.text.split(" ").length
-        Row(r.getLong(idIdx), doc.text, doc.nHeadings, doc.links.length,
-          doc.nCodeBlocks, doc.nListItems, nWords,
-          if (doc.links.nonEmpty) doc.links(0) else null)
-      }
+    PerDoc.rows(df, outSchema) { r =>
+      val doc = extract(r.getString(mdIdx))
+      val nWords = if (doc.text.isEmpty) 0 else doc.text.split(" ").length
+      Iterator.single(Row(r.getLong(idIdx), doc.text, doc.nHeadings,
+        doc.links.length, doc.nCodeBlocks, doc.nListItems, nWords,
+        if (doc.links.nonEmpty) doc.links(0) else null))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 }

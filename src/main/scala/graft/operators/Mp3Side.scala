@@ -125,48 +125,42 @@ object Mp3Side {
     * aggregates (transient density, loudness, reservoir pressure)
     * plus a frame-0 probe. Per-doc map work; the frame walk advances
     * by the same computed lengths as Codecs.mp3Meta. */
-  def features(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = Codecs.synthMp3(d)
-        var pos = Codecs.mp3Id3v2Len(bytes)
-        var nFrames = 0
-        var nSwitch = 0
-        var nShort = 0
-        var gainSum = 0L
-        var maxMdb = 0
-        var nch = 0
-        var f0p23 = -1
-        var f0big = -1
-        var done = false
-        while (!done) {
-          if (pos >= bytes.length - 128 &&
-            (pos == bytes.length ||
-              (bytes.length - pos == 128 && bytes(pos) == 'T'))) done = true
-          else {
-            val (frameLen, channels) = Codecs.mp3FrameHeader(bytes, pos)
-            nch = channels
-            val si = parse(bytes, pos + 4, channels)
-            if (nFrames == 0) {
-              f0p23 = si.grans.head.part23Len
-              f0big = si.grans.head.bigValues
-            }
-            si.grans.foreach { gc =>
-              gainSum += gc.globalGain
-              if (gc.windowSwitching) nSwitch += 1
-              if (gc.blockType == 2) nShort += 1
-            }
-            if (si.mainDataBegin > maxMdb) maxMdb = si.mainDataBegin
-            nFrames += 1
-            pos += frameLen
+  def features(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val bytes = Codecs.synthMp3(d)
+      var pos = Codecs.mp3Id3v2Len(bytes)
+      var nFrames = 0
+      var nSwitch = 0
+      var nShort = 0
+      var gainSum = 0L
+      var maxMdb = 0
+      var nch = 0
+      var f0p23 = -1
+      var f0big = -1
+      var done = false
+      while (!done) {
+        if (pos >= bytes.length - 128 &&
+          (pos == bytes.length ||
+            (bytes.length - pos == 128 && bytes(pos) == 'T'))) done = true
+        else {
+          val (frameLen, channels) = Codecs.mp3FrameHeader(bytes, pos)
+          nch = channels
+          val si = parse(bytes, pos + 4, channels)
+          if (nFrames == 0) {
+            f0p23 = si.grans.head.part23Len
+            f0big = si.grans.head.bigValues
           }
+          si.grans.foreach { gc =>
+            gainSum += gc.globalGain
+            if (gc.windowSwitching) nSwitch += 1
+            if (gc.blockType == 2) nShort += 1
+          }
+          if (si.mainDataBegin > maxMdb) maxMdb = si.mainDataBegin
+          nFrames += 1
+          pos += frameLen
         }
-        Row(d, nFrames, nch, nFrames * 2 * nch, nSwitch, nShort,
-          gainSum, maxMdb, f0p23, f0big)
       }
+      Iterator.single(Row(d, nFrames, nch, nFrames * 2 * nch, nSwitch, nShort,
+        gainSum, maxMdb, f0p23, f0big))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types._
   * per-partition decode — are real; only the codec itself is stubbed
   * (image/audio libraries are not in this container) with a
   * deterministic fake so tests are reproducible. On a real cluster the
-  * stub body is replaced by the JNI/library call; the surrounding
-  * mapPartitions batch loop (one codec init per partition, not per row)
-  * is exactly the shape that call needs.
+  * stub body is replaced by the JNI/library call; the per-partition
+  * walk around it ([[PerDoc]]: one batch per partition, not per row) is
+  * exactly the shape that call needs.
   */
 object Multimodal {
 
@@ -79,18 +79,14 @@ object Multimodal {
       StructField("id", LongType), StructField("media", mediaType)))
     val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      // codec init would happen HERE, once per partition
-      rows.map { r =>
-        val media = r.getStruct(mediaIdx)
-        val bytes = media.getAs[Array[Byte]]("bytes")
-        val meta = media.getAs[Map[String, String]]("meta") +
-          ("orig_bytes" -> String.valueOf(if (bytes == null) 0 else bytes.length))
-        Row(r.getLong(idIdx),
-          Row(stubResize(bytes, targetBytes), media.getAs[String]("mime"), meta))
-      }
+    PerDoc.rows(df, outSchema) { r =>
+      val media = r.getStruct(mediaIdx)
+      val bytes = media.getAs[Array[Byte]]("bytes")
+      val meta = media.getAs[Map[String, String]]("meta") +
+        ("orig_bytes" -> String.valueOf(if (bytes == null) 0 else bytes.length))
+      Iterator.single(Row(r.getLong(idIdx),
+        Row(stubResize(bytes, targetBytes), media.getAs[String]("mime"), meta)))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Frame sampling: one media row → `frames` frame rows (the
@@ -107,26 +103,22 @@ object Multimodal {
       StructField("frame", mediaType)))
     val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      // codec init would happen HERE, once per partition
-      rows.flatMap { r =>
-        val media = r.getStruct(mediaIdx)
-        val bytes = media.getAs[Array[Byte]]("bytes")
-        val n = if (bytes == null) 0 else bytes.length
-        (0 until frames).map { i =>
-          val lo = i * n / frames
-          val hi = (i + 1) * n / frames
-          val slice =
-            if (bytes == null) Array.emptyByteArray
-            else java.util.Arrays.copyOfRange(bytes, lo, hi)
-          Row(r.getLong(idIdx), i,
-            Row(slice, media.getAs[String]("mime"),
-              media.getAs[Map[String, String]]("meta") +
-                ("frame" -> i.toString)))
-        }
+    PerDoc.rows(df, outSchema) { r =>
+      val media = r.getStruct(mediaIdx)
+      val bytes = media.getAs[Array[Byte]]("bytes")
+      val n = if (bytes == null) 0 else bytes.length
+      (0 until frames).map { i =>
+        val lo = i * n / frames
+        val hi = (i + 1) * n / frames
+        val slice =
+          if (bytes == null) Array.emptyByteArray
+          else java.util.Arrays.copyOfRange(bytes, lo, hi)
+        Row(r.getLong(idIdx), i,
+          Row(slice, media.getAs[String]("mime"),
+            media.getAs[Map[String, String]]("meta") +
+              ("frame" -> i.toString)))
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   // ------------------------------------------------------------------
@@ -143,23 +135,18 @@ object Multimodal {
   /** Shared synth-media wrapper: one closed-form payload per id,
     * wrapped into the media struct schema — every fixture generator
     * differs only in the byte generator, mime, and metadata. */
-  private def synthMedia(ids: DataFrame, idCol: String, mime: String,
+  private def synthMedia(ids: DataFrame, mime: String,
       meta: Map[String, String])(gen: Long => Array[Byte]): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("media", mediaType)))
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        Row(d, Row(gen(d), mime, meta))
-      }
+    PerDoc.walk(ids, outSchema) { d =>
+      Iterator.single(Row(d, Row(gen(d), mime, meta)))
     }
-    ids.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying an actual 24-bit BMP payload. */
-  def synthBmpMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/bmp", Map("w" -> "16", "h" -> "12"))(
+  def synthBmpMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/bmp", Map("w" -> "16", "h" -> "12"))(
       d => Codecs.encodeBmp(Codecs.synthBmp(d)))
 
   /** ids → media rows carrying an actual 8-bit PNG payload — same
@@ -171,8 +158,8 @@ object Multimodal {
     * (color type 3 — pixel-value-invariant, so the oracle again never
     * moves while the PLTE build/lookup and the bpp=1 filter offsets
     * ride the oracle path, crossed with both scan layouts). */
-  def synthPngMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/png", Map("w" -> "16", "h" -> "12"))(
+  def synthPngMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/png", Map("w" -> "16", "h" -> "12"))(
       d => Codecs.encodePng(Codecs.synthBmp(d), interlaced = d % 2 == 1,
         colorType = if (d % 3 == 2) 3 else 2))
 
@@ -180,8 +167,8 @@ object Multimodal {
     * byte per pixel, v = (d + x + 11y) % 256 replicated to (v,v,v) on
     * decode — its own closed form since the RGB fixture isn't gray.
     * Interlace cycles like the color twin. */
-  def synthPngGrayMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/png", Map("w" -> "16", "h" -> "12")) { d =>
+  def synthPngGrayMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/png", Map("w" -> "16", "h" -> "12")) { d =>
       val px = Array.tabulate(12, 16) { (y, x) =>
         val v = ((d + x + 11 * y) % 256).toInt
         (v, v, v)
@@ -190,45 +177,9 @@ object Multimodal {
         colorType = 0)
     }
 
-  /** REAL PNG decode per partition: chunk/CRC parse, zlib inflate,
-    * per-row unfilter. Same feature row as the BMP decode, so the
-    * closed-form oracle is shared. */
-  def decodePngFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        bmpFeatureRow(d, Codecs.decodePng(bytes))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
-
-  /** decode the PNG → nearest-neighbor resize → RE-ENCODE as PNG
-    * (cycling per-row filters) → decode again; features come off the
-    * second decode, so filter+deflate and parse+inflate BOTH sit on
-    * the oracle path at the reduced size. */
-  def resizePngFeatures(df: DataFrame, idCol: String,
-      w2: Int, h2: Int): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val resized = Codecs.encodePng(
-          Codecs.resizeNearest(Codecs.decodePng(bytes), w2, h2))
-        bmpFeatureRow(d, Codecs.decodePng(resized))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
-
   /** ids → media rows carrying an actual RIFF/PCM16 WAV payload. */
-  def synthWavMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "audio/wav", Map("sr" -> "8000", "n" -> "2000"))(
+  def synthWavMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "audio/wav", Map("sr" -> "8000", "n" -> "2000"))(
       d => Codecs.encodeWavPcm16(Codecs.synthWav(d)))
 
   private val bmpFeatureSchema = StructType(Seq(
@@ -253,47 +204,33 @@ object Multimodal {
     Row(id, img.width, img.height, sr, sg, sb, pr, pg, pb)
   }
 
-  /** REAL BMP decode per partition: header parse + pixel-grid walk.
-    * Features: dimensions, per-channel sums (exact integers), and the
-    * pixel at (x=3, y=2) — the single-pixel probe pins the bottom-up
-    * row order and BGR byte order, which channel sums alone cannot. */
-  def decodeBmpFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        bmpFeatureRow(d, Codecs.decodeBmp(bytes))
-      }
+  /** REAL image decode per partition: `decode` turns each payload into
+    * pixels; the row carries dimensions, per-channel sums (exact
+    * integers), and the pixel at (x=3, y=2) — the single-pixel probe
+    * pins row order and channel byte order, which channel sums alone
+    * cannot. Every image codec shares this row, so the closed-form
+    * oracles are shared too. The decodes in use:
+    *  - `Codecs.decodeBmp`: header parse + bottom-up pixel-grid walk;
+    *  - `Codecs.decodePng`: chunk/CRC parse, zlib inflate, per-row
+    *    unfilter;
+    *  - `Codecs.decodeJpeg`: marker walk, Huffman entropy decode (with
+    *    restarts), dequant, IDCT, fixed-point YCbCr→RGB;
+    *  - `Codecs.decodeGif`: LZW + palette;
+    *  - decode → nearest-neighbor resize → RE-ENCODE → decode again
+    *    (BMP, PNG, and the JPEG → PNG transcode): features come off
+    *    the second decode, so both codec directions sit on the oracle
+    *    path at the reduced size. */
+  def imageFeatures(df: DataFrame)(
+      decode: Array[Byte] => Codecs.Bmp): DataFrame =
+    PerDoc.walkMedia(df, bmpFeatureSchema) { (d, bytes) =>
+      Iterator.single(bmpFeatureRow(d, decode(bytes)))
     }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
-
-  /** decode → nearest-neighbor resize → RE-ENCODE → decode again: the
-    * declared features come off the second decode, so both directions
-    * of the codec are on the oracle path. */
-  def resizeBmpFeatures(df: DataFrame, idCol: String,
-      w2: Int, h2: Int): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val resized = Codecs.encodeBmp(
-          Codecs.resizeNearest(Codecs.decodeBmp(bytes), w2, h2))
-        bmpFeatureRow(d, Codecs.decodeBmp(resized))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
 
   /** REAL WAV decode per partition: RIFF header parse + i16le
     * sign-extension. Features are exact integers (peak, a pinned
     * directional zero-crossing count, energy) so the closed-form
     * oracle compares bit-for-bit. */
-  def decodeWavFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def decodeWavFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("n_samples", IntegerType),
@@ -301,137 +238,87 @@ object Multimodal {
       StructField("peak", IntegerType),
       StructField("zero_cross", LongType),
       StructField("sum_sq", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val wav = Codecs.decodeWav(bytes)
-        var peak = 0; var zc = 0L; var ss = 0L
-        var i = 0
-        while (i < wav.samples.length) {
-          val s = wav.samples(i)
-          if (math.abs(s) > peak) peak = math.abs(s)
-          if (i > 0 && wav.samples(i - 1) < 0 && s >= 0) zc += 1
-          ss += s.toLong * s
-          i += 1
-        }
-        Row(d, wav.samples.length, wav.sampleRate, peak, zc, ss)
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val wav = Codecs.decodeWav(bytes)
+      var peak = 0; var zc = 0L; var ss = 0L
+      var i = 0
+      while (i < wav.samples.length) {
+        val s = wav.samples(i)
+        if (math.abs(s) > peak) peak = math.abs(s)
+        if (i > 0 && wav.samples(i - 1) < 0 && s >= 0) zc += 1
+        ss += s.toLong * s
+        i += 1
       }
+      Iterator.single(Row(d, wav.samples.length, wav.sampleRate, peak, zc, ss))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a structurally real JPEG shell (SOI,
     * JFIF APP0, varying-length COM, DQT, SOF0/SOF2, SOS stub). */
-  def synthJpegMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthJpeg)
+  def synthJpegMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthJpeg)
 
   /** REAL JPEG marker walk per partition — dims/components/progressive
     * without decoding the entropy stream: the "filter a 100 TB image
     * corpus by metadata before paying for decode" pass. */
-  def jpegMetaFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def jpegMetaFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("n_components", IntegerType),
       StructField("progressive", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.jpegMeta(r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.width, m.height, m.nComponents, if (m.progressive) 1 else 0)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.jpegMeta(bytes)
+      Iterator.single(Row(d, m.width, m.height, m.nComponents,
+        if (m.progressive) 1 else 0))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a REAL baseline JPEG (flat 8x8 blocks +
     * unit quant tables → decode is bit-exact; restart interval cycles
     * per id — see Codecs.synthBaselineJpeg). */
-  def synthJpegImageMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg)
+  def synthJpegImageMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg)
 
   /** ids → media rows carrying a REAL 4:2:0 (2x2-subsampled) baseline
     * JPEG — the layout real-world color JPEGs overwhelmingly use. Luma
     * is constant per 16x16 MCU and chroma exactly constant per doc, so
     * full decode through the subsampled path is bit-exact (see
     * Codecs.synthJpegImage420). */
-  def synthJpeg420Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg420)
+  def synthJpeg420Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg420)
 
   /** ids → media rows carrying a REAL 4:2:2 (2x1-subsampled) baseline
     * JPEG over the same MCU-flat constant-chroma family as the 4:2:0
     * fixture (see Codecs.synthBaselineJpeg422). */
-  def synthJpeg422Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg422)
+  def synthJpeg422Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg422)
 
   /** ids → media rows carrying a REAL 4:1:1 (luma 4x1) baseline JPEG —
     * same constant-chroma family, 32x8 MCUs, replication upsample. */
-  def synthJpeg411Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg411)
+  def synthJpeg411Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthBaselineJpeg411)
 
   /** ids → media rows carrying a REAL vertical-only (luma 1x2)
     * baseline JPEG — same family, 8x16 MCUs, vertical fancy upsample. */
-  def synthJpegH1v2Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthBaselineJpegH1v2)
+  def synthJpegH1v2Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthBaselineJpegH1v2)
 
   /** ids → media rows carrying a REAL progressive (SOF2) JPEG of the
     * same closed-form flat-block images as the baseline fixture — DC
     * successive approximation + EOB-run AC scans (see
     * Codecs.synthProgressiveJpeg). */
-  def synthProgressiveJpegMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/jpeg", Map.empty)(Codecs.synthProgressiveJpeg)
-
-  /** REAL baseline-JPEG decode per partition: marker walk, Huffman
-    * entropy decode (with restarts), dequant, IDCT, fixed-point
-    * YCbCr→RGB. Same feature row as the BMP/PNG twins. */
-  def decodeJpegFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        bmpFeatureRow(d, Codecs.decodeJpeg(bytes))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
-
-  /** Transcode pipeline: decode the baseline JPEG, nearest-neighbor
-    * resize, RE-ENCODE AS PNG (lossless — a JPEG re-encode of the
-    * resized grid would quantize off the closed form), decode the PNG,
-    * and emit the second decode's features. The realistic
-    * thumbnail-extraction shape with BOTH codec families on the oracle
-    * path in one pass. */
-  def transcodeJpegPngFeatures(df: DataFrame, idCol: String,
-      w2: Int, h2: Int): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val png = Codecs.encodePng(
-          Codecs.resizeNearest(Codecs.decodeJpeg(bytes), w2, h2))
-        bmpFeatureRow(d, Codecs.decodePng(png))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, bmpFeatureSchema)
-  }
+  def synthProgressiveJpegMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/jpeg", Map.empty)(Codecs.synthProgressiveJpeg)
 
   /** ids → media rows carrying a structurally real ISO-BMFF metadata
     * shell (ftyp + varying free + moov{mvhd v0/v1, trak/tkhd}). */
-  def synthMp4Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(Codecs.synthMp4)
+  def synthMp4Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(Codecs.synthMp4)
 
   /** REAL ISO-BMFF box walk per partition — duration/dims/track
     * metadata without touching sample data. */
-  def mp4MetaFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def mp4MetaFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("timescale", IntegerType),
@@ -439,27 +326,21 @@ object Multimodal {
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("track_id", IntegerType),
       StructField("mvhd_version", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.mp4Meta(r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.timescale, m.durationS, m.width, m.height, m.trackId,
-          m.mvhdVersion)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.mp4Meta(bytes)
+      Iterator.single(Row(d, m.timescale, m.durationS, m.width, m.height,
+        m.trackId, m.mvhdVersion))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
-  def synthAvcMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/h264", Map.empty)(d =>
+  def synthAvcMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/h264", Map.empty)(d =>
       Codecs.synthAvcStream(d))
 
   /** REAL H.264 NAL walk per partition: framing detect (AVCC and
     * Annex-B), emulation-prevention unescape, Exp-Golomb SPS parse →
     * profile/level/dims — the filter-before-decode pass. */
-  def avcNalFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def avcNalFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("framing", StringType),
@@ -469,28 +350,21 @@ object Multimodal {
       StructField("level_idc", IntegerType),
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("pps_rbsp_len", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.avcNalMeta(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.framing, m.nNals, m.nSlices, m.profileIdc, m.levelIdc,
-          m.width, m.height, m.ppsRbspLen)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.avcNalMeta(bytes)
+      Iterator.single(Row(d, m.framing, m.nNals, m.nSlices, m.profileIdc,
+        m.levelIdc, m.width, m.height, m.ppsRbspLen))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
-  def synthMp3Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "audio/mpeg", Map.empty)(d => Codecs.synthMp3(d))
+  def synthMp3Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "audio/mpeg", Map.empty)(d => Codecs.synthMp3(d))
 
   /** MP3 frame-header walk per partition (Codecs.mp3Meta): ID3v2
     * syncsafe skip, sync/bitrate/samplerate/padding frame advance,
     * ID3v1 trailer — duration and bitrate with zero audio decode,
     * the audio filter-before-decode pass. */
-  def mp3Features(df: DataFrame, idCol: String): DataFrame = {
+  def mp3Features(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("id3v2_len", IntegerType),
@@ -501,27 +375,20 @@ object Multimodal {
       StructField("frame_bytes", LongType),
       StructField("duration_ms", LongType),
       StructField("has_id3v1", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.mp3Meta(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.id3v2Len, m.nFrames, m.sampleRate, m.mode, m.avgKbps,
-          m.frameBytes, m.durationMs, if (m.hasId3v1) 1 else 0)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.mp3Meta(bytes)
+      Iterator.single(Row(d, m.id3v2Len, m.nFrames, m.sampleRate, m.mode,
+        m.avgKbps, m.frameBytes, m.durationMs, if (m.hasId3v1) 1 else 0))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
-  def synthMp4aMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "audio/mp4", Map.empty)(d => Codecs.synthMp4aMp4(d))
+  def synthMp4aMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "audio/mp4", Map.empty)(d => Codecs.synthMp4aMp4(d))
 
   /** stsd/mp4a/esds walk per partition (Codecs.mp4aMeta): descriptor
     * chain + AudioSpecificConfig with sample-entry cross-checks — the
     * audio twin of avccFeatures. */
-  def mp4aFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def mp4aFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("object_type", IntegerType),
@@ -530,34 +397,27 @@ object Multimodal {
       StructField("channels", IntegerType),
       StructField("avg_bitrate", IntegerType),
       StructField("max_bitrate", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.mp4aMeta(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.objectType, m.srIndex, m.sampleRate, m.channels,
-          m.avgBitrate, m.maxBitrate)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.mp4aMeta(bytes)
+      Iterator.single(Row(d, m.objectType, m.srIndex, m.sampleRate, m.channels,
+        m.avgBitrate, m.maxBitrate))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
-  def synthAvcMp4Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(d =>
+  def synthAvcMp4Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(d =>
       Codecs.synthAvcMp4(d))
 
   /** ids → media rows carrying an AVC-in-MP4 whose samples are REAL
     * length-prefixed IDR keyframes decodable under the avcC parameter
     * sets (Avc.synthIdrMp4). */
-  def synthIdrMp4Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(d => Avc.synthIdrMp4(d))
+  def synthIdrMp4Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(d => Avc.synthIdrMp4(d))
 
   /** stsd/avc1/avcC walk per partition: the
     * AVCDecoderConfigurationRecord + SPS parse with record-vs-SPS and
     * avc1-vs-SPS cross-checks (Codecs.avccMeta). */
-  def avccFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def avccFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("n_sps", IntegerType),
@@ -566,29 +426,22 @@ object Multimodal {
       StructField("profile_idc", IntegerType),
       StructField("level_idc", IntegerType),
       StructField("width", IntegerType), StructField("height", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.avccMeta(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.nSps, m.nPps, m.nalLenSize, m.profileIdc, m.levelIdc,
-          m.width, m.height)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.avccMeta(bytes)
+      Iterator.single(Row(d, m.nSps, m.nPps, m.nalLenSize, m.profileIdc,
+        m.levelIdc, m.width, m.height))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a structurally real moov with full
     * trak/mdia/minf/stbl sample tables (stts/stsz/stco). */
-  def synthMp4SamplesMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(Codecs.synthMp4Samples)
+  def synthMp4SamplesMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(Codecs.synthMp4Samples)
 
   /** REAL sample-table walk per partition — sample count / byte volume
     * / duration ticks / chunk count without touching sample data: what
     * a frame-sampling pipeline reads to budget its decode pass. */
-  def mp4SampleFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def mp4SampleFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("n_samples", IntegerType),
@@ -596,62 +449,48 @@ object Multimodal {
       StructField("max_sample_bytes", IntegerType),
       StructField("duration_ticks", LongType),
       StructField("n_chunks", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = Codecs.mp4Samples(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-        Row(d, m.nSamples, m.totalBytes, m.maxSampleBytes, m.durationTicks,
-          m.nChunks)
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      val m = Codecs.mp4Samples(bytes)
+      Iterator.single(Row(d, m.nSamples, m.totalBytes, m.maxSampleBytes,
+        m.durationTicks, m.nChunks))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows whose moov carries a REAL stsc (sample-to-chunk)
     * table: multi-sample chunks in an alternating doc-derived pattern,
     * run-compressed entries, contiguous chunk layout (see
     * Codecs.synthMp4Chunks). */
-  def synthMp4ChunksMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(Codecs.synthMp4Chunks)
+  def synthMp4ChunksMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(Codecs.synthMp4Chunks)
 
   /** REAL sample→chunk→offset walk per partition: the stsc expansion
     * joined with stco/stsz (Codecs.mp4SampleLocations), fanned out to
     * one row per sample — the exact table a frame sampler consumes to
     * slice sample bytes out of a real multi-sample-chunk MP4. */
-  def mp4SampleLocationFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def mp4SampleLocationFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("sample_idx", IntegerType),
       StructField("chunk_idx", IntegerType),
       StructField("offset", LongType),
       StructField("n_bytes", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Codecs.mp4SampleLocations(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-          .iterator.map(l =>
-            Row(d, l.sampleIdx, l.chunkIdx, l.offset, l.size))
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.mp4SampleLocations(bytes)
+        .iterator.map(l =>
+          Row(d, l.sampleIdx, l.chunkIdx, l.offset, l.size))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying an MP4 WITH an actual mdat: samples at
     * real absolute file offsets, byte content closed-form per
     * (doc, sample, position) — see Codecs.synthMp4Data. */
-  def synthMp4DataMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(Codecs.synthMp4Data)
+  def synthMp4DataMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(Codecs.synthMp4Data)
 
   /** ids → media rows carrying an MJPEG-in-MP4 whose samples are real
     * baseline JPEGs of the closed-form flat-block family. */
-  def synthMjpegMp4Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "video/mp4", Map.empty)(Codecs.synthMjpegMp4)
+  def synthMjpegMp4Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "video/mp4", Map.empty)(Codecs.synthMjpegMp4)
 
   /** REAL video-frame decode per partition: the sample walk + mdat
     * slice (llm_video_sample_bytes' machinery) COMPOSED with the JPEG
@@ -659,30 +498,23 @@ object Multimodal {
     * image rows, plus the frame index. The per-partition batch loop is
     * the right 100 TB shape for byte codecs (embarrassingly parallel,
     * no shuffle; ~2k JPEG decodes/s/core measured). */
-  def videoFrameFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def videoFrameFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(
       StructField("id", LongType) +:
         StructField("frame_idx", IntegerType) +:
         bmpFeatureSchema.fields.toSeq.drop(1))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        Codecs.decodeMjpegFrames(bytes).iterator.map { case (fi, bmp) =>
-          Row.fromSeq(d +: fi +: bmpFeatureRow(d, bmp).toSeq.drop(1))
-        }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.decodeMjpegFrames(bytes).iterator.map { case (fi, bmp) =>
+        Row.fromSeq(d +: fi +: bmpFeatureRow(d, bmp).toSeq.drop(1))
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** REAL sample-byte extraction per partition: the stsc/stco/stsz
     * location walk PLUS the actual mdat slice (containment-checked),
     * one row per sample with its unsigned byte sum — the operation a
     * frame sampler performs before handing bytes to a codec. */
-  def mp4SampleByteFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def mp4SampleByteFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("sample_idx", IntegerType),
@@ -690,77 +522,32 @@ object Multimodal {
       StructField("data_offset", LongType),
       StructField("n_bytes", IntegerType),
       StructField("byte_sum", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Codecs.mp4ExtractSamples(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
-          .iterator.map(s =>
-            Row(d, s.sampleIdx, s.chunkIdx, s.dataOffset, s.size, s.byteSum))
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.mp4ExtractSamples(bytes)
+        .iterator.map(s =>
+          Row(d, s.sampleIdx, s.chunkIdx, s.dataOffset, s.size, s.byteSum))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a plain closed-form WARC file. */
-  def synthWarcMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/warc", Map.empty)(Codecs.synthWarc)
+  def synthWarcMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/warc", Map.empty)(Codecs.synthWarc)
 
   /** ids → media rows carrying the per-record-gzipped WARC form. */
-  def synthWarcGzMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/warc", Map.empty)(Codecs.synthWarcGz)
+  def synthWarcGzMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/warc", Map.empty)(Codecs.synthWarcGz)
 
   /** ids → media rows carrying a real GIF89a payload (LZW-compressed
     * paletted pixels; odd docs interlaced so both row orders sit on
     * the oracle path). */
-  def synthGifMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/gif", Map.empty)(
+  def synthGifMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/gif", Map.empty)(
       d => Codecs.encodeGif(Codecs.synthGif(d), interlaced = d % 2 == 1))
-
-  /** GIF decode → the shared BMP feature row (palette applied). */
-  def decodeGifFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val bmp = Codecs.decodeGif(bytes)
-        gifFeatureRow(d, bmp)
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, gifFeatureSchema)
-  }
-
-  private val gifFeatureSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sum_r", LongType),
-    StructField("sum_g", LongType),
-    StructField("sum_b", LongType),
-    StructField("px32_r", IntegerType),
-    StructField("px32_g", IntegerType),
-    StructField("px32_b", IntegerType)))
-
-  private def gifFeatureRow(d: Long, bmp: Codecs.Bmp): Row = {
-    var sr = 0L; var sg = 0L; var sb = 0L
-    (0 until bmp.height).foreach { y =>
-      (0 until bmp.width).foreach { x =>
-        val (r, g, b) = bmp.pixels(y)(x)
-        sr += r; sg += g; sb += b
-      }
-    }
-    val (pr, pg, pb) = bmp.pixels(2)(3)
-    Row(d, bmp.width, bmp.height, sr, sg, sb, pr, pg, pb)
-  }
 
   /** ids → media rows carrying an animated GIF89a (shared palette,
     * NETSCAPE loop extension, per-frame GCE delays). */
-  def synthGifAnimMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "image/gif", Map.empty) { d =>
+  def synthGifAnimMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "image/gif", Map.empty) { d =>
       val (frames, delays) = Codecs.synthGifAnim(d)
       Codecs.encodeGifAnim(frames, delays)
     }
@@ -776,37 +563,29 @@ object Multimodal {
   /** Animated-GIF frame walk: one row per frame with its GCE delay
     * and channel sums — the frame-sampling primitive for the one
     * animated format the web ships. */
-  def gifFrameFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val bytes = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        Codecs.decodeGifFrames(bytes).zipWithIndex.iterator.map {
-          case ((delay, bmp), f) =>
-            var sr = 0L; var sg = 0L; var sb = 0L
-            (0 until bmp.height).foreach { y =>
-              (0 until bmp.width).foreach { x =>
-                val (rr, gg, bb) = bmp.pixels(y)(x)
-                sr += rr; sg += gg; sb += bb
-              }
+  def gifFrameFeatures(df: DataFrame): DataFrame =
+    PerDoc.walkMedia(df, gifFrameSchema) { (d, bytes) =>
+      Codecs.decodeGifFrames(bytes).zipWithIndex.iterator.map {
+        case ((delay, bmp), f) =>
+          var sr = 0L; var sg = 0L; var sb = 0L
+          (0 until bmp.height).foreach { y =>
+            (0 until bmp.width).foreach { x =>
+              val (rr, gg, bb) = bmp.pixels(y)(x)
+              sr += rr; sg += gg; sb += bb
             }
-            Row(d, f, delay, sr, sg, sb)
-        }
+          }
+          Row(d, f, delay, sr, sg, sb)
       }
     }
-    df.sparkSession.createDataFrame(rdd, gifFrameSchema)
-  }
 
   /** ids → media rows: WARC whose response records are real HTTP
     * messages with HTML bodies (plain form). */
-  def synthWarcWebMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/warc", Map.empty)(Codecs.synthWarcWeb)
+  def synthWarcWebMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/warc", Map.empty)(Codecs.synthWarcWeb)
 
   /** Per-record-gzipped form — the shipped Common Crawl layout. */
-  def synthWarcWebGzMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/warc", Map.empty)(
+  def synthWarcWebGzMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/warc", Map.empty)(
       Codecs.synthWarcWebGz)
 
   private val webFeatureSchema = StructType(Seq(
@@ -834,38 +613,30 @@ object Multimodal {
     * compute, zero shuffle — the whole 100 TB input streams through
     * map tasks and only the (much smaller) extracted text moves on.
     */
-  def webTextFeatures(df: DataFrame, idCol: String,
-      gz: Boolean = false): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val raw = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val (plain, recs) =
-          if (gz) Codecs.warcRecordsGz(raw)
-          else (raw, Codecs.warcRecords(raw))
-        recs.iterator.filter(_.recType == "response").map { rec =>
-          val msg = java.util.Arrays.copyOfRange(
-            plain, rec.payloadStart, rec.payloadStart + rec.contentLength)
-          val http = Codecs.httpParse(msg)
-          val html = new String(http.body, "UTF-8")
-          val doc = Html.extract(html)
-          Row(d, rec.recIdx, rec.targetUri, http.status,
-            http.header("transfer-encoding").exists(
-              _.equalsIgnoreCase("chunked")),
-            http.header("content-type").getOrElse(""),
-            http.header("x-seq").map(_.toInt).getOrElse(-1),
-            http.body.length,
-            doc.title, doc.links.length,
-            if (doc.links.isEmpty) "" else doc.links.head,
-            if (doc.text.isEmpty) 0 else doc.text.split(" ").length,
-            doc.text, doc.links.toSeq, doc.linkTexts.toSeq)
-        }
+  def webTextFeatures(df: DataFrame,
+      gz: Boolean = false): DataFrame =
+    PerDoc.walkMedia(df, webFeatureSchema) { (d, raw) =>
+      val (plain, recs) =
+        if (gz) Codecs.warcRecordsGz(raw)
+        else (raw, Codecs.warcRecords(raw))
+      recs.iterator.filter(_.recType == "response").map { rec =>
+        val msg = java.util.Arrays.copyOfRange(
+          plain, rec.payloadStart, rec.payloadStart + rec.contentLength)
+        val http = Codecs.httpParse(msg)
+        val html = new String(http.body, "UTF-8")
+        val doc = Html.extract(html)
+        Row(d, rec.recIdx, rec.targetUri, http.status,
+          http.header("transfer-encoding").exists(
+            _.equalsIgnoreCase("chunked")),
+          http.header("content-type").getOrElse(""),
+          http.header("x-seq").map(_.toInt).getOrElse(-1),
+          http.body.length,
+          doc.title, doc.links.length,
+          if (doc.links.isEmpty) "" else doc.links.head,
+          if (doc.text.isEmpty) 0 else doc.text.split(" ").length,
+          doc.text, doc.links.toSeq, doc.linkTexts.toSeq)
       }
     }
-    df.sparkSession.createDataFrame(rdd, webFeatureSchema)
-  }
 
   private val webMetaSchema = StructType(Seq(
     StructField("id", LongType),
@@ -884,32 +655,24 @@ object Multimodal {
     * structured-data twin of webTextFeatures: OpenGraph/Twitter meta
     * (entity-decoded attribute values) and ld+json @type/name/position
     * as a per-page metadata row. Same pipeline shape, pure map work. */
-  def webMetadataFeatures(df: DataFrame, idCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val raw = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val recs = Codecs.warcRecords(raw)
-        recs.iterator.filter(_.recType == "response").map { rec =>
-          val msg = java.util.Arrays.copyOfRange(
-            raw, rec.payloadStart, rec.payloadStart + rec.contentLength)
-          val http = Codecs.httpParse(msg)
-          val m = Html.metadata(new String(http.body, "UTF-8"))
-          def first(kv: Array[(String, String)], k: String): String =
-            kv.collectFirst { case (key, v) if key == k => v }.orNull
-          Row(d, rec.recIdx,
-            first(m.og, "title"), first(m.og, "image"),
-            first(m.twitter, "card"),
-            m.og.length, m.twitter.length, m.nLd,
-            m.ldTypes.headOption.orNull, m.ldNames.headOption.orNull,
-            m.ldPositions.headOption.map(Long.box).orNull)
-        }
+  def webMetadataFeatures(df: DataFrame): DataFrame =
+    PerDoc.walkMedia(df, webMetaSchema) { (d, raw) =>
+      val recs = Codecs.warcRecords(raw)
+      recs.iterator.filter(_.recType == "response").map { rec =>
+        val msg = java.util.Arrays.copyOfRange(
+          raw, rec.payloadStart, rec.payloadStart + rec.contentLength)
+        val http = Codecs.httpParse(msg)
+        val m = Html.metadata(new String(http.body, "UTF-8"))
+        def first(kv: Array[(String, String)], k: String): String =
+          kv.collectFirst { case (key, v) if key == k => v }.orNull
+        Row(d, rec.recIdx,
+          first(m.og, "title"), first(m.og, "image"),
+          first(m.twitter, "card"),
+          m.og.length, m.twitter.length, m.nLd,
+          m.ldTypes.headOption.orNull, m.ldNames.headOption.orNull,
+          m.ldPositions.headOption.map(Long.box).orNull)
       }
     }
-    df.sparkSession.createDataFrame(rdd, webMetaSchema)
-  }
 
   private val audioPipelineSchema = StructType(Seq(
     StructField("id", LongType),
@@ -924,27 +687,21 @@ object Multimodal {
     * at >= 120 ms of audio — and a VORBIS_COMMENT title dedup key for
     * the FLAC files (the re-encode collapse). One map pass; the
     * declared query adds the single rollup shuffle. */
-  def audioPipelineFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val (kind, kept, key) = (d % 3) match {
-          case 0 =>
-            val m = Codecs.mp3Meta(Codecs.synthMp3(d))
-            ("mp3", m.avgKbps >= 96, null: String)
-          case 1 =>
-            val m = graft.operators.Flac.meta(graft.operators.Flac.synth(d))
-            ("flac", true, m.title)
-          case _ =>
-            val m = Ogg.parse(Ogg.synth(d))
-            ("ogg", m.durationMs >= 120, null: String)
-        }
-        Row(d, kind, if (kept) 1 else 0, key)
+  def audioPipelineFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, audioPipelineSchema) { d =>
+      val (kind, kept, key) = (d % 3) match {
+        case 0 =>
+          val m = Codecs.mp3Meta(Codecs.synthMp3(d))
+          ("mp3", m.avgKbps >= 96, null: String)
+        case 1 =>
+          val m = graft.operators.Flac.meta(graft.operators.Flac.synth(d))
+          ("flac", true, m.title)
+        case _ =>
+          val m = Ogg.parse(Ogg.synth(d))
+          ("ogg", m.durationMs >= 120, null: String)
       }
+      Iterator.single(Row(d, kind, if (kept) 1 else 0, key))
     }
-    ids.sparkSession.createDataFrame(rdd, audioPipelineSchema)
-  }
 
   private val sitemapSchema = StructType(Seq(
     StructField("id", LongType),
@@ -956,20 +713,14 @@ object Multimodal {
 
   /** Per-site sitemap.xml walk (Sitemap.parse) over closed-form
     * fixtures — one row per <url> entry, pure map work. */
-  def sitemapFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Sitemap.parse(Sitemap.synth(d)).zipWithIndex.iterator.map {
-          case (e, j) =>
-            Row(d, j, e.loc, java.sql.Date.valueOf(e.lastmod),
-              e.changefreq, e.priority)
-        }
+  def sitemapFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, sitemapSchema) { d =>
+      Sitemap.parse(Sitemap.synth(d)).zipWithIndex.iterator.map {
+        case (e, j) =>
+          Row(d, j, e.loc, java.sql.Date.valueOf(e.lastmod),
+            e.changefreq, e.priority)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, sitemapSchema)
-  }
 
   private val sitemapIndexSchema = StructType(Seq(
     StructField("id", LongType),
@@ -983,24 +734,18 @@ object Multimodal {
     * sitemapindex. In a deployment each ref's loc is fetched; the
     * fixture derives child k's urlset id (1000·d + k) from the index
     * position, which the walk validates against the ref's loc. */
-  def sitemapIndexFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Sitemap.parseIndex(Sitemap.synthIndex(d)).zipWithIndex.iterator
-          .flatMap { case (ref, k) =>
-            require(ref.loc == s"http://site$d.example/sm$k.xml",
-              s"index ref $k points at unexpected child ${ref.loc}")
-            val cid = 1000 * d + k
-            Sitemap.parse(Sitemap.synth(cid)).zipWithIndex.iterator.map {
-              case (e, j) => Row(d, k, j, e.loc, e.priority)
-            }
+  def sitemapIndexFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, sitemapIndexSchema) { d =>
+      Sitemap.parseIndex(Sitemap.synthIndex(d)).zipWithIndex.iterator
+        .flatMap { case (ref, k) =>
+          require(ref.loc == s"http://site$d.example/sm$k.xml",
+            s"index ref $k points at unexpected child ${ref.loc}")
+          val cid = 1000 * d + k
+          Sitemap.parse(Sitemap.synth(cid)).zipWithIndex.iterator.map {
+            case (e, j) => Row(d, k, j, e.loc, e.priority)
           }
-      }
+        }
     }
-    ids.sparkSession.createDataFrame(rdd, sitemapIndexSchema)
-  }
 
   private val charsetSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1015,34 +760,24 @@ object Multimodal {
     * decode — strict UTF-8 validation with replacement counts, 1:1
     * ISO-8859-1. It does NOT read charset/bytes from the input row;
     * real media rows go through Codecs.decodeCharset directly. */
-  def charsetDecodeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val (cs, bytes) = Codecs.synthEncodedText(d)
-        val (text, repl) = Codecs.decodeCharset(bytes, cs)
-        Row(d, cs, text.codePointCount(0, text.length), repl, text)
-      }
+  def charsetDecodeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, charsetSchema) { d =>
+      val (cs, bytes) = Codecs.synthEncodedText(d)
+      val (text, repl) = Codecs.decodeCharset(bytes, cs)
+      Iterator.single(Row(d, cs, text.codePointCount(0, text.length), repl,
+        text))
     }
-    ids.sparkSession.createDataFrame(rdd, charsetSchema)
-  }
 
   /** BOM-dispatch decode over the synthBomText fixture: the transport
     * always declares UTF-8; the decoder must let a UTF-16 BOM win
     * (the WHATWG sniffing rule). Emits the charset ACTUALLY used. */
-  def bomDecodeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val (cs, text, repl) =
-          Codecs.decodeWithBom(Codecs.synthBomText(d), "UTF-8")
-        Row(d, cs, text.codePointCount(0, text.length), repl, text)
-      }
+  def bomDecodeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, charsetSchema) { d =>
+      val (cs, text, repl) =
+        Codecs.decodeWithBom(Codecs.synthBomText(d), "UTF-8")
+      Iterator.single(Row(d, cs, text.codePointCount(0, text.length), repl,
+        text))
     }
-    ids.sparkSession.createDataFrame(rdd, charsetSchema)
-  }
 
   private val mainContentSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1054,20 +789,14 @@ object Multimodal {
   /** Boilerplate removal over synthetic closed-form pages: segment
     * into blocks (Html.blocks), keep content blocks under the jusText
     * rule, join their text. Pure per-row compute — zero shuffle. */
-  def mainContentFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bs = Html.blocks(Codecs.synthWebPage(d))
-        val content = bs.filter(_.isContent)
-        val mainText = content.map(_.text).mkString(" ")
-        Row(d, bs.length, content.length,
-          content.map(_.nWords).sum, mainText)
-      }
+  def mainContentFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, mainContentSchema) { d =>
+      val bs = Html.blocks(Codecs.synthWebPage(d))
+      val content = bs.filter(_.isContent)
+      val mainText = content.map(_.text).mkString(" ")
+      Iterator.single(Row(d, bs.length, content.length,
+        content.map(_.nWords).sum, mainText))
     }
-    ids.sparkSession.createDataFrame(rdd, mainContentSchema)
-  }
 
   private val warcFeatureSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1082,41 +811,33 @@ object Multimodal {
     * per-record gzip members first (the Common Crawl layout). One row
     * per record: the ingest-side primitive every web-corpus curation
     * pipeline starts with. */
-  def warcRecordFeatures(df: DataFrame, idCol: String,
-      gz: Boolean = false): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val raw = r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")
-        val (plain, recs) =
-          if (gz) Codecs.warcRecordsGz(raw)
-          else (raw, Codecs.warcRecords(raw))
-        recs.iterator.map { rec =>
-          var sum = 0L
-          var j = 0
-          while (j < rec.contentLength) {
-            sum += plain(rec.payloadStart + j) & 0xff; j += 1
-          }
-          Row(d, rec.recIdx, rec.recType, rec.targetUri,
-            rec.contentLength, sum)
+  def warcRecordFeatures(df: DataFrame,
+      gz: Boolean = false): DataFrame =
+    PerDoc.walkMedia(df, warcFeatureSchema) { (d, raw) =>
+      val (plain, recs) =
+        if (gz) Codecs.warcRecordsGz(raw)
+        else (raw, Codecs.warcRecords(raw))
+      recs.iterator.map { rec =>
+        var sum = 0L
+        var j = 0
+        while (j < rec.contentLength) {
+          sum += plain(rec.payloadStart + j) & 0xff; j += 1
         }
+        Row(d, rec.recIdx, rec.recType, rec.targetUri,
+          rec.contentLength, sum)
       }
     }
-    df.sparkSession.createDataFrame(rdd, warcFeatureSchema)
-  }
 
   /** ids → media rows carrying a real ustar archive (3-7 members,
     * every 4th a directory, verified checksums). */
-  def synthTarMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/x-tar", Map.empty)(Codecs.synthTar)
+  def synthTarMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/x-tar", Map.empty)(Codecs.synthTar)
 
   /** ustar header walk per partition (Codecs.tarEntries), one output
     * row per member: checksum-verified headers, octal size/mtime, and
     * a payload byte-sum proving the data offsets — the archive-listing
     * pre-pass that decides what to extract at all. */
-  def tarEntryFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def tarEntryFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("entry_idx", IntegerType),
@@ -1125,25 +846,18 @@ object Multimodal {
       StructField("size", LongType),
       StructField("mtime", LongType),
       StructField("payload_sum", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Codecs.tarEntries(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")).iterator.map {
-          e => Row(d, e.idx, e.name, e.typeflag, e.size, e.mtime,
-            e.payloadSum)
-        }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.tarEntries(bytes).iterator.map {
+        e => Row(d, e.idx, e.name, e.typeflag, e.size, e.mtime,
+          e.payloadSum)
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a real ustar whose members are ASCII
     * text documents (the archives-as-corpus fixture). */
-  def synthTarDocsMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/x-tar", Map.empty)(
+  def synthTarDocsMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/x-tar", Map.empty)(
       Codecs.synthTarDocs)
 
   /** Extract every regular-file member's payload as text, one row per
@@ -1151,62 +865,48 @@ object Multimodal {
     * done here (partition-local, sharing the listing walk's checksum/
     * bounds verification) — tokenization and any analysis compose on
     * top as ordinary Column expressions, so the optimizer sees them. */
-  def tarTextMembers(df: DataFrame, idCol: String): DataFrame = {
+  def tarTextMembers(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("entry_idx", IntegerType),
       StructField("name", StringType),
       StructField("text", StringType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Codecs.tarExtract(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")).iterator
-          .filter(_._1.typeflag == "file").map { case (e, body) =>
-            Row(d, e.idx, e.name, new String(body, "US-ASCII"))
-          }
-      }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.tarExtract(bytes).iterator
+        .filter(_._1.typeflag == "file").map { case (e, body) =>
+          Row(d, e.idx, e.name, new String(body, "US-ASCII"))
+        }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** ids → media rows carrying a real ZIP (stored + deflated members,
     * EOCD comment so the backward scan is exercised). */
-  def synthZipMedia(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/zip", Map.empty)(Codecs.synthZip)
+  def synthZipMedia(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/zip", Map.empty)(Codecs.synthZip)
 
   /** ids → media rows carrying a "zip64-always" ZIP: every count,
     * size, and offset at its marker ceiling with the true values in
     * 0x0001 extras + the Zip64 EOCD record/locator chain. */
-  def synthZip64Media(ids: DataFrame, idCol: String): DataFrame =
-    synthMedia(ids, idCol, "application/zip", Map.empty)(Codecs.synthZip64)
+  def synthZip64Media(ids: DataFrame): DataFrame =
+    synthMedia(ids, "application/zip", Map.empty)(Codecs.synthZip64)
 
   /** ZIP central-directory walk per partition (Codecs.zipEntries), one
     * output row per member — every member's local header is
     * cross-validated and its payload integrity-checked (stored: CRC32;
     * deflated: raw-inflate + length + CRC), so a green hash here means
     * every archive byte was actually verified. */
-  def zipEntryFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def zipEntryFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("entry_idx", IntegerType),
       StructField("name", StringType),
       StructField("method", StringType),
       StructField("usize", LongType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        Codecs.zipEntries(
-          r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes")).iterator.map {
-          e => Row(d, e.idx, e.name, e.method, e.usize)
-        }
+    PerDoc.walkMedia(df, outSchema) { (d, bytes) =>
+      Codecs.zipEntries(bytes).iterator.map {
+        e => Row(d, e.idx, e.name, e.method, e.usize)
       }
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Per-partition batched decode: one "codec" per partition, rows
@@ -1219,19 +919,15 @@ object Multimodal {
       StructField("features", ArrayType(FloatType))))
     val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      // codec init would happen HERE, once per partition
-      rows.map { r =>
-        val media = r.getStruct(mediaIdx)
-        val bytes = media.getAs[Array[Byte]]("bytes")
-        Row(
-          r.getLong(idIdx),
-          media.getAs[String]("mime"),
-          if (bytes == null) 0 else bytes.length,
-          stubDecodeFeatures(bytes).toSeq)
-      }
+    PerDoc.rows(df, outSchema) { r =>
+      val media = r.getStruct(mediaIdx)
+      val bytes = media.getAs[Array[Byte]]("bytes")
+      Iterator.single(Row(
+        r.getLong(idIdx),
+        media.getAs[String]("mime"),
+        if (bytes == null) 0 else bytes.length,
+        stubDecodeFeatures(bytes).toSeq))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   // ------------------------------------------------------------------
@@ -1248,22 +944,17 @@ object Multimodal {
     * (application/pdf) — each the same closed-form fixture its
     * dedicated query family uses, so the dispatch oracle reuses those
     * closed forms verbatim. */
-  def synthMixedDocsMedia(ids: DataFrame, idCol: String): DataFrame = {
+  def synthMixedDocsMedia(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("media", mediaType)))
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val (bytes, mime) = (d % 3) match {
-          case 0 => (Codecs.synthHtml(d, 1).getBytes("UTF-8"), "text/html")
-          case 1 => (Markdown.synthMd(d).getBytes("UTF-8"), "text/markdown")
-          case _ => (Pdf.synthPdf(d), "application/pdf")
-        }
-        Row(d, Row(bytes, mime, Map.empty[String, String]))
+    PerDoc.walk(ids, outSchema) { d =>
+      val (bytes, mime) = (d % 3) match {
+        case 0 => (Codecs.synthHtml(d, 1).getBytes("UTF-8"), "text/html")
+        case 1 => (Markdown.synthMd(d).getBytes("UTF-8"), "text/markdown")
+        case _ => (Pdf.synthPdf(d), "application/pdf")
       }
+      Iterator.single(Row(d, Row(bytes, mime, Map.empty[String, String])))
     }
-    ids.sparkSession.createDataFrame(rdd, outSchema)
   }
 
   /** Dispatch each media row on its DECLARED mime to the matching
@@ -1278,24 +969,21 @@ object Multimodal {
       StructField("n_words", IntegerType)))
     val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val media = r.getStruct(mediaIdx)
-        val bytes = media.getAs[Array[Byte]]("bytes")
-        val (fmt, text) = media.getAs[String]("mime") match {
-          case "text/html" =>
-            ("html", Html.extract(new String(bytes, "UTF-8")).text)
-          case "text/markdown" =>
-            ("markdown", Markdown.extract(new String(bytes, "UTF-8")).text)
-          case "application/pdf" =>
-            ("pdf", Pdf.extract(bytes).text)
-          case other =>
-            throw new IllegalArgumentException(s"no extractor for mime '$other'")
-        }
-        val nWords = if (text.isEmpty) 0 else text.split(" ").length
-        Row(r.getLong(idIdx), fmt, text, nWords)
+    PerDoc.rows(df, outSchema) { r =>
+      val media = r.getStruct(mediaIdx)
+      val bytes = media.getAs[Array[Byte]]("bytes")
+      val (fmt, text) = media.getAs[String]("mime") match {
+        case "text/html" =>
+          ("html", Html.extract(new String(bytes, "UTF-8")).text)
+        case "text/markdown" =>
+          ("markdown", Markdown.extract(new String(bytes, "UTF-8")).text)
+        case "application/pdf" =>
+          ("pdf", Pdf.extract(bytes).text)
+        case other =>
+          throw new IllegalArgumentException(s"no extractor for mime '$other'")
       }
+      val nWords = if (text.isEmpty) 0 else text.split(" ").length
+      Iterator.single(Row(r.getLong(idIdx), fmt, text, nWords))
     }
-    df.sparkSession.createDataFrame(rdd, outSchema)
   }
 }

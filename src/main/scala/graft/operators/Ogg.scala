@@ -385,17 +385,11 @@ object Ogg {
     StructField("n_frames", IntegerType)))
 
   /** ids → parsed Ogg/Opus features over the closed-form fixture. */
-  def oggFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.serial, m.nPages, m.nPackets, m.lastGranule, m.channels,
-          m.preSkip, m.inputRate, m.durationMs, m.nSilk, m.nHybrid,
-          m.nCelt, m.nStereo, m.nFrames)
-      }
+  def oggFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.serial, m.nPages, m.nPackets, m.lastGranule,
+        m.channels, m.preSkip, m.inputRate, m.durationMs, m.nSilk, m.nHybrid,
+        m.nCelt, m.nStereo, m.nFrames))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

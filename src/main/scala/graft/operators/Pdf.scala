@@ -644,14 +644,10 @@ object Pdf {
   // ---------------------------------------------------------------- //
 
   /** ids → (id, pdf binary) rows of closed-form PDFs. */
-  def synthDf(ids: DataFrame, idCol: String): DataFrame = {
+  def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("pdf", BinaryType)))
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r => val d = r.getLong(idIdx); Row(d, synthPdf(d)) }
-    }
-    ids.sparkSession.createDataFrame(rdd, outSchema)
+    PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthPdf(d))))
   }
 
   private val metaSchema = StructType(Seq(
@@ -668,14 +664,11 @@ object Pdf {
       pdfCol: String): DataFrame = {
     val idIdx = df.schema.fieldIndex(idCol)
     val pdfIdx = df.schema.fieldIndex(pdfCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val m = meta(r.getAs[Array[Byte]](pdfIdx))
-        Row(r.getLong(idIdx), m.version, m.nObjects, m.nPages,
-          m.mediaW, m.mediaH, m.nFlate)
-      }
+    PerDoc.rows(df, metaSchema) { r =>
+      val m = meta(r.getAs[Array[Byte]](pdfIdx))
+      Iterator.single(Row(r.getLong(idIdx), m.version, m.nObjects, m.nPages,
+        m.mediaW, m.mediaH, m.nFlate))
     }
-    df.sparkSession.createDataFrame(rdd, metaSchema)
   }
 
   private val textSchema = StructType(Seq(
@@ -691,13 +684,10 @@ object Pdf {
       pdfCol: String): DataFrame = {
     val idIdx = df.schema.fieldIndex(idCol)
     val pdfIdx = df.schema.fieldIndex(pdfCol)
-    val rdd = df.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val doc = extract(r.getAs[Array[Byte]](pdfIdx))
-        Row(r.getLong(idIdx), doc.text, doc.meta.nPages, doc.nWords,
-          doc.text.length, doc.meta.nFlate)
-      }
+    PerDoc.rows(df, textSchema) { r =>
+      val doc = extract(r.getAs[Array[Byte]](pdfIdx))
+      Iterator.single(Row(r.getLong(idIdx), doc.text, doc.meta.nPages,
+        doc.nWords, doc.text.length, doc.meta.nFlate))
     }
-    df.sparkSession.createDataFrame(rdd, textSchema)
   }
 }

@@ -136,17 +136,12 @@ object Proto {
     StructField("delta", LongType)))
 
   /** ids → one decoded message each — per-doc map work. */
-  def protoFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        var ts = 0L
-        m.tags.foreach(ts += _)
-        Row(d, m.recId, m.name, m.score, m.tags.length, ts, m.delta)
-      }
+  def protoFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      var ts = 0L
+      m.tags.foreach(ts += _)
+      Iterator.single(Row(d, m.recId, m.name, m.score, m.tags.length, ts,
+        m.delta))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

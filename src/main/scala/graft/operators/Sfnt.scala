@@ -201,16 +201,10 @@ object Sfnt {
     StructField("loc_format", IntegerType)))
 
   /** ids -> closed-form TTF -> verified walk. Per-doc map work. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.nTables, m.unitsPerEm, m.numGlyphs, m.xMin, m.yMin,
-          m.xMax, m.yMax, m.family, m.locFormat)
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.nTables, m.unitsPerEm, m.numGlyphs, m.xMin,
+        m.yMin, m.xMax, m.yMax, m.family, m.locFormat))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

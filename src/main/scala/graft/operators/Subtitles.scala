@@ -204,23 +204,17 @@ object Subtitles {
     StructField("first_start_ms", LongType),
     StructField("last_end_ms", LongType)))
 
-  private def features(ids: DataFrame, idCol: String,
-      gen: Long => String, parse: String => SubDoc): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val doc = parse(gen(d))
-        Row(d, doc.nCues, doc.text, doc.text.length, doc.totalMs,
-          doc.firstStartMs, doc.lastEndMs)
-      }
+  private def features(ids: DataFrame,
+      gen: Long => String, parse: String => SubDoc): DataFrame =
+    PerDoc.walk(ids, featSchema) { d =>
+      val doc = parse(gen(d))
+      Iterator.single(Row(d, doc.nCues, doc.text, doc.text.length, doc.totalMs,
+        doc.firstStartMs, doc.lastEndMs))
     }
-    ids.sparkSession.createDataFrame(rdd, featSchema)
-  }
 
   /** ids → parsed SRT features over closed-form fixtures. */
-  def srtFeatures(ids: DataFrame, idCol: String): DataFrame =
-    features(ids, idCol, synthSrt, parseSrt)
+  def srtFeatures(ids: DataFrame): DataFrame =
+    features(ids, synthSrt, parseSrt)
 
   private val cueSchema = StructType(Seq(
     StructField("id", LongType),
@@ -231,20 +225,14 @@ object Subtitles {
 
   /** ids → ONE ROW PER CUE over the SRT fixtures — the join input for
     * time-alignment against a sample/frame timeline. */
-  def srtCues(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        parseSrt(synthSrt(d)).cues.zipWithIndex.map { case (c, j) =>
-          Row(d, j, c.startMs, c.endMs, c.text)
-        }
+  def srtCues(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, cueSchema) { d =>
+      parseSrt(synthSrt(d)).cues.zipWithIndex.map { case (c, j) =>
+        Row(d, j, c.startMs, c.endMs, c.text)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, cueSchema)
-  }
 
   /** ids → parsed WebVTT features over closed-form fixtures. */
-  def vttFeatures(ids: DataFrame, idCol: String): DataFrame =
-    features(ids, idCol, synthVtt, parseVtt)
+  def vttFeatures(ids: DataFrame): DataFrame =
+    features(ids, synthVtt, parseVtt)
 }

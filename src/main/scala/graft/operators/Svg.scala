@@ -135,16 +135,10 @@ object Svg {
     StructField("title", StringType)))
 
   /** ids -> closed-form SVG -> structure walk. Per-doc map work. */
-  def features(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.width, m.height, m.viewBox, m.nPaths, m.nShapes,
-          m.nGroups, m.nText, m.nScripts, m.nCommands, m.title)
-      }
+  def features(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.width, m.height, m.viewBox, m.nPaths, m.nShapes,
+        m.nGroups, m.nText, m.nScripts, m.nCommands, m.title))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

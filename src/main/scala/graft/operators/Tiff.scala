@@ -945,17 +945,11 @@ object Tiff {
     StructField("pixel_sum", LongType)))
 
   /** ids → one row per decoded TIFF page. Per-doc map work. */
-  def pageFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        parse(synth(d)).map { p =>
-          Row(d, p.page, p.width, p.height, p.samples, p.compression,
-            p.predictor, p.tiled, p.nStrips, p.decodedBytes, p.pixelSum)
-        }
+  def pageFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      parse(synth(d)).map { p =>
+        Row(d, p.page, p.width, p.height, p.samples, p.compression,
+          p.predictor, p.tiled, p.nStrips, p.decodedBytes, p.pixelSum)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

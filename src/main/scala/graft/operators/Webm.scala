@@ -1349,20 +1349,13 @@ object Webm {
 
   /** ids → parsed WebM features over the closed-form fixture.
     * Per-doc map work — scan-stage cost at any corpus size. */
-  def webmFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = parse(synth(d))
-        Row(d, m.timestampScale, m.nTracks, m.nClusters, m.videoCodec,
-          m.nVideoBlocks, m.nAudioBlocks, m.nAudioFrames, m.nKeyframes,
-          m.width, m.height, m.sumYAcQi, m.sumVp9Sig,
-          m.opusChannels.orNull, m.nStereo, m.durationMs,
-          m.nBlockGroups, m.sumBlockDurTicks,
-          m.nSeekEntries, m.nCuePoints)
-      }
+  def webmFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = parse(synth(d))
+      Iterator.single(Row(d, m.timestampScale, m.nTracks, m.nClusters,
+        m.videoCodec, m.nVideoBlocks, m.nAudioBlocks, m.nAudioFrames,
+        m.nKeyframes, m.width, m.height, m.sumYAcQi, m.sumVp9Sig,
+        m.opusChannels.orNull, m.nStereo, m.durationMs, m.nBlockGroups,
+        m.sumBlockDurTicks, m.nSeekEntries, m.nCuePoints))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

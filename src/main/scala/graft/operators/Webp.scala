@@ -1167,22 +1167,16 @@ object Webp {
 
   /** ids -> lossy shell -> RIFF walk -> bool-decoded key-frame header
     * (the quality-gate fields). Per-doc map work. */
-  def vp8HeaderFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = synthLossy(d)
-        val chunk = riffChunks(bytes).find(_._1 == "VP8 ")
-          .getOrElse(throw new IllegalArgumentException("no VP8 chunk"))
-        val h = parseVp8Header(bytes, chunk._2 + 10)
-        Row(d, h.colorSpace, h.clampingType, h.filterType, h.filterLevel,
-          h.sharpness, h.nDctPartitions, h.yAcQi, h.yDcDelta,
-          h.y2DcDelta, h.y2AcDelta, h.uvDcDelta, h.uvAcDelta)
-      }
+  def vp8HeaderFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, vp8HeaderSchema) { d =>
+      val bytes = synthLossy(d)
+      val chunk = riffChunks(bytes).find(_._1 == "VP8 ")
+        .getOrElse(throw new IllegalArgumentException("no VP8 chunk"))
+      val h = parseVp8Header(bytes, chunk._2 + 10)
+      Iterator.single(Row(d, h.colorSpace, h.clampingType, h.filterType,
+        h.filterLevel, h.sharpness, h.nDctPartitions, h.yAcQi, h.yDcDelta,
+        h.y2DcDelta, h.y2AcDelta, h.uvDcDelta, h.uvAcDelta))
     }
-    ids.sparkSession.createDataFrame(rdd, vp8HeaderSchema)
-  }
 
   // --------------------------------------- VP8 (lossy) frame header
   // The RFC 6386 BOOLEAN entropy coder (section 7) and the key-frame
@@ -1480,24 +1474,18 @@ object Webp {
   /** ids -> animated fixture -> frame walk + full per-frame VP8L
     * decode — the frame-sampling primitive for animated WebP, the
     * gifFrameFeatures twin. Per-doc map work. */
-  def animFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val d = r.getLong(idIdx)
-        val a = animFrames(synthAnim(d))
-        a.frames.zipWithIndex.iterator.map { case (fr, f) =>
-          var sr = 0L; var sg = 0L; var sb = 0L
-          fr.img.px.foreach { p =>
-            sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff; sb += p & 0xff
-          }
-          Row(d, f, fr.x, fr.y, fr.img.width, fr.img.height, fr.durMs,
-            a.loopCount, sr, sg, sb)
+  def animFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, animSchema) { d =>
+      val a = animFrames(synthAnim(d))
+      a.frames.zipWithIndex.iterator.map { case (fr, f) =>
+        var sr = 0L; var sg = 0L; var sb = 0L
+        fr.img.px.foreach { p =>
+          sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff; sb += p & 0xff
         }
+        Row(d, f, fr.x, fr.y, fr.img.width, fr.img.height, fr.durMs,
+          a.loopCount, sr, sg, sb)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, animSchema)
-  }
 
   private val webpExifSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1512,22 +1500,16 @@ object Webp {
     * (Exif.parseTiff): orientation / capture time / camera make read
     * THROUGH the RIFF container, the image-provenance gate before any
     * pixel decode. Per-doc map work. */
-  def exifFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = synthExtended(d)
-        val exif = riffChunks(bytes).find(_._1 == "EXIF")
-          .getOrElse(throw new IllegalArgumentException(
-            "extended WebP without an EXIF chunk"))
-        val m = Exif.parseTiff(bytes, exif._2, exif._2 + exif._3)
-        Row(d, m.endian, m.nEntries, m.orientation, m.width, m.make,
-          m.dateTime)
-      }
+  def exifFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, webpExifSchema) { d =>
+      val bytes = synthExtended(d)
+      val exif = riffChunks(bytes).find(_._1 == "EXIF")
+        .getOrElse(throw new IllegalArgumentException(
+          "extended WebP without an EXIF chunk"))
+      val m = Exif.parseTiff(bytes, exif._2, exif._2 + exif._3)
+      Iterator.single(Row(d, m.endian, m.nEntries, m.orientation, m.width,
+        m.make, m.dateTime))
     }
-    ids.sparkSession.createDataFrame(rdd, webpExifSchema)
-  }
 
   private val pipelineSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1542,29 +1524,23 @@ object Webp {
     * (make, capture-time) dedup key, the burst/re-upload collapse an
     * image corpus runs before any pixel work. Everything here is one
     * map pass; the declared query adds the single rollup shuffle. */
-  def pipelineFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val bytes = synthWebp(d)
-        val m = meta(bytes)
-        val (kept, key) = m.kind match {
-          case "vp8" =>
-            val chunk = riffChunks(bytes).find(_._1 == "VP8 ").get
-            val h = parseVp8Header(bytes, chunk._2 + 10)
-            (h.yAcQi < 96, null: String)
-          case "vp8x" =>
-            val exif = riffChunks(bytes).find(_._1 == "EXIF").get
-            val e = Exif.parseTiff(bytes, exif._2, exif._2 + exif._3)
-            (true, s"${e.make}|${e.dateTime}")
-          case _ => (true, null: String)
-        }
-        Row(d, m.kind, if (kept) 1 else 0, key)
+  def pipelineFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, pipelineSchema) { d =>
+      val bytes = synthWebp(d)
+      val m = meta(bytes)
+      val (kept, key) = m.kind match {
+        case "vp8" =>
+          val chunk = riffChunks(bytes).find(_._1 == "VP8 ").get
+          val h = parseVp8Header(bytes, chunk._2 + 10)
+          (h.yAcQi < 96, null: String)
+        case "vp8x" =>
+          val exif = riffChunks(bytes).find(_._1 == "EXIF").get
+          val e = Exif.parseTiff(bytes, exif._2, exif._2 + exif._3)
+          (true, s"${e.make}|${e.dateTime}")
+        case _ => (true, null: String)
       }
+      Iterator.single(Row(d, m.kind, if (kept) 1 else 0, key))
     }
-    ids.sparkSession.createDataFrame(rdd, pipelineSchema)
-  }
 
   /** Per-doc fixture rotation: plain lossless / extended / lossy. */
   def synthWebp(d: Long): Array[Byte] = (d % 3) match {
@@ -1593,21 +1569,15 @@ object Webp {
   /** ids -> synth WebP (kind rotating by d%3) -> container walk.
     * Pure per-doc map work: at 100 TB the walk costs the scan stage
     * only, exactly like the tar/zip/MP4 listing pre-passes. */
-  def metaFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = meta(synthWebp(d))
-        def b(v: Boolean) = if (v) 1 else 0
-        def opt(v: Int): Any = if (v < 0) null else v
-        Row(d, m.kind, m.canvasW, m.canvasH, b(m.hasIcc), b(m.hasAlpha),
-          b(m.hasExif), b(m.hasXmp), b(m.hasAnim), m.nChunks,
-          opt(m.exifLen), opt(m.vp8Version), opt(m.vp8Part0Len))
-      }
+  def metaFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, metaSchema) { d =>
+      val m = meta(synthWebp(d))
+      def b(v: Boolean) = if (v) 1 else 0
+      def opt(v: Int): Any = if (v < 0) null else v
+      Iterator.single(Row(d, m.kind, m.canvasW, m.canvasH, b(m.hasIcc),
+        b(m.hasAlpha), b(m.hasExif), b(m.hasXmp), b(m.hasAnim), m.nChunks,
+        opt(m.exifLen), opt(m.vp8Version), opt(m.vp8Part0Len)))
     }
-    ids.sparkSession.createDataFrame(rdd, metaSchema)
-  }
 
   private val decodeSchema = StructType(Seq(
     StructField("id", LongType),
@@ -1624,23 +1594,17 @@ object Webp {
 
   /** ids -> VP8L encode (layout d%5) -> REAL decode -> exact-integer
     * channel features (+ the probe pixel at (3,2), like the GIF row). */
-  def decodeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val img = decodeVp8l(encodeVp8l(synthImage(d), (d % 6).toInt, d))
-        var sr = 0L; var sg = 0L; var sb = 0L; var sa = 0L
-        img.px.foreach { p =>
-          sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff
-          sb += p & 0xff; sa += p >>> 24
-        }
-        val probe = img.px(2 * img.width + 3)
-        Row(d, img.width, img.height, sr, sg, sb, sa,
-          (probe >>> 16) & 0xff, (probe >>> 8) & 0xff, probe & 0xff,
-          probe >>> 24)
+  def decodeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, decodeSchema) { d =>
+      val img = decodeVp8l(encodeVp8l(synthImage(d), (d % 6).toInt, d))
+      var sr = 0L; var sg = 0L; var sb = 0L; var sa = 0L
+      img.px.foreach { p =>
+        sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff
+        sb += p & 0xff; sa += p >>> 24
       }
+      val probe = img.px(2 * img.width + 3)
+      Iterator.single(Row(d, img.width, img.height, sr, sg, sb, sa,
+        (probe >>> 16) & 0xff, (probe >>> 8) & 0xff, probe & 0xff,
+        probe >>> 24))
     }
-    ids.sparkSession.createDataFrame(rdd, decodeSchema)
-  }
 }

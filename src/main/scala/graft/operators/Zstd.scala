@@ -1662,18 +1662,12 @@ object Zstd {
 
   /** ids -> dictionary + dict-fed frame -> dictionary-aware walk.
     * Per-doc map work — scan-stage cost at any corpus size. */
-  def dictFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = walk(synthDictFrame(d), synthDict(d))
-        Row(d, m.dictId, dictContentLen(d), m.nBlocks, m.nSequences,
-          m.contentBytes, m.contentSum, m.checksummed)
-      }
+  def dictFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, dictFeatureSchema) { d =>
+      val m = walk(synthDictFrame(d), synthDict(d))
+      Iterator.single(Row(d, m.dictId, dictContentLen(d), m.nBlocks,
+        m.nSequences, m.contentBytes, m.contentSum, m.checksummed))
     }
-    ids.sparkSession.createDataFrame(rdd, dictFeatureSchema)
-  }
 
   /** ids → SHARD dictionary (one per `shardSize` ids) + per-doc
     * dict-fed frames → dictionary-aware walk, the dictionary PARSED
@@ -1681,14 +1675,14 @@ object Zstd {
     * 100 TB deployment shape: a trained dictionary is a table-level
     * artifact, so per-row dictionary parsing (the dictFeatures
     * worst-case row) is amortized to scan noise. */
-  def sharedDictFeatures(ids: DataFrame, idCol: String,
-      shardSize: Int = 4096): DataFrame = {
+  def sharedDictFeatures(ids: DataFrame, shardSize: Int = 4096): DataFrame = {
     require(shardSize >= 1, s"zstd: absurd shard size $shardSize")
-    val idIdx = ids.schema.fieldIndex(idCol)
+    // Not a PerDoc walk: the dictionary cache lives per partition. The
+    // id is column 0, as in PerDoc.
     val rdd = ids.rdd.mapPartitions { rows =>
       val cache = collection.mutable.LongMap.empty[ParsedDict]
       rows.map { r =>
-        val d = r.getLong(idIdx)
+        val d = r.getLong(0)
         val g = d / shardSize
         val pd = cache.getOrElseUpdate(g, parseDictionary(synthDict(g)))
         val m = walk(synthSharedDictFrame(d, g), pd)
@@ -1710,18 +1704,12 @@ object Zstd {
     StructField("n_checksummed", IntegerType)))
 
   /** ids -> compressed-block fixture -> full decode walk. */
-  def decodeFeatures(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = walk(synthCompressed(d))
-        Row(d, m.nFrames, m.nBlocks, m.nCompressedBlocks, m.nSequences,
-          m.contentBytes, m.contentSum, m.checksummed)
-      }
+  def decodeFeatures(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, decodeSchema) { d =>
+      val m = walk(synthCompressed(d))
+      Iterator.single(Row(d, m.nFrames, m.nBlocks, m.nCompressedBlocks,
+        m.nSequences, m.contentBytes, m.contentSum, m.checksummed))
     }
-    ids.sparkSession.createDataFrame(rdd, decodeSchema)
-  }
 
   private val schema = StructType(Seq(
     StructField("id", LongType),
@@ -1735,17 +1723,11 @@ object Zstd {
     StructField("dict_id", LongType)))
 
   /** ids -> closed-form stream -> frame walk + block decode. */
-  def features(ids: DataFrame, idCol: String): DataFrame = {
-    val idIdx = ids.schema.fieldIndex(idCol)
-    val rdd = ids.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(idIdx)
-        val m = walk(synth(d))
-        Row(d, m.nFrames, m.nSkippable, m.nBlocks, m.nRleBlocks,
-          m.contentBytes, m.contentSum, m.checksummed,
-          if (m.dictId < 0) null else Long.box(m.dictId))
-      }
+  def features(ids: DataFrame): DataFrame =
+    PerDoc.walk(ids, schema) { d =>
+      val m = walk(synth(d))
+      Iterator.single(Row(d, m.nFrames, m.nSkippable, m.nBlocks, m.nRleBlocks,
+        m.contentBytes, m.contentSum, m.checksummed,
+        if (m.dictId < 0) null else Long.box(m.dictId)))
     }
-    ids.sparkSession.createDataFrame(rdd, schema)
-  }
 }

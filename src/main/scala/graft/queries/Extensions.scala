@@ -10,6 +10,21 @@ import graft.sources.Catalog
   */
 object Extensions extends QueryModule {
 
+  /** Oracle shared by the dense edges table: `jx_json_edges` and the cube
+    * round-trip `jx_json_cube`. */
+  private val edgesOracle: String =
+    """WITH bucketed AS (SELECT CASE WHEN c_mktsegment IN
+            ('AUTOMOBILE', 'BUILDING', 'FURNITURE', 'AEROSPACE')
+            THEN c_mktsegment END AS seg, c_acctbal FROM customer),
+        agg AS (SELECT seg, count(*) AS n, max(c_acctbal) AS max_bal
+          FROM bucketed GROUP BY seg),
+        domain(seg) AS (VALUES ('AUTOMOBILE'), ('BUILDING'), ('FURNITURE'), ('AEROSPACE'))
+        SELECT d.seg, coalesce(a.n, 0) AS n, a.max_bal
+          FROM domain d LEFT JOIN agg a ON d.seg = a.seg
+        UNION ALL
+        SELECT NULL AS seg, n, max_bal FROM agg WHERE seg IS NULL
+        ORDER BY seg NULLS FIRST"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // Schema introspection — JX/ActiveData expose table metadata as a
@@ -391,17 +406,7 @@ object Extensions extends QueryModule {
           ],
           "sort": "seg"
         }"""),
-      Some("""WITH bucketed AS (SELECT CASE WHEN c_mktsegment IN
-            ('AUTOMOBILE', 'BUILDING', 'FURNITURE', 'AEROSPACE')
-            THEN c_mktsegment END AS seg, c_acctbal FROM customer),
-        agg AS (SELECT seg, count(*) AS n, max(c_acctbal) AS max_bal
-          FROM bucketed GROUP BY seg),
-        domain(seg) AS (VALUES ('AUTOMOBILE'), ('BUILDING'), ('FURNITURE'), ('AEROSPACE'))
-        SELECT d.seg, coalesce(a.n, 0) AS n, a.max_bal
-          FROM domain d LEFT JOIN agg a ON d.seg = a.seg
-        UNION ALL
-        SELECT NULL AS seg, n, max_bal FROM agg WHERE seg IS NULL
-        ORDER BY seg NULLS FIRST""")),
+      Some(edgesOracle)),
 
     // JX snowflake descent through the JSON front door (jx_sqlite
     // nested child tables, SURVEY §1.1): `from: "orders_nested.lines"`
@@ -521,13 +526,7 @@ object Extensions extends QueryModule {
             {"name": "fp", "value": {"fingerprint": "text"}}],
           "sort": "doc_id"
         }"""),
-      Some("""SELECT doc_id,
-        md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS fp
-        FROM (SELECT *, row_number() OVER (
-            PARTITION BY md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))
-            ORDER BY doc_id) AS rn
-          FROM documents)
-        WHERE rn = 1 ORDER BY doc_id""")),
+      Some(Llm.exactDedupOracle)),
 
     // JX `sample` through the JSON front door (round 10): the
     // deterministic content-addressed sampling primitive
@@ -571,12 +570,7 @@ object Extensions extends QueryModule {
           "select": [{"name": "n", "aggregate": "count"}],
           "sort": "ws"
         }"""),
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events)
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, count(*) AS n
-        FROM events, b
-        WHERE time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-          <= mx - INTERVAL '2 hours'
-        GROUP BY ws ORDER BY ws""")),
+      Some(StreamingBatch.tumblingOracle)),
 
     // The sliding form of the streaming front door: a "slide" key in
     // the window groupby entry compiles onto window(ts, dur, slide) —
@@ -593,13 +587,7 @@ object Extensions extends QueryModule {
           "select": [{"name": "n", "aggregate": "count"}],
           "sort": "ws"
         }"""),
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events),
-        w AS (SELECT time_bucket(INTERVAL '15 minutes', ts)
-            - k * INTERVAL '15 minutes' AS ws
-          FROM events, (SELECT unnest([0, 1, 2, 3]) AS k))
-        SELECT ws, count(*) AS n FROM w, b
-        WHERE ws + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
-        GROUP BY ws ORDER BY ws""")),
+      Some(StreamingBatch.slidingOracle)),
 
     // The session form: "session_gap" in the window entry compiles
     // onto session_window — gap-merged per-user ranges, the
@@ -618,18 +606,7 @@ object Extensions extends QueryModule {
           "select": [{"name": "n_events", "aggregate": "count"}],
           "sort": ["user_id", "session_start"]
         }"""),
-      Some("""WITH x AS (SELECT user_id, ts, event_id,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR ts - lag(ts) OVER w > INTERVAL '30 minutes' THEN 1 ELSE 0 END AS brk
-        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        y AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM x),
-        sess AS (SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-          count(*) AS n_events FROM y GROUP BY user_id, sid),
-        b AS (SELECT max(ts) AS mx FROM events)
-        SELECT user_id, session_start, n_events FROM sess, b
-        WHERE session_end + INTERVAL '30 minutes' <= mx - INTERVAL '2 hours'
-        ORDER BY user_id, session_start""")),
+      Some(StreamingBatch.sessionOracle)),
 
     // Streaming DEDUP through the front door: watermark-scoped
     // dropDuplicates chained ahead of the windowed aggregate (two
@@ -687,12 +664,7 @@ object Extensions extends QueryModule {
           "select": ["user_id", "click_id", "view_id"],
           "sort": ["user_id", "click_id", "view_id"]
         }"""),
-      Some("""SELECT a.user_id AS user_id, a.event_id AS click_id,
-          b.event_id AS view_id
-        FROM events a JOIN events b ON a.user_id = b.user_id
-          AND a.event_type = 'click' AND b.event_type = 'view'
-          AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOUR
-        ORDER BY a.user_id, click_id, view_id""")),
+      Some(StreamingBatch.streamJoinOracle)),
 
     // JX `window` through the JSON front door: per-customer order
     // sequence numbers (high-cardinality partition key — scale-safe,
@@ -897,17 +869,7 @@ object Extensions extends QueryModule {
             StructField("max_bal", DoubleType))))
           .orderBy(asc_nulls_first("seg"))
       },
-      Some("""WITH bucketed AS (SELECT CASE WHEN c_mktsegment IN
-            ('AUTOMOBILE', 'BUILDING', 'FURNITURE', 'AEROSPACE')
-            THEN c_mktsegment END AS seg, c_acctbal FROM customer),
-        agg AS (SELECT seg, count(*) AS n, max(c_acctbal) AS max_bal
-          FROM bucketed GROUP BY seg),
-        domain(seg) AS (VALUES ('AUTOMOBILE'), ('BUILDING'), ('FURNITURE'), ('AEROSPACE'))
-        SELECT d.seg, coalesce(a.n, 0) AS n, a.max_bal
-          FROM domain d LEFT JOIN agg a ON d.seg = a.seg
-        UNION ALL
-        SELECT NULL AS seg, n, max_bal FROM agg WHERE seg IS NULL
-        ORDER BY seg NULLS FIRST""")),
+      Some(edgesOracle)),
 
     // SQL-string entry point (SURVEY §3.2 entry 3): the registered
     // catalog + spark.sql, proven by running the IDENTICAL SQL text in

@@ -19,6 +19,12 @@ import graft.sources.Catalog
   */
 object Joins extends QueryModule {
 
+  /** Oracle shared by the inner join: plain and skew-salted. */
+  private val innerJoinOracle: String =
+    """SELECT c_mktsegment, count(*) AS n, round(sum(o_totalprice), 2) AS rev
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        GROUP BY c_mktsegment ORDER BY c_mktsegment"""
+
   def defs: Seq[QueryDef] = Seq(
 
     QueryDef(
@@ -30,9 +36,7 @@ object Joins extends QueryModule {
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("rev"))
           .orderBy("c_mktsegment"),
-      Some("""SELECT c_mktsegment, count(*) AS n, round(sum(o_totalprice), 2) AS rev
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY c_mktsegment ORDER BY c_mktsegment""")),
+      Some(innerJoinOracle)),
 
     // Index lookup-miss → Null (SURVEY §2.3): left join keeps every
     // customer; count(o_orderkey) ignores the null-extended rows.
@@ -116,9 +120,7 @@ object Joins extends QueryModule {
           .groupBy("c_mktsegment")
           .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("rev"))
           .orderBy("c_mktsegment"),
-      Some("""SELECT c_mktsegment, count(*) AS n, round(sum(o_totalprice), 2) AS rev
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY c_mktsegment ORDER BY c_mktsegment""")),
+      Some(innerJoinOracle)),
 
     // Parent→child snowflake descent (jx_sqlite nested tables,
     // SURVEY §2.3): orders is the parent, lineitem the nested child.

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, QueryModule}
-import graft.operators.{CodeOps, Markdown, Multimodal, Pdf, Similarity, TextOps, Unigram}
+import graft.operators.{CodeOps, Codecs, Markdown, Multimodal, Pdf, PerDoc,
+  Similarity, TextOps, Unigram}
 import graft.plans.VectorExprs
 import graft.sources.Catalog
 
@@ -13,6 +14,143 @@ import graft.sources.Catalog
   * graft.operators; this module wires them into the driver contract.
   */
 object Llm extends QueryModule {
+
+  /** Oracle shared by exact BM25 top-k: `llm_bm25_topk` and its
+    * MaxScore twin. */
+  private val bm25TopKOracle: String =
+    """WITH corpus AS (SELECT doc_id, text FROM documents
+            WHERE doc_id < 300),
+        tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+          FROM corpus),
+        tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
+        dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
+        stats AS (SELECT count(*) AS n_docs, round(avg(dl), 6) AS avgdl
+          FROM dl),
+        dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
+        qterms AS (SELECT DISTINCT doc_id AS qid, unnest(
+            (string_split(text, ' '))[1:5]) AS w
+          FROM corpus WHERE doc_id < 3),
+        contrib AS (SELECT q.qid, t.doc_id,
+            round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) *
+              t.tf * 2.2 /
+              (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl)), 6) AS c
+          FROM qterms q
+          JOIN tf t ON t.w = q.w
+          JOIN dfq d ON d.w = q.w
+          JOIN dl l ON l.doc_id = t.doc_id
+          CROSS JOIN stats s),
+        scored AS (SELECT qid, doc_id, round(sum(c), 6) AS score
+          FROM contrib GROUP BY 1, 2)
+        SELECT qid, rk, doc_id, score FROM (
+          SELECT qid, doc_id, score,
+            CAST(row_number() OVER (PARTITION BY qid
+              ORDER BY score DESC, doc_id) AS BIGINT) AS rk
+          FROM scored)
+        WHERE rk <= 5 ORDER BY qid, rk"""
+
+  /** Oracle shared by the closed-form 16x12 image: BMP and PNG decode. */
+  private val imageDecodeOracle: String =
+    """SELECT d.doc_id AS id, 16 AS width, 12 AS height,
+          CAST(sum((d.doc_id + x.x + 11 * y.y) % 256) AS BIGINT) AS sum_r,
+          CAST(sum((3 * d.doc_id + 7 * x.x + y.y) % 256) AS BIGINT) AS sum_g,
+          CAST(sum((5 * d.doc_id + 2 * x.x + 3 * y.y) % 256) AS BIGINT) AS sum_b,
+          CAST((d.doc_id + 3 + 22) % 256 AS INT) AS px32_r,
+          CAST((3 * d.doc_id + 21 + 2) % 256 AS INT) AS px32_g,
+          CAST((5 * d.doc_id + 6 + 6) % 256 AS INT) AS px32_b
+        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
+          (SELECT unnest(range(0, 16)) AS x) x,
+          (SELECT unnest(range(0, 12)) AS y) y
+        GROUP BY d.doc_id ORDER BY id"""
+
+  /** Oracle shared by the closed-form image resized to 8x6: BMP and PNG
+    * round-trips. */
+  private val imageResizeOracle: String =
+    """SELECT d.doc_id AS id, 8 AS width, 6 AS height,
+          CAST(sum((d.doc_id + 2 * x.x + 11 * 2 * y.y) % 256) AS BIGINT) AS sum_r,
+          CAST(sum((3 * d.doc_id + 7 * 2 * x.x + 2 * y.y) % 256) AS BIGINT) AS sum_g,
+          CAST(sum((5 * d.doc_id + 2 * 2 * x.x + 3 * 2 * y.y) % 256) AS BIGINT) AS sum_b,
+          CAST((d.doc_id + 6 + 44) % 256 AS INT) AS px32_r,
+          CAST((3 * d.doc_id + 42 + 4) % 256 AS INT) AS px32_g,
+          CAST((5 * d.doc_id + 12 + 12) % 256 AS INT) AS px32_b
+        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
+          (SELECT unnest(range(0, 8)) AS x) x,
+          (SELECT unnest(range(0, 6)) AS y) y
+        GROUP BY d.doc_id ORDER BY id"""
+
+  /** Oracle shared by the flat-block JPEG family: baseline and progressive
+    * decode. */
+  private val flatBlockJpegOracle: String =
+    """WITH d AS (SELECT doc_id, CAST(24 + doc_id % 13 AS INT) AS w,
+            CAST(16 + doc_id % 11 AS INT) AS h, doc_id % 5 = 0 AS gray
+          FROM documents WHERE doc_id < 300),
+        px AS (SELECT d.doc_id, d.w, d.h, d.gray, x.x AS x, y.y AS y,
+            x.x // 8 AS bx, y.y // 8 AS by
+          FROM d, (SELECT unnest(range(0, 37)) AS x) x,
+            (SELECT unnest(range(0, 27)) AS y) y
+          WHERE x.x < d.w AND y.y < d.h),
+        c AS (SELECT *, (doc_id + 17 * bx + 29 * by) % 256 AS r,
+            (3 * doc_id + 11 * bx + 7 * by) % 256 AS g,
+            (5 * doc_id + 13 * bx + 19 * by) % 256 AS b
+          FROM px),
+        yc AS (SELECT *,
+            (299 * r + 587 * g + 114 * b + 500) // 1000 AS y0,
+            least(greatest((128000000 - 168736 * r - 331264 * g
+              + 500000 * b + 500000) // 1000000, 0), 255) AS cb,
+            least(greatest((128000000 + 500000 * r - 418688 * g
+              - 81312 * b + 500000) // 1000000, 0), 255) AS cr
+          FROM c),
+        dec AS (SELECT doc_id, w, h, x, y,
+            CASE WHEN gray THEN r ELSE least(greatest(
+              (1000 * y0 + 1402 * (cr - 128) + 500 + 512000) // 1000 - 512,
+              0), 255) END AS dr,
+            CASE WHEN gray THEN r ELSE least(greatest(
+              (1000 * y0 - 344 * (cb - 128) - 714 * (cr - 128) + 500
+                + 512000) // 1000 - 512, 0), 255) END AS dg,
+            CASE WHEN gray THEN r ELSE least(greatest(
+              (1000 * y0 + 1772 * (cb - 128) + 500 + 512000) // 1000 - 512,
+              0), 255) END AS db
+          FROM yc)
+        SELECT doc_id AS id, CAST(max(w) AS INT) AS width,
+          CAST(max(h) AS INT) AS height,
+          CAST(sum(dr) AS BIGINT) AS sum_r,
+          CAST(sum(dg) AS BIGINT) AS sum_g,
+          CAST(sum(db) AS BIGINT) AS sum_b,
+          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dr END) AS INT) AS px32_r,
+          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dg END) AS INT) AS px32_g,
+          CAST(max(CASE WHEN x = 3 AND y = 2 THEN db END) AS INT) AS px32_b
+        FROM dec GROUP BY doc_id ORDER BY id"""
+
+  /** Oracle shared by the WARC record walk, plain and per-record gzipped. */
+  private val warcRecordsOracle: String =
+    """WITH d AS (SELECT doc_id, unnest(range(0, 4 + doc_id % 5)) AS i
+            FROM documents WHERE doc_id < 300),
+        r AS (SELECT doc_id, i,
+            CASE WHEN i = 0 THEN 'warcinfo'
+                 WHEN i % 2 = 1 THEN 'response'
+                 ELSE 'metadata' END AS rec_type,
+            CASE WHEN i % 2 = 1 AND i != 0
+              THEN 'http://site' || doc_id || '.example/page' || i
+              ELSE '' END AS uri,
+            CAST(50 + (7 * doc_id + 13 * i) % 200 AS INT) AS clen
+          FROM d),
+        b AS (SELECT doc_id, i, rec_type, uri, clen,
+            sum((3 * doc_id + 5 * i + j.j) % 251) AS bsum
+          FROM r, LATERAL (SELECT unnest(range(0, r.clen)) AS j) j
+          GROUP BY doc_id, i, rec_type, uri, clen)
+        SELECT doc_id AS id, CAST(i AS INT) AS rec_idx, rec_type, uri,
+          clen AS content_length, CAST(bsum AS BIGINT) AS byte_sum
+        FROM b ORDER BY id, rec_idx"""
+
+  /** Oracle shared by exact dedup: `llm_exact_dedup` and its JX twin
+    * `jx_json_dedup`. */
+  private[queries] val exactDedupOracle: String =
+    """SELECT doc_id,
+        md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS fp
+        FROM (SELECT *, row_number() OVER (
+            PARTITION BY md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))
+            ORDER BY doc_id) AS rn
+          FROM documents)
+        WHERE rn = 1 ORDER BY doc_id"""
 
   /** Shared DuckDB oracle fragment mirroring TextOps.minhashPairsMd5:
     * md5 6-hash signature → 3 bands × 2 rows → bucket-equality
@@ -439,13 +577,7 @@ object Llm extends QueryModule {
           Catalog.table(s, dir, "documents"), "doc_id", "text")
           .select("doc_id", "fp")
           .orderBy("doc_id"),
-      Some("""SELECT doc_id,
-        md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS fp
-        FROM (SELECT *, row_number() OVER (
-            PARTITION BY md5(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))
-            ORDER BY doc_id) AS rn
-          FROM documents)
-        WHERE rn = 1 ORDER BY doc_id""")),
+      Some(exactDedupOracle)),
 
     // Exact dedup, keep-BEST variant: real pipelines keep the highest-
     // quality copy of a duplicate cluster, not the lowest id — here
@@ -1341,35 +1473,7 @@ object Llm extends QueryModule {
       (s, dir) => bm25TopK(
         Catalog.table(s, dir, "documents").filter(col("doc_id") < 300),
         nQueries = 3, k = 5).orderBy("qid", "rk"),
-      Some("""WITH corpus AS (SELECT doc_id, text FROM documents
-            WHERE doc_id < 300),
-        tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-          FROM corpus),
-        tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
-        dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
-        stats AS (SELECT count(*) AS n_docs, round(avg(dl), 6) AS avgdl
-          FROM dl),
-        dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-        qterms AS (SELECT DISTINCT doc_id AS qid, unnest(
-            (string_split(text, ' '))[1:5]) AS w
-          FROM corpus WHERE doc_id < 3),
-        contrib AS (SELECT q.qid, t.doc_id,
-            round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) *
-              t.tf * 2.2 /
-              (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl)), 6) AS c
-          FROM qterms q
-          JOIN tf t ON t.w = q.w
-          JOIN dfq d ON d.w = q.w
-          JOIN dl l ON l.doc_id = t.doc_id
-          CROSS JOIN stats s),
-        scored AS (SELECT qid, doc_id, round(sum(c), 6) AS score
-          FROM contrib GROUP BY 1, 2)
-        SELECT qid, rk, doc_id, score FROM (
-          SELECT qid, doc_id, score,
-            CAST(row_number() OVER (PARTITION BY qid
-              ORDER BY score DESC, doc_id) AS BIGINT) AS rk
-          FROM scored)
-        WHERE rk <= 5 ORDER BY qid, rk""")),
+      Some(bm25TopKOracle)),
 
     // The PRUNED scale form of BM25: query terms with df > cap are
     // dropped before the postings probe — stopword/impact pruning,
@@ -1434,35 +1538,7 @@ object Llm extends QueryModule {
       (s, dir) => bm25TopKMaxScore(
         Catalog.table(s, dir, "documents").filter(col("doc_id") < 300),
         nQueries = 3, k = 5, prefixR = 64).orderBy("qid", "rk"),
-      Some("""WITH corpus AS (SELECT doc_id, text FROM documents
-            WHERE doc_id < 300),
-        tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-          FROM corpus),
-        tf AS (SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY 1, 2),
-        dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY 1),
-        stats AS (SELECT count(*) AS n_docs, round(avg(dl), 6) AS avgdl
-          FROM dl),
-        dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-        qterms AS (SELECT DISTINCT doc_id AS qid, unnest(
-            (string_split(text, ' '))[1:5]) AS w
-          FROM corpus WHERE doc_id < 3),
-        contrib AS (SELECT q.qid, t.doc_id,
-            round(ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5)) *
-              t.tf * 2.2 /
-              (t.tf + 1.2 * (0.25 + 0.75 * l.dl / s.avgdl)), 6) AS c
-          FROM qterms q
-          JOIN tf t ON t.w = q.w
-          JOIN dfq d ON d.w = q.w
-          JOIN dl l ON l.doc_id = t.doc_id
-          CROSS JOIN stats s),
-        scored AS (SELECT qid, doc_id, round(sum(c), 6) AS score
-          FROM contrib GROUP BY 1, 2)
-        SELECT qid, rk, doc_id, score FROM (
-          SELECT qid, doc_id, score,
-            CAST(row_number() OVER (PARTITION BY qid
-              ORDER BY score DESC, doc_id) AS BIGINT) AS rk
-          FROM scored)
-        WHERE rk <= 5 ORDER BY qid, rk""")),
+      Some(bm25TopKOracle)),
 
     // Near-dup GROUPING: pairs → duplicate clusters via distributed
     // min-label propagation (Components.connectedComponents), so a
@@ -3855,22 +3931,10 @@ object Llm extends QueryModule {
     // JPEG/PNG stay behind the documented stub boundary.
     QueryDef(
       "llm_image_decode",
-      (s, dir) => Multimodal.decodeBmpFeatures(
-        Multimodal.synthBmpMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
-      Some("""SELECT d.doc_id AS id, 16 AS width, 12 AS height,
-          CAST(sum((d.doc_id + x.x + 11 * y.y) % 256) AS BIGINT) AS sum_r,
-          CAST(sum((3 * d.doc_id + 7 * x.x + y.y) % 256) AS BIGINT) AS sum_g,
-          CAST(sum((5 * d.doc_id + 2 * x.x + 3 * y.y) % 256) AS BIGINT) AS sum_b,
-          CAST((d.doc_id + 3 + 22) % 256 AS INT) AS px32_r,
-          CAST((3 * d.doc_id + 21 + 2) % 256 AS INT) AS px32_g,
-          CAST((5 * d.doc_id + 6 + 6) % 256 AS INT) AS px32_b
-        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
-          (SELECT unnest(range(0, 16)) AS x) x,
-          (SELECT unnest(range(0, 12)) AS y) y
-        GROUP BY d.doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthBmpMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeBmp).orderBy("id"),
+      Some(imageDecodeOracle)),
 
     // REAL PNG decode (graft.operators.Codecs.decodePng): the payload
     // is a genuine 8-bit PNG — chunk framing with CRC32,
@@ -3886,22 +3950,10 @@ object Llm extends QueryModule {
     // breaks the driver hash.
     QueryDef(
       "llm_image_decode_png",
-      (s, dir) => Multimodal.decodePngFeatures(
-        Multimodal.synthPngMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
-      Some("""SELECT d.doc_id AS id, 16 AS width, 12 AS height,
-          CAST(sum((d.doc_id + x.x + 11 * y.y) % 256) AS BIGINT) AS sum_r,
-          CAST(sum((3 * d.doc_id + 7 * x.x + y.y) % 256) AS BIGINT) AS sum_g,
-          CAST(sum((5 * d.doc_id + 2 * x.x + 3 * y.y) % 256) AS BIGINT) AS sum_b,
-          CAST((d.doc_id + 3 + 22) % 256 AS INT) AS px32_r,
-          CAST((3 * d.doc_id + 21 + 2) % 256 AS INT) AS px32_g,
-          CAST((5 * d.doc_id + 6 + 6) % 256 AS INT) AS px32_b
-        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
-          (SELECT unnest(range(0, 16)) AS x) x,
-          (SELECT unnest(range(0, 12)) AS y) y
-        GROUP BY d.doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthPngMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodePng).orderBy("id"),
+      Some(imageDecodeOracle)),
 
     // GRAYSCALE PNG decode (color type 0): one byte per pixel, so the
     // per-row filters run at bpp=1 — Sub/Paeth reference the previous
@@ -3914,11 +3966,9 @@ object Llm extends QueryModule {
     // so that oracle never moved).
     QueryDef(
       "llm_image_decode_png_gray",
-      (s, dir) => Multimodal.decodePngFeatures(
-        Multimodal.synthPngGrayMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthPngGrayMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodePng).orderBy("id"),
       Some("""SELECT d.doc_id AS id, 16 AS width, 12 AS height,
           CAST(sum((d.doc_id + x.x + 11 * y.y) % 256) AS BIGINT) AS sum_r,
           CAST(sum((d.doc_id + x.x + 11 * y.y) % 256) AS BIGINT) AS sum_g,
@@ -3940,22 +3990,11 @@ object Llm extends QueryModule {
     // resize oracle (shared closed form).
     QueryDef(
       "llm_image_resize_png",
-      (s, dir) => Multimodal.resizePngFeatures(
-        Multimodal.synthPngMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", 8, 6).orderBy("id"),
-      Some("""SELECT d.doc_id AS id, 8 AS width, 6 AS height,
-          CAST(sum((d.doc_id + 2 * x.x + 11 * 2 * y.y) % 256) AS BIGINT) AS sum_r,
-          CAST(sum((3 * d.doc_id + 7 * 2 * x.x + 2 * y.y) % 256) AS BIGINT) AS sum_g,
-          CAST(sum((5 * d.doc_id + 2 * 2 * x.x + 3 * 2 * y.y) % 256) AS BIGINT) AS sum_b,
-          CAST((d.doc_id + 6 + 44) % 256 AS INT) AS px32_r,
-          CAST((3 * d.doc_id + 42 + 4) % 256 AS INT) AS px32_g,
-          CAST((5 * d.doc_id + 12 + 12) % 256 AS INT) AS px32_b
-        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
-          (SELECT unnest(range(0, 8)) AS x) x,
-          (SELECT unnest(range(0, 6)) AS y) y
-        GROUP BY d.doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthPngMedia(Catalog.fixtureDocIds(s, dir)))(bytes =>
+        Codecs.decodePng(Codecs.encodePng(Codecs.resizeNearest(
+          Codecs.decodePng(bytes), 8, 6)))).orderBy("id"),
+      Some(imageResizeOracle)),
 
     // REAL baseline JPEG decode (graft.operators.Codecs.decodeJpeg):
     // the payload is a genuine baseline sequential JPEG — DQT/DHT/SOF0
@@ -3972,50 +4011,10 @@ object Llm extends QueryModule {
     // verdict's "JPEG decode behind the stub boundary" caveat.
     QueryDef(
       "llm_image_decode_jpeg",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthJpegImageMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
-      Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 13 AS INT) AS w,
-            CAST(16 + doc_id % 11 AS INT) AS h, doc_id % 5 = 0 AS gray
-          FROM documents WHERE doc_id < 300),
-        px AS (SELECT d.doc_id, d.w, d.h, d.gray, x.x AS x, y.y AS y,
-            x.x // 8 AS bx, y.y // 8 AS by
-          FROM d, (SELECT unnest(range(0, 37)) AS x) x,
-            (SELECT unnest(range(0, 27)) AS y) y
-          WHERE x.x < d.w AND y.y < d.h),
-        c AS (SELECT *, (doc_id + 17 * bx + 29 * by) % 256 AS r,
-            (3 * doc_id + 11 * bx + 7 * by) % 256 AS g,
-            (5 * doc_id + 13 * bx + 19 * by) % 256 AS b
-          FROM px),
-        yc AS (SELECT *,
-            (299 * r + 587 * g + 114 * b + 500) // 1000 AS y0,
-            least(greatest((128000000 - 168736 * r - 331264 * g
-              + 500000 * b + 500000) // 1000000, 0), 255) AS cb,
-            least(greatest((128000000 + 500000 * r - 418688 * g
-              - 81312 * b + 500000) // 1000000, 0), 255) AS cr
-          FROM c),
-        dec AS (SELECT doc_id, w, h, x, y,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 + 1402 * (cr - 128) + 500 + 512000) // 1000 - 512,
-              0), 255) END AS dr,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 - 344 * (cb - 128) - 714 * (cr - 128) + 500
-                + 512000) // 1000 - 512, 0), 255) END AS dg,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 + 1772 * (cb - 128) + 500 + 512000) // 1000 - 512,
-              0), 255) END AS db
-          FROM yc)
-        SELECT doc_id AS id, CAST(max(w) AS INT) AS width,
-          CAST(max(h) AS INT) AS height,
-          CAST(sum(dr) AS BIGINT) AS sum_r,
-          CAST(sum(dg) AS BIGINT) AS sum_g,
-          CAST(sum(db) AS BIGINT) AS sum_b,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dr END) AS INT) AS px32_r,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dg END) AS INT) AS px32_g,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN db END) AS INT) AS px32_b
-        FROM dec GROUP BY doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpegImageMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
+      Some(flatBlockJpegOracle)),
 
     // REAL 4:2:0 (2x2-subsampled) baseline JPEG decode — the layout
     // real-world color JPEGs overwhelmingly use, through the full
@@ -4032,11 +4031,9 @@ object Llm extends QueryModule {
     // ImageIO decoder in CodecsSpec (both directions).
     QueryDef(
       "llm_image_decode_jpeg420",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthJpeg420Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpeg420Media(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
       Some(constantChromaJpegOracle)),
 
     // REAL 4:2:2 (2x1-subsampled) baseline JPEG decode — the third
@@ -4047,11 +4044,9 @@ object Llm extends QueryModule {
     // third decode geometry.
     QueryDef(
       "llm_image_decode_jpeg422",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthJpeg422Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpeg422Media(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
       Some(constantChromaJpegOracle)),
 
     // REAL 4:1:1 (luma 4x1) baseline JPEG decode — the DV-lineage
@@ -4061,11 +4056,9 @@ object Llm extends QueryModule {
     // same integer oracle: a fourth decode geometry for free.
     QueryDef(
       "llm_image_decode_jpeg411",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthJpeg411Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpeg411Media(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
       Some(constantChromaJpegOracle)),
 
     // REAL vertical-only (luma 1x2) baseline JPEG decode — the
@@ -4078,11 +4071,9 @@ object Llm extends QueryModule {
     // is now CLOSED.
     QueryDef(
       "llm_image_decode_jpeg_h1v2",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthJpegH1v2Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpegH1v2Media(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
       Some(constantChromaJpegOracle)),
 
     // REAL PROGRESSIVE (SOF2) JPEG decode — the multi-scan frame type
@@ -4099,50 +4090,10 @@ object Llm extends QueryModule {
     // written progressive streams in CodecsSpec.
     QueryDef(
       "llm_image_decode_jpeg_prog",
-      (s, dir) => Multimodal.decodeJpegFeatures(
-        Multimodal.synthProgressiveJpegMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
-      Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 13 AS INT) AS w,
-            CAST(16 + doc_id % 11 AS INT) AS h, doc_id % 5 = 0 AS gray
-          FROM documents WHERE doc_id < 300),
-        px AS (SELECT d.doc_id, d.w, d.h, d.gray, x.x AS x, y.y AS y,
-            x.x // 8 AS bx, y.y // 8 AS by
-          FROM d, (SELECT unnest(range(0, 37)) AS x) x,
-            (SELECT unnest(range(0, 27)) AS y) y
-          WHERE x.x < d.w AND y.y < d.h),
-        c AS (SELECT *, (doc_id + 17 * bx + 29 * by) % 256 AS r,
-            (3 * doc_id + 11 * bx + 7 * by) % 256 AS g,
-            (5 * doc_id + 13 * bx + 19 * by) % 256 AS b
-          FROM px),
-        yc AS (SELECT *,
-            (299 * r + 587 * g + 114 * b + 500) // 1000 AS y0,
-            least(greatest((128000000 - 168736 * r - 331264 * g
-              + 500000 * b + 500000) // 1000000, 0), 255) AS cb,
-            least(greatest((128000000 + 500000 * r - 418688 * g
-              - 81312 * b + 500000) // 1000000, 0), 255) AS cr
-          FROM c),
-        dec AS (SELECT doc_id, w, h, x, y,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 + 1402 * (cr - 128) + 500 + 512000) // 1000 - 512,
-              0), 255) END AS dr,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 - 344 * (cb - 128) - 714 * (cr - 128) + 500
-                + 512000) // 1000 - 512, 0), 255) END AS dg,
-            CASE WHEN gray THEN r ELSE least(greatest(
-              (1000 * y0 + 1772 * (cb - 128) + 500 + 512000) // 1000 - 512,
-              0), 255) END AS db
-          FROM yc)
-        SELECT doc_id AS id, CAST(max(w) AS INT) AS width,
-          CAST(max(h) AS INT) AS height,
-          CAST(sum(dr) AS BIGINT) AS sum_r,
-          CAST(sum(dg) AS BIGINT) AS sum_g,
-          CAST(sum(db) AS BIGINT) AS sum_b,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dr END) AS INT) AS px32_r,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN dg END) AS INT) AS px32_g,
-          CAST(max(CASE WHEN x = 3 AND y = 2 THEN db END) AS INT) AS px32_b
-        FROM dec GROUP BY doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthProgressiveJpegMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeJpeg).orderBy("id"),
+      Some(flatBlockJpegOracle)),
 
     // Cross-FORMAT transcode (the thumbnail-extraction pipeline): real
     // baseline-JPEG decode → nearest resize to 12x8 → lossless PNG
@@ -4155,11 +4106,10 @@ object Llm extends QueryModule {
     // reason (thumbnails re-encode lossy only at the final sink).
     QueryDef(
       "llm_image_transcode",
-      (s, dir) => Multimodal.transcodeJpegPngFeatures(
-        Multimodal.synthJpegImageMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", 12, 8).orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthJpegImageMedia(Catalog.fixtureDocIds(s, dir)))(bytes =>
+        Codecs.decodePng(Codecs.encodePng(Codecs.resizeNearest(
+          Codecs.decodeJpeg(bytes), 12, 8)))).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 13 AS INT) AS w,
             CAST(16 + doc_id % 11 AS INT) AS h, doc_id % 5 = 0 AS gray
           FROM documents WHERE doc_id < 300),
@@ -4206,22 +4156,11 @@ object Llm extends QueryModule {
     // or resample index in either direction cannot round-trip.
     QueryDef(
       "llm_image_resize",
-      (s, dir) => Multimodal.resizeBmpFeatures(
-        Multimodal.synthBmpMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", 8, 6).orderBy("id"),
-      Some("""SELECT d.doc_id AS id, 8 AS width, 6 AS height,
-          CAST(sum((d.doc_id + 2 * x.x + 11 * 2 * y.y) % 256) AS BIGINT) AS sum_r,
-          CAST(sum((3 * d.doc_id + 7 * 2 * x.x + 2 * y.y) % 256) AS BIGINT) AS sum_g,
-          CAST(sum((5 * d.doc_id + 2 * 2 * x.x + 3 * 2 * y.y) % 256) AS BIGINT) AS sum_b,
-          CAST((d.doc_id + 6 + 44) % 256 AS INT) AS px32_r,
-          CAST((3 * d.doc_id + 42 + 4) % 256 AS INT) AS px32_g,
-          CAST((5 * d.doc_id + 12 + 12) % 256 AS INT) AS px32_b
-        FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
-          (SELECT unnest(range(0, 8)) AS x) x,
-          (SELECT unnest(range(0, 6)) AS y) y
-        GROUP BY d.doc_id ORDER BY id""")),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthBmpMedia(Catalog.fixtureDocIds(s, dir)))(bytes =>
+        Codecs.decodeBmp(Codecs.encodeBmp(Codecs.resizeNearest(
+          Codecs.decodeBmp(bytes), 8, 6)))).orderBy("id"),
+      Some(imageResizeOracle)),
 
     // REAL audio decode: each doc gets an actual RIFF/PCM16-mono WAV
     // (2000 closed-form integer samples in [-1000,1000] at 8 kHz); the
@@ -4233,10 +4172,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_decode",
       (s, dir) => Multimodal.decodeWavFeatures(
-        Multimodal.synthWavMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthWavMedia(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH s AS (SELECT d.doc_id, i.i,
             ((i.i * (37 + d.doc_id % 13) + d.doc_id) % 2001) - 1000 AS v
           FROM (SELECT doc_id FROM documents WHERE doc_id < 300) d,
@@ -4297,7 +4233,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_pipeline",
       (s, dir) => Multimodal.audioPipelineFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .groupBy("kind")
         .agg(count(lit(1)).as("n_in"),
           sum("kept").as("n_kept"),
@@ -4353,8 +4289,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_adts_meta",
       (s, dir) => graft.operators.Adts.metaFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(4 + doc_id % 6 AS INT) AS n
           FROM documents WHERE doc_id < 300),
@@ -4390,8 +4325,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_mp3_side",
       (s, dir) => graft.operators.Mp3Side.features(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(5 + doc_id % 7 AS INT) AS n,
             CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 2 END AS INT) AS nch
@@ -4434,10 +4368,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_mp3_meta",
       (s, dir) => Multimodal.mp3Features(
-        Multimodal.synthMp3Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthMp3Media(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id,
             CAST(CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
               ELSE 32000 END AS INT) AS sr,
@@ -4481,10 +4412,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_meta",
       (s, dir) => Multimodal.jpegMetaFeatures(
-        Multimodal.synthJpegMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthJpegMedia(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(64 + doc_id % 193 AS INT) AS width,
           CAST(48 + (3 * doc_id) % 157 AS INT) AS height,
@@ -4504,10 +4432,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_meta",
       (s, dir) => Multimodal.mp4MetaFeatures(
-        Multimodal.synthMp4Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthMp4Media(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(600 + 100 * (doc_id % 9) AS INT) AS timescale,
           CAST(5 + doc_id % 60 AS BIGINT) AS duration_s,
@@ -4535,10 +4460,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_nal_meta",
       (s, dir) => Multimodal.avcNalFeatures(
-        Multimodal.synthAvcMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthAvcMedia(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           CASE WHEN doc_id % 2 = 0 THEN 'avcc' ELSE 'annexb' END AS framing,
           CAST(3 + doc_id % 3 AS INT) AS n_nals,
@@ -4570,8 +4492,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_hevc_meta",
       (s, dir) => graft.operators.Hevc.metaFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CASE WHEN doc_id % 2 = 0 THEN 'hvcc' ELSE 'annexb' END AS framing,
@@ -4608,8 +4529,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_hvcc_meta",
       (s, dir) => graft.operators.Hevc.hvccFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(1 AS INT) AS n_vps, CAST(1 AS INT) AS n_sps,
@@ -4657,8 +4577,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_webm_meta",
       (s, dir) => graft.operators.Webm.webmFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
         cl AS (SELECT doc_id, c.c AS c FROM d,
@@ -4755,9 +4674,7 @@ object Llm extends QueryModule {
       "llm_video_avcc_meta",
       (s, dir) => Multimodal.avccFeatures(
         Multimodal.synthAvcMp4Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(1 AS INT) AS n_sps, CAST(1 AS INT) AS n_pps,
           CAST(4 AS INT) AS nal_len_size,
@@ -4785,10 +4702,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_mp4a_meta",
       (s, dir) => Multimodal.mp4aFeatures(
-        Multimodal.synthMp4aMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthMp4aMedia(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(1 + doc_id % 4 AS INT) AS object_type,
           CAST(3 + doc_id % 9 AS INT) AS sr_index,
@@ -4815,9 +4729,7 @@ object Llm extends QueryModule {
       "llm_video_samples",
       (s, dir) => Multimodal.mp4SampleFeatures(
         Multimodal.synthMp4SamplesMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 40 AS INT) AS n,
             CAST(512 + doc_id % 100 AS INT) AS delta,
             doc_id % 4 = 0 AS uniform,
@@ -4854,9 +4766,7 @@ object Llm extends QueryModule {
       "llm_video_chunks",
       (s, dir) => Multimodal.mp4SampleLocationFeatures(
         Multimodal.synthMp4ChunksMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "sample_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "sample_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 40 AS INT) AS n,
             CAST(3 + doc_id % 4 AS INT) AS k1,
             CAST(1 + doc_id % 3 AS INT) AS k2,
@@ -4888,27 +4798,8 @@ object Llm extends QueryModule {
       "llm_warc_records",
       (s, dir) => Multimodal.warcRecordFeatures(
         Multimodal.synthWarcMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "rec_idx"),
-      Some("""WITH d AS (SELECT doc_id, unnest(range(0, 4 + doc_id % 5)) AS i
-            FROM documents WHERE doc_id < 300),
-        r AS (SELECT doc_id, i,
-            CASE WHEN i = 0 THEN 'warcinfo'
-                 WHEN i % 2 = 1 THEN 'response'
-                 ELSE 'metadata' END AS rec_type,
-            CASE WHEN i % 2 = 1 AND i != 0
-              THEN 'http://site' || doc_id || '.example/page' || i
-              ELSE '' END AS uri,
-            CAST(50 + (7 * doc_id + 13 * i) % 200 AS INT) AS clen
-          FROM d),
-        b AS (SELECT doc_id, i, rec_type, uri, clen,
-            sum((3 * doc_id + 5 * i + j.j) % 251) AS bsum
-          FROM r, LATERAL (SELECT unnest(range(0, r.clen)) AS j) j
-          GROUP BY doc_id, i, rec_type, uri, clen)
-        SELECT doc_id AS id, CAST(i AS INT) AS rec_idx, rec_type, uri,
-          clen AS content_length, CAST(bsum AS BIGINT) AS byte_sum
-        FROM b ORDER BY id, rec_idx""")),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "rec_idx"),
+      Some(warcRecordsOracle)),
 
     // The per-record-GZIP form — the layout real WARC archives use so
     // records stay independently seekable. Same records, same oracle:
@@ -4918,27 +4809,8 @@ object Llm extends QueryModule {
       "llm_warc_gz_records",
       (s, dir) => Multimodal.warcRecordFeatures(
         Multimodal.synthWarcGzMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", gz = true).orderBy("id", "rec_idx"),
-      Some("""WITH d AS (SELECT doc_id, unnest(range(0, 4 + doc_id % 5)) AS i
-            FROM documents WHERE doc_id < 300),
-        r AS (SELECT doc_id, i,
-            CASE WHEN i = 0 THEN 'warcinfo'
-                 WHEN i % 2 = 1 THEN 'response'
-                 ELSE 'metadata' END AS rec_type,
-            CASE WHEN i % 2 = 1 AND i != 0
-              THEN 'http://site' || doc_id || '.example/page' || i
-              ELSE '' END AS uri,
-            CAST(50 + (7 * doc_id + 13 * i) % 200 AS INT) AS clen
-          FROM d),
-        b AS (SELECT doc_id, i, rec_type, uri, clen,
-            sum((3 * doc_id + 5 * i + j.j) % 251) AS bsum
-          FROM r, LATERAL (SELECT unnest(range(0, r.clen)) AS j) j
-          GROUP BY doc_id, i, rec_type, uri, clen)
-        SELECT doc_id AS id, CAST(i AS INT) AS rec_idx, rec_type, uri,
-          clen AS content_length, CAST(bsum AS BIGINT) AS byte_sum
-        FROM b ORDER BY id, rec_idx""")),
+          Catalog.fixtureDocIds(s, dir)), gz = true).orderBy("id", "rec_idx"),
+      Some(warcRecordsOracle)),
 
     // HTTP MESSAGE PARSE — the second operation of the web-ingest
     // chain: frame the entity body out of each WARC response record's
@@ -4950,10 +4822,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_http_parse",
       (s, dir) => Multimodal.webTextFeatures(
-        Multimodal.synthWarcWebMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id")
+        Multimodal.synthWarcWebMedia(Catalog.fixtureDocIds(s, dir)))
         .select(col("id"), col("rec_idx"), col("status"),
           col("chunked").cast("int").as("chunked"),
           col("content_type"), col("x_seq"), col("body_len"))
@@ -4980,10 +4849,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_html_text",
       (s, dir) => Multimodal.webTextFeatures(
-        Multimodal.synthWarcWebMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id")
+        Multimodal.synthWarcWebMedia(Catalog.fixtureDocIds(s, dir)))
         .select(col("id"), col("rec_idx"), col("title"), col("n_links"),
           col("first_link"), col("n_words"), col("text"))
         .orderBy("id", "rec_idx"),
@@ -5012,9 +4878,7 @@ object Llm extends QueryModule {
       "llm_html_metadata",
       (s, dir) => Multimodal.webMetadataFeatures(
         Multimodal.synthWarcWebMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "rec_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "rec_idx"),
       Some(s"""$webOracleCte
         SELECT doc_id AS id, i AS rec_idx,
           'Doc ' || doc_id || ' & page ' || i AS og_title,
@@ -5040,9 +4904,7 @@ object Llm extends QueryModule {
       "llm_web_pipeline",
       (s, dir) => Multimodal.webTextFeatures(
         Multimodal.synthWarcWebGzMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", gz = true)
+          Catalog.fixtureDocIds(s, dir)), gz = true)
         .groupBy("id")
         .agg(count(lit(1)).as("n_pages"),
           sum(when(col("status") === 200, 1L).otherwise(0L)).as("n_ok"),
@@ -5188,10 +5050,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_anchor_text",
       (s, dir) => Multimodal.webTextFeatures(
-        Multimodal.synthWarcWebMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id")
+        Multimodal.synthWarcWebMedia(Catalog.fixtureDocIds(s, dir)))
         .select(col("id"), col("rec_idx"),
           posexplode(arrays_zip(col("links"), col("link_texts"))))
         .select(col("id"), col("rec_idx"), col("pos").cast("int").as("l"),
@@ -5214,7 +5073,7 @@ object Llm extends QueryModule {
       "llm_crawl_frontier",
       (s, dir) => {
         val entries = Multimodal.sitemapFeatures(
-          Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+          Catalog.table(s, dir, "documents").select("doc_id"))
           .withColumn("pathq",
             expr("concat(parse_url(loc, 'PATH'), '?', parse_url(loc, 'QUERY'))"))
         val rules = Catalog.table(s, dir, "documents")
@@ -5264,7 +5123,7 @@ object Llm extends QueryModule {
         // robots path compliance first (the plain frontier's banned
         // prefix), THEN the politeness budget on what's left
         val entries = Multimodal.sitemapFeatures(
-          docs.select("doc_id"), "doc_id")
+          docs.select("doc_id"))
           .withColumn("pathq",
             expr("concat(parse_url(loc, 'PATH'), '?', parse_url(loc, 'QUERY'))"))
           .filter(!expr("startswith(pathq, concat('/p', id % 4))"))
@@ -5275,18 +5134,15 @@ object Llm extends QueryModule {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("delay",
             org.apache.spark.sql.types.IntegerType)))
-        val policy = s.createDataFrame(
-          hosts.rdd.mapPartitions(_.map { r =>
-            val k = r.getLong(0)
-            val d = graft.operators.Robots.parsePolicy(
-              graft.operators.Robots.synthRobots(k)).crawlDelay
-              .getOrElse(sys.error(
-                s"host $k robots.txt carries no crawl-delay — refusing " +
-                  "to crawl unthrottled"))
-            org.apache.spark.sql.Row(k, d)
-          }), polSchema)
-          .withColumn("budget",
-            greatest(lit(1L), floor(lit(30.0) / col("delay"))))
+        val policy = PerDoc.walk(hosts, polSchema) { k =>
+          val d = graft.operators.Robots.parsePolicy(
+            graft.operators.Robots.synthRobots(k)).crawlDelay
+            .getOrElse(sys.error(
+              s"host $k robots.txt carries no crawl-delay — refusing " +
+                "to crawl unthrottled"))
+          Iterator.single(org.apache.spark.sql.Row(k, d))
+        }.withColumn("budget",
+          greatest(lit(1L), floor(lit(30.0) / col("delay"))))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("k")
           .orderBy(col("priority").desc, col("id"), col("entry_idx"))
@@ -5327,9 +5183,7 @@ object Llm extends QueryModule {
       "llm_gif_frames",
       (s, dir) => Multimodal.gifFrameFeatures(
         Multimodal.synthGifAnimMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "frame_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "frame_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(20 + doc_id % 13 AS INT) AS w,
             CAST(14 + doc_id % 9 AS INT) AS h,
             CAST(1 << CAST(2 + doc_id % 4 AS INT) AS INT) AS nc,
@@ -5360,9 +5214,7 @@ object Llm extends QueryModule {
       "llm_tar_entries",
       (s, dir) => Multimodal.tarEntryFeatures(
         Multimodal.synthTarMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "entry_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "entry_idx"),
       Some("""WITH d AS (SELECT doc_id,
             CAST(unnest(range(0, 3 + doc_id % 5)) AS INT) AS j
           FROM documents WHERE doc_id < 300),
@@ -5399,9 +5251,7 @@ object Llm extends QueryModule {
       "llm_zip_entries",
       (s, dir) => Multimodal.zipEntryFeatures(
         Multimodal.synthZipMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "entry_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "entry_idx"),
       Some("""WITH d AS (SELECT doc_id,
             CAST(unnest(range(0, 2 + doc_id % 4)) AS INT) AS j
           FROM documents WHERE doc_id < 300)
@@ -5422,10 +5272,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_tar_extract_tokens",
       (s, dir) => Multimodal.tarTextMembers(
-        Multimodal.synthTarDocsMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id")
+        Multimodal.synthTarDocsMedia(Catalog.fixtureDocIds(s, dir)))
         .select(col("id"), col("entry_idx"), col("name"),
           size(split(col("text"), " ")).as("n_tokens"),
           size(array_distinct(split(col("text"), " "))).as("n_types"),
@@ -5457,9 +5304,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_markdown_text",
       (s, dir) => Markdown.features(
-        Markdown.synthDf(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
+        Markdown.synthDf(Catalog.fixtureDocIds(s, dir)),
         "id", "md").orderBy("id"),
       Some("""WITH ids AS (SELECT doc_id AS id
           FROM documents WHERE doc_id < 300),
@@ -5495,9 +5340,7 @@ object Llm extends QueryModule {
       "llm_zip64_entries",
       (s, dir) => Multimodal.zipEntryFeatures(
         Multimodal.synthZip64Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "entry_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "entry_idx"),
       Some("""WITH d AS (SELECT doc_id,
             CAST(unnest(range(0, 2 + doc_id % 3)) AS INT) AS j
           FROM documents WHERE doc_id < 300)
@@ -5571,11 +5414,9 @@ object Llm extends QueryModule {
     // directions in CodecsSpec, same rigor as the JPEG rows.
     QueryDef(
       "llm_image_decode_gif",
-      (s, dir) => Multimodal.decodeGifFeatures(
-        Multimodal.synthGifMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+      (s, dir) => Multimodal.imageFeatures(
+        Multimodal.synthGifMedia(Catalog.fixtureDocIds(s, dir)))(
+        Codecs.decodeGif).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(20 + doc_id % 13 AS INT) AS w,
             CAST(14 + doc_id % 9 AS INT) AS h,
             CAST(1 << CAST(2 + doc_id % 4 AS INT) AS INT) AS nc
@@ -5610,7 +5451,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_webp_meta",
       (s, dir) => graft.operators.Webp.metaFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id,
             CAST(16 + doc_id % 13 AS INT) AS w,
@@ -5662,8 +5503,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_decode_webp_lossless",
       (s, dir) => graft.operators.Webp.decodeFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(16 + doc_id % 13 AS INT) AS w,
             CAST(12 + doc_id % 9 AS INT) AS h,
@@ -5792,8 +5632,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_arrow_meta",
       (s, dir) => graft.operators.ArrowIpc.metaFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
         b AS (SELECT doc_id, j.j AS j,
@@ -5979,7 +5818,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_vp8_header",
       (s, dir) => graft.operators.Webp.vp8HeaderFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(doc_id % 2 AS INT) AS color_space,
@@ -6021,7 +5860,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_webp_exif",
       (s, dir) => graft.operators.Webp.exifFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,
@@ -6045,7 +5884,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_font_sfnt_meta",
       (s, dir) => graft.operators.Sfnt.metaFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(4 AS INT) AS n_tables,
@@ -6070,7 +5909,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_svg_meta",
       (s, dir) => graft.operators.Svg.features(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 4 AS INT) AS np,
             100 + doc_id % 50 AS w, 80 + doc_id % 40 AS h
@@ -6123,8 +5962,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_tiff_meta",
       (s, dir) => graft.operators.Tiff.pageFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "page"),
       Some("""WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
         pg AS (SELECT doc_id, p.p AS p FROM d,
@@ -6185,9 +6023,7 @@ object Llm extends QueryModule {
     // subset boundary (modern favicons ship PNG). Per-doc map work.
     QueryDef(
       "llm_image_ico",
-      (s, dir) => graft.operators.Ico.features(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+      (s, dir) => graft.operators.Ico.features(Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "entry_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 3 AS INT) AS n
           FROM documents WHERE doc_id < 300),
@@ -6217,7 +6053,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_icc_meta",
       (s, dir) => graft.operators.Icc.metaFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS nt
             FROM documents),
@@ -6255,7 +6091,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_pipeline",
       (s, dir) => graft.operators.Webp.pipelineFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .groupBy("kind")
         .agg(count(lit(1)).as("n_in"),
           sum("kept").as("n_kept"),
@@ -6293,8 +6129,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_webp_anim",
       (s, dir) => graft.operators.Webp.animFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "frame_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS nf
           FROM documents WHERE doc_id < 300),
@@ -6407,7 +6242,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_sitemap_parse",
       (s, dir) => Multimodal.sitemapFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id", "entry_idx"),
       Some("""WITH e AS (SELECT doc_id,
             CAST(unnest(range(0, 2 + doc_id % 4)) AS INT) AS j
@@ -6434,7 +6269,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_web_feed",
       (s, dir) => graft.operators.Feed.feedFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id", "entry_idx"),
       Some("""WITH e AS (SELECT doc_id,
             CAST(unnest(range(0, 2 + doc_id % 4)) AS INT) AS j
@@ -6466,8 +6301,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_proto_records",
       (s, dir) => graft.operators.Proto.protoFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH t AS (SELECT doc_id,
             CAST(1 + doc_id % 4 AS INT) AS nt FROM documents
@@ -6501,8 +6335,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_avro_records",
       (s, dir) => graft.operators.AvroWalk.avroFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "block_idx", "rec_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 3 AS INT) AS nb
             FROM documents WHERE doc_id < 300),
@@ -6526,9 +6359,7 @@ object Llm extends QueryModule {
     // 1000·d + k — the oracle recomputes both levels. Map work.
     QueryDef(
       "llm_sitemap_index",
-      (s, dir) => Multimodal.sitemapIndexFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+      (s, dir) => Multimodal.sitemapIndexFeatures(Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "sitemap_idx", "entry_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS ns
             FROM documents WHERE doc_id < 300),
@@ -6553,11 +6384,10 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_crawl_discovery",
       (s, dir) => {
-        val ids = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id")
-        val sm = Multimodal.sitemapIndexFeatures(ids, "doc_id")
+        val ids = Catalog.fixtureDocIds(s, dir)
+        val sm = Multimodal.sitemapIndexFeatures(ids)
           .select(lit("sitemap").as("src"), col("loc").as("url"))
-        val fd = graft.operators.Feed.feedFeatures(ids, "doc_id")
+        val fd = graft.operators.Feed.feedFeatures(ids)
           .select(lit("feed").as("src"), col("link").as("url"))
         sm.union(fd)
           .withColumn("host", expr("parse_url(url, 'HOST')"))
@@ -6820,9 +6650,7 @@ object Llm extends QueryModule {
       "llm_outlink_graph",
       (s, dir) => Multimodal.webTextFeatures(
         Multimodal.synthWarcWebGzMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id", gz = true)
+          Catalog.fixtureDocIds(s, dir)), gz = true)
         .filter(col("status") === 200 && col("n_words") >= 18)
         .select(col("id"), explode(col("links")).as("link"))
         .withColumn("domain", expr("parse_url(link, 'HOST')"))
@@ -6850,7 +6678,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_charset_decode",
       (s, dir) => Multimodal.charsetDecodeFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH c AS (SELECT doc_id, CAST(1 + doc_id % 3 AS INT) AS k
             FROM documents),
@@ -6890,7 +6718,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_charset_bom",
       (s, dir) => Multimodal.bomDecodeFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH c AS (SELECT doc_id, CAST(1 + doc_id % 3 AS INT) AS k
             FROM documents),
@@ -6921,7 +6749,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_main_content",
       (s, dir) => Multimodal.mainContentFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH n AS (SELECT doc_id, CAST(3 + doc_id % 4 AS INT) AS np
             FROM documents),
@@ -6956,14 +6784,11 @@ object Llm extends QueryModule {
             org.apache.spark.sql.types.BooleanType),
           org.apache.spark.sql.types.StructField("prefix",
             org.apache.spark.sql.types.StringType)))
-        val rules = s.createDataFrame(
-          hosts.rdd.mapPartitions(_.flatMap { r =>
-            val k = r.getLong(0)
-            graft.operators.Robots.parse(
-              graft.operators.Robots.synthRobots(k))
-              .iterator.map(rule =>
-                org.apache.spark.sql.Row(k, rule.allow, rule.prefix))
-          }), rulesSchema)
+        val rules = PerDoc.walk(hosts, rulesSchema) { k =>
+          graft.operators.Robots.parse(graft.operators.Robots.synthRobots(k))
+            .iterator.map(rule =>
+              org.apache.spark.sql.Row(k, rule.allow, rule.prefix))
+        }
         val urls = docs.selectExpr("doc_id AS id", "doc_id % 20 AS k",
           "concat('site', doc_id % 20, '.example') AS host",
           """CASE WHEN doc_id % 5 = 0
@@ -7009,8 +6834,8 @@ object Llm extends QueryModule {
       (s, dir) => Multimodal.videoFrameFeatures(
         Multimodal.synthMjpegMp4Media(
           Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 200).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "frame_idx"),
+            .filter(col("doc_id") < 200).select("doc_id")))
+        .orderBy("id", "frame_idx"),
       Some("""WITH f AS (SELECT doc_id, unnest(range(0, 3 + doc_id % 4)) AS fi
             FROM documents WHERE doc_id < 200),
         d AS (SELECT doc_id, fi, doc_id + 1000 * fi AS s FROM f),
@@ -7072,8 +6897,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_decode_iframe",
       (s, dir) => graft.operators.Avc.iframeFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, 60 + doc_id % 40 AS v0,
             (152 + 40 * (doc_id % 6)) // 64 AS r1,
@@ -7104,9 +6928,7 @@ object Llm extends QueryModule {
       "llm_video_keyframes",
       (s, dir) => graft.operators.Avc.keyframeFeatures(
         Multimodal.synthIdrMp4Media(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "frame_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "frame_idx"),
       Some("""WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS k
             FROM documents WHERE doc_id < 300),
         c AS (SELECT doc_id, k, doc_id + 1000 * k AS s FROM f),
@@ -7139,8 +6961,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_fmp4_samples",
       (s, dir) => graft.operators.Fmp4.dataSampleFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "sample_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS nf,
             512 + doc_id % 100 AS base
@@ -7180,8 +7001,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_video_fmp4_keyframes",
       (s, dir) => graft.operators.Fmp4.keyframeFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "sample_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 3 AS INT) AS nf
             FROM documents WHERE doc_id < 300),
@@ -7224,9 +7044,7 @@ object Llm extends QueryModule {
       "llm_video_sample_bytes",
       (s, dir) => Multimodal.mp4SampleByteFeatures(
         Multimodal.synthMp4DataMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id", "sample_idx"),
+          Catalog.fixtureDocIds(s, dir))).orderBy("id", "sample_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(24 + doc_id % 40 AS INT) AS n,
             CAST(3 + doc_id % 4 AS INT) AS k1,
             CAST(1 + doc_id % 3 AS INT) AS k2
@@ -7336,9 +7154,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_pdf_meta",
       (s, dir) => Pdf.metaFeatures(
-        Pdf.synthDf(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
+        Pdf.synthDf(Catalog.fixtureDocIds(s, dir)),
         "id", "pdf").orderBy("id"),
       Some("""WITH d AS (SELECT doc_id AS id,
             CAST(1 + doc_id % 3 AS INT) AS n_pages
@@ -7369,9 +7185,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_pdf_text",
       (s, dir) => Pdf.textFeatures(
-        Pdf.synthDf(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
+        Pdf.synthDf(Catalog.fixtureDocIds(s, dir)),
         "id", "pdf").orderBy("id"),
       Some("""WITH d AS (SELECT doc_id AS id,
             CAST(1 + doc_id % 3 AS INT) AS n_pages
@@ -7403,9 +7217,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_code_comment_strip",
       (s, dir) => CodeOps.stripComments(
-        CodeOps.synthDf(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
+        CodeOps.synthDf(Catalog.fixtureDocIds(s, dir)),
         "id", "src").orderBy("id"),
       Some("""SELECT doc_id AS id,
           'int a' || (doc_id % 5) || ' = ' || (doc_id % 100) || ';'
@@ -7517,7 +7329,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_flac_meta",
       (s, dir) => graft.operators.Flac.metaFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CAST(CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
@@ -7557,9 +7369,7 @@ object Llm extends QueryModule {
     // the id header stay behind the documented lossy-audio boundary.
     QueryDef(
       "llm_audio_ogg_meta",
-      (s, dir) => graft.operators.Ogg.oggFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+      (s, dir) => graft.operators.Ogg.oggFeatures(Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(2 + doc_id % 4 AS INT) AS n
           FROM documents WHERE doc_id < 300),
@@ -7628,8 +7438,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_flac_decode",
       (s, dir) => graft.operators.Flac.audioFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some(s"""$flacAggCte
         SELECT id, n_samples, channels, sample_rate, peak, zero_cross,
@@ -7728,8 +7537,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_doc_epub",
       (s, dir) => graft.operators.Epub.epubFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "spine_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 4 AS INT) AS n
             FROM documents WHERE doc_id < 300),
@@ -7787,7 +7595,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_subtitle_srt",
       (s, dir) => graft.operators.Subtitles.srtFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some(subtitleOracle)),
 
@@ -7798,7 +7606,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_subtitle_vtt",
       (s, dir) => graft.operators.Subtitles.vttFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some(subtitleOracle)),
 
@@ -7814,7 +7622,7 @@ object Llm extends QueryModule {
       "llm_caption_align",
       (s, dir) => {
         val ids = Catalog.table(s, dir, "documents").select("doc_id")
-        val cues = graft.operators.Subtitles.srtCues(ids, "doc_id")
+        val cues = graft.operators.Subtitles.srtCues(ids)
         val frames = ids.select(col("doc_id").as("fid"),
             explode(sequence(lit(0),
               (lit(7) + col("doc_id") % 9).cast("int"))).as("k"))
@@ -7941,10 +7749,8 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_doc_dispatch",
       (s, dir) => Multimodal.docDispatchFeatures(
-        Multimodal.synthMixedDocsMedia(
-          Catalog.table(s, dir, "documents")
-            .filter(col("doc_id") < 300).select("doc_id"), "doc_id"),
-        "id").orderBy("id"),
+        Multimodal.synthMixedDocsMedia(Catalog.fixtureDocIds(s, dir)), "id")
+        .orderBy("id"),
       Some(s"""$webOracleCte,
         md AS (SELECT doc_id AS id,
           'head w' || (doc_id % 13) || ' ' ||
@@ -7988,7 +7794,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_audio_id3_tags",
       (s, dir) => graft.operators.Id3.tagFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""WITH t AS (SELECT doc_id AS id,
             't' || (doc_id % 20) AS title,
@@ -8016,7 +7822,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_image_exif",
       (s, dir) => graft.operators.Exif.metaFeatures(
-        Catalog.table(s, dir, "documents").select("doc_id"), "doc_id")
+        Catalog.table(s, dir, "documents").select("doc_id"))
         .orderBy("id"),
       Some("""SELECT doc_id AS id,
           CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS endian,

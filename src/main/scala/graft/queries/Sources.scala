@@ -495,9 +495,7 @@ object Sources extends QueryModule {
     // decoder. Per-doc map work.
     QueryDef(
       "etl_zstd_frames",
-      (s, dir) => graft.operators.Zstd.features(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+      (s, dir) => graft.operators.Zstd.features(Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 3 AS INT) AS nf
           FROM documents WHERE doc_id < 300),
@@ -553,8 +551,7 @@ object Sources extends QueryModule {
     QueryDef(
       "etl_zstd_decode",
       (s, dir) => graft.operators.Zstd.decodeFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
         fj AS (SELECT doc_id, j.j AS j FROM d,
@@ -616,8 +613,7 @@ object Sources extends QueryModule {
     QueryDef(
       "etl_zstd_dict",
       (s, dir) => graft.operators.Zstd.dictFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id,
           9 + doc_id % 7 AS n1, 3 + doc_id % 3 AS m1,
@@ -670,9 +666,7 @@ object Sources extends QueryModule {
     QueryDef(
       "etl_zstd_dict_shared",
       (s, dir) => graft.operators.Zstd.sharedDictFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id",
-        shardSize = 64)
+        Catalog.fixtureDocIds(s, dir), shardSize = 64)
         .orderBy("id"),
       Some("""WITH d AS (SELECT doc_id, doc_id // 64 AS g
           FROM documents WHERE doc_id < 300),
@@ -725,8 +719,7 @@ object Sources extends QueryModule {
       "etl_zstd_corpus",
       (s, dir) => {
         import s.implicits._
-        val texts = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id").as[Long]
+        val texts = Catalog.fixtureDocIds(s, dir).as[Long]
           .mapPartitions { ids =>
             ids.map { d =>
               val base = s"the quick data lake row r${d % 10} "
@@ -771,8 +764,7 @@ object Sources extends QueryModule {
     QueryDef(
       "etl_gzip_members",
       (s, dir) => graft.operators.Gzip.memberFeatures(
-        Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300).select("doc_id"), "doc_id")
+        Catalog.fixtureDocIds(s, dir))
         .orderBy("id", "member_idx"),
       Some("""WITH d AS (SELECT doc_id, CAST(1 + doc_id % 4 AS INT) AS nm
           FROM documents WHERE doc_id < 300),

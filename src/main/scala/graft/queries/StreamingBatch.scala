@@ -15,6 +15,59 @@ import graft.streaming.Streams
   */
 object StreamingBatch extends QueryModule {
 
+  /** Oracle shared by `stream_tumbling` and its JX twin `jx_json_stream`. */
+  private[queries] val tumblingOracle: String =
+    """WITH b AS (SELECT max(ts) AS mx FROM events)
+        SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, count(*) AS n
+        FROM events, b
+        WHERE time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
+          <= mx - INTERVAL '2 hours'
+        GROUP BY ws ORDER BY ws"""
+
+  /** Oracle shared by `stream_sliding` and its JX twin
+    * `jx_json_stream_sliding`. */
+  private[queries] val slidingOracle: String =
+    """WITH b AS (SELECT max(ts) AS mx FROM events),
+        w AS (SELECT time_bucket(INTERVAL '15 minutes', ts)
+            - k * INTERVAL '15 minutes' AS ws
+          FROM events, (SELECT unnest([0, 1, 2, 3]) AS k))
+        SELECT ws, count(*) AS n FROM w, b
+        WHERE ws + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
+        GROUP BY ws ORDER BY ws"""
+
+  /** Oracle shared by `stream_session_true` and its JX twin
+    * `jx_json_stream_session`. */
+  private[queries] val sessionOracle: String =
+    """WITH x AS (SELECT user_id, ts, event_id,
+          CASE WHEN lag(ts) OVER w IS NULL
+                 OR ts - lag(ts) OVER w > INTERVAL '30 minutes' THEN 1 ELSE 0 END AS brk
+        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        y AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM x),
+        sess AS (SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
+          count(*) AS n_events FROM y GROUP BY user_id, sid),
+        b AS (SELECT max(ts) AS mx FROM events)
+        SELECT user_id, session_start, n_events FROM sess, b
+        WHERE session_end + INTERVAL '30 minutes' <= mx - INTERVAL '2 hours'
+        ORDER BY user_id, session_start"""
+
+  /** Oracle shared by `stream_join` and its JX twin `jx_json_stream_join`. */
+  private[queries] val streamJoinOracle: String =
+    """SELECT a.user_id AS user_id, a.event_id AS click_id, b.event_id AS view_id
+        FROM events a JOIN events b ON a.user_id = b.user_id
+          AND a.event_type = 'click' AND b.event_type = 'view'
+          AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOUR
+        ORDER BY a.user_id, click_id, view_id"""
+
+  /** Oracle shared by the watermarked window: streaming and batch. */
+  private val watermarkOracle: String =
+    """WITH b AS (SELECT max(ts) AS mx FROM events)
+        SELECT date_trunc('hour', ts) AS ws, event_type,
+          count(*) AS n, round(sum(value), 4) AS total
+        FROM events, b
+        WHERE date_trunc('hour', ts) + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
+        GROUP BY ws, event_type ORDER BY ws, event_type"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // Tumbling window, batch mode — window() is epoch-aligned exactly
@@ -234,12 +287,7 @@ object StreamingBatch extends QueryModule {
           s"tb_${System.nanoTime()}", OutputMode.Append())
         out.orderBy("ws")
       },
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events)
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, count(*) AS n
-        FROM events, b
-        WHERE time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-          <= mx - INTERVAL '2 hours'
-        GROUP BY ws ORDER BY ws""")),
+      Some(tumblingOracle)),
 
     // True streaming run of the sliding window — same hard-oracle
     // construction: each event lands in 4 windows; emitted = window
@@ -256,13 +304,7 @@ object StreamingBatch extends QueryModule {
           s"sl_${System.nanoTime()}", OutputMode.Append())
         out.orderBy("ws")
       },
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events),
-        w AS (SELECT time_bucket(INTERVAL '15 minutes', ts)
-            - k * INTERVAL '15 minutes' AS ws
-          FROM events, (SELECT unnest([0, 1, 2, 3]) AS k))
-        SELECT ws, count(*) AS n FROM w, b
-        WHERE ws + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
-        GROUP BY ws ORDER BY ws""")),
+      Some(slidingOracle)),
 
     // Batch oracle twin of stream_watermark: the append-mode emit
     // horizon. With the replay staged as one file (one micro-batch),
@@ -284,12 +326,7 @@ object StreamingBatch extends QueryModule {
           .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))
           .orderBy("ws", "event_type")
       },
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events)
-        SELECT date_trunc('hour', ts) AS ws, event_type,
-          count(*) AS n, round(sum(value), 4) AS total
-        FROM events, b
-        WHERE date_trunc('hour', ts) + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
-        GROUP BY ws, event_type ORDER BY ws, event_type""")),
+      Some(watermarkOracle)),
 
     // True streaming run: file-source replay → watermarked tumbling
     // windows → AvailableNow → memory sink. The watermark_batch twin
@@ -303,12 +340,7 @@ object StreamingBatch extends QueryModule {
           s"wm_${System.nanoTime()}", OutputMode.Append())
         out.orderBy("ws", "event_type")
       },
-      Some("""WITH b AS (SELECT max(ts) AS mx FROM events)
-        SELECT date_trunc('hour', ts) AS ws, event_type,
-          count(*) AS n, round(sum(value), 4) AS total
-        FROM events, b
-        WHERE date_trunc('hour', ts) + INTERVAL '1 hour' <= mx - INTERVAL '2 hours'
-        GROUP BY ws, event_type ORDER BY ws, event_type""")),
+      Some(watermarkOracle)),
 
     // True streaming run of the SESSION window — the same emit-horizon
     // construction as stream_tumbling: one-file AvailableNow replay →
@@ -330,18 +362,7 @@ object StreamingBatch extends QueryModule {
           s"sst_${System.nanoTime()}", OutputMode.Append())
         out.orderBy("user_id", "session_start")
       },
-      Some("""WITH x AS (SELECT user_id, ts, event_id,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR ts - lag(ts) OVER w > INTERVAL '30 minutes' THEN 1 ELSE 0 END AS brk
-        FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        y AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM x),
-        sess AS (SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-          count(*) AS n_events FROM y GROUP BY user_id, sid),
-        b AS (SELECT max(ts) AS mx FROM events)
-        SELECT user_id, session_start, n_events FROM sess, b
-        WHERE session_end + INTERVAL '30 minutes' <= mx - INTERVAL '2 hours'
-        ORDER BY user_id, session_start""")),
+      Some(sessionOracle)),
 
     // True streaming run: stream-stream interval join (clicks → views
     // within 2 h, watermarks bounding both sides' state). Inner join
@@ -358,11 +379,7 @@ object StreamingBatch extends QueryModule {
           noDataBatch = false)
         out.orderBy("user_id", "click_id", "view_id")
       },
-      Some("""SELECT a.user_id AS user_id, a.event_id AS click_id, b.event_id AS view_id
-        FROM events a JOIN events b ON a.user_id = b.user_id
-          AND a.event_type = 'click' AND b.event_type = 'view'
-          AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 2 HOUR
-        ORDER BY a.user_id, click_id, view_id""")),
+      Some(streamJoinOracle)),
 
     // Stream-stream LEFT OUTER interval join —
     // views paired with the same user's clicks in the preceding 2 h,

@@ -52,6 +52,13 @@ object Catalog {
     if (name == "events") normalizeTs(df) else df
   }
 
+  /** The fixture slice the per-document walkers synthesize from: the
+    * `doc_id` column of the documents with `doc_id < 300`. The DuckDB
+    * oracles spell the same slice out as `WHERE doc_id < 300`. */
+  def fixtureDocIds(spark: SparkSession, sfDir: String): DataFrame =
+    table(spark, sfDir, "documents")
+      .filter(col("doc_id") < 300).select("doc_id")
+
   /** Normalize an `events`-shaped frame's `ts` column to session-TZ
     * TimestampType, keyed on the observed type:
     *  - LongType — nanos-since-epoch under

@@ -7,10 +7,12 @@ import org.apache.spark.sql.execution.FormattedMode
 import graft.{Harness, SparkEntry}
 
 /** Times declared queries at a given SF dir — dev utility for iterating
-  * on query plans without a full Bench run. Warms up, forces and times
-  * through graft.Harness exactly as Bench does, with Bench's k. For the
-  * per-job and per-layer split, run perfbench with `--trace 1`. On a
-  * `ScaleCorpus` dir it is the ×N timing.
+  * on query plans without a full Bench run. Forces and times through
+  * graft.Harness as Bench does, with Bench's k, but warms up only the
+  * queries it times (Bench warms the whole suite), so a probe's first
+  * query may still pay JVM-wide costs its suite neighbours would have
+  * absorbed. For the per-job and per-layer split, run perfbench with
+  * `--trace 1`. On a `ScaleCorpus` dir it is the ×N timing.
   *
   * Usage: runMain graft.tools.QueryProbe [sfDir] name [name ...]
   * Env:   QP_PLANS=dir    also write explain("formatted") to dir/<name>.txt
@@ -30,7 +32,7 @@ object QueryProbe {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("llm_decontaminate")
     val spark = Harness.session(Harness.cores)
-    Harness.warmUp(spark)
+    Harness.warmUp(spark, names)
     val planDir = sys.env.get("QP_PLANS")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -40,4 +40,28 @@ class HarnessSpec extends SparkSpec {
     assert(sites == Seq("src/main/scala/graft/Harness.scala"),
       "build sessions with graft.Harness.session so every caller runs Bench's engine")
   }
+
+  test("per-document walks become DataFrames only through operators/PerDoc") {
+    // per src/main file: occurrences of `literal` in comment-stripped code
+    def sites(literal: String): Map[String, Int] =
+      Files.walk(Paths.get("src/main")).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+        .map { p =>
+          val code = CodeOps.strip(Files.readString(p)).text
+          p.getFileName.toString ->
+            code.sliding(literal.length).count(_ == literal)
+        }
+        .filter(_._2 > 0).toMap
+    assert(sites(".rdd.mapPartitions") ==
+      Map("PerDoc.scala" -> 1, "Zstd.scala" -> 1),
+      "walk documents with PerDoc.walk / walkMedia; only Zstd's " +
+        "per-partition dictionary cache stays outside")
+    assert(sites("createDataFrame(rdd") == Map("PerDoc.scala" -> 1,
+      "Zstd.scala" -> 1, "ParquetFooter.scala" -> 1, "Sources.scala" -> 1),
+      "only PerDoc and the three named exceptions build a DataFrame " +
+        "from an RDD")
+    assert(sites("""filter(col("doc_id") < 300).select("doc_id")""") ==
+      Map("Catalog.scala" -> 1),
+      "take the fixture slice from Catalog.fixtureDocIds")
+  }
 }

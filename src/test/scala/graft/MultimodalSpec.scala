@@ -20,7 +20,7 @@ class MultimodalSpec extends SparkSpec {
   test("doc dispatch routes by declared mime and is loud on unknown") {
     val mixed = Multimodal.synthMixedDocsMedia(
       Catalog.table(spark, sf0001, "documents").limit(30)
-        .select("doc_id"), "doc_id")
+        .select("doc_id"))
     val out = Multimodal.docDispatchFeatures(mixed, "id")
       .select("id", "format").as[(Long, String)].collect().toMap
     assert(out.size == 30)
