@@ -209,8 +209,7 @@ object JxJson {
       case JString("docs:pdf") =>
         graft.operators.Pdf.textFeatures(
           graft.operators.Pdf.synthDf(
-            archiveDocIds(spark, sfDir, q)),
-          "id", "pdf")
+            archiveDocIds(spark, sfDir, q)))
       // the MIXED front door: `"from": "docs:any"` exposes the
       // mime-dispatched mixed-format corpus (html/markdown/pdf via
       // operators/Multimodal.docDispatchFeatures) — extraction
@@ -218,12 +217,11 @@ object JxJson {
       case JString("docs:any") =>
         graft.operators.Multimodal.docDispatchFeatures(
           graft.operators.Multimodal.synthMixedDocsMedia(
-            archiveDocIds(spark, sfDir, q)), "id")
+            archiveDocIds(spark, sfDir, q)))
       case JString("docs:markdown") =>
         graft.operators.Markdown.features(
           graft.operators.Markdown.synthDf(
-            archiveDocIds(spark, sfDir, q)),
-          "id", "md")
+            archiveDocIds(spark, sfDir, q)))
       // the EPUB front door: `"from": "docs:epub"` exposes the
       // chapter-level ebook corpus (operators/Epub — OCF walk + OPF
       // spine + Html extraction) the same way: one row per chapter in

@@ -79,29 +79,8 @@ object AvroWalk {
       val payload = in.bytes(size)
       val plain =
         if (codec == "null") payload
-        else {
-          val inf = new java.util.zip.Inflater(true)
-          try {
-            inf.setInput(payload)
-            val buf = new java.io.ByteArrayOutputStream(payload.length * 2)
-            val tmp = new Array[Byte](8192)
-            while (!inf.finished()) {
-              val got = try inf.inflate(tmp) catch {
-                case e: java.util.zip.DataFormatException =>
-                  throw new IllegalArgumentException(
-                    s"avro: block $blockIdx deflate corrupt: " +
-                    e.getMessage)
-              }
-              if (got > 0) {
-                buf.write(tmp, 0, got)
-                require(buf.size <= (1 << 26),
-                  "avro: block inflates beyond the 64 MiB guard")
-              } else require(inf.finished(),
-                s"avro: block $blockIdx deflate truncated")
-            }
-            buf.toByteArray
-          } finally inf.end()
-        }
+        else Deflate.inflate(payload, 0, payload.length, raw = true,
+          s"avro: block $blockIdx", cap = 1L << 26)
       val rin = new Bin.Cursor(plain, 0, plain.length, "avro")
       (0L until count).foreach { r =>
         val recId = rin.zigzag()
@@ -170,17 +149,8 @@ object AvroWalk {
         body.write(db, 0, 8)
       }
       val plain = body.toByteArray
-      val payload = if (codec == "null") plain else {
-        val df = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        try {
-          df.setInput(plain); df.finish()
-          val buf = new Array[Byte](plain.length + 64)
-          val m = df.deflate(buf)
-          require(df.finished(), "fixture deflate did not finish")
-          java.util.Arrays.copyOf(buf, m)
-        } finally df.end()
-      }
+      val payload =
+        if (codec == "null") plain else Deflate.deflate(plain, raw = true)
       writeVar(out, nr.toLong)
       writeVar(out, payload.length.toLong)
       out.write(payload, 0, payload.length)

@@ -91,13 +91,11 @@ object CodeOps {
     StructField("n_lines_kept", IntegerType)))
 
   /** Per-partition comment stripping over (id, src) rows. */
-  def stripComments(df: DataFrame, idCol: String,
-      srcCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val srcIdx = df.schema.fieldIndex(srcCol)
+  def stripComments(df: DataFrame): DataFrame = {
+    val srcIdx = df.schema.fieldIndex(SrcCol)
     PerDoc.rows(df, stripSchema) { r =>
       val s = strip(r.getString(srcIdx))
-      Iterator.single(Row(r.getLong(idIdx), s.text, s.nLineComments,
+      Iterator.single(Row(r.getLong(0), s.text, s.nLineComments,
         s.nBlockComments, s.nStrings, s.nLinesKept))
     }
   }
@@ -115,10 +113,13 @@ object CodeOps {
       s"end */ y = ${d % 11};\n" +
       s"z${d % 4}++; // t${d % 6}\n"
 
+  /** The source text column `synthDf` writes and `stripComments` reads. */
+  val SrcCol = "src"
+
   /** ids → (id, src) rows of closed-form source text. */
   def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
-      StructField("id", LongType), StructField("src", StringType)))
+      StructField("id", LongType), StructField(SrcCol, StringType)))
     PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthSrc(d))))
   }
 

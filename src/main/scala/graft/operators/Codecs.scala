@@ -160,7 +160,7 @@ object Codecs {
   // ---------------------------------------------------------------- PNG
   //
   // PNG needs no external library either: the JVM ships the only
-  // nontrivial piece (zlib, via java.util.zip.Deflater/Inflater); the
+  // nontrivial piece (zlib, via operators/Deflate); the
   // rest is chunk framing (length/type/data/CRC32), big-endian header
   // arithmetic, and the five per-row byte filters
   // (None/Sub/Up/Average/Paeth). Scope: 8-bit truecolor (color type
@@ -282,15 +282,7 @@ object Codecs {
         }
       }
     }
-    val raw = rawOut.toByteArray
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](math.max(1024, raw.length + 64))
-    val zOut = new java.io.ByteArrayOutputStream()
-    while (!deflater.finished()) {
-      val n = deflater.deflate(buf); zOut.write(buf, 0, n)
-    }
-    deflater.end()
+    val idat = Deflate.deflate(rawOut.toByteArray, raw = false)
     val out = new java.io.ByteArrayOutputStream()
     out.write(pngSig)
     val ihdr = new Array[Byte](13)
@@ -306,7 +298,7 @@ object Codecs {
       }
       pngChunk(out, "PLTE", plte)
     }
-    pngChunk(out, "IDAT", zOut.toByteArray)
+    pngChunk(out, "IDAT", idat)
     pngChunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
   }
@@ -394,22 +386,10 @@ object Codecs {
     }.sum
     require(rawLenL <= (1L << 30), s"PNG dimensions ${w}x$h too large")
     val rawLen = rawLenL.toInt
-    val raw = new Array[Byte](rawLen)
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(idat.toByteArray)
-    var got = 0
-    while (got < rawLen && !inflater.finished()) {
-      val n = inflater.inflate(raw, got, rawLen - got)
-      // inflate()==0 without finishing means the stream can make no
-      // progress — truncated input, or a zlib FDICT (preset dictionary)
-      // header, which needsInput() does NOT report: without this check
-      // that stream spins this loop forever instead of failing loudly.
-      require(n > 0 || inflater.finished(),
-        "truncated or unsupported (preset-dictionary) PNG IDAT stream")
-      got += n
-    }
-    inflater.end()
-    require(got == rawLen, s"PNG IDAT inflated to $got of $rawLen bytes")
+    val raw = Deflate.inflate(idat.toByteArray, 0, idat.size, raw = false,
+      "PNG IDAT", cap = rawLen)
+    require(raw.length == rawLen,
+      s"PNG IDAT inflated to ${raw.length} of $rawLen bytes")
     val px = Array.ofDim[(Int, Int, Int)](h, w)
     var base = 0
     passes.foreach { case p @ (x0, y0, dx, dy) =>
@@ -2621,8 +2601,8 @@ object Codecs {
   // The parser is a real one — header fields in any order and case,
   // bounded header counts/line lengths, loud failures on truncation,
   // bad framing, or a missing mandatory field — and the gzip form
-  // rides the JDK's zlib (GZIPInputStream handles the concatenated
-  // per-record members WARC specifies).
+  // reads the concatenated per-record members WARC specifies through
+  // Gzip's member walk, every trailer checked.
 
   final case class WarcRecord(recIdx: Int, recType: String,
       targetUri: String, contentLength: Int, payloadStart: Int)
@@ -2681,37 +2661,9 @@ object Codecs {
     out.toArray
   }
 
-  /** Inflate a (possibly multi-member, as WARC specifies) gzip stream
-    * with a bounded output guard — corrupt members must fail, not
-    * allocate unboundedly. */
-  def gunzipAll(bytes: Array[Byte], maxOut: Int = 1 << 26): Array[Byte] = {
-    // the CONSTRUCTOR already reads the first member header and can
-    // throw ZipException — it must sit inside the normalization try
-    // (the corruption fuzz found exactly this escape)
-    var in: java.util.zip.GZIPInputStream = null
-    try {
-      in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        out.write(buf, 0, n)
-        require(out.size <= maxOut, s"gzip output exceeds $maxOut bytes")
-        n = in.read(buf)
-      }
-      out.toByteArray
-    } catch {
-      // ZipException et al. are IOExceptions — normalize to the loud
-      // decode contract classes
-      case e: java.io.IOException =>
-        throw new IllegalArgumentException(s"bad gzip stream: ${e.getMessage}")
-    } finally if (in != null) in.close()
-  }
-
   /** Records of a per-record-gzipped WARC (concatenated members). */
   def warcRecordsGz(bytes: Array[Byte]): (Array[Byte], Array[WarcRecord]) = {
-    val plain = gunzipAll(bytes)
+    val plain = Gzip.gunzip(bytes)
     (plain, warcRecords(plain))
   }
 
@@ -2745,25 +2697,17 @@ object Codecs {
   /** The same records as synthWarc, one gzip member per record — the
     * layout real WARC archives use so records are independently
     * seekable. */
-  def synthWarcGz(d: Long): Array[Byte] = {
-    val plain = synthWarc(d)
-    val recs = warcRecords(plain)
+  def synthWarcGz(d: Long): Array[Byte] = warcGz(synthWarc(d))
+
+  /** One gzip member per record of a plain WARC file: the member is
+    * the record's full byte span, headers through the separator. */
+  private def warcGz(plain: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    recs.foreach { r =>
-      // member = the record's full byte span: headers..payload + sep
-      val from = if (r.recIdx == 0) 0 else {
-        // start of this record's headers = previous record's end
-        val prev = recs(r.recIdx - 1)
-        prev.payloadStart + prev.contentLength + 4
-      }
+    var from = 0
+    warcRecords(plain).foreach { r =>
       val to = r.payloadStart + r.contentLength + 4
-      val gz = new java.util.zip.GZIPOutputStream(out)
-      gz.write(plain, from, to - from)
-      // close(), not finish(): close ends the native Deflater; at
-      // corpus scale a finish()-only loop leaks one zlib context per
-      // member and the OS kills the JVM long before the heap fills.
-      // (ByteArrayOutputStream.close() is a no-op, so `out` survives.)
-      gz.close()
+      out.write(Deflate.gzip(plain, from, to - from))
+      from = to
     }
     out.toByteArray
   }
@@ -3503,26 +3447,7 @@ object Codecs {
   }
 
   /** Per-record-gzipped form of synthWarcWeb (the shipped CC layout). */
-  def synthWarcWebGz(d: Long): Array[Byte] = {
-    val plain = synthWarcWeb(d)
-    val recs = warcRecords(plain)
-    val out = new java.io.ByteArrayOutputStream()
-    recs.foreach { r =>
-      val from = if (r.recIdx == 0) 0 else {
-        val prev = recs(r.recIdx - 1)
-        prev.payloadStart + prev.contentLength + 4
-      }
-      val to = r.payloadStart + r.contentLength + 4
-      val gz = new java.util.zip.GZIPOutputStream(out)
-      gz.write(plain, from, to - from)
-      // close(), not finish(): close ends the native Deflater; at
-      // corpus scale a finish()-only loop leaks one zlib context per
-      // member and the OS kills the JVM long before the heap fills.
-      // (ByteArrayOutputStream.close() is a no-op, so `out` survives.)
-      gz.close()
-    }
-    out.toByteArray
-  }
+  def synthWarcWebGz(d: Long): Array[Byte] = warcGz(synthWarcWeb(d))
 
   // ===================== H.264/AVC NAL + SPS walk =====================
   // The "filter before decode" pass for real video: NAL unit framing
@@ -4591,32 +4516,19 @@ object Codecs {
       val lExtra = Bin.u16le(bytes, lo + 28, bytes.length, "zip")
       val dataOff = lo + 30 + nameLen + lExtra
       Bin.checkRange(dataOff, csize, bytes.length, "zip member payload")
-      val payload = java.util.Arrays.copyOfRange(
-        bytes, dataOff, dataOff + csize.toInt)
       val plain =
         if (method == "stored") {
           require(csize == usize,
             s"stored member $name csize $csize != usize $usize")
-          payload
+          java.util.Arrays.copyOfRange(bytes, dataOff, dataOff + csize.toInt)
         } else {
-          // deflate expands at most ~1032:1 — a directory claiming more
-          // is lying, and an unbounded u32 usize must not size a buffer
-          require(usize <= 1032L * csize + 64,
-            s"member $name usize $usize implausible for $csize deflated bytes")
-          val inf = new java.util.zip.Inflater(true)
-          try {
-            inf.setInput(payload)
-            val buf = new Array[Byte](usize.toInt + 1)
-            val got = try inf.inflate(buf) catch {
-              case e: java.util.zip.DataFormatException =>
-                throw new IllegalArgumentException(
-                  s"member $name deflate stream corrupt: " +
-                  e.getMessage)
-            }
-            require(got == usize && inf.finished(),
-              s"member $name inflates to $got bytes, directory says $usize")
-            java.util.Arrays.copyOf(buf, got)
-          } finally inf.end() // zlib native resource — leak-safe at scale
+          // the directory's usize caps the output; a lying u32 never
+          // sizes a buffer past Deflate's 1032:1 bound
+          val got = Deflate.inflate(bytes, dataOff, csize.toInt, raw = true,
+            s"member $name", cap = usize)
+          require(got.length == usize,
+            s"member $name inflates to ${got.length} bytes, directory says $usize")
+          got
         }
       val c = new java.util.zip.CRC32()
       c.update(plain)
@@ -4631,7 +4543,7 @@ object Codecs {
   }
 
   /** Closed-form ZIP: 2+d%4 members, every (d+j)%3==0 member deflated
-    * (raw Deflater, JDK) and the rest stored, content bytes mod 251 of
+    * (raw DEFLATE) and the rest stored, content bytes mod 251 of
     * doc-derived length — local headers, central directory, EOCD with
     * a doc-varying comment so the backward scan is exercised. */
   /** General classic-ZIP writer (local headers, central directory,
@@ -4645,17 +4557,7 @@ object Codecs {
     members.foreach { case (name, plain, deflate) =>
       val crcC = new java.util.zip.CRC32(); crcC.update(plain)
       val crc = crcC.getValue
-      val payload = if (!deflate) plain else {
-        val df = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        try {
-          df.setInput(plain); df.finish()
-          val buf = new Array[Byte](plain.length + 64)
-          val m = df.deflate(buf)
-          require(df.finished(), "fixture deflate did not finish")
-          java.util.Arrays.copyOf(buf, m)
-        } finally df.end()
-      }
+      val payload = if (!deflate) plain else Deflate.deflate(plain, raw = true)
       val method = if (deflate) 8 else 0
       val nb = name.getBytes("US-ASCII")
       val localOff = out.size()
@@ -4721,17 +4623,7 @@ object Codecs {
       val crcC = new java.util.zip.CRC32(); crcC.update(plain)
       val crc = crcC.getValue
       val deflate = (d + j) % 3 == 0
-      val payload = if (!deflate) plain else {
-        val df = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        try {
-          df.setInput(plain); df.finish()
-          val buf = new Array[Byte](usize + 64)
-          val m = df.deflate(buf)
-          require(df.finished(), "fixture deflate did not finish")
-          java.util.Arrays.copyOf(buf, m)
-        } finally df.end()
-      }
+      val payload = if (!deflate) plain else Deflate.deflate(plain, raw = true)
       val method = if (deflate) 8 else 0
       val nb = name.getBytes("US-ASCII")
       val localOff = out.size()

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * the rest): per member, the full header surface — FLG bits, MTIME,
   * XFL/OS, FEXTRA (length-prefixed), FNAME/FCOMMENT (NUL-terminated
   * Latin-1), FHCRC (CRC16 = low 16 bits of CRC32 over the header,
-  * VERIFIED) — then the deflate payload genuinely inflated (the
-  * JDK's Inflater in raw mode) and BOTH trailer ladders checked:
+  * VERIFIED) — then the deflate payload genuinely inflated (raw,
+  * through operators/Deflate) and BOTH trailer ladders checked:
   * CRC32 and ISIZE (mod 2^32) against the inflated bytes. Reserved
   * FLG bits, wrong magic, truncation, and trailer mismatches fail
   * loudly by name. */
@@ -22,7 +22,26 @@ object Gzip {
 
   def members(bytes: Array[Byte]): Seq[GzipMember] = {
     val out = collection.mutable.ArrayBuffer.empty[GzipMember]
+    walk(bytes, Long.MaxValue)((m, _) => out += m)
+    out.toSeq
+  }
+
+  /** The members' content, concatenated: the read of a per-record
+    * gzipped WARC file, at most 64 MiB in all. Bytes after the last
+    * member are an error, as everywhere in the walk. */
+  def gunzip(bytes: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    walk(bytes, 1L << 26)((_, content) => out.write(content))
+    out.toByteArray
+  }
+
+  /** Walk every member, handing each one's header fields and inflated
+    * content to `f`; all members together inflate to at most `cap`. */
+  private def walk(bytes: Array[Byte], cap: Long)(
+      f: (GzipMember, Array[Byte]) => Unit): Unit = {
     var pos = 0
+    var idx = 0
+    var total = 0L
     while (pos < bytes.length) {
       require(pos + 10 <= bytes.length, s"truncated gzip header at $pos")
       require((bytes(pos) & 0xff) == 0x1f && (bytes(pos + 1) & 0xff) == 0x8b,
@@ -64,55 +83,30 @@ object Gzip {
           "gzip header CRC16 mismatch")
         p += 2
       }
-      // inflate the raw-deflate payload; Inflater reports how many
-      // compressed bytes it consumed, locating the trailer exactly
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(bytes, p, bytes.length - p)
+      // the deflate data ends where the inflate stops, locating the trailer
+      val (content, used) = Deflate.inflatePrefix(bytes, p, bytes.length - p,
+        raw = true, s"gzip member $idx", cap = cap - total)
+      total += content.length
+      val trailerAt = p + used
+      require(trailerAt + 8 <= bytes.length,
+        s"truncated gzip trailer at member $idx")
       val crc = new java.util.zip.CRC32()
-      val buf = new Array[Byte](8192)
-      var contentLen = 0L
+      crc.update(content)
+      require(Bin.u32le(bytes, trailerAt, bytes.length,
+        "gzip trailer") == crc.getValue,
+        s"gzip CRC32 mismatch at member $idx")
+      require(Bin.u32le(bytes, trailerAt + 4, bytes.length,
+        "gzip trailer") == (content.length & 0xffffffffL),
+        s"gzip ISIZE mismatch at member $idx")
       var contentSum = 0L
-      // deflate bombs: nothing is retained, but CPU is — cap the
-      // inflated size at 4096x the input plus slack (the zstd/Flac
-      // bomb posture) and fail loudly instead of grinding
-      val contentCap = bytes.length.toLong * 4096 + (1L << 20)
-      try {
-        while (!inf.finished()) {
-          val n =
-            try inf.inflate(buf)
-            catch {
-              case e: java.util.zip.DataFormatException =>
-                throw new IllegalArgumentException(
-                  s"corrupt deflate stream at member ${out.size}: " +
-                    e.getMessage)
-            }
-          require(n > 0 || inf.finished(),
-            s"deflate stream stalls at member ${out.size}")
-          crc.update(buf, 0, n)
-          var i = 0
-          while (i < n) { contentSum += buf(i) & 0xff; i += 1 }
-          contentLen += n
-          require(contentLen <= contentCap,
-            s"member ${out.size} inflates past $contentCap bytes from a " +
-              s"${bytes.length}-byte stream — deflate bomb")
-        }
-        val used = inf.getBytesRead.toInt
-        val trailerAt = p + used
-        require(trailerAt + 8 <= bytes.length,
-          s"truncated gzip trailer at member ${out.size}")
-        require(Bin.u32le(bytes, trailerAt, bytes.length,
-          "gzip trailer") == crc.getValue,
-          s"gzip CRC32 mismatch at member ${out.size}")
-        require(Bin.u32le(bytes, trailerAt + 4, bytes.length,
-          "gzip trailer") == (contentLen & 0xffffffffL),
-          s"gzip ISIZE mismatch at member ${out.size}")
-        out += GzipMember(name, mtime, os, hasExtra, hasComment, hasHcrc,
-          used, contentLen, contentSum)
-        pos = trailerAt + 8
-      } finally inf.end()
+      var i = 0
+      while (i < content.length) { contentSum += content(i) & 0xff; i += 1 }
+      f(GzipMember(name, mtime, os, hasExtra, hasComment, hasHcrc,
+        used, content.length, contentSum), content)
+      pos = trailerAt + 8
+      idx += 1
     }
-    require(out.nonEmpty, "empty gzip stream")
-    out.toSeq
+    require(idx > 0, "empty gzip stream")
   }
 
   /** Closed-form multi-member fixture: 1 + d%4 members; member m
@@ -151,15 +145,7 @@ object Gzip {
         out.write((crc.getValue & 0xff).toInt)
         out.write(((crc.getValue >> 8) & 0xff).toInt)
       }
-      val def_ = new java.util.zip.Deflater(
-        java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-      def_.setInput(content); def_.finish()
-      val buf = new Array[Byte](8192)
-      while (!def_.finished()) {
-        val n = def_.deflate(buf)
-        out.write(buf, 0, n)
-      }
-      def_.end()
+      out.write(Deflate.deflate(content, raw = true))
       val crc = new java.util.zip.CRC32()
       crc.update(content)
       (0 until 4).foreach(i =>

@@ -139,13 +139,16 @@ object Markdown {
   /** ids → (id, md) rows of closed-form markdown. */
   def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
-      StructField("id", LongType), StructField("md", StringType)))
+      StructField("id", LongType), StructField(MdCol, StringType)))
     PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthMd(d))))
   }
 
+  /** The markdown text column `synthDf` writes and `features` reads. */
+  val MdCol = "md"
+
   /** Per-partition extraction: (id, text, n_headings, n_links,
     * n_code_blocks, n_list_items, n_words, first_link). */
-  def features(df: DataFrame, idCol: String, mdCol: String): DataFrame = {
+  def features(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("text", StringType),
@@ -155,12 +158,11 @@ object Markdown {
       StructField("n_list_items", IntegerType),
       StructField("n_words", IntegerType),
       StructField("first_link", StringType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val mdIdx = df.schema.fieldIndex(mdCol)
+    val mdIdx = df.schema.fieldIndex(MdCol)
     PerDoc.rows(df, outSchema) { r =>
       val doc = extract(r.getString(mdIdx))
       val nWords = if (doc.text.isEmpty) 0 else doc.text.split(" ").length
-      Iterator.single(Row(r.getLong(idIdx), doc.text, doc.nHeadings,
+      Iterator.single(Row(r.getLong(0), doc.text, doc.nHeadings,
         doc.links.length, doc.nCodeBlocks, doc.nListItems, nWords,
         if (doc.links.nonEmpty) doc.links(0) else null))
     }

@@ -74,17 +74,16 @@ object Multimodal {
   /** Resize every media payload to a fixed byte budget (stub codec,
     * real batch shape: one codec init per partition). The media struct
     * shape is preserved; meta records the original size. */
-  def resize(df: DataFrame, idCol: String, targetBytes: Int): DataFrame = {
+  def resize(df: DataFrame, targetBytes: Int): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType), StructField("media", mediaType)))
-    val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
       val bytes = media.getAs[Array[Byte]]("bytes")
       val meta = media.getAs[Map[String, String]]("meta") +
         ("orig_bytes" -> String.valueOf(if (bytes == null) 0 else bytes.length))
-      Iterator.single(Row(r.getLong(idIdx),
+      Iterator.single(Row(r.getLong(0),
         Row(stubResize(bytes, targetBytes), media.getAs[String]("mime"), meta)))
     }
   }
@@ -96,12 +95,11 @@ object Multimodal {
     * real codec would seek and decode every k-th frame); the slice
     * arithmetic is deliberately SQL-replicable so the plumbing has a
     * DuckDB oracle even though the codec is a stub. */
-  def frameSample(df: DataFrame, idCol: String, frames: Int): DataFrame = {
+  def frameSample(df: DataFrame, frames: Int): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("frame_idx", IntegerType),
       StructField("frame", mediaType)))
-    val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
@@ -113,7 +111,7 @@ object Multimodal {
         val slice =
           if (bytes == null) Array.emptyByteArray
           else java.util.Arrays.copyOfRange(bytes, lo, hi)
-        Row(r.getLong(idIdx), i,
+        Row(r.getLong(0), i,
           Row(slice, media.getAs[String]("mime"),
             media.getAs[Map[String, String]]("meta") +
               ("frame" -> i.toString)))
@@ -911,19 +909,18 @@ object Multimodal {
 
   /** Per-partition batched decode: one "codec" per partition, rows
     * streamed through it. Output schema: id, mime, n_bytes, features. */
-  def decode(df: DataFrame, idCol: String): DataFrame = {
+  def decode(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("mime", StringType),
       StructField("n_bytes", IntegerType),
       StructField("features", ArrayType(FloatType))))
-    val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
       val bytes = media.getAs[Array[Byte]]("bytes")
       Iterator.single(Row(
-        r.getLong(idIdx),
+        r.getLong(0),
         media.getAs[String]("mime"),
         if (bytes == null) 0 else bytes.length,
         stubDecodeFeatures(bytes).toSeq))
@@ -961,13 +958,12 @@ object Multimodal {
     * extractor (Html / Markdown / Pdf) — genuinely reading bytes+mime
     * from the row, so it runs on any media frame carrying these three
     * types; an undeclared mime fails loudly rather than guessing. */
-  def docDispatchFeatures(df: DataFrame, idCol: String): DataFrame = {
+  def docDispatchFeatures(df: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("id", LongType),
       StructField("format", StringType),
       StructField("text", StringType),
       StructField("n_words", IntegerType)))
-    val idIdx = df.schema.fieldIndex(idCol)
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
@@ -983,7 +979,7 @@ object Multimodal {
           throw new IllegalArgumentException(s"no extractor for mime '$other'")
       }
       val nWords = if (text.isEmpty) 0 else text.split(" ").length
-      Iterator.single(Row(r.getLong(idIdx), fmt, text, nWords))
+      Iterator.single(Row(r.getLong(0), fmt, text, nWords))
     }
   }
 }

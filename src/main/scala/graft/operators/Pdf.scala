@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *     walk), per-page `/MediaBox` and `/Contents`;
   *   - streams: `stream`..`endstream` with `/Length` taken as binding
   *     (mismatch with the `endstream` keyword fails loudly); filters:
-  *     none or `/FlateDecode` (zlib, via java.util.zip.Inflater) —
+  *     none or `/FlateDecode` (zlib, via operators/Deflate) —
   *     any other filter name fails loudly rather than mis-extracting;
   *   - content text: `(s) Tj` and `[(s) n (s) ...] TJ`. Runs join with
   *     a single space. Inside a TJ array, a kerning adjustment with
@@ -367,38 +367,6 @@ object Pdf {
     PdfMeta(version, objs.size, pages.length, mb._1, mb._2, nFlate)
   }
 
-  private def inflate(b: Array[Byte], from: Int, len: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(b, from, len)
-    // Bomb guard (ADVICE r12): DEFLATE tops out near 1032:1, so any
-    // stream expanding past that ratio is hostile, not a PDF — fail
-    // loudly like every other malformed-input path instead of letting
-    // a few crafted MB inflate to executor-OOM GBs. Same constant the
-    // ZIP walk enforces (Codecs.zipEntries).
-    val maxOut = len.toLong * 1032 + 64
-    val out = new java.io.ByteArrayOutputStream(len * 4 + 64)
-    val buf = new Array[Byte](4096)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        require(n > 0 || inf.finished(),
-          "truncated or unsupported FlateDecode stream")
-        require(out.size().toLong + n <= maxOut,
-          s"FlateDecode stream expands past ${maxOut} bytes " +
-            s"(>1032x its $len-byte input) — decompression bomb")
-        out.write(buf, 0, n)
-      }
-    } catch {
-      // DataFormatException is checked — fold it into the loud-failure
-      // contract (require → IllegalArgumentException) like every other
-      // malformed-input path.
-      case e: java.util.zip.DataFormatException =>
-        throw new IllegalArgumentException(
-          s"corrupt FlateDecode stream: ${e.getMessage}")
-    } finally inf.end()
-    out.toByteArray
-  }
-
   /** Content-stream scan: collect `(s) Tj` and `[...] TJ` runs in
     * order. The tokenizer is the same lexical layer as the object
     * parser; operators other than the text-showing two are skipped
@@ -484,7 +452,8 @@ object Pdf {
             cObj.streamStart + cObj.streamLen)
         case Some(PName("FlateDecode")) =>
           nFlate += 1
-          inflate(bytes, cObj.streamStart, cObj.streamLen)
+          Deflate.inflate(bytes, cObj.streamStart, cObj.streamLen, raw = false,
+            "FlateDecode")
         case Some(other) =>
           throw new IllegalArgumentException(s"unsupported filter $other")
       }
@@ -547,15 +516,7 @@ object Pdf {
       val raw = content.getBytes("US-ASCII")
       val (body, filter) =
         if (flatePage(p)) {
-          val df = new java.util.zip.Deflater()
-          df.setInput(raw); df.finish()
-          val zb = new java.io.ByteArrayOutputStream(raw.length + 64)
-          val buf = new Array[Byte](1024)
-          while (!df.finished()) {
-            val n = df.deflate(buf); zb.write(buf, 0, n)
-          }
-          df.end()
-          (zb.toByteArray, " /Filter /FlateDecode")
+          (Deflate.deflate(raw, raw = false), " /Filter /FlateDecode")
         } else (raw, "")
       w(s"$contNum 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
       out.write(body, 0, body.length)
@@ -617,13 +578,7 @@ object Pdf {
       val raw = pageContent(p).getBytes("US-ASCII")
       val (body, filter) =
         if ((d + p) % 2 == 0) {
-          val df = new java.util.zip.Deflater()
-          df.setInput(raw); df.finish()
-          val zb = new java.io.ByteArrayOutputStream(raw.length + 64)
-          val buf = new Array[Byte](1024)
-          while (!df.finished()) { val n = df.deflate(buf); zb.write(buf, 0, n) }
-          df.end()
-          (zb.toByteArray, " /Filter /FlateDecode")
+          (Deflate.deflate(raw, raw = false), " /Filter /FlateDecode")
         } else (raw, "")
       w(s"$contNum 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
       out.write(body, 0, body.length)
@@ -643,10 +598,13 @@ object Pdf {
   // DataFrame plumbing — the per-partition batch shape of [[Markdown]]
   // ---------------------------------------------------------------- //
 
+  /** The PDF bytes column `synthDf` writes and the feature walks read. */
+  val PdfCol = "pdf"
+
   /** ids → (id, pdf binary) rows of closed-form PDFs. */
   def synthDf(ids: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
-      StructField("id", LongType), StructField("pdf", BinaryType)))
+      StructField("id", LongType), StructField(PdfCol, BinaryType)))
     PerDoc.walk(ids, outSchema)(d => Iterator.single(Row(d, synthPdf(d))))
   }
 
@@ -660,13 +618,11 @@ object Pdf {
     StructField("n_flate", IntegerType)))
 
   /** Metadata-only features — no stream is ever inflated. */
-  def metaFeatures(df: DataFrame, idCol: String,
-      pdfCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val pdfIdx = df.schema.fieldIndex(pdfCol)
+  def metaFeatures(df: DataFrame): DataFrame = {
+    val pdfIdx = df.schema.fieldIndex(PdfCol)
     PerDoc.rows(df, metaSchema) { r =>
       val m = meta(r.getAs[Array[Byte]](pdfIdx))
-      Iterator.single(Row(r.getLong(idIdx), m.version, m.nObjects, m.nPages,
+      Iterator.single(Row(r.getLong(0), m.version, m.nObjects, m.nPages,
         m.mediaW, m.mediaH, m.nFlate))
     }
   }
@@ -680,13 +636,11 @@ object Pdf {
     StructField("n_flate", IntegerType)))
 
   /** Full text extraction features. */
-  def textFeatures(df: DataFrame, idCol: String,
-      pdfCol: String): DataFrame = {
-    val idIdx = df.schema.fieldIndex(idCol)
-    val pdfIdx = df.schema.fieldIndex(pdfCol)
+  def textFeatures(df: DataFrame): DataFrame = {
+    val pdfIdx = df.schema.fieldIndex(PdfCol)
     PerDoc.rows(df, textSchema) { r =>
       val doc = extract(r.getAs[Array[Byte]](pdfIdx))
-      Iterator.single(Row(r.getLong(idIdx), doc.text, doc.meta.nPages,
+      Iterator.single(Row(r.getLong(0), doc.text, doc.meta.nPages,
         doc.nWords, doc.text.length, doc.meta.nFlate))
     }
   }

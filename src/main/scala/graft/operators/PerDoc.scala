@@ -18,16 +18,13 @@ object PerDoc {
 
   /** `f(id)` for each row of `ids`. */
   def walk(ids: DataFrame, schema: StructType)(
-      f: Long => IterableOnce[Row]): DataFrame = {
-    requireId(ids)
+      f: Long => IterableOnce[Row]): DataFrame =
     rows(ids, schema)(r => f(r.getLong(0)))
-  }
 
   /** `f(id, media.bytes)` for each row of a media frame (an id plus the
     * `media` struct of [[Multimodal.mediaType]]). */
   def walkMedia(df: DataFrame, schema: StructType)(
       f: (Long, Array[Byte]) => IterableOnce[Row]): DataFrame = {
-    requireId(df)
     val mediaIdx = df.schema.fieldIndex("media")
     rows(df, schema) { r =>
       f(r.getLong(0), r.getStruct(mediaIdx).getAs[Array[Byte]]("bytes"))
@@ -36,15 +33,13 @@ object PerDoc {
 
   /** The core: `f(row)` for each input row. Walkers that read more of
     * the row than the id and the bytes (mime, meta, a text column) call
-    * it directly. */
+    * it directly and read the id with `row.getLong(0)`. */
   private[operators] def rows(df: DataFrame, schema: StructType)(
       f: Row => IterableOnce[Row]): DataFrame = {
-    val rdd = df.rdd.mapPartitions(_.flatMap(f))
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
-
-  private def requireId(df: DataFrame): Unit =
     require(df.schema.nonEmpty && df.schema.head.dataType == LongType,
       "a per-document walk needs the bigint id in column 0, got " +
         df.schema.simpleString)
+    val rdd = df.rdd.mapPartitions(_.flatMap(f))
+    df.sparkSession.createDataFrame(rdd, schema)
+  }
 }

@@ -204,39 +204,6 @@ object TextOps {
       .filter(greatest(col("c_ab"), col("c_ba")) >= threshold)
   }
 
-  /** One xxhash64 per shingle — the only pass that touches strings. */
-  def shingleHashes(sh: Column): Column = transform(sh, s2 => xxhash64(s2))
-
-  /** MinHash signature from pre-hashed shingles (the scale path): the
-    * i-th hash function re-hashes the 8-byte value XOR a per-function
-    * salt — no string work, no overflow (ANSI-safe), one cheap long
-    * hash per (function, shingle). Callers materialize shingleHashes
-    * as a column first so strings are hashed exactly once. */
-  def minhashSigFromHashes(hs: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      array_min(transform(hs, h =>
-        xxhash64(h.bitwiseXOR(i * lit(0x9E3779B97F4A7CL))))))
-
-  /** MinHash signature straight from shingles (convenience; prefer the
-    * two-step form in pipelines so the string hashing isn't re-inlined
-    * into every downstream expression). */
-  def minhashSigFast(sh: Column, numHashes: Int): Column =
-    minhashSigFromHashes(shingleHashes(sh), numHashes)
-
-  /** LSH banding: split the `numHashes`-wide signature into `bands`
-    * equal bands and hash each band to a bucket id. Returns
-    * array<struct<band:int, bucket:bigint>> ready to explode. */
-  def lshBands(sig: Column, numHashes: Int, bands: Int): Column = {
-    val rows = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(
-        b.cast("int").as("band"),
-        xxhash64(concat_ws(",",
-          transform(sequence(lit(0), lit(rows - 1)),
-            r => element_at(sig, b * rows + r + 1).cast("string"))))
-          .as("bucket")))
-  }
-
   /** 16-bit SimHash over whitespace tokens: bit b is the sign of
     * Σ_tokens (+1 / −1 by bit b of xxhash64(token)). */
   def simhash16(text: Column): Column = {

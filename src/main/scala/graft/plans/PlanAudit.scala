@@ -167,11 +167,6 @@ object PlanAudit {
     fs.result().distinct.sortBy(f => order(f.severity))
   }
 
-  /** Shuffle count — a quick "how many wide dependencies" metric. */
-  def shuffleCount(df: DataFrame): Int =
-    flatten(df.queryExecution.executedPlan)
-      .count(_.isInstanceOf[ShuffleExchangeExec])
-
   /** The parquet scan reachable from `p` through narrow single-child
     * wrappers only (no joins/aggregates/exchanges in between) — i.e.
     * the scan a Filter at `p`'s parent is evaluated directly above.

@@ -674,8 +674,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_minhash_dedup",
       (s, dir) => {
-        val base = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val base = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), col("lang"),
             TextOps.shingles3(col("text")).as("sh"))
         val losers = TextOps.minhashPairsMd5(base, 0.5)
@@ -703,8 +702,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_minhash_estimate",
       (s, dir) => {
-        val docs = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val docs = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         val sig = docs.filter(size(col("sh")) > 0)
           .select(Seq(col("doc_id"), col("sh")) ++
@@ -972,8 +970,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_ngram_jaccard",
       (s, dir) => {
-        val docs = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val docs = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         TextOps.minhashPairsMd5(docs, 0.5)
           .orderBy("id_a", "id_b")
@@ -1023,8 +1020,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_token_entropy",
       (s, dir) => {
-        val tf = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val tf = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
           .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
         val tot = tf.groupBy("doc_id").agg(sum("c").as("n"))
@@ -1106,8 +1102,7 @@ object Llm extends QueryModule {
         // 2^-64 collision (two tokens sharing a count row) is the
         // hash-family trade documented across the dedup ops; the
         // string-keyed DuckDB oracle pins the values.
-        val tok = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val tok = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("w"))
           .select(col("doc_id"), xxhash64(col("w")).as("h"))
         val counts = tok.groupBy("h").agg(count(lit(1)).as("c"))
@@ -1202,8 +1197,7 @@ object Llm extends QueryModule {
         // sequence() guarded by the CASE: Spark's sequence(2, 1) counts
         // DOWN (it never returns empty), so a 1-token doc must short-
         // circuit to an empty bigram array instead.
-        val docs = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val docs = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
           .select(col("doc_id"),
             explode(expr(
@@ -1260,8 +1254,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_bigram_kn",
       (s, dir) => {
-        val occ = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val occ = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
           .select(col("doc_id"),
             explode(expr(
@@ -1471,7 +1464,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_bm25_topk",
       (s, dir) => bm25TopK(
-        Catalog.table(s, dir, "documents").filter(col("doc_id") < 300),
+        Catalog.fixtureSlice(Catalog.table(s, dir, "documents")),
         nQueries = 3, k = 5).orderBy("qid", "rk"),
       Some(bm25TopKOracle)),
 
@@ -1489,7 +1482,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_bm25_topk_pruned",
       (s, dir) => bm25TopK(
-        Catalog.table(s, dir, "documents").filter(col("doc_id") < 300),
+        Catalog.fixtureSlice(Catalog.table(s, dir, "documents")),
         nQueries = 3, k = 5, maxDf = Some(230L)).orderBy("qid", "rk"),
       Some("""WITH corpus AS (SELECT doc_id, text FROM documents
             WHERE doc_id < 300),
@@ -1536,7 +1529,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_bm25_topk_maxscore",
       (s, dir) => bm25TopKMaxScore(
-        Catalog.table(s, dir, "documents").filter(col("doc_id") < 300),
+        Catalog.fixtureSlice(Catalog.table(s, dir, "documents")),
         nQueries = 3, k = 5, prefixR = 64).orderBy("qid", "rk"),
       Some(bm25TopKOracle)),
 
@@ -1554,8 +1547,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_dedup_groups",
       (s, dir) => {
-        val docs = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val docs = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         val pairs = TextOps.minhashPairsMd5(docs, 0.5).select("id_a", "id_b")
         graft.operators.Components.connectedComponents(
@@ -1651,8 +1643,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_dedup_cluster_stats",
       (s, dir) => {
-        val docs = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val docs = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         val pairs = TextOps.minhashPairsMd5(docs, 0.5).select("id_a", "id_b")
         graft.operators.Components.connectedComponents(
@@ -3877,7 +3868,7 @@ object Llm extends QueryModule {
         val media = Multimodal.asMedia(
           Catalog.table(s, dir, "documents"), "doc_id", "text",
           Seq("lang"))
-        Multimodal.frameSample(media, "doc_id", 4)
+        Multimodal.frameSample(media, 4)
           .select(col("id"), col("frame_idx"),
             length(col("frame.bytes")).as("n_bytes"))
           .orderBy("id", "frame_idx")
@@ -3903,7 +3894,7 @@ object Llm extends QueryModule {
         // (fixture corpus is pure ASCII, so codepoint == utf-8 byte).
         // Only the float ratio feature stays out of the compared
         // output; the codec body itself remains the documented stub.
-        Multimodal.decode(media, "doc_id")
+        Multimodal.decode(media)
           .select(col("id"), col("mime"), col("n_bytes").cast("long").as("n_bytes"),
             element_at(col("features"), 2).cast("long").as("f_sum"),
             element_at(col("features"), 3).cast("long").as("f_wsum"))
@@ -5304,8 +5295,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_markdown_text",
       (s, dir) => Markdown.features(
-        Markdown.synthDf(Catalog.fixtureDocIds(s, dir)),
-        "id", "md").orderBy("id"),
+        Markdown.synthDf(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH ids AS (SELECT doc_id AS id
           FROM documents WHERE doc_id < 300),
         t AS (SELECT id,
@@ -5684,9 +5674,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.Webp
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.map { d =>
@@ -5755,9 +5744,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.Webm
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.map { d =>
@@ -6463,9 +6451,8 @@ object Llm extends QueryModule {
       "stream_feed_ingest",
       (s, dir) => {
         import s.implicits._
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.flatMap { d =>
@@ -6509,9 +6496,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.{Codecs, Html}
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.flatMap { d =>
@@ -6558,9 +6544,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.Codecs
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.flatMap { d =>
@@ -6602,9 +6587,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.{Avc, Codecs}
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.flatMap { d =>
@@ -7119,8 +7103,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_containment_pairs",
       (s, dir) => {
-        val base = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val base = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         TextOps.containmentPairsMd5(base, 0.6)
           .orderBy("id_a", "id_b")
@@ -7154,8 +7137,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_pdf_meta",
       (s, dir) => Pdf.metaFeatures(
-        Pdf.synthDf(Catalog.fixtureDocIds(s, dir)),
-        "id", "pdf").orderBy("id"),
+        Pdf.synthDf(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id AS id,
             CAST(1 + doc_id % 3 AS INT) AS n_pages
           FROM documents WHERE doc_id < 300),
@@ -7185,8 +7167,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_pdf_text",
       (s, dir) => Pdf.textFeatures(
-        Pdf.synthDf(Catalog.fixtureDocIds(s, dir)),
-        "id", "pdf").orderBy("id"),
+        Pdf.synthDf(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""WITH d AS (SELECT doc_id AS id,
             CAST(1 + doc_id % 3 AS INT) AS n_pages
           FROM documents WHERE doc_id < 300),
@@ -7217,8 +7198,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_code_comment_strip",
       (s, dir) => CodeOps.stripComments(
-        CodeOps.synthDf(Catalog.fixtureDocIds(s, dir)),
-        "id", "src").orderBy("id"),
+        CodeOps.synthDf(Catalog.fixtureDocIds(s, dir))).orderBy("id"),
       Some("""SELECT doc_id AS id,
           'int a' || (doc_id % 5) || ' = ' || (doc_id % 100) || ';'
             || chr(10) || 's = "p// q' || (doc_id % 9) || '";'
@@ -7461,9 +7441,8 @@ object Llm extends QueryModule {
       (s, dir) => {
         import s.implicits._
         import graft.operators.Flac
-        val extracted = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).filter(col("doc_id") < 300)
+        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
+          .tableStream(s, dir, "documents")).select(col("doc_id"))
           .as[Long]
           .mapPartitions { ids =>
             ids.map { d =>
@@ -7666,8 +7645,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_dedup_index_persist",
       (s, dir) => {
-        val all = Catalog.table(s, dir, "documents")
-          .filter(col("doc_id") < 300)
+        val all = Catalog.fixtureSlice(Catalog.table(s, dir, "documents"))
           .select(col("doc_id"), TextOps.shingles3(col("text")).as("sh"))
         val ix = graft.Scratch.runDir("dedup-index")
         val (bands, shingles) =
@@ -7749,7 +7727,7 @@ object Llm extends QueryModule {
     QueryDef(
       "llm_doc_dispatch",
       (s, dir) => Multimodal.docDispatchFeatures(
-        Multimodal.synthMixedDocsMedia(Catalog.fixtureDocIds(s, dir)), "id")
+        Multimodal.synthMixedDocsMedia(Catalog.fixtureDocIds(s, dir)))
         .orderBy("id"),
       Some(s"""$webOracleCte,
         md AS (SELECT doc_id AS id,

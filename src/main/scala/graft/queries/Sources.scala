@@ -758,7 +758,7 @@ object Sources extends QueryModule {
     // reader that stops at the first trailer silently drops the rest.
     // Per member: the full RFC 1952 header surface (FEXTRA, FNAME,
     // FCOMMENT, FHCRC — the header CRC16 VERIFIED), the deflate
-    // payload genuinely inflated (JDK raw Inflater), and both trailer
+    // payload genuinely inflated (raw, via operators/Deflate), and both trailer
     // ladders checked against the inflated bytes (CRC32 + ISIZE).
     // Per-doc map work.
     QueryDef(

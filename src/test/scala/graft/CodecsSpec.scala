@@ -142,6 +142,25 @@ class CodecsSpec extends AnyFunSuite with WalkerFuzz {
     assert(e3.getMessage.contains("IDAT"), e3.getMessage)
   }
 
+  test("a bad deflate stream under a valid IDAT CRC fails as IllegalArgumentException") {
+    val good = Codecs.encodePng(Codecs.synthBmp(2L, 4, 4))
+    val ihdrEnd = 8 + 25
+    val iendStart = good.length - 12
+    def withIdat(z: Array[Byte]): Array[Byte] =
+      good.take(ihdrEnd) ++ pngChunkBytes("IDAT", z) ++ good.drop(iendStart)
+    // an invalid block type (BTYPE 11) right after the zlib header
+    val badBlock = withIdat(Array[Byte](0x78, 0x9c.toByte, 0xff.toByte,
+      0xff.toByte, 0xff.toByte))
+    val e1 = intercept[IllegalArgumentException](Codecs.decodePng(badBlock))
+    assert(e1.getMessage.contains("IDAT"), e1.getMessage)
+    // the real stream with its Adler-32 trailer flipped
+    val idatLen = graft.operators.Bin.u32be(good, ihdrEnd, good.length).toInt
+    val z = good.slice(ihdrEnd + 8, ihdrEnd + 8 + idatLen)
+    z(z.length - 1) = (z(z.length - 1) ^ 1).toByte
+    val e2 = intercept[IllegalArgumentException](Codecs.decodePng(withIdat(z)))
+    assert(e2.getMessage.contains("IDAT"), e2.getMessage)
+  }
+
   test("PNG encode/decode round-trips arbitrary pixels with cycling filters") {
     val imgGen = for {
       w <- Gen.choose(1, 9)

@@ -51,4 +51,13 @@ class GzipSpec extends AnyFunSuite {
       .getMessage.contains("FLG"))
   }
 
+  test("trailing garbage after the last member fails loudly") {
+    val garbage = "trailing bytes".getBytes("US-ASCII")
+    intercept[IllegalArgumentException](Gzip.members(Gzip.synth(2L) ++ garbage))
+    // the WARC read walks the same members; the JDK's stream ignored these
+    val warc = graft.operators.Codecs.synthWarcGz(3L)
+    intercept[IllegalArgumentException](
+      graft.operators.Codecs.warcRecordsGz(warc ++ garbage))
+  }
+
 }

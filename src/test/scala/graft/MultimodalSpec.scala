@@ -21,7 +21,7 @@ class MultimodalSpec extends SparkSpec {
     val mixed = Multimodal.synthMixedDocsMedia(
       Catalog.table(spark, sf0001, "documents").limit(30)
         .select("doc_id"))
-    val out = Multimodal.docDispatchFeatures(mixed, "id")
+    val out = Multimodal.docDispatchFeatures(mixed)
       .select("id", "format").as[(Long, String)].collect().toMap
     assert(out.size == 30)
     out.foreach { case (id, fmt) =>
@@ -36,13 +36,13 @@ class MultimodalSpec extends SparkSpec {
         lit("application/octet-stream").as("mime"),
         col("media.meta").as("meta")))
     val e = intercept[org.apache.spark.SparkException] {
-      Multimodal.docDispatchFeatures(bogus, "id").count()
+      Multimodal.docDispatchFeatures(bogus).count()
     }
     assert(e.getMessage != null)
   }
 
   test("resize emits exactly targetBytes per payload and keeps meta") {
-    val out = Multimodal.resize(media(), "doc_id", 64)
+    val out = Multimodal.resize(media(), 64)
     val rows = out.select(col("id"),
         length(col("media.bytes")).as("n"),
         col("media.meta")("orig_bytes").as("orig"))
@@ -53,17 +53,17 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("resize is deterministic (same payload -> same bytes)") {
-    val a = Multimodal.resize(media(), "doc_id", 32)
+    val a = Multimodal.resize(media(), 32)
       .select(col("id"), md5(col("media.bytes")).as("h"))
       .as[(Long, String)].collect().toMap
-    val b = Multimodal.resize(media(), "doc_id", 32)
+    val b = Multimodal.resize(media(), 32)
       .select(col("id"), md5(col("media.bytes")).as("h"))
       .as[(Long, String)].collect().toMap
     assert(a == b)
   }
 
   test("frameSample fans out to exactly F frames that reassemble the payload") {
-    val out = Multimodal.frameSample(media(), "doc_id", 4)
+    val out = Multimodal.frameSample(media(), 4)
     val n = out.groupBy("id").agg(count(lit(1)).as("f"))
       .select("f").as[Long].collect()
     assert(n.forall(_ == 4L))
@@ -83,7 +83,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("frame metadata records the frame index") {
-    val out = Multimodal.frameSample(media(), "doc_id", 2)
+    val out = Multimodal.frameSample(media(), 2)
       .select(col("frame_idx"), col("frame.meta")("frame").as("m"))
       .as[(Int, String)].collect()
     assert(out.forall { case (i, m) => m == i.toString })
