@@ -510,8 +510,7 @@ object JxJson {
     }
     val agg = compileStreaming(spark, sfDir, q)
     val out = graft.streaming.Streams.runToMemory(
-      agg, s"jx_stream_${System.nanoTime()}",
-      org.apache.spark.sql.streaming.OutputMode.Append())
+      agg, org.apache.spark.sql.streaming.OutputMode.Append())
     finishSortLimit(out, q)
   }
 
@@ -768,8 +767,7 @@ object JxJson {
         joined.select(names.map(col): _*)
     }
     graft.streaming.Streams.runToMemory(
-      out, s"jx_sj_${System.nanoTime()}",
-      org.apache.spark.sql.streaming.OutputMode.Append(),
+      out, org.apache.spark.sql.streaming.OutputMode.Append(),
       // the front door compiles INNER interval joins only (enforced
       // above): matches emit on the data batch, so the trailing
       // watermark-only batch cannot add rows

@@ -33,6 +33,16 @@ object Feed {
   private val weekdays = Array("Mon", "Tue", "Wed", "Thu", "Fri",
     "Sat", "Sun")
 
+  /** The calendar date y-m-d of date-time `s`: month 13 or day 32 is
+    * an IllegalArgumentException, not java.time's DateTimeException. */
+  private def calendarDate(y: Int, m: Int, d: Int,
+      s: String): java.time.LocalDate =
+    try java.time.LocalDate.of(y, m, d)
+    catch { case e: java.time.DateTimeException =>
+      throw new IllegalArgumentException(
+        s"feed: invalid calendar date in '$s': ${e.getMessage}")
+    }
+
   /** RFC-822 date-time ("Tue, 02 Jan 2024 03:04:05 GMT") → (ISO date,
     * hour). The weekday token must match the calendar. */
   private def parseRfc822(s: String): (String, Int) = {
@@ -41,8 +51,7 @@ object Feed {
     require(m.matches(), s"feed: malformed RFC-822 date '$s'")
     val mon = months.indexOf(m.group(3))
     require(mon >= 0, s"feed: unknown month '${m.group(3)}'")
-    val date = java.time.LocalDate.of(m.group(4).toInt, mon + 1,
-      m.group(2).toInt)
+    val date = calendarDate(m.group(4).toInt, mon + 1, m.group(2).toInt, s)
     val wd = weekdays(date.getDayOfWeek.getValue - 1)
     require(wd == m.group(1),
       s"feed: weekday ${m.group(1)} contradicts date $date (is $wd)")
@@ -57,9 +66,8 @@ object Feed {
     val m = raw"(\d{4})-(\d{2})-(\d{2})T(\d{2}):(\d{2}):(\d{2})Z"
       .r.pattern.matcher(s)
     require(m.matches(), s"feed: malformed ISO-8601 date '$s'")
-    // LocalDate.of validates the calendar (month 13 / day 32 throw)
-    val date = java.time.LocalDate.of(m.group(1).toInt, m.group(2).toInt,
-      m.group(3).toInt)
+    val date = calendarDate(m.group(1).toInt, m.group(2).toInt,
+      m.group(3).toInt, s)
     val hour = m.group(4).toInt
     require(hour < 24 && m.group(5).toInt < 60 && m.group(6).toInt < 60,
       s"feed: out-of-range time in '$s'")
@@ -114,7 +122,8 @@ object Feed {
     c.skipWs()
     if (c.startsWith("<rss")) parseRss(c)
     else if (c.startsWith("<feed")) parseAtom(c)
-    else sys.error("feed: neither an <rss> nor an Atom <feed> document")
+    else throw new IllegalArgumentException(
+      "feed: neither an <rss> nor an Atom <feed> document")
   }
 
   private def skipOpenTag(c: Cursor): Unit = {
@@ -148,7 +157,8 @@ object Feed {
           case "pubDate" => date = parseRfc822(c.textElement("pubDate"))
           case "description" =>
             words = wordCount(c.textElement("description"))
-          case other => sys.error(s"feed: unknown RSS item element <$other>")
+          case other => throw new IllegalArgumentException(
+            s"feed: unknown RSS item element <$other>")
         }
         c.skipWs()
       }
@@ -192,7 +202,8 @@ object Feed {
           case "updated" => date = parseIso(c.textElement("updated"))
           case "summary" => words = wordCount(c.textElement("summary"))
           case other =>
-            sys.error(s"feed: unknown Atom entry element <$other>")
+            throw new IllegalArgumentException(
+              s"feed: unknown Atom entry element <$other>")
         }
         c.skipWs()
       }

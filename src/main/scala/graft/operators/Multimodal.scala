@@ -23,6 +23,15 @@ object Multimodal {
     StructField("mime", StringType),
     StructField("meta", MapType(StringType, StringType))))
 
+  /** The fields of a [[mediaType]] struct, read by position: a walk
+    * chained on another walk gets that walk's Rows, which carry no
+    * schema to look a name up in. */
+  private[operators] def bytesOf(media: Row): Array[Byte] =
+    media.getAs[Array[Byte]](0)
+  private def mimeOf(media: Row): String = media.getString(1)
+  private def metaOf(media: Row): Map[String, String] =
+    media.getAs[Map[String, String]](2)
+
   /** Wrap a text corpus as a media column (fixture stand-in for real
     * image/audio payloads). */
   def asMedia(df: DataFrame, idCol: String, textCol: String,
@@ -80,11 +89,11 @@ object Multimodal {
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
-      val bytes = media.getAs[Array[Byte]]("bytes")
-      val meta = media.getAs[Map[String, String]]("meta") +
+      val bytes = bytesOf(media)
+      val meta = metaOf(media) +
         ("orig_bytes" -> String.valueOf(if (bytes == null) 0 else bytes.length))
       Iterator.single(Row(r.getLong(0),
-        Row(stubResize(bytes, targetBytes), media.getAs[String]("mime"), meta)))
+        Row(stubResize(bytes, targetBytes), mimeOf(media), meta)))
     }
   }
 
@@ -103,7 +112,7 @@ object Multimodal {
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
-      val bytes = media.getAs[Array[Byte]]("bytes")
+      val bytes = bytesOf(media)
       val n = if (bytes == null) 0 else bytes.length
       (0 until frames).map { i =>
         val lo = i * n / frames
@@ -112,8 +121,8 @@ object Multimodal {
           if (bytes == null) Array.emptyByteArray
           else java.util.Arrays.copyOfRange(bytes, lo, hi)
         Row(r.getLong(0), i,
-          Row(slice, media.getAs[String]("mime"),
-            media.getAs[Map[String, String]]("meta") +
+          Row(slice, mimeOf(media),
+            metaOf(media) +
               ("frame" -> i.toString)))
       }
     }
@@ -918,10 +927,10 @@ object Multimodal {
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
-      val bytes = media.getAs[Array[Byte]]("bytes")
+      val bytes = bytesOf(media)
       Iterator.single(Row(
         r.getLong(0),
-        media.getAs[String]("mime"),
+        mimeOf(media),
         if (bytes == null) 0 else bytes.length,
         stubDecodeFeatures(bytes).toSeq))
     }
@@ -967,8 +976,8 @@ object Multimodal {
     val mediaIdx = df.schema.fieldIndex("media")
     PerDoc.rows(df, outSchema) { r =>
       val media = r.getStruct(mediaIdx)
-      val bytes = media.getAs[Array[Byte]]("bytes")
-      val (fmt, text) = media.getAs[String]("mime") match {
+      val bytes = bytesOf(media)
+      val (fmt, text) = mimeOf(media) match {
         case "text/html" =>
           ("html", Html.extract(new String(bytes, "UTF-8")).text)
         case "text/markdown" =>

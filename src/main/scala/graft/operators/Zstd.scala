@@ -1677,9 +1677,8 @@ object Zstd {
     * worst-case row) is amortized to scan noise. */
   def sharedDictFeatures(ids: DataFrame, shardSize: Int = 4096): DataFrame = {
     require(shardSize >= 1, s"zstd: absurd shard size $shardSize")
-    // Not a PerDoc walk: the dictionary cache lives per partition. The
-    // id is column 0, as in PerDoc.
-    val rdd = ids.rdd.mapPartitions { rows =>
+    // the dictionary cache lives per partition
+    PerDoc.partitions(ids, dictFeatureSchema) { rows =>
       val cache = collection.mutable.LongMap.empty[ParsedDict]
       rows.map { r =>
         val d = r.getLong(0)
@@ -1690,7 +1689,6 @@ object Zstd {
           m.contentBytes, m.contentSum, m.checksummed)
       }
     }
-    ids.sparkSession.createDataFrame(rdd, dictFeatureSchema)
   }
 
   private val decodeSchema = StructType(Seq(

@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 import graft.{QueryDef, QueryModule}
 import graft.operators.{CodeOps, Codecs, Markdown, Multimodal, Pdf, PerDoc,
   Similarity, TextOps, Unigram}
@@ -5672,35 +5675,34 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_image_ingest",
       (s, dir) => {
-        import s.implicits._
         import graft.operators.Webp
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.map { d =>
-              val bytes = Webp.synthWebp(d)
-              val m = Webp.meta(bytes)
-              Webp.vp8lPayload(bytes) match {
-                case Some(payload) =>
-                  val img = Webp.decodeVp8l(payload)
-                  var sr = 0L; var sg = 0L; var sb = 0L
-                  img.px.foreach { p =>
-                    sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff
-                    sb += p & 0xff
-                  }
-                  (d, m.kind, m.canvasW, m.canvasH, 1,
-                    Some(sr), Some(sg), Some(sb))
-                case None =>
-                  (d, m.kind, m.canvasW, m.canvasH, 0, None, None, None)
+        val schema = StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("kind", StringType),
+          StructField("canvas_w", IntegerType, nullable = false),
+          StructField("canvas_h", IntegerType, nullable = false),
+          StructField("decoded", IntegerType, nullable = false),
+          StructField("sum_r", LongType),
+          StructField("sum_g", LongType),
+          StructField("sum_b", LongType)))
+        val extracted = PerDoc.walk(Catalog.fixtureDocIdStream(s, dir),
+            schema) { d =>
+          val bytes = Webp.synthWebp(d)
+          val m = Webp.meta(bytes)
+          Iterator.single(Webp.vp8lPayload(bytes) match {
+            case Some(payload) =>
+              val img = Webp.decodeVp8l(payload)
+              var sr = 0L; var sg = 0L; var sb = 0L
+              img.px.foreach { p =>
+                sr += (p >>> 16) & 0xff; sg += (p >>> 8) & 0xff
+                sb += p & 0xff
               }
-            }
-          }
-          .toDF("id", "kind", "canvas_w", "canvas_h", "decoded",
-            "sum_r", "sum_g", "sum_b")
-        graft.streaming.Streams.runToMemory(extracted,
-          s"simg_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+              Row(d, m.kind, m.canvasW, m.canvasH, 1, sr, sg, sb)
+            case None =>
+              Row(d, m.kind, m.canvasW, m.canvasH, 0, null, null, null)
+          })
+        }
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id")
       },
       Some("""WITH d AS (SELECT doc_id, CAST(16 + doc_id % 13 AS INT) AS w,
@@ -5742,23 +5744,11 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_video_ingest",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.Webm
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.map { d =>
-              val m = Webm.parse(Webm.synth(d))
-              (d, m.nTracks, m.nVideoBlocks, m.nKeyframes, m.sumYAcQi,
-                m.durationMs)
-            }
-          }
-          .toDF("id", "n_tracks", "n_video_blocks", "n_keyframes",
+        val extracted = graft.operators.Webm.webmFeatures(
+          Catalog.fixtureDocIdStream(s, dir))
+          .select("id", "n_tracks", "n_video_blocks", "n_keyframes",
             "sum_y_ac_qi", "duration_ms")
-        graft.streaming.Streams.runToMemory(extracted,
-          s"svid_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id")
       },
       Some("""WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
@@ -6450,23 +6440,11 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_feed_ingest",
       (s, dir) => {
-        import s.implicits._
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.flatMap { d =>
-              graft.operators.Feed.parse(graft.operators.Feed.synth(d))
-                .zipWithIndex.iterator.map { case (e, j) =>
-                  (d, j, e.link, java.sql.Date.valueOf(e.published))
-                }
-            }
-          }
-          .toDF("id", "entry_idx", "link", "published")
+        val extracted = graft.operators.Feed.feedFeatures(
+          Catalog.fixtureDocIdStream(s, dir))
+          .select("id", "entry_idx", "link", "published")
           .withColumn("kept", col("published") >= lit("2024-10-01"))
-        graft.streaming.Streams.runToMemory(extracted,
-          s"sfeed_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id", "entry_idx")
       },
       Some("""WITH e AS (SELECT doc_id,
@@ -6494,32 +6472,13 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_web_ingest",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.{Codecs, Html}
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.flatMap { d =>
-              val (plain, recs) =
-                Codecs.warcRecordsGz(Codecs.synthWarcWebGz(d))
-              recs.iterator.filter(_.recType == "response").map { rec =>
-                val http = Codecs.httpParse(java.util.Arrays.copyOfRange(
-                  plain, rec.payloadStart,
-                  rec.payloadStart + rec.contentLength))
-                val doc = Html.extract(new String(http.body, "UTF-8"))
-                (d, rec.recIdx, http.status, doc.title,
-                  if (doc.text.isEmpty) 0 else doc.text.split(" ").length,
-                  doc.links.length)
-              }
-            }
-          }
-          .toDF("id", "rec_idx", "status", "title", "n_words", "n_links")
+        val extracted = Multimodal.webTextFeatures(
+          Multimodal.synthWarcWebGzMedia(Catalog.fixtureDocIdStream(s, dir)),
+          gz = true)
+          .select("id", "rec_idx", "status", "title", "n_words", "n_links")
           .withColumn("kept",
             col("status") === 200 && col("n_words") >= 18)
-        graft.streaming.Streams.runToMemory(extracted,
-          s"sweb_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id", "rec_idx")
       },
       Some(s"""$webOracleCte
@@ -6542,26 +6501,12 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_archive_ingest",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.Codecs
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.flatMap { d =>
-              Codecs.tarExtract(Codecs.synthTarDocs(d)).iterator
-                .filter(_._1.typeflag == "file").map { case (e, body) =>
-                  val text = new String(body, "US-ASCII")
-                  val n = if (text.isEmpty) 0 else text.split(" ").length
-                  (d, e.idx, e.name, n)
-                }
-            }
-          }
-          .toDF("id", "entry_idx", "name", "n_tokens")
+        val extracted = Multimodal.tarTextMembers(
+          Multimodal.synthTarDocsMedia(Catalog.fixtureDocIdStream(s, dir)))
+          .select(col("id"), col("entry_idx"), col("name"),
+            size(split(col("text"), " ")).as("n_tokens"))
           .withColumn("kept", col("n_tokens") >= 8)
-        graft.streaming.Streams.runToMemory(extracted,
-          s"sarc_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id", "entry_idx")
       },
       Some("""WITH d AS (SELECT doc_id,
@@ -6585,29 +6530,11 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_keyframe_ingest",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.{Avc, Codecs}
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.flatMap { d =>
-              val mp4 = Avc.synthIdrMp4(d)
-              val (sps, pps, lenSize) = Codecs.avccParameterSets(mp4)
-              Codecs.mp4SampleSlices(mp4).iterator.map { case (k, slice) =>
-                val f = Avc.decodeIFrame(
-                  Avc.avccSampleToAnnexB(sps, pps, lenSize, slice))
-                var sy = 0L
-                f.y.foreach(sy += _)
-                (d, k, f.width, f.height, sy)
-              }
-            }
-          }
-          .toDF("id", "frame_idx", "width", "height", "sum_y")
+        val extracted = graft.operators.Avc.keyframeFeatures(
+          Multimodal.synthIdrMp4Media(Catalog.fixtureDocIdStream(s, dir)))
+          .select("id", "frame_idx", "width", "height", "sum_y")
           .withColumn("kept", col("sum_y") >= 90000L) // too-dark gate
-        graft.streaming.Streams.runToMemory(extracted,
-          s"skey_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id", "frame_idx")
       },
       Some("""WITH f AS (SELECT doc_id, unnest(range(0, 1 + doc_id % 3)) AS k
@@ -7439,28 +7366,12 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_audio_ingest",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.Flac
-        val extracted = Catalog.fixtureSlice(graft.streaming.Streams
-          .tableStream(s, dir, "documents")).select(col("doc_id"))
-          .as[Long]
-          .mapPartitions { ids =>
-            ids.map { d =>
-              val a = Flac.decodeAudio(Flac.synthAudio(d))
-              var peak = 0; var sq = 0L
-              a.samples.foreach { v =>
-                if (math.abs(v) > peak) peak = math.abs(v)
-                sq += v.toLong * v
-              }
-              (d, a.samples.length, a.channels, peak, sq)
-            }
-          }
-          .toDF("id", "n_samples", "channels", "peak", "sum_sq")
+        val extracted = graft.operators.Flac.audioFeatures(
+          Catalog.fixtureDocIdStream(s, dir))
+          .select("id", "n_samples", "channels", "peak", "sum_sq")
           .withColumn("kept",
             col("sum_sq") >= lit(250000L) * col("n_samples"))
-        graft.streaming.Streams.runToMemory(extracted,
-          s"saud_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(extracted, OutputMode.Append())
           .orderBy("id")
       },
       Some(s"""$flacAggCte
@@ -7679,26 +7590,15 @@ object Llm extends QueryModule {
     QueryDef(
       "stream_caption_ingest",
       (s, dir) => {
-        import s.implicits._
         val maxCps = 4L
-        val cues = graft.streaming.Streams
-          .tableStream(s, dir, "documents")
-          .select(col("doc_id")).as[Long]
-          .mapPartitions { ids =>
-            ids.flatMap { d =>
-              graft.operators.Subtitles.parseSrt(
-                graft.operators.Subtitles.synthSrt(d))
-                .cues.zipWithIndex.iterator.map { case (c, j) =>
-                  (d, j, c.startMs, c.endMs - c.startMs, c.text.length)
-                }
-            }
-          }
-          .toDF("id", "cue_idx", "start_ms", "dur_ms", "n_chars")
+        val cues = graft.operators.Subtitles.srtCues(graft.streaming.Streams
+          .tableStream(s, dir, "documents").select("doc_id"))
+          .select(col("id"), col("cue_idx"), col("start_ms"),
+            (col("end_ms") - col("start_ms")).as("dur_ms"),
+            length(col("ctext")).as("n_chars"))
           .withColumn("kept",
             col("n_chars") * 1000L <= lit(maxCps) * col("dur_ms"))
-        graft.streaming.Streams.runToMemory(cues,
-          s"scap_${System.nanoTime()}",
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        graft.streaming.Streams.runToMemory(cues, OutputMode.Append())
           .orderBy("id", "cue_idx")
       },
       Some("""WITH d AS (SELECT doc_id AS id,

@@ -1,8 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import graft.{QueryDef, QueryModule, Scratch}
+import graft.operators.{PerDoc, Zstd}
 import graft.sources.Catalog
 
 /** SURVEY.md §2.1 — scans and sinks.
@@ -709,7 +712,7 @@ object Sources extends QueryModule {
     // curation DAG: each document arrives as a REAL zstd frame (raw
     // literals + match-copied repetition — the dictionary-free way
     // real encoders code repeated text), is decompressed by OUR
-    // RFC 8878 block decoder inside mapPartitions (XXH64 verified
+    // RFC 8878 block decoder inside a PerDoc walk (XXH64 verified
     // per frame), and the recovered text flows straight into the
     // per-kind char/word rollup — decompress-at-scan fused ahead of
     // one grouped aggregate, exactly the 100 TB lake-read shape.
@@ -718,19 +721,15 @@ object Sources extends QueryModule {
     QueryDef(
       "etl_zstd_corpus",
       (s, dir) => {
-        import s.implicits._
-        val texts = Catalog.fixtureDocIds(s, dir).as[Long]
-          .mapPartitions { ids =>
-            ids.map { d =>
-              val base = s"the quick data lake row r${d % 10} "
-                .getBytes("UTF-8")
-              val reps = (2 + d % 4).toInt
-              val text = new String(graft.operators.Zstd.decompress(
-                graft.operators.Zstd.synthRepeated(base, reps)), "UTF-8")
-              (d, text)
-            }
-          }
-          .toDF("doc_id", "text")
+        val schema = StructType(Seq(
+          StructField("doc_id", LongType, nullable = false),
+          StructField("text", StringType)))
+        val texts = PerDoc.walk(Catalog.fixtureDocIds(s, dir), schema) { d =>
+          val base = s"the quick data lake row r${d % 10} ".getBytes("UTF-8")
+          val reps = (2 + d % 4).toInt
+          Iterator.single(Row(d, new String(Zstd.decompress(
+            Zstd.synthRepeated(base, reps)), "UTF-8")))
+        }
         texts
           .withColumn("kind", element_at(
             array(lit("web"), lit("code"), lit("chat")),

@@ -178,7 +178,7 @@ object StreamingBatch extends QueryModule {
             .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total")),
           // Complete mode re-emits the whole result every batch — a
           // trailing zero-row batch only rewrites identical rows
-          s"enr_${System.nanoTime()}", OutputMode.Complete(),
+          OutputMode.Complete(),
           noDataBatch = false)
         out.orderBy("n_name")
       },
@@ -218,7 +218,7 @@ object StreamingBatch extends QueryModule {
                 graft.plans.MinHashLsh.shingleHashes(col("text")),
                 col("bsh"))).as("n_shared"))
             .withColumn("quarantined", col("n_shared") >= 5),
-          s"sdecon_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("doc_id")
       },
       Some("""WITH sh AS (SELECT doc_id,
@@ -249,7 +249,7 @@ object StreamingBatch extends QueryModule {
             .select(col("doc_id"),
               graft.operators.TextOps.qualityScore(col("text")).as("quality"))
             .withColumn("kept", col("quality") > 0.3),
-          s"squal_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("doc_id")
       },
       Some("""SELECT doc_id,
@@ -284,7 +284,7 @@ object StreamingBatch extends QueryModule {
             .groupBy(window(col("ts"), "1 hour"))
             .agg(count(lit(1)).as("n"))
             .select(col("window.start").as("ws"), col("n")),
-          s"tb_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("ws")
       },
       Some(tumblingOracle)),
@@ -301,7 +301,7 @@ object StreamingBatch extends QueryModule {
             .groupBy(window(col("ts"), "1 hour", "15 minutes"))
             .agg(count(lit(1)).as("n"))
             .select(col("window.start").as("ws"), col("n")),
-          s"sl_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("ws")
       },
       Some(slidingOracle)),
@@ -337,7 +337,7 @@ object StreamingBatch extends QueryModule {
       (s, dir) => {
         val out = Streams.runToMemory(
           Streams.tumblingWithWatermark(Streams.eventsStream(s, dir)),
-          s"wm_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("ws", "event_type")
       },
       Some(watermarkOracle)),
@@ -359,7 +359,7 @@ object StreamingBatch extends QueryModule {
         val out = Streams.runToMemory(
           Streams.sessionCounts(
             Streams.eventsStream(s, dir).withWatermark("ts", "2 hours")),
-          s"sst_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("user_id", "session_start")
       },
       Some(sessionOracle)),
@@ -375,7 +375,7 @@ object StreamingBatch extends QueryModule {
         // the trailing watermark-only batch cannot add rows — skip it
         val out = Streams.runToMemory(
           Streams.clickViewJoin(s, dir),
-          s"sj_${System.nanoTime()}", OutputMode.Append(),
+          OutputMode.Append(),
           noDataBatch = false)
         out.orderBy("user_id", "click_id", "view_id")
       },
@@ -401,7 +401,7 @@ object StreamingBatch extends QueryModule {
       (s, dir) => {
         val out = Streams.runToMemory(
           Streams.viewClickLeftOuterJoin(s, dir),
-          s"sjo_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         out.orderBy("user_id", "view_id", "click_id")
       },
       Some("""WITH mx AS (SELECT least(
@@ -430,7 +430,7 @@ object StreamingBatch extends QueryModule {
       (s, dir) => {
         val out = Streams.runToMemory(
           Streams.viewClickFullOuterJoin(s, dir),
-          s"sjf_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         // NULLS LAST explicitly: Spark's asc is nulls-first, DuckDB's
         // is nulls-last, and with nulls in a MIDDLE sort key (view_id)
         // the row orders diverge — the left-outer row never hit this
@@ -470,7 +470,7 @@ object StreamingBatch extends QueryModule {
         // lemma, oracle unchanged.
         val out = Streams.runToMemory(
           Streams.viewClickRightOuterJoin(s, dir),
-          s"sjr_${System.nanoTime()}", OutputMode.Append())
+          OutputMode.Append())
         // view_id is the nullable MIDDLE sort key: NULLS LAST to match
         // DuckDB, as in the full-outer row
         out.orderBy(col("user_id"), asc_nulls_last("view_id"),
@@ -503,7 +503,7 @@ object StreamingBatch extends QueryModule {
         // therefore cannot emit — skip it
         val out = Streams.runToMemory(
           Streams.runningUserState(Streams.eventsStream(s, dir)),
-          s"st_${System.nanoTime()}", OutputMode.Update(),
+          OutputMode.Update(),
           noDataBatch = false)
         // AvailableNow may emit one update per micro-batch; final state
         // per user is the max-count row.

@@ -62,6 +62,12 @@ object Catalog {
   def fixtureDocIds(spark: SparkSession, sfDir: String): DataFrame =
     fixtureSlice(table(spark, sfDir, "documents")).select("doc_id")
 
+  /** The same ids arriving as a stream: the documents table replayed
+    * through the file source (`Streams.tableStream`), then sliced. */
+  def fixtureDocIdStream(spark: SparkSession, sfDir: String): DataFrame =
+    fixtureSlice(graft.streaming.Streams.tableStream(spark, sfDir,
+      "documents")).select("doc_id")
+
   /** Normalize an `events`-shaped frame's `ts` column to session-TZ
     * TimestampType, keyed on the observed type:
     *  - LongType — nanos-since-epoch under

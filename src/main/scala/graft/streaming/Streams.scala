@@ -129,11 +129,13 @@ object Streams {
     * emit on the data batch), Complete mode (every batch re-emits the
     * whole result), and Update-mode state without timeouts. Append-mode
     * windowed aggregates and OUTER joins EMIT on that final batch —
-    * they must keep the default true. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode,
+    * they must keep the default true. The sink's table name is unique
+    * per call and the table is gone when this returns. */
+  def runToMemory(df: DataFrame, mode: OutputMode,
       noDataBatch: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    val ckpt = graft.Scratch.dir("ckpt", s"$name-${System.nanoTime()}")
+    val name = s"memory_${System.nanoTime()}"
+    val ckpt = graft.Scratch.dir("ckpt", name)
     replay(spark, ckpt,
         "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
       df.writeStream

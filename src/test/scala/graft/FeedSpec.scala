@@ -39,7 +39,7 @@ class FeedSpec extends AnyFunSuite {
 
   test("malformed feeds fail loudly by name") {
     // unknown item element
-    val e1 = intercept[RuntimeException] {
+    val e1 = intercept[IllegalArgumentException] {
       Feed.parse("""<rss version="2.0"><channel><title>t</title>
         <link>l</link><description>d</description>
         <item><enclosure>x</enclosure></item></channel></rss>""")
@@ -55,13 +55,13 @@ class FeedSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("missing title, link, or pubDate"),
       e2.getMessage)
     // neither dialect
-    val e3 = intercept[RuntimeException] {
+    val e3 = intercept[IllegalArgumentException] {
       Feed.parse("<opml><body/></opml>")
     }
     assert(e3.getMessage.contains("neither"), e3.getMessage)
-    // invalid calendar date in Atom (month 13 → DateTimeException,
-    // the java.time validation the parser leans on)
-    val e4 = intercept[RuntimeException] {
+    // invalid calendar date in Atom (month 13: java.time's validation,
+    // rethrown as the walker's one error class)
+    val e4 = intercept[IllegalArgumentException] {
       Feed.parse("""<feed xmlns="x"><title>t</title>
         <updated>2024-01-01T00:00:00Z</updated>
         <entry><title>a</title><link href="u"/>

@@ -138,7 +138,7 @@ class FixtureCanarySpec extends SparkSpec {
     val decoded = graft.streaming.Streams.runToMemory(
       graft.streaming.Streams.eventsStream(spark, sf0001)
         .groupBy().agg(min("ts").as("lo"), max("ts").as("hi")),
-      "canary_stream_span", OutputMode.Complete())
+      OutputMode.Complete())
     val Array(srow) = decoded.collect()
     val Array(brow) = Catalog.table(spark, sf0001, "events")
       .agg(min("ts"), max("ts")).collect()

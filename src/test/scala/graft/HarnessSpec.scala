@@ -52,14 +52,13 @@ class HarnessSpec extends SparkSpec {
             code.sliding(literal.length).count(_ == literal)
         }
         .filter(_._2 > 0).toMap
-    assert(sites(".rdd.mapPartitions") ==
-      Map("PerDoc.scala" -> 1, "Zstd.scala" -> 1),
-      "walk documents with PerDoc.walk / walkMedia; only Zstd's " +
-        "per-partition dictionary cache stays outside")
-    assert(sites("createDataFrame(rdd") == Map("PerDoc.scala" -> 1,
-      "Zstd.scala" -> 1, "ParquetFooter.scala" -> 1, "Sources.scala" -> 1),
-      "only PerDoc and the three named exceptions build a DataFrame " +
-        "from an RDD")
+    assert(sites("mapPartitions") == Map("PerDoc.scala" -> 1),
+      "walk documents, batch or streaming, with PerDoc.walk / walkMedia")
+    assert(sites(".rdd") == Map.empty && sites(".as[Long]") == Map.empty,
+      "a walk reads its ids through PerDoc, not a typed or RDD copy")
+    assert(sites("createDataFrame(rdd") ==
+      Map("ParquetFooter.scala" -> 1, "Sources.scala" -> 1),
+      "only the two file-list walks build a DataFrame from an RDD")
     assert(sites("""col("doc_id") < 300""") == Map("Catalog.scala" -> 1),
       "take the fixture slice from Catalog.fixtureSlice / fixtureDocIds")
   }

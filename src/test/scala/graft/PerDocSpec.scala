@@ -45,6 +45,43 @@ class PerDocSpec extends SparkSpec {
     assert(lengths.collect().toSeq == Seq(Row(7L, 3, null)))
   }
 
+  test("a walk over a stream of ids returns the batch walk's rows") {
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.sources.Catalog
+    import graft.streaming.Streams
+    def walked(ids: org.apache.spark.sql.DataFrame) =
+      PerDoc.walk(ids, schema) { d =>
+        (0 until (d % 3).toInt).map(k => Row(d, k, s"d$d"))
+      }
+    def key(r: Row) = (r.getLong(0), r.getInt(1), r.getString(2))
+    val batch = walked(Catalog.fixtureDocIds(spark, sf0001)).collect()
+    val streamed = Streams.runToMemory(
+      walked(Catalog.fixtureDocIdStream(spark, sf0001)), OutputMode.Append())
+    assert(streamed.schema == schema)
+    assert(streamed.collect().map(key).sorted.toSeq ==
+      batch.map(key).sorted.toSeq)
+    assert(batch.nonEmpty)
+  }
+
+  test("a walk chained on a walk-built media frame reads it by position") {
+    // the synthMedia shape: a walk emits (id, media struct); the walks
+    // that read it get those schemaless Rows, with no serializer between
+    val mediaSchema = StructType(Seq(StructField("id", LongType),
+      StructField("media", Multimodal.mediaType)))
+    val media = PerDoc.walk(ids, mediaSchema) { d =>
+      Iterator.single(Row(d, Row(Array.fill(d.toInt)(7.toByte),
+        "application/octet-stream", Map("k" -> "v"))))
+    }
+    def lengths(df: org.apache.spark.sql.DataFrame) =
+      PerDoc.walkMedia(df, schema) { (d, bytes) =>
+        Iterator.single(Row(d, bytes.length, null))
+      }.collect().map(r => r.getLong(0) -> r.getInt(1)).sorted.toSeq
+    assert(lengths(media) == (0L until 9L).map(d => d -> d.toInt))
+    // resize reads mime and meta by position too
+    assert(lengths(Multimodal.resize(media, 4)) ==
+      (0L until 9L).map(_ -> 4))
+  }
+
   test("a walker's IllegalArgumentException reaches the caller when forced") {
     val walked = PerDoc.walk(ids, schema) { d =>
       require(d != 4, s"walker: doc $d is corrupt")

@@ -233,7 +233,7 @@ class StreamsSpec extends SparkSpec {
     java.nio.file.Files.copy(part,
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     def run(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
-      Streams.runToMemory(df, s"lem_${System.nanoTime()}", OutputMode.Append())
+      Streams.runToMemory(df, OutputMode.Append())
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(1)) -1L else r.getLong(1),
           if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq.sorted

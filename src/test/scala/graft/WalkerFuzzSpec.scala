@@ -2,9 +2,10 @@ package graft
 
 import graft.operators._
 
-/** The byte-mutation fuzz rows of every binary walker; see
-  * [[WalkerFuzz]] for the contract. The Codecs decoders' and Zstd
-  * dictionary rows live in their own specs. */
+/** The byte-mutation fuzz rows of every binary walker, and of the text
+  * walkers over the UTF-8 bytes of their fixture; see [[WalkerFuzz]]
+  * for the contract. The Codecs decoders' and Zstd dictionary rows live
+  * in their own specs. */
 class WalkerFuzzSpec extends SparkSpec with WalkerFuzz {
 
   /** The sf0.001 events file's footer region. */
@@ -15,6 +16,13 @@ class WalkerFuzzSpec extends SparkSpec with WalkerFuzz {
     java.util.Arrays.copyOfRange(good, good.length - 8 - footerLen,
       good.length - 8)
   }
+
+  /** A text walker's row input: its fixture's UTF-8 bytes, mutated,
+    * then decoded. */
+  private def text(label: String, fixture: Int => String)(
+      entry: String => Any): Seq[Case] =
+    one(label, t => fixture(t).getBytes("UTF-8"))(
+      b => entry(new String(b, "UTF-8")))
 
   private val rows: Seq[Row] = Seq(
     Row("Adts: walk terminates loudly under random corruption", 1357, 200,
@@ -31,6 +39,8 @@ class WalkerFuzzSpec extends SparkSpec with WalkerFuzz {
       6, one("epub", t => Epub.synth((t % 9).toLong))(Epub.parse)),
     Row("Exif: parser terminates loudly under random corruption", 23, 300, 6,
       one("exif", t => Exif.synth((t % 8).toLong))(Exif.parse)),
+    Row("Feed: parser terminates loudly under random corruption", 7001, 300,
+      6, text("feed", t => Feed.synth((t % 9).toLong))(Feed.parse)),
     Row("Flac: parser terminates loudly under random corruption", 99, 300, 6,
       one("flac", t => Flac.synth((t % 7).toLong))(Flac.meta)),
     Row("Flac: frame decoder terminates loudly under random corruption",
@@ -69,6 +79,14 @@ class WalkerFuzzSpec extends SparkSpec with WalkerFuzz {
       300, 4, one("proto", t => Proto.synth((t % 9).toLong))(Proto.parse)),
     Row("Sfnt: walk terminates loudly under random corruption", 5301, 200, 4,
       one("sfnt", t => Sfnt.synth((t % 11).toLong))(Sfnt.parse)),
+    Row("Sitemap: parser terminates loudly under random corruption", 7002,
+      300, 6, text("sitemap", t => Sitemap.synth((t % 9).toLong))(
+        Sitemap.parse)),
+    Row("Sitemap: index parser terminates loudly under random corruption",
+      7003, 300, 6, text("sitemap-index",
+        t => Sitemap.synthIndex((t % 9).toLong))(Sitemap.parseIndex)),
+    Row("Svg: parser terminates loudly under random corruption", 7004, 300,
+      6, text("svg", t => Svg.synth((t % 9).toLong))(Svg.parse)),
     Row("Tiff: walk terminates loudly under random corruption", 2424, 250, 5,
       one("tiff", t => Tiff.synth((t % 15).toLong))(Tiff.parse)),
     Row("Webm: walk terminates loudly under random corruption", 1616, 200, 5,
